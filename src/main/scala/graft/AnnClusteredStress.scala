@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.{cosine, ivfCellH, ivfCellH2, norm2}
+
 /** ANN stress on a DENSITY-SKEWED corpus — closes the r07 honesty gap:
   * every IVF/LSH scale number so far rode the fixture's near-uniform
   * synthetic embeddings, the best case for a coarse quantizer. Real
@@ -98,8 +100,6 @@ object AnnClusteredStress {
       .config("spark.sql.codegen.cache.maxEntries", "4000")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    functions.GraftFunctions.register(spark)
-    functions.TextHashFunctions.register(spark)
 
     val root = s"${ProcScratch.base}/clustered_ann"
     val dir1 = s"$root/sf1x"
@@ -115,10 +115,10 @@ object AnnClusteredStress {
       val cells = ops.SimilarityQueries.adaptiveCells(n)
       val (sc, mc) = ops.SimilarityQueries.superSplit(cells)
       val planes = ops.SimilarityQueries.adaptivePlanes(n)
-      val assigned = e.selectExpr("vec_id", "embedding",
-        "graft_vec_dot(embedding, embedding) AS n2",
-        s"CAST(graft_ivf_cell_h(embedding, $sc, $mc) AS INT) AS cell",
-        s"graft_lsh_bucket(embedding, $planes) AS bucket").persist()
+      val assigned = e.select(col("vec_id"), col("embedding"), norm2("embedding"),
+        ivfCellH(col("embedding"), sc, mc).cast("int").as("cell"),
+        graft.functions.lshBucket(col("embedding"), planes).as("bucket"))
+        .persist()
 
       def occ(c: String): (Int, Long, Long, Double) = {
         val counts = assigned.groupBy(c).count()
@@ -133,9 +133,9 @@ object AnnClusteredStress {
       val qstep = math.max(1L, n / 100)
       val q = assigned
         .filter(pmod(hash(col("vec_id"), lit(77)), lit(qstep)) === 0)
-        .selectExpr("vec_id AS query_id", "embedding AS qe", "n2 AS qn2",
-          "cell",
-          s"CAST(graft_ivf_cell_h2(embedding, $sc, $mc) AS INT) AS cell2")
+        .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
+          col("n2").as("qn2"), col("cell"),
+          ivfCellH2(col("embedding"), sc, mc).cast("int").as("cell2"))
         .persist()
       val cand = assigned.selectExpr("vec_id AS neighbor_id",
         "embedding AS ce", "n2 AS cn2", "cell AS ccell")
@@ -143,8 +143,8 @@ object AnnClusteredStress {
         .orderBy(col("cosine").desc, col("neighbor_id"))
       def top3(joined: DataFrame): Set[(Long, Long)] = joined
         .filter(col("query_id") =!= col("neighbor_id"))
-        .selectExpr("query_id", "neighbor_id",
-          "(graft_vec_dot(qe, ce) / sqrt(qn2 * cn2)) AS cosine")
+        .select(col("query_id"), col("neighbor_id"),
+          cosine("qe", "ce", "qn2", "cn2"))
         .withColumn("rn", row_number().over(w))
         .filter(col("rn") <= 3)
         .select("query_id", "neighbor_id").collect()

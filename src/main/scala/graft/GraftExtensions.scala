@@ -10,8 +10,10 @@ import org.apache.spark.sql.SparkSessionExtensions
   *   spark.sql.extensions=graft.GraftExtensions
   *
   * (SURVEY.md §7: custom Expression surface registered through
-  * SparkSessionExtensions.) The declared queries also self-register per
-  * session, so the extension is a convenience, not a requirement.
+  * SparkSessionExtensions.) The names are for SQL text only: the
+  * declared queries (`SparkEntry.queries`) build the same expressions
+  * as Columns through [[graft.functions]] and need no registration, so
+  * the extension is a convenience for SQL users, not a requirement.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {

@@ -3,12 +3,14 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** THE session-conf contract, in one place (r13, the r12 verdict's
-  * item 9 and the r12 advisor's top item): every harness main — the
-  * bench (Bench/Bench10x), the plan evidence (ExplainDump/PlanOne),
-  * the profiler (ProfileQuery) AND the oracle gate (Verify) — builds
-  * its session here, so the benchmarked configuration and the verified
-  * configuration cannot drift, and a production consumer of
-  * `SparkEntry.queries` has a named recipe instead of folklore.
+  * item 9 and the r12 advisor's top item). The bench (Bench), the
+  * oracle gate (Verify), the plan evidence (ExplainDump, PlanOne,
+  * Plans), the profiler (ProfileQuery) and the stream probe
+  * (StreamProbe) build their sessions here, so the benchmarked
+  * configuration and the verified configuration cannot drift, and a
+  * production consumer of `SparkEntry.queries` has a named recipe
+  * instead of folklore. Bench10x, ScaleStress, AnnClusteredStress,
+  * ProbeTune and L3IncProbe still build their own sessions.
   *
   * What the contract sets and why (full rationale at each conf):
   *
@@ -74,5 +76,19 @@ object GraftSession {
       .config("spark.sql.constraintPropagation.enabled", "false")
       .config("spark.sql.streaming.checkpoint.fileChecksum.enabled",
         "false")
+  }
+
+  /** Runs `body` with each `key -> value` set on the session conf, then
+    * puts every key back as it was: its previous value, or unset when it
+    * had none. Restores run in reverse order, so nested calls unwind
+    * like a stack. */
+  def withConf[T](s: SparkSession, kvs: (String, String)*)(body: => T): T = {
+    val prev = kvs.map { case (k, _) => k -> s.conf.getOption(k) }
+    kvs.foreach { case (k, v) => s.conf.set(k, v) }
+    try body
+    finally prev.reverse.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None) => s.conf.unset(k)
+    }
   }
 }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.{cosine, norm2}
+
 /** Diagnostic: isolate WHY the incremental-training L3 book's recall
   * collapses on the large clustered corpora (SCALE_r11 gate
   * `l3_inc_recall_below_share`: inc 0.19 vs full 0.32 at 10×, 0.087
@@ -30,14 +32,11 @@ object L3IncProbe {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    functions.GraftFunctions.register(spark)
-    functions.TextHashFunctions.register(spark)
     val dir = s"${ProcScratch.base}/l3incprobe"
     ScaleStress.generate(spark, baseDir, dir, factor, mode = "clustered")
 
     val e = Tables.embeddings(spark, dir)
-      .selectExpr("vec_id", "embedding",
-        "graft_vec_dot(embedding, embedding) AS n2").persist()
+      .select(col("vec_id"), col("embedding"), norm2("embedding")).persist()
     val n = e.count()
     val qstep = math.max(1L, n / 100)
     val q = e.filter(pmod(hash(col("vec_id"), lit(77)), lit(qstep)) === 0)
@@ -49,8 +48,8 @@ object L3IncProbe {
       .orderBy(col("cosine").desc, col("neighbor_id"))
     def top3(joined: DataFrame): Set[(Long, Long)] = joined
       .filter(col("query_id") =!= col("neighbor_id"))
-      .selectExpr("query_id", "neighbor_id",
-        "(graft_vec_dot(qe, ce) / sqrt(qn2 * cn2)) AS cosine")
+      .select(col("query_id"), col("neighbor_id"),
+        cosine("qe", "ce", "qn2", "cn2"))
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") <= 3)
       .select("query_id", "neighbor_id").collect()

@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 
+import graft.functions.cosine
+
 /** The ONE place the near-dup measurement law lives — shared by
   * AnnClusteredStress (whose gates enforce floors) and ProbeTune
   * (whose measured frontier justifies those floors): if the two
@@ -19,8 +21,8 @@ object NearDupLaw {
     * whose exact cosine clears the threshold. */
   def pairs(df: DataFrame): Set[(Long, Long)] = df
     .filter(col("query_id") =!= col("neighbor_id"))
-    .selectExpr("query_id", "neighbor_id",
-      "(graft_vec_dot(qe, ce) / sqrt(qn2 * cn2)) AS cosine")
+    .select(col("query_id"), col("neighbor_id"),
+      cosine("qe", "ce", "qn2", "cn2"))
     .filter(col("cosine") >= Threshold)
     .select("query_id", "neighbor_id").collect()
     .map(r => (r.getLong(0), r.getLong(1))).toSet

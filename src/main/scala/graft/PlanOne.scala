@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Single-query executed-plan dump — the debugging companion to
   * graft.Plans (which audits all 192 queries in one pass). Run:
   * `sbt "runMain graft.PlanOne q_name [sfDir]"`. Prints the final
@@ -10,10 +8,7 @@ import org.apache.spark.sql.SparkSession
   * QueryExecution and hide the AQE result). */
 object PlanOne {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val df = SparkEntry.queries(args(0))(
       spark, args.lift(1).getOrElse("/root/testdata/sf0.001"))

@@ -29,7 +29,6 @@ object ProbeTune {
       .config("spark.sql.codegen.cache.maxEntries", "4000")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    functions.GraftFunctions.register(spark)
 
     val dir = s"${ProcScratch.base}/probe_tune/sf${factor}x"
     println(s"[probe-tune] generating mode=clustered ${factor}x at $dir")

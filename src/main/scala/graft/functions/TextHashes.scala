@@ -406,7 +406,8 @@ object TextHashFunctions {
   private def litInt(e: Expression): Int =
     e.eval().asInstanceOf[Number].intValue()
 
-  /** Idempotent registration of the text-hash expression family. */
+  /** Idempotent registration of the text-hash family's SQL names
+    * (the Column constructors are in [[graft.functions]]). */
   def register(spark: SparkSession): Unit = {
     val r = spark.sessionState.functionRegistry
     r.createOrReplaceTempFunction("graft_token_hashes",

@@ -60,8 +60,9 @@ case class VecDot(left: Expression, right: Expression)
 }
 
 object GraftFunctions {
-  /** Idempotent per-session registration; afterwards
-    * `graft_vec_dot(a, b)` is usable from selectExpr / SQL. */
+  /** The SQL surface: idempotent per-session registration, after which
+    * `graft_vec_dot(a, b)` is usable in SQL text. Query builders call
+    * the kernels as Columns ([[graft.functions]]) and never need it. */
   def register(spark: SparkSession): Unit = {
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "graft_vec_dot", exprs => VecDot(exprs(0), exprs(1)), "scala_udf")

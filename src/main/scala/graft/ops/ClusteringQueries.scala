@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.functions.{blockArgmin, cosine, joinKey, norm2, superArgmin, trainedCell}
 import graft.oracle.{Dialect, DuckSql, SparkSql}
 import graft.{QueryDef, ScratchCache, Tables}
 
@@ -185,18 +186,9 @@ object ClusteringQueries {
     * centroid id exactly like [[assign]]'s flat scan. */
   private def assignTwoLevel(v: DataFrame,
       cents: Seq[(Int, Seq[Long])]): DataFrame = {
-    val s = v.sparkSession
-    val bc = s.sparkContext.broadcast(twoLevelBook(cents))
-    val fn = s"graft_sem_cell_${java.util.UUID.randomUUID().toString.take(8)}"
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(fn,
-      exprs => graft.functions.TwoLevelArgminBroadcast(bc, exprs(0)),
-      "scala_udf")
-    val out = v.selectExpr("vec_id", "v", s"CAST($fn(v) AS INT) AS cluster")
-    // resolution happened above; the expression holds the broadcast, so
-    // the name can go immediately (no cross-call registry races)
-    s.sessionState.functionRegistry.dropFunction(
-      org.apache.spark.sql.catalyst.FunctionIdentifier(fn))
-    out
+    val bc = v.sparkSession.sparkContext.broadcast(twoLevelBook(cents))
+    v.select(col("vec_id"), col("v"),
+      trainedCell(bc, col("v")).cast("int").as("cluster"))
   }
 
   /** Which route the last [[semClusters]] build took and the largest
@@ -246,29 +238,17 @@ object ClusteringQueries {
       math.max(SemBuildStats.lastDriverCentroids, supers.length)
     val bc = s.sparkContext.broadcast(
       (supers.map(_._1), supers.map(_._2)))
-    val tag = java.util.UUID.randomUUID().toString.take(8)
-    val fnS = s"graft_sem_super_$tag"
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(fnS,
-      exprs => graft.functions.SuperArgminBroadcast(bc, exprs(0)),
-      "scala_udf")
-    val fnB = s"graft_sem_block_$tag"
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(fnB,
-      exprs => graft.functions.ChildBlockArgmin(exprs(0), exprs(1)),
-      "scala_udf")
-    // coalesce(-1): the routing key is never null (v/c are not null),
-    // but unmarked nullability plants an isnotnull(kernel(..)) filter
-    // that evaluates the routing twice (the trainedCellsDist lesson)
     val blocks = cents
-      .selectExpr("cid", "c AS cv", s"coalesce($fnS(c), -1L) AS csuper")
+      .select(col("cid"), col("c").as("cv"),
+        joinKey(superArgmin(bc, col("c"))).as("csuper"))
       .groupBy("csuper")
       .agg(sort_array(collect_list(struct(col("cid"), col("cv"))))
         .as("block"))
-    val out = v.selectExpr("vec_id", "v", s"coalesce($fnS(v), -1L) AS rsuper")
+    v.select(col("vec_id"), col("v"),
+        joinKey(superArgmin(bc, col("v"))).as("rsuper"))
       .join(blocks.hint("SHUFFLE_HASH"), col("rsuper") === col("csuper"))
-      .selectExpr("vec_id", "v", s"CAST($fnB(v, block) AS INT) AS cluster")
-    Seq(fnS, fnB).foreach(f => s.sessionState.functionRegistry.dropFunction(
-      org.apache.spark.sql.catalyst.FunctionIdentifier(f)))
-    out
+      .select(col("vec_id"), col("v"),
+        blockArgmin(col("v"), col("block")).cast("int").as("cluster"))
   }
 
   /** The SemDeDup blocking: k-means cluster ids at K = [[adaptiveSemK]]
@@ -295,7 +275,6 @@ object ClusteringQueries {
     * stays below the 250·d within-block pair cost until far past the
     * switch point. */
   private[graft] def semClusters(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val v = ScratchCache.scratch(Tables.embeddingsParallel(s, d)
       .selectExpr("vec_id", s"${quantCol(SparkSql)} AS v"))
     val k = adaptiveSemK(v.count())
@@ -358,8 +337,7 @@ object ClusteringQueries {
       (s, d) => {
         val clusters = semClusters(s, d)
         val e = ScratchCache.scratch(Tables.embeddingsParallel(s, d)
-          .selectExpr("vec_id", "embedding",
-            "graft_vec_dot(embedding, embedding) AS n2")
+          .select(col("vec_id"), col("embedding"), norm2("embedding"))
           .join(clusters, "vec_id")
           .repartition(col("cluster")))
         val a = e.selectExpr("cluster", "vec_id AS vec_id_a",
@@ -368,8 +346,8 @@ object ClusteringQueries {
           "embedding AS eb", "n2 AS nb2")
         a.join(b, "cluster")
           .filter(col("vec_id_a") < col("vec_id_b"))
-          .selectExpr("cluster", "vec_id_a", "vec_id_b",
-            "(graft_vec_dot(ea, eb) / sqrt(na2 * nb2)) AS cosine")
+          .select(col("cluster"), col("vec_id_a"), col("vec_id_b"),
+            cosine("ea", "eb", "na2", "nb2"))
           .filter(col("cosine") >= SemDupThreshold)
           .groupBy("vec_id_b")
           .agg(min("cluster").as("cluster"), min("vec_id_a").as("kept_id"),

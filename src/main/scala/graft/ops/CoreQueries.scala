@@ -84,29 +84,21 @@ object CoreQueries {
     // in the executed plan and the row matches the conf-off aggregate.
     "q_stats_only_agg" -> QueryDef(
       (s, d) => {
-        val kPush = "spark.sql.parquet.aggregatePushdown"
         val kV1 = "spark.sql.sources.useV1SourceList"
-        val prevPush = s.conf.getOption(kPush)
-        val prevV1 = s.conf.getOption(kV1)
-        s.conf.set(kPush, "true")
         // Drop ONLY parquet from the resolved V1 list: getOption
         // resolves the entry's registered default, whereas
         // get(kV1, "") returns "" when never explicitly set — which
         // would silently flip EVERY file source to DSv2 here.
-        s.conf.set(kV1, prevV1.getOrElse("").split(",")
+        val v1 = s.conf.getOption(kV1).getOrElse("").split(",")
           .map(_.trim).filter(v => v.nonEmpty && v != "parquet")
-          .mkString(","))
-        val row =
-          try Tables.lineitem(s, d).agg(
+          .mkString(",")
+        val row = graft.GraftSession.withConf(s,
+            "spark.sql.parquet.aggregatePushdown" -> "true", kV1 -> v1) {
+          Tables.lineitem(s, d).agg(
             count(lit(1)).as("n_rows"),
             min("l_orderkey").as("min_key"),
             max("l_orderkey").as("max_key")).collect()(0)
-          finally {
-            def restore(k: String, v: Option[String]): Unit =
-              v.fold(s.conf.unset(k))(s.conf.set(k, _))
-            restore(kPush, prevPush)
-            restore(kV1, prevV1)
-          }
+        }
         import s.implicits._
         Seq((row.getLong(0), row.getLong(1), row.getLong(2)))
           .toDF("n_rows", "min_key", "max_key")

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.functions._
 
+import graft.functions.{bloomAgg, bloomProbe, textStats}
 import graft.oracle.{Dialect, DuckSql, SparkSql}
 import graft.{QueryDef, ScratchCache, Tables}
 
@@ -90,9 +91,8 @@ object CurationQueries {
     * intact. */
   private[graft] def curationGate(in: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
-    graft.functions.TextHashFunctions.register(in.sparkSession)
-    in.selectExpr("doc_id", "text", "lang", "n_chars",
-        s"graft_text_stats(${SparkSql.tokens("text")}) AS st")
+    in.select(col("doc_id"), col("text"), col("lang"), col("n_chars"),
+        textStats(expr(SparkSql.tokens("text"))).as("st"))
       .filter(expr("NOT (st.n_tokens < 20 OR st.n_tokens > 500" +
         " OR (CAST(st.n_distinct AS DOUBLE) / st.n_tokens) < 0.3" +
         " OR (CAST(st.stop_hits AS DOUBLE) / st.n_tokens) < 0.01)"))
@@ -183,10 +183,8 @@ object CurationQueries {
     // Benchmark decontamination: shingle overlap vs the eval subset.
     "q_contamination" -> QueryDef(
       (s, d) => {
-        graft.functions.TextHashFunctions.register(s)
         val docs = ScratchCache.scratch(Tables.documentsParallel(s, d)
-          .selectExpr("doc_id",
-            s"graft_shingle_hash_set(${SparkSql.tokens("text")}) AS hs"))
+          .select(col("doc_id"), DedupQueries.shingleSet.as("hs")))
         val bl = docs.filter(s"doc_id % $EvalEvery = 0")
           .selectExpr("explode(hs) AS s").distinct()
         val ex = docs.filter(s"doc_id % $EvalEvery <> 0")
@@ -229,15 +227,11 @@ object CurationQueries {
     // asserted in RuntimeFilterSpec.
     "q_contamination_bloom" -> QueryDef(
       (s, d) => {
-        graft.functions.TextHashFunctions.register(s)
-        graft.functions.GraftFunctions.register(s)
         val docs = ScratchCache.scratch(Tables.documentsParallel(s, d)
-          .selectExpr("doc_id",
-            s"graft_shingle_hash_set(${SparkSql.tokens("text")}) AS hs"))
+          .select(col("doc_id"), DedupQueries.shingleSet.as("hs")))
         val bl = ScratchCache.scratch(docs.filter(s"doc_id % $EvalEvery = 0")
           .selectExpr("explode(hs) AS s").distinct())
-        val bfBytes = bl.agg(expr(
-            "graft_bloom_agg(xxhash64(s), 50000L, 400000L)"))
+        val bfBytes = bl.agg(bloomAgg(xxhash64(col("s")), 50000L, 400000L))
           .collect()(0).getAs[Array[Byte]](0)
         // the filter travels as a BROADCAST VARIABLE, not a plan
         // literal: the serialized expression carries only the handle;
@@ -245,13 +239,9 @@ object CurationQueries {
         // blocklist scale the literal form bloats every plan copy —
         // see graft.functions.BloomMightContainBroadcast)
         val bf = s.sparkContext.broadcast(bfBytes)
-        s.sessionState.functionRegistry.createOrReplaceTempFunction(
-          "graft_bloom_probe",
-          exprs => graft.functions.BloomMightContainBroadcast(bf, exprs(0)),
-          "scala_udf")
         val ex = docs.filter(s"doc_id % $EvalEvery <> 0")
           .selectExpr("doc_id", "size(hs) AS n_shingles", "explode(hs) AS s")
-          .filter("graft_bloom_probe(xxhash64(s))")
+          .filter(bloomProbe(bf, xxhash64(col("s"))))
         ex.join(bl, "s")
           .groupBy("doc_id", "n_shingles")
           .agg(count(lit(1)).as("n_contaminated"))
@@ -286,30 +276,21 @@ object CurationQueries {
     // q_contamination — streaming must change nothing.
     "q_stream_contamination" -> QueryDef(
       (s, d) => {
-        graft.functions.TextHashFunctions.register(s)
-        graft.functions.GraftFunctions.register(s)
         val docsB = Tables.documentsParallel(s, d)
-          .selectExpr("doc_id",
-            s"graft_shingle_hash_set(${SparkSql.tokens("text")}) AS hs")
+          .select(col("doc_id"), DedupQueries.shingleSet.as("hs"))
         val bl = ScratchCache.scratch(docsB.filter(s"doc_id % $EvalEvery = 0")
           .selectExpr("explode(hs) AS s").distinct())
-        val bfBytes = bl.agg(expr(
-            "graft_bloom_agg(xxhash64(s), 50000L, 400000L)"))
+        val bfBytes = bl.agg(bloomAgg(xxhash64(col("s")), 50000L, 400000L))
           .collect()(0).getAs[Array[Byte]](0)
         val bf = s.sparkContext.broadcast(bfBytes)
-        s.sessionState.functionRegistry.createOrReplaceTempFunction(
-          "graft_bloom_probe",
-          exprs => graft.functions.BloomMightContainBroadcast(bf, exprs(0)),
-          "scala_udf")
         val docSchema = s.read
           .option("pathGlobFilter", "documents.parquet").parquet(d).schema
         val stream = s.readStream.schema(docSchema)
           .option("pathGlobFilter", "documents.parquet").parquet(d)
           .filter(s"doc_id % $EvalEvery <> 0")
-          .selectExpr("doc_id",
-            s"graft_shingle_hash_set(${SparkSql.tokens("text")}) AS hs")
+          .select(col("doc_id"), DedupQueries.shingleSet.as("hs"))
           .selectExpr("doc_id", "size(hs) AS n_shingles", "explode(hs) AS s")
-          .filter("graft_bloom_probe(xxhash64(s))")
+          .filter(bloomProbe(bf, xxhash64(col("s"))))
           .join(broadcast(bl), "s")
           .groupBy("doc_id", "n_shingles")
           .agg(count(lit(1)).as("n_contaminated"))

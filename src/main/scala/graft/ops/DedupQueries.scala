@@ -1,7 +1,9 @@
 package graft.ops
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
+import graft.functions.{intersectSize, lcp, simhash, tokenHashes, weightedIntersect}
 import graft.oracle.{Dialect, DuckSql, SparkSql}
 import graft.{QueryDef, ScratchCache, Tables}
 
@@ -71,8 +73,19 @@ object DedupQueries {
 
   /** Spark form of the same set via the native ShingleHashSet3 expression
     * (identical arithmetic, tight JVM loop instead of interpreted HOFs). */
+  private[graft] def shingleSet: Column =
+    graft.functions.shingleHashSet(expr(SparkSql.tokens("text")))
+
+  /** The same set through the `graft_shingle_hash_set` SQL name, for SQL
+    * text in sessions that registered it ([[graft.functions.TextHashFunctions]]). */
   private[graft] val sparkShingleSet: String =
     s"graft_shingle_hash_set(${SparkSql.tokens("text")})"
+
+  /** (a, b, inter, sa, sb) of a candidate pair: the shingle-array
+    * intersection size and both set sizes, ready for [[jacFromCols]]. */
+  private def interSizes(a: String, b: String, x: String, y: String): Seq[Column] =
+    Seq(col(a), col(b), intersectSize(col(x), col(y)).as("inter"),
+      size(col(x)).as("sa"), size(col(y)).as("sb"))
 
   private def bandValue(d: Dialect, b: Int): String = {
     val parts = (0 until Rows).map { r =>
@@ -131,9 +144,8 @@ object DedupQueries {
     * dedup shuffle never carries shingle sets. */
   private def minhashVerifiedPairs(
       s: org.apache.spark.sql.SparkSession, d: String): org.apache.spark.sql.DataFrame = {
-    graft.functions.TextHashFunctions.register(s)
     val docs = ScratchCache.scratch(Tables.documentsParallel(s, d)
-      .selectExpr("doc_id", s"$sparkShingleSet AS hs"))
+      .select(col("doc_id"), shingleSet.as("hs")))
     val bandCols = (0 until Bands).map(b =>
       expr(bandValue(SparkSql, b)).as(s"band_$b"))
     val banded = docs.select(col("doc_id") +: col("hs") +: bandCols: _*)
@@ -150,9 +162,7 @@ object DedupQueries {
     val a = docs.selectExpr("doc_id AS doc_id_a", "hs AS ha")
     val b = docs.selectExpr("doc_id AS doc_id_b", "hs AS hb")
     cand.join(a, "doc_id_a").join(b, "doc_id_b")
-      .selectExpr("doc_id_a", "doc_id_b",
-        "graft_intersect_size(ha, hb) AS inter",
-        "size(ha) AS sa", "size(hb) AS sb")
+      .select(interSizes("doc_id_a", "doc_id_b", "ha", "hb"): _*)
       .selectExpr("doc_id_a", "doc_id_b", s"$jacFromCols AS jaccard")
       .filter(col("jaccard") >= JaccardThreshold)
   }
@@ -276,7 +286,6 @@ object DedupQueries {
       (s, d) => {
         import org.apache.spark.sql.expressions.Window
         val dl = SparkSql
-        graft.functions.TextHashFunctions.register(s)
         // graft_token_hashes, not the literal transform(polyHash) HOF:
         // InferFiltersFromGenerate clones the generator input into a
         // size()>0 filter that predicate-pushdown moves below the
@@ -285,8 +294,7 @@ object DedupQueries {
         // of a 1.7s query); the compiled kernel is the same per-token
         // polyHash-12 law (TextHashProps pins equality) at ~HOF/50 cost.
         val toks = Tables.documentsParallel(s, d)
-          .selectExpr("doc_id",
-            s"graft_token_hashes(${dl.tokens("text")}, 12) AS hs")
+          .select(col("doc_id"), tokenHashes(expr(dl.tokens("text")), 12).as("hs"))
           .selectExpr("doc_id", "posexplode(hs) AS (pos, h)")
         val w = Window.partitionBy("doc_id").orderBy("pos")
           .rowsBetween(Window.unboundedPreceding, -1)
@@ -372,7 +380,6 @@ object DedupQueries {
     // nothing broadcast, no single-task global sort.
     "q_dedup_substring_max" -> QueryDef(
       (s, d) => {
-        graft.functions.GraftFunctions.register(s)
         import org.apache.spark.sql.expressions.Window
         val sfx = Tables.documentsParallel(s, d)
           .selectExpr("doc_id", "text",
@@ -384,7 +391,7 @@ object DedupQueries {
           .withColumn("pdoc", lag("doc_id", 1).over(w))
           .withColumn("psfx", lag("sfx", 1).over(w))
           .filter(col("pdoc").isNotNull && col("pdoc") =!= col("doc_id"))
-          .selectExpr("doc_id", "pdoc", "graft_lcp(sfx, psfx) AS lcp")
+          .select(col("doc_id"), col("pdoc"), lcp(col("sfx"), col("psfx")).as("lcp"))
           .filter(col("lcp") >= MinDup)
         pairs.select("doc_id", "lcp")
           .unionAll(pairs.selectExpr("pdoc AS doc_id", "lcp"))
@@ -457,13 +464,12 @@ object DedupQueries {
     // Exact hashed-3-gram Jaccard, blocked by (lang, ±1 length band).
     "q_dedup_ngram" -> QueryDef(
       (s, d) => {
-        graft.functions.TextHashFunctions.register(s)
         // shingle sets computed once (scratch-persisted, released by the
         // runner via ScratchCache.release), not per self-join branch
         val docs = ScratchCache.scratch(Tables.documentsParallel(s, d)
-          .selectExpr("doc_id", "lang",
-            s"${SparkSql.idiv("n_chars", "100")} AS band",
-            s"$sparkShingleSet AS hs"))
+          .select(col("doc_id"), col("lang"),
+            expr(s"${SparkSql.idiv("n_chars", "100")} AS band"),
+            shingleSet.as("hs")))
         // CANDIDATE ENUMERATION, r06 rewrite. The r05 version
         // self-joined on (lang, band, salt) — an equi-join whose key
         // space (|langs|×|bands|×NSalt) is FIXED while bucket depth
@@ -517,9 +523,7 @@ object DedupQueries {
         val ha = docs.selectExpr("doc_id AS doc_id_a", "hs AS ha")
         val hb = docs.selectExpr("doc_id AS doc_id_b", "hs AS hb")
         cand.join(ha, "doc_id_a").join(hb, "doc_id_b")
-          .selectExpr("doc_id_a", "doc_id_b",
-            "graft_intersect_size(ha, hb) AS inter",
-            "size(ha) AS sa", "size(hb) AS sb")
+          .select(interSizes("doc_id_a", "doc_id_b", "ha", "hb"): _*)
           .selectExpr("doc_id_a", "doc_id_b", s"$jacFromCols AS jaccard")
           .filter(col("jaccard") >= JaccardThreshold)
           .orderBy("doc_id_a", "doc_id_b")
@@ -567,9 +571,8 @@ object DedupQueries {
     // BIGINT → the DuckDB oracle replays it bit-for-bit.
     "q_dedup_prefix" -> QueryDef(
       (s, d) => {
-        graft.functions.TextHashFunctions.register(s)
         val ex = ScratchCache.scratch(Tables.documentsParallel(s, d)
-          .selectExpr("doc_id", s"explode($sparkShingleSet) AS s"))
+          .select(col("doc_id"), explode(shingleSet).as("s")))
         val dfTab = ex.groupBy("s").agg(count(lit(1)).as("df"))
         val docs = ScratchCache.scratch(ex.join(dfTab, "s")
           .selectExpr("doc_id", s"(df * ${graft.oracle.Dialect.M} + s) AS c")
@@ -601,9 +604,7 @@ object DedupQueries {
         val xa = docs.selectExpr("doc_id AS doc_id_a", "cs AS ca")
         val xb = docs.selectExpr("doc_id AS doc_id_b", "cs AS cb")
         cand.join(xa, "doc_id_a").join(xb, "doc_id_b")
-          .selectExpr("doc_id_a", "doc_id_b",
-            "graft_intersect_size(ca, cb) AS inter",
-            "size(ca) AS sa", "size(cb) AS sb")
+          .select(interSizes("doc_id_a", "doc_id_b", "ca", "cb"): _*)
           .selectExpr("doc_id_a", "doc_id_b", s"$jacFromCols AS jaccard")
           .filter(col("jaccard") >= JaccardThreshold)
           .orderBy("doc_id_a", "doc_id_b")
@@ -725,9 +726,8 @@ object DedupQueries {
     // candidate pair (never all-pairs, nothing broadcast).
     "q_dedup_minhash_weighted" -> QueryDef(
       (s, d) => {
-        graft.functions.TextHashFunctions.register(s)
         val ex = ScratchCache.scratch(Tables.documentsParallel(s, d)
-          .selectExpr("doc_id", s"explode($sparkShingleSet) AS s"))
+          .select(col("doc_id"), explode(shingleSet).as("s")))
         val nd = Tables.documents(s, d).agg(count(lit(1)).as("n_docs"))
         val dfTab = ex.groupBy("s").agg(count(lit(1)).as("df"))
           .crossJoin(broadcast(nd))
@@ -764,9 +764,9 @@ object DedupQueries {
           "ws AS wa_arr", "tw AS wa")
         val fb = fsh.selectExpr("doc_id AS doc_id_b", "hs AS hb_arr", "tw AS wb")
         cand.join(fa, "doc_id_a").join(fb, "doc_id_b")
-          .selectExpr("doc_id_a", "doc_id_b",
-            "graft_weighted_intersect(ha_arr, wa_arr, hb_arr) AS iw",
-            "wa", "wb")
+          .select(col("doc_id_a"), col("doc_id_b"),
+            weightedIntersect(col("ha_arr"), col("wa_arr"), col("hb_arr")).as("iw"),
+            col("wa"), col("wb"))
           .selectExpr("doc_id_a", "doc_id_b",
             "(CAST(iw AS DOUBLE) / (wa + wb - iw)) AS wjaccard")
           .filter(col("wjaccard") >= WJacThreshold)
@@ -824,9 +824,8 @@ object DedupQueries {
     // q_dedup_minhash, so the oracle replays it exactly.
     "q_dedup_incremental" -> QueryDef(
       (s, d) => {
-        graft.functions.TextHashFunctions.register(s)
         val docs = ScratchCache.scratch(Tables.documentsParallel(s, d)
-          .selectExpr("doc_id", s"$sparkShingleSet AS hs"))
+          .select(col("doc_id"), shingleSet.as("hs")))
         val bandCols = (0 until Bands).map(b =>
           expr(bandValue(SparkSql, b)).as(s"band_$b"))
         val long = docs.select(col("doc_id") +: col("hs") +: bandCols: _*)
@@ -844,9 +843,7 @@ object DedupQueries {
         val a = docs.selectExpr("doc_id AS arrival_id", "hs AS ha")
         val b = docs.selectExpr("doc_id AS corpus_id", "hs AS hb")
         cand.join(a, "arrival_id").join(b, "corpus_id")
-          .selectExpr("arrival_id", "corpus_id",
-            "graft_intersect_size(ha, hb) AS inter",
-            "size(ha) AS sa", "size(hb) AS sb")
+          .select(interSizes("arrival_id", "corpus_id", "ha", "hb"): _*)
           .selectExpr("arrival_id", "corpus_id", s"$jacFromCols AS jaccard")
           .filter(col("jaccard") >= JaccardThreshold)
           .orderBy("arrival_id", "corpus_id")
@@ -884,11 +881,10 @@ object DedupQueries {
         // persist the tiny (doc_id, signature) frame so the self-join does
         // not recompute the signature on both branches; signature runs in
         // the native TokenPolyHashes + SimHashExpr loops
-        graft.functions.TextHashFunctions.register(s)
         val docs = ScratchCache.scratch(Tables.documentsParallel(s, d)
-          .selectExpr("doc_id",
-            s"graft_token_hashes(${SparkSql.tokens("text")}, 12) AS th")
-          .selectExpr("doc_id", s"CAST(graft_simhash(th, $SimBits) AS BIGINT) AS sh"))
+          .select(col("doc_id"),
+            tokenHashes(expr(SparkSql.tokens("text")), 12).as("th"))
+          .select(col("doc_id"), simhash(col("th"), SimBits).cast("bigint").as("sh")))
         // disjoint candidate generation — a pair joins on chunk 0, or on
         // chunk 1 only when chunk 0 differs — so candidates are unique by
         // construction and no dedup shuffle is needed

@@ -1,8 +1,9 @@
 package graft.ops
 
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions.{coalesce, col, count, lead, lit, sum}
+import org.apache.spark.sql.functions.{coalesce, col, count, expr, lead, lit, sum}
 
+import graft.functions.hilbert
 import graft.oracle.{Dialect, DuckSql, SparkSql}
 import graft.{QueryDef, Tables}
 
@@ -270,20 +271,10 @@ object MaintenanceQueries {
         // drops it from the file bytes, and chunk content is identical:
         // same key-range predicate, merge semantics are row-order
         // invariant)
-        val stage = s"$root/_chg_stage"
-        cdcChanges(base)
-          .withColumn("__chunk", expr(
-            s"CASE WHEN o_orderkey < ${cuts(0)} THEN 0 " +
-              s"WHEN o_orderkey < ${cuts(1)} THEN 1 ELSE 2 END"))
-          .repartition(col("__chunk"))
-          .write.mode("overwrite").partitionBy("__chunk").parquet(stage)
-        fs.mkdirs(new org.apache.hadoop.fs.Path(watch))
-        (0 until 3).foreach { i =>
-          val part = fs.listStatus(
-              new org.apache.hadoop.fs.Path(s"$stage/__chunk=$i"))
-            .map(_.getPath).find(_.getName.endsWith(".parquet")).get
-          fs.rename(part, new org.apache.hadoop.fs.Path(watch, f"chg_$i.parquet"))
-        }
+        graft.sources.Sources.stageChunks(cdcChanges(base),
+          expr(s"CASE WHEN o_orderkey < ${cuts(0)} THEN 0 " +
+            s"WHEN o_orderkey < ${cuts(1)} THEN 1 ELSE 2 END"),
+          3, s"$root/_chg_stage", watch, "chg")
         val chgSchema = s.read.parquet(watch).schema
         val q = s.readStream.schema(chgSchema)
           .option("maxFilesPerTrigger", "1").parquet(watch)
@@ -658,7 +649,6 @@ object MaintenanceQueries {
     "q_hilbert_cluster" -> QueryDef(
       (s, dir) => {
         import org.apache.spark.sql.functions.{broadcast, max, min}
-        graft.functions.TextHashFunctions.register(s)
         val mask = (1L << DimBits) - 1
         // lineitemParallel: the Hilbert kernel is the per-row cost here,
         // and the fixture scan is one atomic row group — fan out first
@@ -670,8 +660,8 @@ object MaintenanceQueries {
           Tables.lineitemParallel(s, dir).selectExpr(
               s"(l_partkey & $mask) AS pa",
               s"(l_suppkey & $mask) AS sb")
-            .selectExpr("pa", "sb",
-              s"graft_hilbert(pa, sb, $DimBits) AS h"))
+            .select(col("pa"), col("sb"),
+              hilbert(col("pa"), col("sb"), DimBits).as("h")))
         val hmax = h.agg(max("h").as("h_max"))
         h.crossJoin(broadcast(hmax))
           .selectExpr("pa", "sb",
@@ -726,7 +716,6 @@ object MaintenanceQueries {
     "q_curve_compare" -> QueryDef(
       (s, dir) => {
         import org.apache.spark.sql.functions.{broadcast, max, min}
-        graft.functions.TextHashFunctions.register(s)
         val mask = (1L << DimBits) - 1
         // lineitemParallel: both curve keys are computed per row over an
         // atomic single-row-group fixture scan — one narrow shuffle fans
@@ -736,9 +725,9 @@ object MaintenanceQueries {
             .selectExpr(
               s"(l_partkey & $mask) AS pa",
               s"(l_suppkey & $mask) AS sb")
-            .selectExpr("pa", "sb",
-              s"${zInterleave(SparkSql, "pa", "sb")} AS z",
-              s"graft_hilbert(pa, sb, $DimBits) AS h"))
+            .select(col("pa"), col("sb"),
+              expr(s"${zInterleave(SparkSql, "pa", "sb")} AS z"),
+              hilbert(col("pa"), col("sb"), DimBits).as("h")))
         val bounds = keyed.agg(max("z").as("z_max"), max("h").as("h_max"))
         val b = keyed.crossJoin(broadcast(bounds))
         def branch(method: String, key: String, mx: String) =

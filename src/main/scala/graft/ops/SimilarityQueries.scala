@@ -1,10 +1,14 @@
 package graft.ops
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
-import graft.functions.GraftFunctions
+import graft.functions.{SeedBook, blockArgmin, blockArgmin2, blockTopKD,
+  cosine, ivfCell2, ivfCellH, ivfCellH2, joinKey, lshCell, lshSuper, norm2,
+  superArgmin, superArgmin2, superTopK, trainedCell, trainedCell2,
+  trainedCellH2, trainedProbes}
 import graft.oracle.{Dialect, DuckSql, SparkSql}
 import graft.{QueryDef, ScratchCache, Tables}
 
@@ -211,16 +215,14 @@ object SimilarityQueries {
     * scratch-cached ONCE so the size switch's delegation does not
     * double-cache it. */
   private def trainedVecs(s: SparkSession, d: String): DataFrame = {
-    GraftFunctions.register(s)
     // embeddingsParallel, not embeddings: the fixture is one parquet
     // file → one scan partition, and this frame fronts the family's
     // heavy per-row kernels (dot, quantize) AND is scratch-cached, so a
     // single-partition cache would serialize every downstream stage too
     // (r12 optimization, guide §2.5 input skew).
     graft.ScratchCache.scratch(Tables.embeddingsParallel(s, d)
-      .selectExpr("vec_id", "embedding",
-        "graft_vec_dot(embedding, embedding) AS n2",
-        s"${SparkSql.quantVec("embedding", 1000000L)} AS qv"))
+      .select(col("vec_id"), col("embedding"), norm2("embedding"),
+        expr(s"${SparkSql.quantVec("embedding", 1000000L)} AS qv")))
   }
 
   /** Driver-side seed collection of the BROADCAST trained-codebook
@@ -291,20 +293,13 @@ object SimilarityQueries {
     val (childSeeds, superSeeds) = collectSeeds(v, n, sc, ss, "TRUE")
     val bc = s.sparkContext.broadcast(
       graft.functions.Codebook.group(childSeeds, superSeeds))
-    val tag = java.util.UUID.randomUUID().toString.take(8)
-    val fnP = s"graft_trained_probes_$tag"
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(fnP,
-      exprs => graft.functions.TwoLevelProbesBroadcast(
-        bc, nSupers, maxProbes, epsNum, epsDen, exprs(0), interleave),
-      "scala_udf")
-    val out = graft.ScratchCache.scratch(
-      v.selectExpr("vec_id", "embedding", "n2", s"$fnP(qv) AS probes")
+    graft.ScratchCache.scratch(
+      v.select(col("vec_id"), col("embedding"), col("n2"),
+          trainedProbes(bc, nSupers, maxProbes, epsNum, epsDen, col("qv"),
+            interleave).as("probes"))
         .selectExpr("vec_id", "embedding", "n2",
           "element_at(probes, 1) AS cell", "probes")
         .repartition(col("cell")))
-    s.sessionState.functionRegistry.dropFunction(
-      org.apache.spark.sql.catalyst.FunctionIdentifier(fnP))
-    out
   }
 
   /** DISTRIBUTED route of [[trainedAdaptiveCells]] — identical probe
@@ -350,32 +345,20 @@ object SimilarityQueries {
     TrainedBuildStats.lastDriverSeeds = superSeeds.length
     val bcS = s.sparkContext.broadcast(
       (superSeeds.map(_._1), superSeeds.map(_._2)))
-    val tag = java.util.UUID.randomUUID().toString.take(8)
-    val fnS = s"graft_super_argmin_$tag"
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(fnS,
-      exprs => graft.functions.SuperArgminBroadcast(bcS, exprs(0)),
-      "scala_udf")
-    val fnSK = s"graft_super_topk_$tag"
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(fnSK,
-      exprs => graft.functions.SuperTopKBroadcast(nSupers, bcS, exprs(0)),
-      "scala_udf")
-    val fnTD = s"graft_block_topkd_$tag"
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(fnTD,
-      exprs => graft.functions.ChildBlockTopKD(maxProbes,
-        exprs(0), exprs(1)),
-      "scala_udf")
     val blocks = graft.ScratchCache.scratch(
       v.filter(expr(s"vec_id % $sc = 0"))
         .selectExpr("vec_id AS cid", "qv AS cv")
-        .selectExpr("cid", "cv", s"coalesce($fnS(cv), -1L) AS csuper")
+        .select(col("cid"), col("cv"),
+          joinKey(superArgmin(bcS, col("cv"))).as("csuper"))
         .groupBy("csuper")
         .agg(sort_array(collect_list(struct(col("cid"), col("cv"))))
           .as("block")))
     val cands = v.selectExpr("vec_id", "qv")
-      .selectExpr("vec_id", "qv", s"posexplode($fnSK(qv)) AS (srk0, rs)")
+      .select(col("vec_id"), col("qv"),
+        posexplode(superTopK(nSupers, bcS, col("qv"))).as(Seq("srk0", "rs")))
       .join(blocks.hint("SHUFFLE_HASH"), col("rs") === col("csuper"))
-      .selectExpr("vec_id", "srk0 + 1 AS srk",
-        s"explode($fnTD(qv, block)) AS cd")
+      .select(col("vec_id"), expr("srk0 + 1 AS srk"),
+        explode(blockTopKD(maxProbes, col("qv"), col("block"))).as("cd"))
       .selectExpr("vec_id", "srk", "cd.d AS d", "cd.c AS c")
     // home = block 1's best child: the FIRST row of the (srk, d, c)
     // order (srk 1 always has a candidate — the home block is
@@ -417,16 +400,12 @@ object SimilarityQueries {
       .groupBy("vec_id")
       .agg(expr("transform(sort_array(collect_list(struct(ord, c))), " +
         "s -> s.c)").as("probes"))
-    val out = graft.ScratchCache.scratch(
+    graft.ScratchCache.scratch(
       v.selectExpr("vec_id", "embedding", "n2")
         .join(probesDf.hint("SHUFFLE_HASH"), "vec_id")
         .selectExpr("vec_id", "embedding", "n2",
           "element_at(probes, 1) AS cell", "probes")
         .repartition(col("cell")))
-    Seq(fnS, fnSK, fnTD).foreach(f =>
-      s.sessionState.functionRegistry.dropFunction(
-        org.apache.spark.sql.catalyst.FunctionIdentifier(f)))
-    out
   }
 
   /** Embeddings with their TRAINED two-level IVF cell — the
@@ -499,34 +478,12 @@ object SimilarityQueries {
     // tie-law construction — graft.functions.Codebook.group)
     val bc = s.sparkContext.broadcast(
       graft.functions.Codebook.group(childSeeds, superSeeds))
-    val tag = java.util.UUID.randomUUID().toString.take(8)
-    val fn = s"graft_trained_cell_$tag"
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(fn,
-      exprs => graft.functions.TwoLevelArgminBroadcast(bc, exprs(0)),
-      "scala_udf")
-    var cols = Seq("vec_id", "embedding", "n2", s"$fn(qv) AS cell")
-    var fns = Seq(fn)
-    if (probe2) {
-      val fn2 = s"graft_trained_cell2_$tag"
-      s.sessionState.functionRegistry.createOrReplaceTempFunction(fn2,
-        exprs => graft.functions.TwoLevelArgmin2Broadcast(bc, exprs(0)),
-        "scala_udf")
-      cols :+= s"$fn2(qv) AS cell2"
-      fns :+= fn2
-    }
-    if (probe3) {
-      val fn3 = s"graft_trained_cell_h2_$tag"
-      s.sessionState.functionRegistry.createOrReplaceTempFunction(fn3,
-        exprs => graft.functions.TwoLevelArgminH2Broadcast(bc, exprs(0)),
-        "scala_udf")
-      cols :+= s"$fn3(qv) AS cell3"
-      fns :+= fn3
-    }
-    val out = graft.ScratchCache.scratch(
-      v.selectExpr(cols: _*).repartition(col("cell")))
-    fns.foreach(f => s.sessionState.functionRegistry.dropFunction(
-      org.apache.spark.sql.catalyst.FunctionIdentifier(f)))
-    out
+    val qv = col("qv")
+    val cols = Seq(col("vec_id"), col("embedding"), col("n2"),
+      trainedCell(bc, qv).as("cell")) ++
+      (if (probe2) Seq(trainedCell2(bc, qv).as("cell2")) else Nil) ++
+      (if (probe3) Seq(trainedCellH2(bc, qv).as("cell3")) else Nil)
+    graft.ScratchCache.scratch(v.select(cols: _*).repartition(col("cell")))
   }
 
   /** DuckDB twin of [[trainedCells]] — ends in
@@ -719,64 +676,35 @@ object SimilarityQueries {
     TrainedBuildStats.lastDriverSeeds = superSeeds.length
     val bcS = s.sparkContext.broadcast(
       (superSeeds.map(_._1), superSeeds.map(_._2)))
-    val tag = java.util.UUID.randomUUID().toString.take(8)
-    val fnS = s"graft_super_argmin_$tag"
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(fnS,
-      exprs => graft.functions.SuperArgminBroadcast(bcS, exprs(0)),
-      "scala_udf")
-    val fnB = s"graft_block_argmin_$tag"
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(fnB,
-      exprs => graft.functions.ChildBlockArgmin(exprs(0), exprs(1)),
-      "scala_udf")
-    var fns = Seq(fnS, fnB)
-    val fnS2 = s"graft_super_argmin2_$tag"
-    if (probe2) {
-      s.sessionState.functionRegistry.createOrReplaceTempFunction(fnS2,
-        exprs => graft.functions.SuperArgmin2Broadcast(bcS, exprs(0)),
-        "scala_udf")
-      fns :+= fnS2
-    }
-    val fnB2 = s"graft_block_argmin2_$tag"
-    if (probe3) {
-      s.sessionState.functionRegistry.createOrReplaceTempFunction(fnB2,
-        exprs => graft.functions.ChildBlockArgmin2(exprs(0), exprs(1)),
-        "scala_udf")
-      fns :+= fnB2
-    }
-    // coalesce(-1) marks the routing key non-nullable (qv is never
-    // null): without it the join's null-key elimination plants an
-    // isnotnull(kernel(qv)) filter that EVALUATES the O(√c·d) routing
-    // a second time per row (observed in the r09 plan audit)
     val blocks = graft.ScratchCache.scratch(childDf
-      .selectExpr("cid", "cv", s"coalesce($fnS(cv), -1L) AS csuper")
+      .select(col("cid"), col("cv"),
+        joinKey(superArgmin(bcS, col("cv"))).as("csuper"))
       .groupBy("csuper")
       .agg(sort_array(collect_list(struct(col("cid"), col("cv"))))
         .as("block")))
-    val routedCols = Seq("vec_id", "embedding", "n2", "qv",
-      s"coalesce($fnS(qv), -1L) AS rsuper") ++
-      (if (probe2) Seq(s"coalesce($fnS2(qv), -1L) AS rsuper2") else Nil)
-    val routed = v.selectExpr(routedCols: _*)
-    val homeCols = Seq("vec_id", "embedding", "n2",
-      s"$fnB(qv, block) AS cell") ++
-      (if (probe3) Seq(s"$fnB2(qv, block) AS cell3") else Nil) ++
-      (if (probe2) Seq("qv", "rsuper2") else Nil)
+    val qv = col("qv")
+    val routedCols = Seq(col("vec_id"), col("embedding"), col("n2"), qv,
+      joinKey(superArgmin(bcS, qv)).as("rsuper")) ++
+      (if (probe2) Seq(joinKey(superArgmin2(bcS, qv)).as("rsuper2")) else Nil)
+    val routed = v.select(routedCols: _*)
+    val homeCols = Seq(col("vec_id"), col("embedding"), col("n2"),
+      blockArgmin(qv, col("block")).as("cell")) ++
+      (if (probe3) Seq(blockArgmin2(qv, col("block")).as("cell3")) else Nil) ++
+      (if (probe2) Seq(qv, col("rsuper2")) else Nil)
     val home = routed.join(blocks.hint("SHUFFLE_HASH"),
         col("rsuper") === col("csuper"))
-      .selectExpr(homeCols: _*)
+      .select(homeCols: _*)
     val assigned =
       if (!probe2) home
       else {
         val b2 = blocks.selectExpr("csuper AS csuper2", "block AS block2")
         home.join(b2.hint("SHUFFLE_HASH"),
             col("rsuper2") === col("csuper2"), "left")
-          .selectExpr(Seq("vec_id", "embedding", "n2", "cell",
-            s"coalesce($fnB(qv, block2), cell) AS cell2") ++
-            (if (probe3) Seq("cell3") else Nil): _*)
+          .select(Seq(col("vec_id"), col("embedding"), col("n2"), col("cell"),
+            coalesce(blockArgmin(qv, col("block2")), col("cell")).as("cell2")) ++
+            (if (probe3) Seq(col("cell3")) else Nil): _*)
       }
-    val out = graft.ScratchCache.scratch(assigned.repartition(col("cell")))
-    fns.foreach(f => s.sessionState.functionRegistry.dropFunction(
-      org.apache.spark.sql.catalyst.FunctionIdentifier(f)))
-    out
+    graft.ScratchCache.scratch(assigned.repartition(col("cell")))
   }
 
   /** THREE-LEVEL split: t = smallest z with z³ ≥ c (z ≤ 4096 covers
@@ -965,45 +893,22 @@ object SimilarityQueries {
     TrainedBuildStats.lastDriverSeeds = grandSeeds.length
     val bcG = s.sparkContext.broadcast(
       (grandSeeds.map(_._1), grandSeeds.map(_._2)))
-    val tag = java.util.UUID.randomUUID().toString.take(8)
-    val fnG = s"graft_grand_argmin_$tag"
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(fnG,
-      exprs => graft.functions.SuperArgminBroadcast(bcG, exprs(0)),
-      "scala_udf")
-    val fnGK = s"graft_grand_topk_$tag"
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(fnGK,
-      exprs => graft.functions.SuperTopKBroadcast(2, bcG, exprs(0)),
-      "scala_udf")
-    val fnB = s"graft_block_argmin_$tag"
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(fnB,
-      exprs => graft.functions.ChildBlockArgmin(exprs(0), exprs(1)),
-      "scala_udf")
-    val fnTK = s"graft_block_topkd_$tag"
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(fnTK,
-      exprs => graft.functions.ChildBlockTopKD(L3SuperBeam,
-        exprs(0), exprs(1)),
-      "scala_udf")
-    val fnTK1 = s"graft_block_top1d_$tag"
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(fnTK1,
-      exprs => graft.functions.ChildBlockTopKD(1, exprs(0), exprs(1)),
-      "scala_udf")
-    // coalesce(-1) on every kernel-valued join key: marks the key
-    // non-nullable so the join's null-key elimination cannot plant an
-    // isnotnull(kernel(...)) filter that re-evaluates the routing per
-    // row (the r09 plan-audit catch on the two-level dist build)
     val sblocks = graft.ScratchCache.scratch(
       superSrc
         .selectExpr("vec_id AS sid", "qv AS sv")
-        .selectExpr("sid", "sv", s"coalesce($fnG(sv), -1L) AS sgrand")
+        .select(col("sid"), col("sv"),
+          joinKey(superArgmin(bcG, col("sv"))).as("sgrand"))
         .groupBy("sgrand")
         .agg(sort_array(collect_list(struct(col("sid"), col("sv"))))
           .as("sblock")))
     val cblocks = graft.ScratchCache.scratch(
       childSrc
         .selectExpr("vec_id AS cid", "qv AS cv")
-        .selectExpr("cid", "cv", s"coalesce($fnG(cv), -1L) AS cgrand")
+        .select(col("cid"), col("cv"),
+          joinKey(superArgmin(bcG, col("cv"))).as("cgrand"))
         .join(sblocks.hint("SHUFFLE_HASH"), col("cgrand") === col("sgrand"))
-        .selectExpr("cid", "cv", s"coalesce($fnB(cv, sblock), -1L) AS csuper")
+        .select(col("cid"), col("cv"),
+          joinKey(blockArgmin(col("cv"), col("sblock"))).as("csuper"))
         .groupBy("csuper")
         .agg(sort_array(collect_list(struct(col("cid"), col("cv"))))
           .as("cblock")))
@@ -1033,14 +938,16 @@ object SimilarityQueries {
     // (ChildBlockTopKD(1) returns the best (d, c) pair together) — the
     // shipped plan now evaluates exactly the distances the measured
     // l3_route_width formula counts
-    val picks = v.selectExpr("vec_id", "qv",
-        s"explode($fnGK(qv)) AS rg")
+    val qv = col("qv")
+    val picks = v.select(col("vec_id"), qv,
+        explode(superTopK(2, bcG, qv)).as("rg"))
       .join(sblocks.hint("SHUFFLE_HASH"), col("rg") === col("sgrand"))
-      .selectExpr("vec_id", "qv", s"explode($fnTK(qv, sblock)) AS sp")
+      .select(col("vec_id"), qv,
+        explode(blockTopKD(L3SuperBeam, qv, col("sblock"))).as("sp"))
       .selectExpr("vec_id", "qv", "sp.c AS rs")
       .join(cblocks.hint("SHUFFLE_HASH"), col("rs") === col("csuper"))
-      .selectExpr("vec_id",
-        s"element_at($fnTK1(qv, cblock), 1) AS cand")
+      .select(col("vec_id"),
+        element_at(blockTopKD(1, qv, col("cblock")), 1).as("cand"))
       .groupBy("vec_id")
       .agg(sort_array(collect_list(col("cand"))).as("cands"))
       .selectExpr(Seq("vec_id", "element_at(cands, 1).c AS cell") ++
@@ -1073,11 +980,7 @@ object SimilarityQueries {
     // would be testing a plan that cannot exist at scale
     val assigned = v.selectExpr("vec_id", "embedding", "n2")
       .join(picks.hint("SHUFFLE_HASH"), "vec_id")
-    val out = graft.ScratchCache.scratch(assigned.repartition(col("cell")))
-    Seq(fnG, fnGK, fnB, fnTK, fnTK1).foreach(f =>
-      s.sessionState.functionRegistry.dropFunction(
-        org.apache.spark.sql.catalyst.FunctionIdentifier(f)))
-    out
+    graft.ScratchCache.scratch(assigned.repartition(col("cell")))
   }
 
   /** DuckDB twin of [[trainedCellsL3]] — the hierarchical argmin
@@ -1410,8 +1313,8 @@ object SimilarityQueries {
     val w = Window.partitionBy("arrival_id")
       .orderBy(col("cosine").desc, col("neighbor_id"))
     q.join(c, Seq("cell"))
-      .selectExpr("arrival_id", "neighbor_id", "cell",
-        "(graft_vec_dot(qe, ce) / sqrt(qn2 * cn2)) AS cosine")
+      .select(col("arrival_id"), col("neighbor_id"), col("cell"),
+        cosine("qe", "ce", "qn2", "cn2"))
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") <= 3)
       .orderBy("arrival_id", "rn")
@@ -1449,8 +1352,8 @@ object SimilarityQueries {
       .orderBy(col("cosine").desc, col("neighbor_id"))
     q.join(c, Seq("cell"))
       .filter(col("query_id") =!= col("neighbor_id"))
-      .selectExpr("query_id", "neighbor_id", "cell",
-        "(graft_vec_dot(qe, ce) / sqrt(qn2 * cn2)) AS cosine")
+      .select(col("query_id"), col("neighbor_id"), col("cell"),
+        cosine("qe", "ce", "qn2", "cn2"))
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") <= 3)
       .orderBy("query_id", "rn")
@@ -1482,8 +1385,8 @@ object SimilarityQueries {
       .orderBy(col("cosine").desc, col("neighbor_id"))
     q.join(c, Seq("cell"))
       .filter(col("query_id") =!= col("neighbor_id"))
-      .selectExpr("query_id", "neighbor_id", "cell",
-        "(graft_vec_dot(qe, ce) / sqrt(qn2 * cn2)) AS cosine")
+      .select(col("query_id"), col("neighbor_id"), col("cell"),
+        cosine("qe", "ce", "qn2", "cn2"))
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") <= 3)
       .orderBy("query_id", "rn")
@@ -1514,8 +1417,8 @@ object SimilarityQueries {
       .orderBy(col("cosine").desc, col("neighbor_id"))
     probes.join(c, Seq("cell"))
       .filter(col("query_id") =!= col("neighbor_id"))
-      .selectExpr("query_id", "neighbor_id", "cell",
-        "(graft_vec_dot(qe, ce) / sqrt(qn2 * cn2)) AS cosine")
+      .select(col("query_id"), col("neighbor_id"), col("cell"),
+        cosine("qe", "ce", "qn2", "cn2"))
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") <= 3)
       .orderBy("query_id", "rn")
@@ -1665,12 +1568,9 @@ object SimilarityQueries {
     * codegen'd `graft_lsh_bucket` (bit-identical to the SQL fold form the
     * DuckDB oracle evaluates — see graft.functions.LshBucketExpr). */
   def lshBucketed(s: SparkSession, d: String, nPlanes: Int): DataFrame = {
-    GraftFunctions.register(s)
-    graft.functions.TextHashFunctions.register(s)
     Tables.embeddingsParallel(s, d)
-      .selectExpr("vec_id", "embedding",
-        "graft_vec_dot(embedding, embedding) AS n2",
-        s"graft_lsh_bucket(embedding, $nPlanes) AS bucket")
+      .select(col("vec_id"), col("embedding"), norm2("embedding"),
+        graft.functions.lshBucket(col("embedding"), nPlanes).as("bucket"))
   }
 
   // ---- DENSITY-ADAPTIVE LSH (r08) --------------------------------------
@@ -1714,14 +1614,11 @@ object SimilarityQueries {
     * (cap = 125, the IVF occupancy target) on the clustered corpus. */
   private[graft] def lshRefined(s: SparkSession, d: String,
       cap: Int = LshCellRows): DataFrame = {
-    GraftFunctions.register(s)
-    graft.functions.TextHashFunctions.register(s)
     val np = adaptivePlanes(corpusN(s, d))
     val e = ScratchCache.scratch(Tables.embeddingsParallel(s, d)
-      .selectExpr("vec_id", "embedding",
-        "graft_vec_dot(embedding, embedding) AS n2",
-        s"graft_lsh_bucket(embedding, $np) AS bucket",
-        s"${SparkSql.quantVec("embedding", 1000000L)} AS qv"))
+      .select(col("vec_id"), col("embedding"), norm2("embedding"),
+        graft.functions.lshBucket(col("embedding"), np).as("bucket"),
+        expr(s"${SparkSql.quantVec("embedding", 1000000L)} AS qv")))
     val hot = e.groupBy("bucket").agg(count(lit(1)).as("bn"))
       .filter(col("bn") > cap)
     // exact child-seed count before anything collects: every cap-th
@@ -1757,17 +1654,10 @@ object SimilarityQueries {
         bucket -> graft.functions.Codebook.group(children, supers)
       }
     val bc = s.sparkContext.broadcast(books)
-    val fn = s"graft_lsh_cell_${java.util.UUID.randomUUID().toString.take(8)}"
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(fn,
-      exprs => graft.functions.BucketedArgminBroadcast(bc, exprs(0), exprs(1)),
-      "scala_udf")
-    val out = ScratchCache.scratch(
-      e.selectExpr("vec_id", "embedding", "n2", "bucket",
-          s"$fn(bucket, qv) AS cell")
+    ScratchCache.scratch(
+      e.select(col("vec_id"), col("embedding"), col("n2"), col("bucket"),
+          lshCell(bc, col("bucket"), col("qv")).as("cell"))
         .repartition(col("bucket"), col("cell")))
-    s.sessionState.functionRegistry.dropFunction(
-      org.apache.spark.sql.catalyst.FunctionIdentifier(fn))
-    out
   }
 
   /** DISTRIBUTED route of [[lshRefined]] — identical (bucket, cell)
@@ -1825,19 +1715,9 @@ object SimilarityQueries {
         b -> (rows.map(_.getLong(1)), rows.map(_.getSeq[Long](2).toArray))
       }
     val bcS = s.sparkContext.broadcast(superMap)
-    val tag = java.util.UUID.randomUUID().toString.take(8)
-    val fnS = s"graft_lsh_super_$tag"
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(fnS,
-      exprs => graft.functions.BucketSuperArgminBroadcast(
-        bcS, exprs(0), exprs(1)),
-      "scala_udf")
-    val fnA = s"graft_lsh_block_argmin_$tag"
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(fnA,
-      exprs => graft.functions.ChildBlockArgmin(exprs(0), exprs(1)),
-      "scala_udf")
     val blocks = ScratchCache.scratch(seeds
-      .selectExpr("bucket AS bbucket", "cid", "cv",
-        s"$fnS(bucket, cv) AS csuper")
+      .select(col("bucket").as("bbucket"), col("cid"), col("cv"),
+        lshSuper(bcS, col("bucket"), col("cv")).as("csuper"))
       .groupBy("bbucket", "csuper")
       .agg(sort_array(collect_list(struct(col("cid"), col("cv"))))
         .as("block")))
@@ -1845,21 +1725,17 @@ object SimilarityQueries {
     // super (supers ⊆ children of the same bucket), so every routed
     // (bucket, rsuper) has a non-empty block
     val hotCells = mem
-      .selectExpr("vec_id", "embedding", "n2", "bucket", "qv",
-        s"$fnS(bucket, qv) AS rsuper")
+      .select(col("vec_id"), col("embedding"), col("n2"), col("bucket"),
+        col("qv"), lshSuper(bcS, col("bucket"), col("qv")).as("rsuper"))
       .join(blocks.hint("SHUFFLE_HASH"),
         col("bucket") === col("bbucket") && col("rsuper") === col("csuper"))
-      .selectExpr("vec_id", "embedding", "n2", "bucket",
-        s"$fnA(qv, block) AS cell")
+      .select(col("vec_id"), col("embedding"), col("n2"), col("bucket"),
+        blockArgmin(col("qv"), col("block")).as("cell"))
     val cold = e.join(hotB.hint("SHUFFLE_HASH"), Seq("bucket"), "left_anti")
       .selectExpr("vec_id", "embedding", "n2", "bucket",
         "CAST(-1 AS BIGINT) AS cell")
-    val out = ScratchCache.scratch(hotCells.unionByName(cold)
+    ScratchCache.scratch(hotCells.unionByName(cold)
       .repartition(col("bucket"), col("cell")))
-    Seq(fnS, fnA).foreach(f =>
-      s.sessionState.functionRegistry.dropFunction(
-        org.apache.spark.sql.catalyst.FunctionIdentifier(f)))
-    out
   }
 
   /** DuckDB twin of [[lshRefined]] — ends in
@@ -1998,16 +1874,14 @@ object SimilarityQueries {
     * measured it at 1.7×); the corpus-adaptive cell count lives on the
     * IVF-FLAT queries above, whose candidate cost is the full vector. */
   private def pqQuantized(s: SparkSession, d: String): DataFrame = {
-    GraftFunctions.register(s)
-    graft.functions.TextHashFunctions.register(s)
     ScratchCache.scratch(Tables.embeddingsParallel(s, d)
-      .selectExpr("vec_id",
-        s"${SparkSql.quantVec("embedding", 1000000L)} AS v",
-        s"CAST(graft_ivf_cell(embedding, $NCells) AS INT) AS cell",
-        s"CAST(graft_ivf_cell2(embedding, $NCells) AS INT) AS cell2"))
+      .select(col("vec_id"),
+        expr(s"${SparkSql.quantVec("embedding", 1000000L)} AS v"),
+        graft.functions.ivfCell(col("embedding"), NCells).cast("int").as("cell"),
+        ivfCell2(col("embedding"), NCells).cast("int").as("cell2")))
   }
 
-  /** Per-subspace flat broadcast-argmin temp functions over a codebook
+  /** Per-subspace flat broadcast-argmin books over a codebook
     * — the r12 replacement for the literal [[pqCidExpr]] at the
     * 16-code family's two hot call sites (train assignment + encode):
     * the literal form is an interpreted higher-order-function pile
@@ -2016,25 +1890,22 @@ object SimilarityQueries {
     * same exact-integer (d2, ascending-id) first-min law in compiled
     * form — the device pq256Est already uses, property-tested against
     * the naive mirror in ArgminKernelProps. */
-  private def pqArgminFns(s: SparkSession,
-      book: Int => Seq[(Int, Seq[Long])]): IndexedSeq[String] = {
-    val tag = java.util.UUID.randomUUID().toString.take(8)
+  private def pqArgminBooks(s: SparkSession,
+      book: Int => Seq[(Int, Seq[Long])]): IndexedSeq[Broadcast[SeedBook]] =
     (0 until PqSubSpaces).map { ss =>
       val sv = book(ss)
-      val bc = s.sparkContext.broadcast(
+      s.sparkContext.broadcast(
         (sv.map(_._1.toLong).toArray, sv.map(_._2.toArray).toArray))
-      val fn = s"graft_pq_argmin_${ss}_$tag"
-      s.sessionState.functionRegistry.createOrReplaceTempFunction(fn,
-        exprs => graft.functions.SuperArgminBroadcast(bc, exprs(0)),
-        "scala_udf")
-      fn
     }
-  }
 
-  /** `CAST(fn(slice(v, ...)) AS INT)` — the argmin call for subspace
-    * `ss` through a [[pqArgminFns]] function. */
-  private def pqArgminCall(fn: String, ss: Int): String =
-    s"CAST($fn(slice(v, ${ss * PqSubDims + 1}, $PqSubDims)) AS INT)"
+  /** `slice(v, ...)` — subvector `ss` of the quantized vector. */
+  private def pqSub(ss: Int): Column =
+    slice(col("v"), ss * PqSubDims + 1, PqSubDims)
+
+  /** `CAST(argmin(slice(v, ...)) AS INT)` — the argmin call for
+    * subspace `ss` through a [[pqArgminBooks]] book. */
+  private def pqArgmin(book: Broadcast[SeedBook], ss: Int): Column =
+    superArgmin(book, pqSub(ss)).cast("int")
 
   /** Map-side first-position-argmin code expression for subspace `ss`
     * under centroid literals (cid-ascending dists array → ties take the
@@ -2062,10 +1933,9 @@ object SimilarityQueries {
       (r.getLong(0).toInt,
         r.getSeq[Long](1).slice(ss * PqSubDims, (ss + 1) * PqSubDims))
     }
-    val fns = pqArgminFns(v.sparkSession, seeds)
+    val books = pqArgminBooks(v.sparkSession, seeds)
     val perSs = (0 until PqSubSpaces).map { ss =>
-      v.selectExpr(s"${pqArgminCall(fns(ss), ss)} AS cid",
-          s"slice(v, ${ss * PqSubDims + 1}, $PqSubDims) AS vs")
+      v.select(pqArgmin(books(ss), ss).as("cid"), pqSub(ss).as("vs"))
         .select(lit(ss).as("ss"), col("cid"),
           posexplode(col("vs")).as(Seq("dim", "x")))
     }
@@ -2074,12 +1944,6 @@ object SimilarityQueries {
       .agg(sum("x").as("sx"), count(lit(1)).as("n"))
       .selectExpr("ss", "cid", "dim", "sx div n AS c")
       .collect()
-    // temp functions resolved at analysis time; drop them so a
-    // long-lived session building PQ queries repeatedly doesn't grow
-    // the registry without bound (r12 advisor item — pq256Est already
-    // proves the drop-after-construction pattern under the oracle)
-    fns.foreach(f => v.sparkSession.sessionState.functionRegistry
-      .dropFunction(org.apache.spark.sql.catalyst.FunctionIdentifier(f)))
     val m = c1.groupBy(_.getInt(0)).map { case (ss, rows) =>
       ss -> rows.groupBy(_.getInt(1)).map { case (cid, rs) =>
         cid -> rs.sortBy(_.getInt(2)).map(_.getLong(3)).toSeq
@@ -2092,19 +1956,14 @@ object SimilarityQueries {
     * map over the cached frame (4 argmin projections + a stack). */
   private[graft] def pqCodes(v: DataFrame,
       book: Int => Seq[(Int, Seq[Long])]): DataFrame = {
-    val fns = pqArgminFns(v.sparkSession, book)
+    val books = pqArgminBooks(v.sparkSession, book)
     val codeCols = (0 until PqSubSpaces)
-      .map(ss => s"${pqArgminCall(fns(ss), ss)} AS code$ss")
+      .map(ss => pqArgmin(books(ss), ss).as(s"code$ss"))
     val stackArgs = (0 until PqSubSpaces)
       .map(ss => s"$ss, code$ss").mkString(", ")
-    val out = v.selectExpr(("vec_id" +: "cell" +: codeCols): _*)
+    v.select((col("vec_id") +: col("cell") +: codeCols): _*)
       .select(col("vec_id"), col("cell"),
         expr(s"stack($PqSubSpaces, $stackArgs)").as(Seq("ss", "code")))
-    // analysis is eager on DataFrame construction — the expressions are
-    // already bound; drop the temp functions (r12 advisor item)
-    fns.foreach(f => v.sparkSession.sessionState.functionRegistry
-      .dropFunction(org.apache.spark.sql.catalyst.FunctionIdentifier(f)))
-    out
   }
 
   /** Per-query ADC lookup table (query_id, ss, cid, qd2): |Q|×4×16
@@ -2320,23 +2179,12 @@ object SimilarityQueries {
     // fixture wall (measured 12.7 s vs 3.1 s in DuckDB before the
     // swap).
     val sample = v.filter(expr(s"vec_id % $st = 0"))
-    val tag = java.util.UUID.randomUUID().toString.take(8)
-    val seedFns = (0 until PqSubSpaces).map { ss =>
-      val sv = seeds(ss)
-      val bcS = s.sparkContext.broadcast(
-        (sv.map(_._1.toLong).toArray, sv.map(_._2.toArray).toArray))
-      val fn = s"graft_pq256_seed_${ss}_$tag"
-      s.sessionState.functionRegistry.createOrReplaceTempFunction(fn,
-        exprs => graft.functions.SuperArgminBroadcast(bcS, exprs(0)),
-        "scala_udf")
-      fn
-    }
+    val seedBooks = pqArgminBooks(s, seeds)
     val perSs = (0 until PqSubSpaces).map { ss =>
-      sample.selectExpr(
-          s"CAST(coalesce(${seedFns(ss)}(" +
-            s"slice(v, ${ss * PqSubDims + 1}, $PqSubDims)), -1L) " +
-            "AS INT) AS cid",
-          s"slice(v, ${ss * PqSubDims + 1}, $PqSubDims) AS vs")
+      sample.select(
+          coalesce(superArgmin(seedBooks(ss), pqSub(ss)), lit(-1L))
+            .cast("int").as("cid"),
+          pqSub(ss).as("vs"))
         .select(lit(ss).as("ss"), col("cid"),
           posexplode(col("vs")).as(Seq("dim", "x")))
     }
@@ -2354,7 +2202,7 @@ object SimilarityQueries {
     // TWO-LEVEL routed encode: one broadcast book per subspace,
     // same rank-strided supers + shared tie law as every trained
     // codebook in this file (functions.Codebook)
-    val fns = (0 until PqSubSpaces).map { ss =>
+    val books = (0 until PqSubSpaces).map { ss =>
       val children = book(ss)
         .map { case (cid, c) => cid.toLong -> c.toArray }.toArray
       val sb = (1 to 256).find(z => z * z >= children.length)
@@ -2362,36 +2210,26 @@ object SimilarityQueries {
       val supers = children.zipWithIndex.collect {
         case (c, j) if j % sb == 0 => c
       }
-      val bc = s.sparkContext.broadcast(
+      s.sparkContext.broadcast(
         graft.functions.Codebook.group(children, supers))
-      val fn = s"graft_pq256_${ss}_$tag"
-      s.sessionState.functionRegistry.createOrReplaceTempFunction(fn,
-        exprs => graft.functions.TwoLevelArgminBroadcast(bc, exprs(0)),
-        "scala_udf")
-      fn
     }
     val codeCols = (0 until PqSubSpaces).map(ss =>
-      s"CAST(${fns(ss)}(slice(v, ${ss * PqSubDims + 1}, $PqSubDims)) " +
-        s"AS INT) AS code$ss")
+      trainedCell(books(ss), pqSub(ss)).cast("int").as(s"code$ss"))
     val stackArgs = (0 until PqSubSpaces)
       .map(ss => s"$ss, code$ss").mkString(", ")
-    val codes = v.selectExpr(("vec_id" +: "cell" +: codeCols): _*)
+    val codes = v.select((col("vec_id") +: col("cell") +: codeCols): _*)
       .select(col("vec_id"), col("cell"),
         expr(s"stack($PqSubSpaces, $stackArgs)").as(Seq("ss", "code")))
     val qcells = qprobes.getOrElse(
       v.filter(col("vec_id") < PqQueries)
         .selectExpr("vec_id AS query_id", "cell AS qcell"))
     val qdist = pqQdist(s, v, book).join(qcells, "query_id")
-    val est = codes.join(broadcast(qdist),
+    codes.join(broadcast(qdist),
         codes("ss") === qdist("ss") && codes("code") === qdist("cid") &&
           codes("cell") === qdist("qcell"))
       .filter(col("query_id") =!= col("vec_id"))
       .groupBy("query_id", "vec_id")
       .agg(sum("qd2").as("est_d2"))
-    (seedFns ++ fns).foreach(f =>
-      s.sessionState.functionRegistry.dropFunction(
-        org.apache.spark.sql.catalyst.FunctionIdentifier(f)))
-    est
   }
 
   /** SQ8 same-cell estimator over a (vec_id, v, cell) frame: per-dim
@@ -2522,17 +2360,15 @@ object SimilarityQueries {
     // Brute-force cosine near-duplicate pairs.
     "q_dedup_embedding" -> QueryDef(
       (s, d) => {
-        GraftFunctions.register(s)
         val e = guardBrute(Tables.embeddingsParallel(s, d)
-          .selectExpr("vec_id", "embedding",
-            "graft_vec_dot(embedding, embedding) AS n2"),
+          .select(col("vec_id"), col("embedding"), norm2("embedding")),
           "q_dedup_embedding")
         val a = e.selectExpr("vec_id AS vec_id_a", "embedding AS ea", "n2 AS na2")
         val b = e.selectExpr("vec_id AS vec_id_b", "embedding AS eb", "n2 AS nb2")
         a.crossJoin(b)
           .filter(col("vec_id_a") < col("vec_id_b"))
-          .selectExpr("vec_id_a", "vec_id_b",
-            "(graft_vec_dot(ea, eb) / sqrt(na2 * nb2)) AS cosine")
+          .select(col("vec_id_a"), col("vec_id_b"),
+            cosine("ea", "eb", "na2", "nb2"))
           .filter(col("cosine") >= NearDupThreshold)
           .orderBy("vec_id_a", "vec_id_b")
       },
@@ -2571,8 +2407,8 @@ object SimilarityQueries {
           "n2 AS nb2", "bucket")
         probes.join(corpus, Seq("bucket"))
           .filter(col("vec_id_a") < col("vec_id_b"))
-          .selectExpr("vec_id_a", "vec_id_b",
-            "(graft_vec_dot(ea, eb) / sqrt(na2 * nb2)) AS cosine")
+          .select(col("vec_id_a"), col("vec_id_b"),
+            cosine("ea", "eb", "na2", "nb2"))
           .filter(col("cosine") >= NearDupThreshold)
           .orderBy("vec_id_a", "vec_id_b")
       }, {
@@ -2612,13 +2448,13 @@ object SimilarityQueries {
           "n2 AS nb2", "cell")
         probes.join(corpus, Seq("cell"))
           .filter(col("vec_id_a") =!= col("vec_id_b"))
-          .selectExpr(
-            "least(vec_id_a, vec_id_b) AS vec_id_a",
-            "greatest(vec_id_a, vec_id_b) AS vec_id_b",
+          .select(
+            expr("least(vec_id_a, vec_id_b) AS vec_id_a"),
+            expr("greatest(vec_id_a, vec_id_b) AS vec_id_b"),
             // symmetric bit-exact: dot's fold order is the dimension
             // order and float multiply commutes, so either endpoint
             // ordering yields the identical double
-            "(graft_vec_dot(ea, eb) / sqrt(na2 * nb2)) AS cosine")
+            cosine("ea", "eb", "na2", "nb2"))
           .filter(col("cosine") >= NearDupThreshold)
           .distinct()
           .orderBy("vec_id_a", "vec_id_b")
@@ -2650,10 +2486,10 @@ object SimilarityQueries {
           "n2 AS nb2", "cell")
         probes.join(corpus, Seq("cell"))
           .filter(col("vec_id_a") =!= col("vec_id_b"))
-          .selectExpr(
-            "least(vec_id_a, vec_id_b) AS vec_id_a",
-            "greatest(vec_id_a, vec_id_b) AS vec_id_b",
-            "(graft_vec_dot(ea, eb) / sqrt(na2 * nb2)) AS cosine")
+          .select(
+            expr("least(vec_id_a, vec_id_b) AS vec_id_a"),
+            expr("greatest(vec_id_a, vec_id_b) AS vec_id_b"),
+            cosine("ea", "eb", "na2", "nb2"))
           .filter(col("cosine") >= NearDupThreshold)
           .distinct()
           .orderBy("vec_id_a", "vec_id_b")
@@ -2694,10 +2530,10 @@ object SimilarityQueries {
           "n2 AS nb2", "cell")
         probes.join(corpus, Seq("cell"))
           .filter(col("vec_id_a") =!= col("vec_id_b"))
-          .selectExpr(
-            "least(vec_id_a, vec_id_b) AS vec_id_a",
-            "greatest(vec_id_a, vec_id_b) AS vec_id_b",
-            "(graft_vec_dot(ea, eb) / sqrt(na2 * nb2)) AS cosine")
+          .select(
+            expr("least(vec_id_a, vec_id_b) AS vec_id_a"),
+            expr("greatest(vec_id_a, vec_id_b) AS vec_id_b"),
+            cosine("ea", "eb", "na2", "nb2"))
           .filter(col("cosine") >= NearDupThreshold)
           .distinct()
           .orderBy("vec_id_a", "vec_id_b")
@@ -2730,10 +2566,10 @@ object SimilarityQueries {
           "n2 AS nb2", "cell")
         probes.join(corpus, Seq("cell"))
           .filter(col("vec_id_a") =!= col("vec_id_b"))
-          .selectExpr(
-            "least(vec_id_a, vec_id_b) AS vec_id_a",
-            "greatest(vec_id_a, vec_id_b) AS vec_id_b",
-            "(graft_vec_dot(ea, eb) / sqrt(na2 * nb2)) AS cosine")
+          .select(
+            expr("least(vec_id_a, vec_id_b) AS vec_id_a"),
+            expr("greatest(vec_id_a, vec_id_b) AS vec_id_b"),
+            cosine("ea", "eb", "na2", "nb2"))
           .filter(col("cosine") >= NearDupThreshold)
           .select("vec_id_a", "vec_id_b").distinct()
           .groupBy("vec_id_b")
@@ -2771,10 +2607,10 @@ object SimilarityQueries {
           "n2 AS nb2", "cell")
         probes.join(corpus, Seq("cell"))
           .filter(col("vec_id_a") =!= col("vec_id_b"))
-          .selectExpr(
-            "least(vec_id_a, vec_id_b) AS vec_id_a",
-            "greatest(vec_id_a, vec_id_b) AS vec_id_b",
-            "(graft_vec_dot(ea, eb) / sqrt(na2 * nb2)) AS cosine")
+          .select(
+            expr("least(vec_id_a, vec_id_b) AS vec_id_a"),
+            expr("greatest(vec_id_a, vec_id_b) AS vec_id_b"),
+            cosine("ea", "eb", "na2", "nb2"))
           .filter(col("cosine") >= NearDupThreshold)
           .select("vec_id_a", "vec_id_b").distinct()
           .groupBy("vec_id_b")
@@ -2798,10 +2634,8 @@ object SimilarityQueries {
     // Exact brute-force top-k: query side broadcast, corpus scanned once.
     "q_ann_cosine" -> QueryDef(
       (s, d) => {
-        GraftFunctions.register(s)
         val e = guardBrute(Tables.embeddingsParallel(s, d)
-          .selectExpr("vec_id", "embedding",
-            "graft_vec_dot(embedding, embedding) AS n2"),
+          .select(col("vec_id"), col("embedding"), norm2("embedding")),
           "q_ann_cosine")
         val q = e.filter(col("vec_id") < 20)
           .selectExpr("vec_id AS query_id", "embedding AS qe", "n2 AS qn2")
@@ -2810,8 +2644,8 @@ object SimilarityQueries {
           .orderBy(col("cosine").desc, col("neighbor_id"))
         c.crossJoin(broadcast(q))
           .filter(col("query_id") =!= col("neighbor_id"))
-          .selectExpr("query_id", "neighbor_id",
-            "(graft_vec_dot(qe, ce) / sqrt(qn2 * cn2)) AS cosine")
+          .select(col("query_id"), col("neighbor_id"),
+            cosine("qe", "ce", "qn2", "cn2"))
           .withColumn("rn", row_number().over(w))
           .filter(col("rn") <= TopK)
           .orderBy("query_id", "rn")
@@ -2840,8 +2674,8 @@ object SimilarityQueries {
           .orderBy(col("cosine").desc, col("neighbor_id"))
         q.join(c, Seq("bucket"))
           .filter(col("query_id") =!= col("neighbor_id"))
-          .selectExpr("query_id", "neighbor_id", "bucket",
-            "(graft_vec_dot(qe, ce) / sqrt(qn2 * cn2)) AS cosine")
+          .select(col("query_id"), col("neighbor_id"), col("bucket"),
+            cosine("qe", "ce", "qn2", "cn2"))
           .withColumn("rn", row_number().over(w))
           .filter(col("rn") <= 3)
           .orderBy("query_id", "rn")
@@ -2872,8 +2706,8 @@ object SimilarityQueries {
           .orderBy(col("cosine").desc, col("neighbor_id"))
         q.join(c, Seq("bucket", "salt"))
           .filter(col("query_id") =!= col("neighbor_id"))
-          .selectExpr("query_id", "neighbor_id", "bucket",
-            "(graft_vec_dot(qe, ce) / sqrt(qn2 * cn2)) AS cosine")
+          .select(col("query_id"), col("neighbor_id"), col("bucket"),
+            cosine("qe", "ce", "qn2", "cn2"))
           .withColumn("rn", row_number().over(w))
           .filter(col("rn") <= 3)
           .orderBy("query_id", "rn")
@@ -2901,8 +2735,8 @@ object SimilarityQueries {
           .orderBy(col("cosine").desc, col("neighbor_id"))
         q.join(c, Seq("bucket", "cell"))
           .filter(col("query_id") =!= col("neighbor_id"))
-          .selectExpr("query_id", "neighbor_id", "bucket", "cell",
-            "(graft_vec_dot(qe, ce) / sqrt(qn2 * cn2)) AS cosine")
+          .select(col("query_id"), col("neighbor_id"), col("bucket"), col("cell"),
+            cosine("qe", "ce", "qn2", "cn2"))
           .withColumn("rn", row_number().over(w))
           .filter(col("rn") <= 3)
           .orderBy("query_id", "rn")
@@ -2926,13 +2760,10 @@ object SimilarityQueries {
     // — the vector twin of q_dedup_incremental.
     "q_ann_incremental" -> QueryDef(
       (s, d) => {
-        GraftFunctions.register(s)
-        graft.functions.TextHashFunctions.register(s)
         val (sc, mc) = superSplit(adaptiveCells(corpusN(s, d)))
         val e = ScratchCache.scratch(Tables.embeddingsParallel(s, d)
-          .selectExpr("vec_id", "embedding",
-            "graft_vec_dot(embedding, embedding) AS n2",
-            s"CAST(graft_ivf_cell_h(embedding, $sc, $mc) AS INT) AS cell"))
+          .select(col("vec_id"), col("embedding"), norm2("embedding"),
+            ivfCellH(col("embedding"), sc, mc).cast("int").as("cell")))
         val q = e.filter(col("vec_id") % 10 === 0)
           .selectExpr("vec_id AS arrival_id", "embedding AS qe", "n2 AS qn2", "cell")
         val c = e.filter(col("vec_id") % 10 =!= 0)
@@ -2940,8 +2771,8 @@ object SimilarityQueries {
         val w = Window.partitionBy("arrival_id")
           .orderBy(col("cosine").desc, col("neighbor_id"))
         q.join(c, Seq("cell"))
-          .selectExpr("arrival_id", "neighbor_id", "cell",
-            "(graft_vec_dot(qe, ce) / sqrt(qn2 * cn2)) AS cosine")
+          .select(col("arrival_id"), col("neighbor_id"), col("cell"),
+            cosine("qe", "ce", "qn2", "cn2"))
           .withColumn("rn", row_number().over(w))
           .filter(col("rn") <= 3)
           .orderBy("arrival_id", "rn")
@@ -3021,19 +2852,10 @@ object SimilarityQueries {
         // over a persisted frame; the chunk column is write-layout
         // only — partitionBy drops it from the file bytes, and chunk
         // content is the identical key predicate)
-        val arrStage = s"$root/_arr_stage"
-        e.filter(col("vec_id") % 10 === 0)
-          .select("vec_id", "embedding", "n2", "cell")
-          .withColumn("__chunk", expr("(vec_id div 10) % 3"))
-          .repartition(col("__chunk"))
-          .write.mode("overwrite").partitionBy("__chunk").parquet(arrStage)
-        fs.mkdirs(new org.apache.hadoop.fs.Path(watch))
-        (0 until 3).foreach { i =>
-          val part = fs.listStatus(
-              new org.apache.hadoop.fs.Path(s"$arrStage/__chunk=$i"))
-            .map(_.getPath).find(_.getName.endsWith(".parquet")).get
-          fs.rename(part, new org.apache.hadoop.fs.Path(watch, f"arr_$i.parquet"))
-        }
+        graft.sources.Sources.stageChunks(
+          e.filter(col("vec_id") % 10 === 0)
+            .select("vec_id", "embedding", "n2", "cell"),
+          expr("(vec_id div 10) % 3"), 3, s"$root/_arr_stage", watch, "arr")
         val arrSchema = s.read.parquet(watch).schema
         // hoisted OUT of the trigger body (r13): the served table is
         // immutable across triggers, so its directory listing + schema
@@ -3059,8 +2881,8 @@ object SimilarityQueries {
             val w = Window.partitionBy("arrival_id")
               .orderBy(col("cosine").desc, col("neighbor_id"))
             probes.join(corpus, Seq("cell"))
-              .selectExpr("arrival_id", "neighbor_id", "cell",
-                "(graft_vec_dot(qe, ce) / sqrt(qn2 * cn2)) AS cosine")
+              .select(col("arrival_id"), col("neighbor_id"), col("cell"),
+                cosine("qe", "ce", "qn2", "cn2"))
               .withColumn("rn", row_number().over(w))
               .filter(col("rn") <= 3)
               .write.mode("append").parquet(s"$root/out")
@@ -3122,15 +2944,12 @@ object SimilarityQueries {
     // 60.7× at 100×.
     "q_ann_ivf" -> QueryDef(
       (s, d) => {
-        GraftFunctions.register(s)
-        graft.functions.TextHashFunctions.register(s)
         // native two-level argmin kernel (bit-identical to the SQL CTE
         // chain) + persist so the self-join doesn't assign cells twice
         val (sc, mc) = superSplit(adaptiveCells(corpusN(s, d)))
         val e = ScratchCache.scratch(Tables.embeddingsParallel(s, d)
-          .selectExpr("vec_id", "embedding",
-            "graft_vec_dot(embedding, embedding) AS n2",
-            s"CAST(graft_ivf_cell_h(embedding, $sc, $mc) AS INT) AS cell"))
+          .select(col("vec_id"), col("embedding"), norm2("embedding"),
+            ivfCellH(col("embedding"), sc, mc).cast("int").as("cell")))
         val q = e.selectExpr("vec_id AS query_id", "embedding AS qe",
           "n2 AS qn2", "cell")
         val c = e.selectExpr("vec_id AS neighbor_id", "embedding AS ce",
@@ -3139,8 +2958,8 @@ object SimilarityQueries {
           .orderBy(col("cosine").desc, col("neighbor_id"))
         q.join(c, Seq("cell"))
           .filter(col("query_id") =!= col("neighbor_id"))
-          .selectExpr("query_id", "neighbor_id", "cell",
-            "(graft_vec_dot(qe, ce) / sqrt(qn2 * cn2)) AS cosine")
+          .select(col("query_id"), col("neighbor_id"), col("cell"),
+            cosine("qe", "ce", "qn2", "cn2"))
           .withColumn("rn", row_number().over(w))
           .filter(col("rn") <= 3)
           .orderBy("query_id", "rn")
@@ -3219,8 +3038,8 @@ object SimilarityQueries {
           .orderBy(col("cosine").desc, col("neighbor_id"))
         probes.join(c, Seq("cell"))
           .filter(col("query_id") =!= col("neighbor_id"))
-          .selectExpr("query_id", "neighbor_id", "cell",
-            "(graft_vec_dot(qe, ce) / sqrt(qn2 * cn2)) AS cosine")
+          .select(col("query_id"), col("neighbor_id"), col("cell"),
+            cosine("qe", "ce", "qn2", "cn2"))
           .withColumn("rn", row_number().over(w))
           .filter(col("rn") <= 3)
           .orderBy("query_id", "rn")
@@ -3307,8 +3126,8 @@ object SimilarityQueries {
           .orderBy(col("cosine").desc, col("neighbor_id"))
         probes.join(c, Seq("cell"))
           .filter(col("query_id") =!= col("neighbor_id"))
-          .selectExpr("query_id", "neighbor_id", "cell",
-            "(graft_vec_dot(qe, ce) / sqrt(qn2 * cn2)) AS cosine")
+          .select(col("query_id"), col("neighbor_id"), col("cell"),
+            cosine("qe", "ce", "qn2", "cn2"))
           .withColumn("rn", row_number().over(w))
           .filter(col("rn") <= 3)
           .orderBy("query_id", "rn")
@@ -3348,8 +3167,8 @@ object SimilarityQueries {
           .orderBy(col("cosine").desc, col("neighbor_id"))
         probes.join(c, Seq("cell"))
           .filter(col("query_id") =!= col("neighbor_id"))
-          .selectExpr("query_id", "neighbor_id", "cell",
-            "(graft_vec_dot(qe, ce) / sqrt(qn2 * cn2)) AS cosine")
+          .select(col("query_id"), col("neighbor_id"), col("cell"),
+            cosine("qe", "ce", "qn2", "cn2"))
           .withColumn("rn", row_number().over(w))
           .filter(col("rn") <= 3)
           .orderBy("query_id", "rn")
@@ -3398,20 +3217,10 @@ object SimilarityQueries {
           .write.partitionBy("cell").parquet(s"$root/corpus")
         // one partitioned write stages all 3 key-disjoint chunks — the
         // q_stream_ann_ingest staging treatment (r13)
-        val arrStage = s"$root/_arr_stage"
-        e.filter(col("vec_id") % 10 === 0)
-          .select("vec_id", "embedding", "n2", "cell")
-          .withColumn("__chunk", expr("(vec_id div 10) % 3"))
-          .repartition(col("__chunk"))
-          .write.mode("overwrite").partitionBy("__chunk").parquet(arrStage)
-        fs.mkdirs(new org.apache.hadoop.fs.Path(watch))
-        (0 until 3).foreach { i =>
-          val part = fs.listStatus(
-              new org.apache.hadoop.fs.Path(s"$arrStage/__chunk=$i"))
-            .map(_.getPath).find(_.getName.endsWith(".parquet")).get
-          fs.rename(part,
-            new org.apache.hadoop.fs.Path(watch, f"arr_$i.parquet"))
-        }
+        graft.sources.Sources.stageChunks(
+          e.filter(col("vec_id") % 10 === 0)
+            .select("vec_id", "embedding", "n2", "cell"),
+          expr("(vec_id div 10) % 3"), 3, s"$root/_arr_stage", watch, "arr")
         val arrSchema = s.read.parquet(watch).schema
         // hoisted corpus read — one listing/inference for all triggers
         // (q_stream_ann_ingest's rationale)
@@ -3433,8 +3242,8 @@ object SimilarityQueries {
             val w = Window.partitionBy("arrival_id")
               .orderBy(col("cosine").desc, col("neighbor_id"))
             probes.join(corpus, Seq("cell"))
-              .selectExpr("arrival_id", "neighbor_id", "cell",
-                "(graft_vec_dot(qe, ce) / sqrt(qn2 * cn2)) AS cosine")
+              .select(col("arrival_id"), col("neighbor_id"), col("cell"),
+                cosine("qe", "ce", "qn2", "cn2"))
               .withColumn("rn", row_number().over(w))
               .filter(col("rn") <= 3)
               .write.mode("append").parquet(s"$root/out")
@@ -3484,8 +3293,8 @@ object SimilarityQueries {
           .orderBy(col("cosine").desc, col("neighbor_id"))
         probes.join(c, Seq("cell"))
           .filter(col("query_id") =!= col("neighbor_id"))
-          .selectExpr("query_id", "neighbor_id", "cell",
-            "(graft_vec_dot(qe, ce) / sqrt(qn2 * cn2)) AS cosine")
+          .select(col("query_id"), col("neighbor_id"), col("cell"),
+            cosine("qe", "ce", "qn2", "cn2"))
           .withColumn("rn", row_number().over(w))
           .filter(col("rn") <= 3)
           .orderBy("query_id", "rn")
@@ -3541,17 +3350,14 @@ object SimilarityQueries {
     // because cell2 lives in a different super's id block than cell1.
     "q_ann_ivf_probe2" -> QueryDef(
       (s, d) => {
-        GraftFunctions.register(s)
-        graft.functions.TextHashFunctions.register(s)
         // native two-level kernels (graft_ivf_cell_h2 masks the nearest
         // super and rescans — bit-identical to the oracle's +inf-mask
         // CTE chain, one codegen'd call instead of a HOF pile)
         val (sc, mc) = superSplit(adaptiveCells(corpusN(s, d)))
         val e = ScratchCache.scratch(Tables.embeddingsParallel(s, d)
-          .selectExpr("vec_id", "embedding",
-            "graft_vec_dot(embedding, embedding) AS n2",
-            s"CAST(graft_ivf_cell_h(embedding, $sc, $mc) AS INT) AS cell1",
-            s"CAST(graft_ivf_cell_h2(embedding, $sc, $mc) AS INT) AS cell2"))
+          .select(col("vec_id"), col("embedding"), norm2("embedding"),
+            ivfCellH(col("embedding"), sc, mc).cast("int").as("cell1"),
+            ivfCellH2(col("embedding"), sc, mc).cast("int").as("cell2")))
         val probes = e.selectExpr("vec_id AS query_id", "embedding AS qe",
             "n2 AS qn2", "cell1 AS cell")
           .unionAll(e.selectExpr("vec_id AS query_id", "embedding AS qe",
@@ -3562,8 +3368,8 @@ object SimilarityQueries {
           .orderBy(col("cosine").desc, col("neighbor_id"))
         probes.join(c, Seq("cell"))
           .filter(col("query_id") =!= col("neighbor_id"))
-          .selectExpr("query_id", "neighbor_id", "cell",
-            "(graft_vec_dot(qe, ce) / sqrt(qn2 * cn2)) AS cosine")
+          .select(col("query_id"), col("neighbor_id"), col("cell"),
+            cosine("qe", "ce", "qn2", "cn2"))
           .withColumn("rn", row_number().over(w))
           .filter(col("rn") <= 3)
           .orderBy("query_id", "rn")

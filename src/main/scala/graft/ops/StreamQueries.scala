@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.GraftSession.withConf
 import graft.{QueryDef, Tables}
 import graft.oracle.DuckSql
 import graft.streaming.EventStream
@@ -38,6 +39,11 @@ object StreamQueries {
     * partitioning-invariant, asserted by the unchanged oracles). */
   private val StatefulPartitions = "8"
 
+  /** transformWithState needs the RocksDB state store provider. */
+  private val RocksDbProvider =
+    "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
   /** Run a streaming DataFrame to completion (AvailableNow) into a
     * memory sink and return the sink table. `complete` mode re-emits
     * full aggregate state each trigger, so the final table equals the
@@ -47,9 +53,6 @@ object StreamQueries {
     * after). */
   private def runToTable(s: SparkSession, df: DataFrame, name: String,
       mode: String): DataFrame = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key, StatefulPartitions)
     // Explicit checkpoint on the process scratch tree (r13): the
     // memory-sink default is a temp dir under java.io.tmpdir; placing
     // the WAL + state deltas on the scratch tree keeps them on the
@@ -61,17 +64,14 @@ object StreamQueries {
     // re-staged input and return an empty sink table.
     val ckpt = s"${graft.ProcScratch.base}/ckpt/$name"
     val p = new org.apache.hadoop.fs.Path(ckpt)
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-    try {
-      val q = df.writeStream.format("memory").queryName(name)
+    withConf(s, "spark.sql.shuffle.partitions" -> StatefulPartitions) {
+      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+      df.writeStream.format("memory").queryName(name)
         .option("checkpointLocation", ckpt)
         .outputMode(mode)
         .trigger(Trigger.AvailableNow())
         .start()
-      q.awaitTermination()
-    } finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None    => s.conf.unset(key)
+        .awaitTermination()
     }
     s.table(name)
   }
@@ -246,18 +246,11 @@ object StreamQueries {
     // asserted in TransformWithStateSpec).
     "q_stream_running" -> QueryDef(
       (s, d) => {
-        val key = "spark.sql.streaming.stateStore.providerClass"
-        val prev = s.conf.getOption(key)
-        s.conf.set(key,
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        try
+        withConf(s, RocksDbProvider) {
           runToTable(s,
             EventStream.runningSpend(EventStream.readEvents(s, d)).toDF(),
             "graft_stream_running", "append")
             .orderBy("user_id", "event_id")
-        finally prev match {
-          case Some(v) => s.conf.set(key, v)
-          case None    => s.conf.unset(key)
         }
       },
       s"""SELECT user_id, event_id,
@@ -279,18 +272,11 @@ object StreamQueries {
     // (correctly) buffered — the oracle restricts to es < max(es).
     "q_stream_running_wm" -> QueryDef(
       (s, d) => {
-        val key = "spark.sql.streaming.stateStore.providerClass"
-        val prev = s.conf.getOption(key)
-        s.conf.set(key,
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        try
+        withConf(s, RocksDbProvider) {
           runToTable(s,
             EventStream.runningSpendWm(EventStream.readEvents(s, d)).toDF(),
             "graft_stream_running_wm", "append")
             .orderBy("user_id", "event_id")
-        finally prev match {
-          case Some(v) => s.conf.set(key, v)
-          case None    => s.conf.unset(key)
         }
       },
       s"""WITH r AS (
@@ -318,18 +304,11 @@ object StreamQueries {
     // rather than pretending the stream ended.
     "q_stream_session_v2" -> QueryDef(
       (s, d) => {
-        val key = "spark.sql.streaming.stateStore.providerClass"
-        val prev = s.conf.getOption(key)
-        s.conf.set(key,
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        try
+        withConf(s, RocksDbProvider) {
           runToTable(s,
             EventStream.sessionizeV2(EventStream.readEvents(s, d), 1800L).toDF(),
             "graft_stream_session_v2", "append")
             .orderBy("user_id", "session_start_epoch")
-        finally prev match {
-          case Some(v) => s.conf.set(key, v)
-          case None    => s.conf.unset(key)
         }
       }, {
         val d = DuckSql

@@ -1,8 +1,9 @@
 package graft.ops
 
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions.{broadcast, col, count, expr, lit, row_number, sum}
+import org.apache.spark.sql.functions.{broadcast, col, count, expr, lit, row_number, size, sum}
 
+import graft.functions.{shingleHashSet, textStats, tokenCounts}
 import graft.oracle.{Dialect, DuckSql, SparkSql}
 import graft.{QueryDef, Tables}
 
@@ -138,10 +139,9 @@ object TextQueries {
       // oracle's HOF pipeline, so values stay bit-identical.
       "q_text_stats" -> QueryDef(
         (s, dir) => {
-          graft.functions.TextHashFunctions.register(s)
           Tables.documentsParallel(s, dir)
-            .selectExpr("doc_id", "lang",
-              s"graft_text_stats(${SparkSql.tokens("text")}) AS st")
+            .select(col("doc_id"), col("lang"),
+              textStats(expr(SparkSql.tokens("text"))).as("st"))
             .selectExpr("doc_id", "lang",
               "st.n_tokens AS n_tokens",
               "st.n_distinct AS n_distinct",
@@ -171,9 +171,8 @@ object TextQueries {
       // splits exactly (graft.functions.TextHashKernels.tokenCounts).
       "q_token_count" -> QueryDef(
         (s, dir) => {
-          graft.functions.TextHashFunctions.register(s)
           Tables.documentsParallel(s, dir)
-            .selectExpr("lang", "source", "graft_token_counts(text) AS tc")
+            .select(col("lang"), col("source"), tokenCounts(col("text")).as("tc"))
             .selectExpr("lang", "source",
               "tc.n_ws_tokens AS n_ws_tokens",
               "tc.n_re_tokens AS n_re_tokens",
@@ -200,12 +199,11 @@ object TextQueries {
       // agree exactly. Map-side only.
       "q_repetition" -> QueryDef(
         (s, dir) => {
-          graft.functions.TextHashFunctions.register(s)
           val toks = SparkSql.tokens("text")
           Tables.documentsParallel(s, dir)
-            .selectExpr("doc_id",
-              s"greatest(size($toks) - 2, 1) AS n_shingles",
-              s"size(graft_shingle_hash_set($toks)) AS n_distinct_shingles")
+            .select(col("doc_id"),
+              expr(s"greatest(size($toks) - 2, 1) AS n_shingles"),
+              size(shingleHashSet(expr(toks))).as("n_distinct_shingles"))
             .selectExpr("doc_id", "n_shingles", "n_distinct_shingles",
               "(CAST(n_shingles - n_distinct_shingles AS DOUBLE) / n_shingles)" +
                 " AS repetition_ratio")
@@ -231,10 +229,9 @@ object TextQueries {
       // curation pipeline audits before dropping) is what is checked.
       "q_quality_filter" -> QueryDef(
         (s, dir) => {
-          graft.functions.TextHashFunctions.register(s)
           Tables.documentsParallel(s, dir)
-            .selectExpr("doc_id",
-              s"graft_text_stats(${SparkSql.tokens("text")}) AS st")
+            .select(col("doc_id"),
+              textStats(expr(SparkSql.tokens("text"))).as("st"))
             .selectExpr("doc_id",
               "(st.n_tokens < 20) AS too_short",
               "(st.n_tokens > 500) AS too_long",

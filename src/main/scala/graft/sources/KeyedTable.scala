@@ -273,28 +273,19 @@ object KeyedTable {
   def mergeDelta(outerSpark: SparkSession, root: String, table: String,
       changes: DataFrame, keyCol: String)(
       mergeFn: (DataFrame, DataFrame) => DataFrame): MergeStats = {
-    // analyze/read through the CHANGES' session: under foreachBatch the
-    // micro-batch frame is bound to a session CLONE whose function
-    // registry snapshot predates this call — registering on the outer
-    // session would leave the probe unresolvable here
+    // read and write through the CHANGES' session: under foreachBatch
+    // the micro-batch frame is bound to a session clone, and the merge
+    // plans run in the same session as the batch they consume
     val spark = changes.sparkSession
     val baseV = latestVersion(spark, root, table)
     val entries = manifest(spark, root, table, baseV)
     val td = tableDir(root, table).toString
     val ranges = spark.sparkContext.broadcast(
       (entries.map(_.minKey).toArray, entries.map(_.maxKey).toArray))
-    // unique per call: two merges sharing a session must not rebind each
-    // other's probe to the wrong broadcast mid-plan
-    val slotFn =
-      s"graft_file_slot_${java.util.UUID.randomUUID().toString.take(8)}"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      slotFn,
-      exprs => graft.functions.IntervalSlotBroadcast(ranges, exprs(0)),
-      "scala_udf")
-    val slotted = changes
-      .withColumn("__slot",
-        org.apache.spark.sql.functions.expr(s"$slotFn($keyCol)"))
-      .persist()
+    // the probe holds this call's broadcast, so two merges sharing a
+    // session can never see each other's ranges
+    def slotOf = graft.functions.intervalSlot(ranges, col(keyCol))
+    val slotted = changes.withColumn("__slot", slotOf).persist()
     try {
       // ONE bounded pass over the batch decides both work items: the
       // distinct slot set is ≤ touched-files + touched-gaps, and a
@@ -323,8 +314,7 @@ object KeyedTable {
             touched.map(i => s"$td/${entries(i).relPath}").toIndexedSeq: _*)
           val chTouched = slotted.filter(col("__slot") >= 0).drop("__slot")
           Some(mergeFn(curTouched, chTouched)
-            .withColumn("__slot", org.apache.spark.sql.functions
-              .expr(s"$slotFn($keyCol)")))
+            .withColumn("__slot", slotOf))
         }
       val appendFrame: Option[DataFrame] =
         if (!hasGaps) None
@@ -338,8 +328,7 @@ object KeyedTable {
             spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], curSchema)
           val chGap = slotted.filter(col("__slot") < 0)
           Some(mergeFn(emptyCur, chGap.drop("__slot"))
-            .withColumn("__slot", org.apache.spark.sql.functions
-              .expr(s"$slotFn($keyCol)")))
+            .withColumn("__slot", slotOf))
         }
       val staged: Seq[FileEntry] = (rewriteFrame, appendFrame) match {
         case (None, None) => Seq.empty
@@ -367,8 +356,6 @@ object KeyedTable {
       MergeStats(v, entries.size, carried.size, rewritten.size, appended.size)
     } finally {
       slotted.unpersist()
-      spark.sessionState.functionRegistry.dropFunction(
-        org.apache.spark.sql.catalyst.FunctionIdentifier(slotFn))
       ranges.destroy()
     }
   }
