@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -91,13 +91,9 @@ object AnnClusteredStress {
     // table can be recomputed on the corpus whose TEXT side carries no
     // 31-word-vocabulary entropy bound)
     val mode = args.lift(3).getOrElse("clustered")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "4000")
+    val spark = GraftSession.builder()
+      // stress mains keep the disk default: 100× shuffles can exceed RAM
+      .config("spark.local.dir", System.getProperty("java.io.tmpdir"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -231,8 +227,16 @@ object AnnClusteredStress {
       // consistent with the recall rows — a third independent
       // measurement of the same conclusion).
       // Truth from the sampled queries only (bounded: |sample|·N pairs).
-      def ndPairs(joined: DataFrame): Set[(Long, Long)] =
-        NearDupLaw.pairs(joined) // the SHARED law (see NearDupLaw)
+      // The near-dup law over a joined frame (query_id, neighbor_id, qe,
+      // ce, qn2, cn2): distinct ordered pairs whose exact cosine clears
+      // the declared threshold of the SimilarityQueries near-dup family.
+      def ndPairs(joined: DataFrame): Set[(Long, Long)] = joined
+        .filter(col("query_id") =!= col("neighbor_id"))
+        .select(col("query_id"), col("neighbor_id"),
+          cosine("qe", "ce", "qn2", "cn2"))
+        .filter(col("cosine") >= ops.SimilarityQueries.NearDupThreshold)
+        .select("query_id", "neighbor_id").collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSet
       val qnd = assigned.filter(pmod(hash(col("vec_id"), lit(77)), lit(qstep)) === 0)
         .selectExpr("vec_id AS query_id", "embedding AS qe", "n2 AS qn2",
           "bucket AS pbucket")
@@ -385,8 +389,16 @@ object AnnClusteredStress {
         .filter("lb1 <> lb2 OR lc1 <> lc2").count() +
         math.abs(lshSwitched.count() - n)
       spark.conf.unset(ops.SimilarityQueries.MaxDriverSeedsKey)
-      def removalRecall(got: Set[(Long, Long)]): Double =
-        NearDupLaw.removalRecall(ndTruth, got)
+      // REMOVAL recall — the decision metric of a dedup pass: a row with
+      // ANY true lower-id duplicate is removed as long as the blocker
+      // finds ANY ONE lower-id duplicate for it (every found pair is a
+      // true pair; which one is immaterial to removal)
+      def removalRecall(got: Set[(Long, Long)]): Double = {
+        val remTruth = ndTruth.collect { case (q, nb) if nb < q => q }
+        val remGot = got.collect { case (q, nb) if nb < q => q }
+        if (remTruth.isEmpty) 1.0
+        else (remTruth & remGot).size.toDouble / remTruth.size
+      }
       val remAdp = removalRecall(ndAdp)
       val remMp3 = removalRecall(ndBalMp3)
 
@@ -673,7 +685,7 @@ object AnnClusteredStress {
       // probe query WAS a child seed). r12 decorrelated all three
       // (prime offsets, per-row geometric scramble, hash-drawn
       // probes); the books now agree at every factor and decline
-      // monotonically (L3IncProbe 10×: 0.229/0.229/0.232; 100×:
+      // monotonically (r12 measurement, 10×: 0.229/0.229/0.232; 100×:
       // 0.061/0.074/0.093 for full/control/inc).
       val l3iT = ops.SimilarityQueries.trainedCellsL3Inc(spark, dir, "TRUE")
       val l3iTR1 = l3Recall(l3iT)

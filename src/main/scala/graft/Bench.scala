@@ -346,8 +346,6 @@ object Bench {
     // SIZE-BOUNDED summary — true total + errors + the slowest queries
     // that fit a fixed budget + queries_omitted — with the complete
     // per-query map in the committed BENCH_DETAIL.json.
-    val budget = 1750 // line budget; sticky entries + the ~80-char sbt
-    // epilogue must stay inside the driver's 2000-char stdout tail
     // STICKY PRINTED SET (r13, the r12 verdict's item 7): the budgeted
     // map used to print only the CURRENT slowest queries, so a query
     // that got FASTER fell out of the printed map and the driver's
@@ -355,9 +353,7 @@ object Bench {
     // (15 phantom drops in PERF_r12). Every query the PREVIOUS round's
     // committed contract line printed (the newest BENCH_r*.json's
     // parsed queries map) is therefore printed UNCONDITIONALLY; the
-    // remaining budget fills slowest-first as before. The printed set
-    // can only grow until the budget saturates — a cosmetic cap on new
-    // entries, never a phantom drop.
+    // remaining budget fills slowest-first as before ([[contractLine]]).
     val prevPrinted: Set[String] =
       (try {
         import org.json4s._
@@ -379,29 +375,43 @@ object Bench {
             }
           }
       } catch { case _: Throwable => None }).getOrElse(Set.empty)
-    val slowest = reported.toSeq.filter(_._2 >= 0).sortBy(-_._2)
-    val fixed = s"""{"metric":"total","value":$total,""" +
-      f""""value_load_normalized":$totalNorm%.1f,"unit":"sec",""" +
-      s""""queries":{},"queries_omitted":000,""" +
-      s""""queries_total":${reported.size},"errors":$errJson,""" +
-      s""""remeasured_n":${remeasured.size},""" +
-      s""""detail":"BENCH_DETAIL.json","sf":"$sfDir"}"""
-    val entries = scala.collection.mutable.ListBuffer.empty[String]
-    var used = fixed.length
-    slowest.foreach { case (q, t) =>
-      val e = f""""$q":$t%.2f"""
-      val sticky = prevPrinted.contains(q)
-      if (sticky || used + e.length + 1 <= budget) {
-        entries += e; used += e.length + 1
-      }
-    }
-    println(s"""{"metric":"total","value":$total,""" +
-      f""""value_load_normalized":$totalNorm%.1f,"unit":"sec",""" +
-      s""""queries":${entries.mkString("{", ",", "}")},""" +
-      s""""queries_omitted":${reported.size - entries.size},""" +
-      s""""queries_total":${reported.size},"errors":$errJson,""" +
-      s""""remeasured_n":${remeasured.size},""" +
-      s""""detail":"BENCH_DETAIL.json","sf":"$sfDir"}""")
+    println(contractLine(total, totalNorm, reported, prevPrinted, errJson,
+      remeasured.size, sfDir))
     spark.stop()
+  }
+
+  /** Length cap of the contract line: with the ~80-char sbt epilogue it
+    * stays inside the driver's 2000-char stdout tail. */
+  private[graft] val LineBudget = 1750
+
+  /** THE DRIVER CONTRACT LINE — one JSON object of at most
+    * [[LineBudget]] chars, whatever the query count. `value` is the
+    * suite total over ALL of `times`; the `queries` map prints a
+    * subset. Queries in `sticky` (the previous round's printed set) come
+    * first, slowest first; if they alone overflow, the fastest of them
+    * are dropped. The rest of the budget fills slowest-first with the
+    * other queries. Every query not printed (dropped, or failed with
+    * the −1 sentinel) counts in `queries_omitted`, so printed +
+    * omitted = `queries_total`. The `errors` list is never cut: a
+    * failing run's names matter more than the cap. */
+  private[graft] def contractLine(total: Double, totalNorm: Double,
+      times: Map[String, Double], sticky: Set[String], errJson: String,
+      remeasuredN: Int, sfDir: String): String = {
+    def line(entries: Seq[String]): String =
+      s"""{"metric":"total","value":$total,""" +
+        f""""value_load_normalized":$totalNorm%.1f,"unit":"sec",""" +
+        s""""queries":${entries.mkString("{", ",", "}")},""" +
+        s""""queries_omitted":${times.size - entries.size},""" +
+        s""""queries_total":${times.size},"errors":$errJson,""" +
+        s""""remeasured_n":$remeasuredN,""" +
+        s""""detail":"BENCH_DETAIL.json","sf":"$sfDir"}"""
+    def fits(entries: Seq[String]) = line(entries).length <= LineBudget
+    val (old, fresh) = times.toSeq.filter(_._2 >= 0).sortBy(-_._2)
+      .map { case (q, t) => (q, f""""$q":$t%.2f""") }
+      .partition { case (q, _) => sticky(q) }
+    val kept = old.map(_._2).inits.find(fits).getOrElse(Nil)
+    line(fresh.foldLeft(kept) { case (acc, (_, e)) =>
+      if (fits(acc :+ e)) acc :+ e else acc
+    })
   }
 }

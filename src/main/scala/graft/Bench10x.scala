@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 
 /** 10×-corpus bench — the plan-dominated performance gate.
   *
@@ -53,25 +52,16 @@ object Bench10x {
   def main(args: Array[String]): Unit = {
     val baseDir = args.headOption.getOrElse(
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = GraftSession.cpus
     // ambient-load record (r11, same device as Bench): co-tenant waves
     // on this host shift 10× wall times uniformly 1.1-1.4×, which reads
     // as phantom 2× breaches — the artifact must carry the measured
     // interference so a breach list can be judged against it
     val loadStart = Bench.loadAvg()
     val spinStart = Bench.spinProbe()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "4000")
-      // same two bench-session settings as graft.Bench (r12): driver
-      // planning + streaming checkpoint checksum sidecars — see
-      // Bench.scala for the measurements; results conf-independent
-      .config("spark.sql.constraintPropagation.enabled", "false")
-      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled",
-        "false")
+    val spark = GraftSession.builder()
+      // stress mains keep the disk default: 10× shuffles can exceed RAM
+      .config("spark.local.dir", System.getProperty("java.io.tmpdir"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val dir = s"${ProcScratch.base}/bench10x"

@@ -3,14 +3,15 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** THE session-conf contract, in one place (r13, the r12 verdict's
-  * item 9 and the r12 advisor's top item). The bench (Bench), the
-  * oracle gate (Verify), the plan evidence (ExplainDump, PlanOne,
-  * Plans), the profiler (ProfileQuery) and the stream probe
-  * (StreamProbe) build their sessions here, so the benchmarked
-  * configuration and the verified configuration cannot drift, and a
-  * production consumer of `SparkEntry.queries` has a named recipe
-  * instead of folklore. Bench10x, ScaleStress, AnnClusteredStress,
-  * ProbeTune and L3IncProbe still build their own sessions.
+  * item 9 and the r12 advisor's top item). Every main builds its
+  * session here: the bench (Bench), the oracle gate (Verify), the plan
+  * evidence (ExplainDump, Plans), the profiler (ProfileQuery) and the
+  * stress mains (Bench10x, ScaleStress, AnnClusteredStress), so the
+  * benchmarked configuration and the verified configuration cannot
+  * drift, and a production consumer of `SparkEntry.queries` has a
+  * named recipe instead of folklore. The stress mains override one
+  * conf: `spark.local.dir` goes back to the JVM tmpdir, because their
+  * shuffle volume can exceed RAM.
   *
   * What the contract sets and why (full rationale at each conf):
   *

@@ -100,7 +100,7 @@ object ScaleStress extends AdaptiveSparkPlanHelper {
     * replica — at factor 100 all 100 recall-probe queries were
     * replicas of base row 0 and every one of them was itself a child
     * seed of the raw-modulus L3 book, which is why modulus-seeded
-    * recall ROSE with scale (graft.L3IncProbe: 0.78 vs 0.117 for the
+    * recall ROSE with scale (measured in r11: 0.78 vs 0.117 for the
     * identical selection law without the resonance). A prime offset P
     * is coprime to every stride m < P, so b ≡ −kP (mod m) walks a
     * DIFFERENT base residue per replica: modulus-selected samples
@@ -197,7 +197,7 @@ object ScaleStress extends AdaptiveSparkPlanHelper {
         // SAME base origs in every replica, and every modulus-seeded
         // recall number rode that symmetry (full L3 book 0.78 vs 0.117
         // for the identical selection law without the resonance, at
-        // identical cells/occupancy — graft.L3IncProbe). The replica
+        // identical cells/occupancy, measured in r11). The replica
         // id now enters the payload GEOMETRY: each row's spread is
         // scrambled by a PER-ROW orthogonal map (cyclic shift by
         // hash(vec_id) mod dim composed with per-(vec_id, j) sign
@@ -389,13 +389,9 @@ object ScaleStress extends AdaptiveSparkPlanHelper {
     val outJson = args.lift(2).getOrElse("/root/repo/SCALE_r06.json")
     val only = args.lift(3).map(_.split(',').toSet)
     val mode = args.lift(4).getOrElse("default")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "4000")
+    val spark = GraftSession.builder()
+      // stress mains keep the disk default: 100× shuffles can exceed RAM
+      .config("spark.local.dir", System.getProperty("java.io.tmpdir"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val root = s"${ProcScratch.base}/scale"

@@ -31,10 +31,24 @@ import graft.{QueryDef, ScratchCache, Tables}
   * squared norm is computed ONCE per row, not per pair — cosine =
   * dot / sqrt(n2_a * n2_b). Summation order matches the DuckDB oracle's
   * list_reduce exactly, so values stay bit-identical.
+  *
+  * Shape: every cell-blocked query is a BOOK plus a TAIL. The book
+  * builder (trainedCells, trainedCellsL3, lshRefined, pqQuantized, …)
+  * decides which rows meet; the tail decides what is computed over
+  * them, and there are three, each written once per engine:
+  *  - (a) cosine top-3 over a key join — [[cosineTopK]] /
+  *    [[duckCosineTopK]];
+  *  - (b) canonical near-dup pairs — [[nearDupPairs]] /
+  *    [[duckNearDupPairs]], with the removal rollup [[removals]] /
+  *    [[duckRemovals]];
+  *  - (c) the ADC estimate and its est-top-K — [[adcEst]] /
+  *    [[duckAdcEst]] and [[estTopK]] / [[duckEstTopK]].
+  * The DuckDB twins are independent SQL, never derived from the Spark
+  * side, so the oracle stays an independent check.
   */
 object SimilarityQueries {
 
-  private val NearDupThreshold = 0.4
+  private[graft] val NearDupThreshold = 0.4
   private val TopK = 5
 
   /** ADC-shortlist size of the exact re-rank stage
@@ -376,7 +390,7 @@ object SimilarityQueries {
       (if (interleave) Seq(col("js"), col("srk"))
       else Seq(col("d"), col("c"))): _*)
     // margin bound with the broadcast kernel's overflow guard: a huge
-    // epsNum sentinel (ProbeTune's no-margin M = 10^6) means "no
+    // epsNum sentinel (the r10 tuning grid's no-margin M = 10^6) means "no
     // margin", and h2 * epsNum would overflow Long — a hard
     // ArithmeticException under Spark's default ANSI mode, and route
     // divergence without it. maxH2 is precomputed driver-side; the
@@ -1130,15 +1144,14 @@ object SimilarityQueries {
        |  FROM l3aq q JOIN ebl3 e ON e.vec_id = q.vec_id)""".stripMargin
 
   /** Knob defaults of the ADAPTIVE multi-probe blocker — chosen from
-    * graft.ProbeTune's measured retention-vs-mass frontier on the 100×
-    * clustered corpus (r10): nSupers=3 / maxProbes=5 / eps=4 /
-    * interleave retains 0.210 of true cosine≥0.4 pairs at 4.04× the
-    * single-probe candidate mass, vs the fixed probe3 set's 0.151 at
-    * 2.64× — the best measured ≤4.1×-mass point. maxProbes IS the
-    * stated mass budget (probe side only fans out; measured mass runs
-    * ~20% under the cap); ProbeTune is the knob-picking tool when a
-    * different retention/budget point is wanted, and it is also the
-    * honest record that the frontier slope is ~0.05 retention per 1×
+    * the retention-vs-mass frontier measured on the 100× clustered
+    * corpus in r10 (SURVEY.md records the tuning grid): nSupers=3 /
+    * maxProbes=5 / eps=4 / interleave retains 0.210 of true cosine≥0.4
+    * pairs at 4.04× the single-probe candidate mass, vs the fixed probe3
+    * set's 0.151 at 2.64× — the best measured ≤4.1×-mass point.
+    * maxProbes IS the stated mass budget (probe side only fans out;
+    * measured mass runs ~20% under the cap). That frontier is also the
+    * honest record that its slope is ~0.05 retention per 1×
     * mass on this corpus — truth grows quadratically in cluster mass,
     * so a pair-retention target like 0.30 needs ~6× mass, while the
     * REMOVAL decision (any one found partner suffices) measures 1.000
@@ -1216,9 +1229,126 @@ object SimilarityQueries {
          |  WHERE cell3 <> cell""".stripMargin
   }
 
-  /** The within-cell top-3 search shared by the trained-IVF family:
-    * one hash-partitioned self-join on cell + per-query top-3 window
-    * (cosine desc, neighbor_id asc). */
+  // ---- SHARED TAILS ------------------------------------------------------
+  // The three tails of the "book + tail" shape (object Scaladoc).
+
+  /** Search side of an embedding frame: (id, qe, qn2, keys…). */
+  private def asProbes(e: DataFrame, id: String, keys: String*): DataFrame =
+    e.selectExpr(Seq(s"vec_id AS $id", "embedding AS qe", "n2 AS qn2") ++
+      keys: _*)
+
+  /** Corpus side of an embedding frame: (neighbor_id, ce, cn2, keys…). */
+  private def asCorpus(e: DataFrame, keys: String*): DataFrame =
+    e.selectExpr(Seq("vec_id AS neighbor_id", "embedding AS ce",
+      "n2 AS cn2") ++ keys: _*)
+
+  /** Tail (a), the cosine top-3 over a key join: `probes` (id, qe, qn2,
+    * on…) ⋈ `corpus` (neighbor_id, ce, cn2, on…) on the `on` keys →
+    * cosine → per-`id` rank by (cosine desc, neighbor_id) → rn ≤ 3,
+    * projected to (id, neighbor_id, keep…, cosine, rn) in no particular
+    * order (a foreachBatch body appends it as is). A `query_id` search
+    * probes the corpus it is drawn from, so its self-pairs drop;
+    * `arrival_id` probes are disjoint from their corpus by construction
+    * and skip the filter. `keep` is `on` except where a key only shards
+    * the join (q_ann_lsh_salted's salt). */
+  private[graft] def cosineTopKRows(probes: DataFrame, corpus: DataFrame,
+      id: String, on: Seq[String], keep: Seq[String]): DataFrame = {
+    val w = Window.partitionBy(id)
+      .orderBy(col("cosine").desc, col("neighbor_id"))
+    val joined = probes.join(corpus, on)
+    val pairs =
+      if (id == "query_id") joined.filter(col(id) =!= col("neighbor_id"))
+      else joined
+    pairs.select(Seq(col(id), col("neighbor_id")) ++ keep.map(col) :+
+        cosine("qe", "ce", "qn2", "cn2"): _*)
+      .withColumn("rn", row_number().over(w))
+      .filter(col("rn") <= 3)
+  }
+
+  /** [[cosineTopKRows]] in (id, rn) order — the declared queries' shape. */
+  private[graft] def cosineTopK(probes: DataFrame, corpus: DataFrame,
+      id: String, on: Seq[String], keep: Seq[String]): DataFrame =
+    cosineTopKRows(probes, corpus, id, on, keep).orderBy(id, "rn")
+
+  /** [[cosineTopK]] of `probes` (query_id, qe, qn2, cell) against the
+    * home cells of `e` — the search every IVF book ends in. */
+  private def cellSearch(probes: DataFrame, e: DataFrame): DataFrame =
+    cosineTopK(probes, asCorpus(e, "cell"), "query_id", Seq("cell"),
+      Seq("cell"))
+
+  /** DuckDB twin of [[cosineTopK]] after the CTE list `ctes`: per-`id`
+    * top-3 of `probes` q ⋈ `corpus` c on `keys`, over the pairs that
+    * satisfy `where` (self-exclusion and any serving predicate). */
+  private def duckCosineTopK(ctes: String, probes: String, corpus: String,
+      id: String, keys: Seq[String], where: String): String = {
+    val on = keys.map(k => s"q.$k = c.$k").mkString(" AND ")
+    s"""WITH $ctes
+       |SELECT $id, neighbor_id, ${keys.mkString(", ")}, cosine, rn FROM (
+       |  SELECT q.vec_id AS $id, c.vec_id AS neighbor_id,
+       |    ${keys.map("q." + _).mkString(", ")}, ${duckCos("q", "c")} AS cosine,
+       |    ROW_NUMBER() OVER (PARTITION BY q.vec_id
+       |      ORDER BY ${duckCos("q", "c")} DESC, c.vec_id) AS rn
+       |  FROM $probes q JOIN $corpus c ON $on
+       |  WHERE $where
+       |) WHERE rn <= 3 ORDER BY $id, rn""".stripMargin
+  }
+
+  /** [[duckCosineTopK]]'s `where` for a search of its own corpus. */
+  private val DuckNotSelf = "q.vec_id <> c.vec_id"
+
+  /** ... and for the served-index ingest: arrivals (vec_id % 10 = 0)
+    * probe existing rows only. */
+  private val DuckArrivals = "q.vec_id % 10 = 0 AND c.vec_id % 10 <> 0"
+
+  /** Tail (b), canonical near-dup pairs: `probes` (vec_id_a, ea, na2,
+    * cell) ⋈ the home cells of `e` → (least, greatest, cosine) with
+    * cosine ≥ [[NearDupThreshold]]. A pair survives when EITHER endpoint
+    * probes the other's home cell, so it can arrive twice; callers
+    * dedup it (`distinct`, or [[removals]]). Symmetric bit-exact: dot's
+    * fold order is the dimension order and float multiply commutes, so
+    * either endpoint ordering yields the identical double. */
+  private def nearDupPairs(probes: DataFrame, e: DataFrame): DataFrame = {
+    val corpus = e.selectExpr("vec_id AS vec_id_b", "embedding AS eb",
+      "n2 AS nb2", "cell")
+    probes.join(corpus, Seq("cell"))
+      .filter(col("vec_id_a") =!= col("vec_id_b"))
+      .select(
+        expr("least(vec_id_a, vec_id_b) AS vec_id_a"),
+        expr("greatest(vec_id_a, vec_id_b) AS vec_id_b"),
+        cosine("ea", "eb", "na2", "nb2"))
+      .filter(col("cosine") >= NearDupThreshold)
+  }
+
+  /** The SemDeDup removal decision over [[nearDupPairs]]: each removed
+    * vec_id with its kept lowest-id duplicate and its duplicate count. */
+  private def removals(pairs: DataFrame): DataFrame =
+    pairs.select("vec_id_a", "vec_id_b").distinct()
+      .groupBy("vec_id_b")
+      .agg(min("vec_id_a").as("kept_id"), count(lit(1)).as("n_dups"))
+      .selectExpr("vec_id_b AS vec_id", "kept_id", "n_dups")
+      .orderBy("vec_id")
+
+  /** DuckDB twin of [[nearDupPairs]] + its dedup: the DISTINCT canonical
+    * pairs of `probes` a ⋈ `corpus` b on cell. */
+  private def duckNearDupPairs(probes: String, corpus: String): String =
+    s"""SELECT DISTINCT least(a.vec_id, b.vec_id) AS vec_id_a,
+       |  greatest(a.vec_id, b.vec_id) AS vec_id_b,
+       |  ${duckCos("a", "b")} AS cosine
+       |FROM $probes a JOIN $corpus b ON a.cell = b.cell
+       |  AND a.vec_id <> b.vec_id
+       |WHERE ${duckCos("a", "b")} >= $NearDupThreshold""".stripMargin
+
+  /** DuckDB twin of [[removals]] after the CTE list `ctes` (cosine is a
+    * function of the pair, so DISTINCT over it keeps one row per pair). */
+  private def duckRemovals(ctes: String, probes: String,
+      corpus: String): String =
+    s"""WITH $ctes,
+       |dpairs AS (
+       |${duckNearDupPairs(probes, corpus)})
+       |SELECT vec_id_b AS vec_id, min(vec_id_a) AS kept_id,
+       |  count(*) AS n_dups
+       |FROM dpairs GROUP BY vec_id_b ORDER BY vec_id""".stripMargin
+
   /** Conf override of the two-level cell cap the FACADE routes on —
     * production never sets it (the law is [[CellCap]]); tests and the
     * stress force the L3 arm with it, the [[MaxDriverSeedsKey]]
@@ -1259,7 +1389,7 @@ object SimilarityQueries {
     * super's second child) has no L3 twin and is deliberately NOT in
     * the facade surface — callers needing it have chosen a book.
     * Downstream of the build, both books' frames join/serve
-    * identically (trainedAnnSearch, the KeyedTable ingest/delete
+    * identically (homeCellSearch, the KeyedTable ingest/delete
     * surface). Driver state and join shape follow the routed book's
     * documented bounds.
     *
@@ -1303,22 +1433,11 @@ object SimilarityQueries {
     * (vec_id % 10 = 0) probe ONLY existing rows through the frozen
     * book's home cells, per-arrival top-3. One body so the per-book
     * routes and the facade can never drift apart. */
-  private[graft] def servedIngestProbe(e: DataFrame): DataFrame = {
-    val q = e.filter(col("vec_id") % 10 === 0)
-      .selectExpr("vec_id AS arrival_id", "embedding AS qe",
-        "n2 AS qn2", "cell")
-    val c = e.filter(col("vec_id") % 10 =!= 0)
-      .selectExpr("vec_id AS neighbor_id", "embedding AS ce",
-        "n2 AS cn2", "cell")
-    val w = Window.partitionBy("arrival_id")
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    q.join(c, Seq("cell"))
-      .select(col("arrival_id"), col("neighbor_id"), col("cell"),
-        cosine("qe", "ce", "qn2", "cn2"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= 3)
-      .orderBy("arrival_id", "rn")
-  }
+  private[graft] def servedIngestProbe(e: DataFrame): DataFrame =
+    cosineTopK(asProbes(e.filter(col("vec_id") % 10 === 0), "arrival_id",
+        "cell"),
+      asCorpus(e.filter(col("vec_id") % 10 =!= 0), "cell"),
+      "arrival_id", Seq("cell"), Seq("cell"))
 
   /** The served-index DELETE body shared by q_ann_delete,
     * q_ann_delete_l3 and the facade arms: the index lives as a
@@ -1343,20 +1462,8 @@ object SimilarityQueries {
     }
     graft.sources.KeyedTable.compact(s, root, "annidx", "vec_id", 100000L)
     val idx = graft.sources.KeyedTable.read(s, root, "annidx")
-    val q = idx.filter(col("vec_id") % 10 === 0)
-      .selectExpr("vec_id AS query_id", "embedding AS qe",
-        "n2 AS qn2", "cell")
-    val c = idx.selectExpr("vec_id AS neighbor_id", "embedding AS ce",
-      "n2 AS cn2", "cell")
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    q.join(c, Seq("cell"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"), col("cell"),
-        cosine("qe", "ce", "qn2", "cn2"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= 3)
-      .orderBy("query_id", "rn")
+    cellSearch(asProbes(idx.filter(col("vec_id") % 10 === 0), "query_id",
+      "cell"), idx)
   }
 
   /** FACADE-LEVEL INGEST (r12, the r11 verdict's item 4): the serving
@@ -1376,66 +1483,37 @@ object SimilarityQueries {
       cap: Option[Long] = None): DataFrame =
     servedDeleteProbe(s, root, annIndex(s, d, cap = cap))
 
-  private def trainedAnnSearch(e: DataFrame): DataFrame = {
-    val q = e.selectExpr("vec_id AS query_id", "embedding AS qe",
-      "n2 AS qn2", "cell")
-    val c = e.selectExpr("vec_id AS neighbor_id", "embedding AS ce",
-      "n2 AS cn2", "cell")
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    q.join(c, Seq("cell"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"), col("cell"),
-        cosine("qe", "ce", "qn2", "cn2"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= 3)
-      .orderBy("query_id", "rn")
-  }
+  /** Every row of `e` searches its own home cell (nprobe = 1). */
+  private def homeCellSearch(e: DataFrame): DataFrame =
+    cellSearch(asProbes(e, "query_id", "cell"), e)
 
-  /** Oracle of [[trainedAnnSearch]] over [[duckTrainedEbCte]] — shared
+  /** Oracle of [[homeCellSearch]] over [[duckTrainedEbCte]] — shared
     * by q_ann_ivf_trained and q_ann_ivf_trained_dist (the two builds
     * assign IDENTICAL cells, so one SQL gates both). */
   private def duckTrainedAnnSql: String =
-    s"""WITH $duckTrainedEbCte
-       |SELECT query_id, neighbor_id, cell, cosine, rn FROM (
-       |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id, q.cell,
-       |    ${duckCos("q", "c")} AS cosine,
-       |    ROW_NUMBER() OVER (PARTITION BY q.vec_id
-       |      ORDER BY ${duckCos("q", "c")} DESC, c.vec_id) AS rn
-       |  FROM eb q JOIN eb c ON q.cell = c.cell AND q.vec_id <> c.vec_id
-       |) WHERE rn <= 3 ORDER BY query_id, rn""".stripMargin
+    duckCosineTopK(duckTrainedEbCte, "eb", "eb", "query_id", Seq("cell"),
+      DuckNotSelf)
 
   /** The nprobe=3 top-3 search shared by the BROADCAST and DIST builds
     * (q_ann_ivf_trained_probe3 / q_ann_ivf_trained_probe3_dist) — one
     * body + one oracle so the two declared routes can never drift
     * apart (their bit-equality is the dist query's whole point). */
-  private def trainedProbe3Search(e: DataFrame): DataFrame = {
-    val probes = probeUnion(e, "query_id", "qe", "qn2", useCell3 = true)
-    val c = e.selectExpr("vec_id AS neighbor_id", "embedding AS ce",
-      "n2 AS cn2", "cell")
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    probes.join(c, Seq("cell"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"), col("cell"),
-        cosine("qe", "ce", "qn2", "cn2"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= 3)
-      .orderBy("query_id", "rn")
-  }
+  private def trainedProbe3Search(e: DataFrame): DataFrame =
+    cellSearch(probeUnion(e, "query_id", "qe", "qn2", useCell3 = true), e)
 
   private lazy val duckTrainedProbe3Sql: String =
-    s"""WITH $duckTrainedEb3Cte,
-       |tprobes AS (
-       |  ${duckProbes("eb3", useCell3 = true)})
-       |SELECT query_id, neighbor_id, cell, cosine, rn FROM (
-       |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id, q.cell,
-       |    ${duckCos("q", "c")} AS cosine,
-       |    ROW_NUMBER() OVER (PARTITION BY q.vec_id
-       |      ORDER BY ${duckCos("q", "c")} DESC, c.vec_id) AS rn
-       |  FROM tprobes q JOIN eb3 c ON q.cell = c.cell
-       |    AND q.vec_id <> c.vec_id
-       |) WHERE rn <= 3 ORDER BY query_id, rn""".stripMargin
+    duckProbeSearch(duckTrainedEb3Cte, "eb3", useCell3 = true)
+
+  /** Oracle of the fixed multi-probe searches: `ctes` ends in `src(vec_id,
+    * embedding, n2, cell, cell2[, cell3])`, whose [[duckProbes]] fan-out
+    * searches the home cells of `src`. */
+  private def duckProbeSearch(ctes: String, src: String,
+      useCell3: Boolean): String =
+    duckCosineTopK(
+      s"""$ctes,
+         |tprobes AS (
+         |  ${duckProbes(src, useCell3)})""".stripMargin,
+      "tprobes", src, "query_id", Seq("cell"), DuckNotSelf)
 
   /** Oracle shared by q_ann_incremental_trained and q_stream_ann_ingest
     * — the streaming ingest's appended union must EQUAL the one-shot
@@ -1446,26 +1524,12 @@ object SimilarityQueries {
     * q_stream_ann_ingest_l3 (key-disjoint batches make the streamed
     * union equal the one-shot query). */
   private def duckIncrementalL3Sql: String =
-    s"""WITH ${duckTrainedL3CteW("vec_id % 10 <> 0")}
-       |SELECT arrival_id, neighbor_id, cell, cosine, rn FROM (
-       |  SELECT q.vec_id AS arrival_id, c.vec_id AS neighbor_id, q.cell,
-       |    ${duckCos("q", "c")} AS cosine,
-       |    ROW_NUMBER() OVER (PARTITION BY q.vec_id
-       |      ORDER BY ${duckCos("q", "c")} DESC, c.vec_id) AS rn
-       |  FROM ebl3 q JOIN ebl3 c ON q.cell = c.cell
-       |  WHERE q.vec_id % 10 = 0 AND c.vec_id % 10 <> 0
-       |) WHERE rn <= 3 ORDER BY arrival_id, rn""".stripMargin
+    duckCosineTopK(duckTrainedL3CteW("vec_id % 10 <> 0"), "ebl3", "ebl3",
+      "arrival_id", Seq("cell"), DuckArrivals)
 
   private def duckIncrementalTrainedSql: String =
-    s"""WITH ${duckTrainedEbCteW("vec_id % 10 <> 0")}
-       |SELECT arrival_id, neighbor_id, cell, cosine, rn FROM (
-       |  SELECT q.vec_id AS arrival_id, c.vec_id AS neighbor_id, q.cell,
-       |    ${duckCos("q", "c")} AS cosine,
-       |    ROW_NUMBER() OVER (PARTITION BY q.vec_id
-       |      ORDER BY ${duckCos("q", "c")} DESC, c.vec_id) AS rn
-       |  FROM eb q JOIN eb c ON q.cell = c.cell
-       |  WHERE q.vec_id % 10 = 0 AND c.vec_id % 10 <> 0
-       |) WHERE rn <= 3 ORDER BY arrival_id, rn""".stripMargin
+    duckCosineTopK(duckTrainedEbCteW("vec_id % 10 <> 0"), "eb", "eb",
+      "arrival_id", Seq("cell"), DuckArrivals)
 
   /** Oracles of the served-index DELETE family — full-corpus book
     * (deletion never retrains), search restricted to the vec_id % 7
@@ -1473,29 +1537,23 @@ object SimilarityQueries {
     * facade arms (q_ann_delete/_auto on the two-level book;
     * q_ann_delete_l3/_auto_l3 on the three-level one). */
   private def duckDeleteTrainedSql: String =
-    s"""WITH $duckTrainedEbCte
-       |SELECT query_id, neighbor_id, cell, cosine, rn FROM (
-       |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id, q.cell,
-       |    ${duckCos("q", "c")} AS cosine,
-       |    ROW_NUMBER() OVER (PARTITION BY q.vec_id
-       |      ORDER BY ${duckCos("q", "c")} DESC, c.vec_id) AS rn
-       |  FROM eb q JOIN eb c ON q.cell = c.cell AND q.vec_id <> c.vec_id
-       |  WHERE q.vec_id % 10 = 0 AND q.vec_id % 7 <> 0
-       |    AND c.vec_id % 7 <> 0
-       |) WHERE rn <= 3 ORDER BY query_id, rn""".stripMargin
+    duckCosineTopK(duckTrainedEbCte, "eb", "eb", "query_id", Seq("cell"),
+      DuckSurvivors)
 
   private def duckDeleteL3Sql: String =
-    s"""WITH $duckTrainedL3Cte
-       |SELECT query_id, neighbor_id, cell, cosine, rn FROM (
-       |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id, q.cell,
-       |    ${duckCos("q", "c")} AS cosine,
-       |    ROW_NUMBER() OVER (PARTITION BY q.vec_id
-       |      ORDER BY ${duckCos("q", "c")} DESC, c.vec_id) AS rn
-       |  FROM ebl3 q JOIN ebl3 c ON q.cell = c.cell
-       |    AND q.vec_id <> c.vec_id
-       |  WHERE q.vec_id % 10 = 0 AND q.vec_id % 7 <> 0
-       |    AND c.vec_id % 7 <> 0
-       |) WHERE rn <= 3 ORDER BY query_id, rn""".stripMargin
+    duckCosineTopK(duckTrainedL3Cte, "ebl3", "ebl3", "query_id",
+      Seq("cell"), DuckSurvivors)
+
+  /** The delete family's search: vec_id % 10 queries over the
+    * vec_id % 7 survivors. */
+  private val DuckSurvivors = s"$DuckNotSelf AND q.vec_id % 10 = 0 " +
+    "AND q.vec_id % 7 <> 0 AND c.vec_id % 7 <> 0"
+
+  /** Oracle of the three-level search — q_ann_ivf_trained_l3 and the
+    * facade's forced-L3 arm q_ann_index_auto_l3. */
+  private def duckTrainedL3AnnSql: String =
+    duckCosineTopK(duckTrainedL3Cte, "ebl3", "ebl3", "query_id",
+      Seq("cell"), DuckNotSelf)
 
   /** The same knobs as inline DuckDB SQL over the embeddings view —
     * pure integer arithmetic, so both engines agree at every N. */
@@ -1850,17 +1908,12 @@ object SimilarityQueries {
     * reproduce this same bucket join bit-for-bit. */
   private lazy val lshOracle: String = {
     val d = DuckSql
-    s"""WITH eb AS (SELECT vec_id, embedding,
-       |    ${d.dotDbl("embedding", "embedding")} AS n2,
-       |    CAST(${lshBucket(d, "embedding", duckPlanesExpr)} AS BIGINT) AS bucket
-       |  FROM embeddings)
-       |SELECT query_id, neighbor_id, bucket, cosine, rn FROM (
-       |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id, q.bucket,
-       |    ${duckCos("q", "c")} AS cosine,
-       |    ROW_NUMBER() OVER (PARTITION BY q.vec_id
-       |      ORDER BY ${duckCos("q", "c")} DESC, c.vec_id) AS rn
-       |  FROM eb q JOIN eb c ON q.bucket = c.bucket AND q.vec_id <> c.vec_id
-       |) WHERE rn <= 3 ORDER BY query_id, rn""".stripMargin
+    duckCosineTopK(
+      s"""eb AS (SELECT vec_id, embedding,
+         |    ${d.dotDbl("embedding", "embedding")} AS n2,
+         |    CAST(${lshBucket(d, "embedding", duckPlanesExpr)} AS BIGINT) AS bucket
+         |  FROM embeddings)""".stripMargin,
+      "eb", "eb", "query_id", Seq("bucket"), DuckNotSelf)
   }
 
   /** Query subset for the PQ queries (matches the ANN family). */
@@ -2043,9 +2096,7 @@ object SimilarityQueries {
   }
 
   private lazy val pqOracleCtes: String =
-    s"""v AS (
-       |  SELECT vec_id, ${DuckSql.quantVec("embedding", 1000000L)} AS v
-       |  FROM embeddings),
+    s"""$duckQuantV,
        |$pqOracleTail""".stripMargin
 
   /** The PRODUCTION-SHAPED PQ geometry (r10): k = 256 codes per
@@ -2152,7 +2203,7 @@ object SimilarityQueries {
     * vectors) and q_ann_ivfpq_res256 (residuals wrt the trained coarse
     * seed), and measured head-to-head in AnnClusteredStress. Returns
     * (query_id, vec_id, est_d2) for the PqQueries sampled queries;
-    * [[pq256TopK]] adds the declared queries' top-K window. */
+    * [[estTopK]] adds the declared queries' top-K window. */
   /** Optional multi-probe query side: (query_id, qcell) one row per
     * probed cell — [[pq256Est]]'s default is the home-cell frame
     * (nprobe=1); q_ann_ivfpq_adaptive passes the margin-law probe
@@ -2220,16 +2271,8 @@ object SimilarityQueries {
     val codes = v.select((col("vec_id") +: col("cell") +: codeCols): _*)
       .select(col("vec_id"), col("cell"),
         expr(s"stack($PqSubSpaces, $stackArgs)").as(Seq("ss", "code")))
-    val qcells = qprobes.getOrElse(
-      v.filter(col("vec_id") < PqQueries)
-        .selectExpr("vec_id AS query_id", "cell AS qcell"))
-    val qdist = pqQdist(s, v, book).join(qcells, "query_id")
-    codes.join(broadcast(qdist),
-        codes("ss") === qdist("ss") && codes("code") === qdist("cid") &&
-          codes("cell") === qdist("qcell"))
-      .filter(col("query_id") =!= col("vec_id"))
-      .groupBy("query_id", "vec_id")
-      .agg(sum("qd2").as("est_d2"))
+    adcEst(codes, pqQdist(s, v, book),
+      Some(qprobes.getOrElse(homeCells(v))))
   }
 
   /** SQ8 same-cell estimator over a (vec_id, v, cell) frame: per-dim
@@ -2273,9 +2316,7 @@ object SimilarityQueries {
   private lazy val duckSq8EstCtes: String = {
     val d = DuckSql
     s"""$duckTrainedEbCte,
-       |v AS (
-       |  SELECT vec_id, ${d.quantVec("embedding", 1000000L)} AS v
-       |  FROM embeddings),
+       |$duckQuantV,
        |sqst AS MATERIALIZED (
        |  SELECT t.dd, min(vv.v[t.dd]) AS mn, max(vv.v[t.dd]) AS mx
        |  FROM v vv CROSS JOIN generate_series(1, 64) t(dd)
@@ -2345,15 +2386,116 @@ object SimilarityQueries {
        |) WHERE rn <= $TopK
        |ORDER BY query_id, rn""".stripMargin
 
-  /** Declared-query tail of the 256-code family: per-query top-K by
-    * (est_d2, neighbor_id). */
-  private def pq256TopK(est: DataFrame): DataFrame = {
+  /** Tail (c), the ADC estimate: candidate `codes` (vec_id, cell, ss,
+    * code) ⋈ the broadcast lookup table `qdist` (query_id, ss, cid, qd2)
+    * → Σ qd2 per (query, candidate), self excluded → (query_id, vec_id,
+    * est_d2). With `qcells` (query_id, qcell) each query scores only the
+    * candidates in its probed cells (IVF-PQ); without, every candidate
+    * (flat PQ). A query's probe cells are distinct and a candidate has
+    * one home cell, so the join stays (query, candidate)-unique. */
+  private def adcEst(codes: DataFrame, qdist: DataFrame,
+      qcells: Option[DataFrame]): DataFrame = {
+    val lut = qcells.fold(qdist)(qdist.join(_, "query_id"))
+    val sameCode = codes("ss") === lut("ss") && codes("code") === lut("cid")
+    val on =
+      if (qcells.isEmpty) sameCode
+      else sameCode && codes("cell") === lut("qcell")
+    codes.join(broadcast(lut), on)
+      .filter(col("query_id") =!= col("vec_id"))
+      .groupBy("query_id", "vec_id")
+      .agg(sum("qd2").as("est_d2"))
+  }
+
+  /** Each sampled query's home cell — nprobe = 1 for [[adcEst]]. */
+  private def homeCells(v: DataFrame): DataFrame =
+    v.filter(col("vec_id") < PqQueries)
+      .selectExpr("vec_id AS query_id", "cell AS qcell")
+
+  /** The 16-code PQ estimate over a (vec_id, v, cell) frame: codebook
+    * learned on `v` ([[pqLearnBook]]), codes, then [[adcEst]]. */
+  private def pqEst(s: SparkSession, v: DataFrame,
+      qcells: Option[DataFrame]): DataFrame = {
+    val book = pqLearnBook(v)
+    adcEst(pqCodes(v, book), pqQdist(s, v, book), qcells)
+  }
+
+  /** Tail (c), the est-top-K: per-query top-K by (est_d2, vec_id). */
+  private def estTopK(est: DataFrame): DataFrame = {
     val w = Window.partitionBy("query_id")
       .orderBy(col("est_d2").asc, col("vec_id").asc)
     est.withColumn("rn", row_number().over(w))
       .filter(col("rn") <= TopK)
       .selectExpr("query_id", "vec_id AS neighbor_id", "est_d2", "rn")
       .orderBy("query_id", "rn")
+  }
+
+  /** DuckDB twin of [[adcEst]]: the `est(query_id, vec_id, est_d2)` CTE
+    * over `codes` and `qd`; `cellJoin` is empty for the flat scan, else
+    * a [[duckCellJoin]] restriction. */
+  private def duckAdcEst(cellJoin: String): String =
+    s"""est AS (
+       |  SELECT q.query_id, k.vec_id, CAST(sum(q.qd2) AS BIGINT) AS est_d2
+       |  FROM codes k
+       |  JOIN qd q ON q.ss = k.ss AND q.cid = k.code$cellJoin
+       |  WHERE q.query_id <> k.vec_id
+       |  GROUP BY q.query_id, k.vec_id)""".stripMargin
+
+  /** [[duckAdcEst]]'s cell restriction: candidate cells from `cells`
+    * (vec_id, cell), each query's probed cells from `qcells` (query_id,
+    * qcell). */
+  private def duckCellJoin(cells: String, qcells: String): String =
+    s"""
+       |  JOIN $cells ck ON ck.vec_id = k.vec_id
+       |  JOIN $qcells p ON p.query_id = q.query_id AND p.qcell = ck.cell""".stripMargin
+
+  /** [[duckCellJoin]] with each query probing its home cell. */
+  private def duckHomeCellJoin(cells: String): String =
+    duckCellJoin(cells, s"(SELECT vec_id AS query_id, cell AS qcell FROM $cells)")
+
+  /** DuckDB twin of [[estTopK]] after a CTE list ending in `est`. */
+  private def duckEstTopK(ctes: String): String =
+    s"""WITH $ctes
+       |SELECT query_id, neighbor_id, est_d2, rn FROM (
+       |  SELECT query_id, vec_id AS neighbor_id, est_d2,
+       |    ROW_NUMBER() OVER (PARTITION BY query_id
+       |      ORDER BY est_d2, vec_id) AS rn
+       |  FROM est) WHERE rn <= $TopK
+       |ORDER BY query_id, rn""".stripMargin
+
+  /** Quantized vectors `v(vec_id, v)` — the input of every PQ oracle. */
+  private val duckQuantV: String =
+    s"""v AS (
+       |  SELECT vec_id, ${DuckSql.quantVec("embedding", 1000000L)} AS v
+       |  FROM embeddings)""".stripMargin
+
+  /** Oracle CTEs of [[pq256Est]] on raw quantized vectors, nprobe = 1:
+    * `book` ends in the cell CTE `cells(vec_id, …, cell)`, the list
+    * ends in `est`. */
+  private def duckPq256EstCtes(book: String, cells: String): String =
+    s"""$book,
+       |$duckQuantV,
+       |$pqOracleTail256,
+       |${duckAdcEst(duckHomeCellJoin(cells))}""".stripMargin
+
+  /** [[nearDupPairs]] of the three-probe trained book — shared by
+    * q_dedup_embedding_probe3 and q_dedup_semantic_mp. */
+  private def probe3Pairs(s: SparkSession, d: String): DataFrame = {
+    val e = trainedCells(s, d, probe2 = true, probe3 = true)
+    nearDupPairs(probeUnion(e, "vec_id_a", "ea", "na2", useCell3 = true), e)
+  }
+
+  private def duckProbe3PairCtes: String =
+    s"""$duckTrainedEb3Cte,
+       |dprobes AS (
+       |  ${duckProbes("eb3", useCell3 = true)})""".stripMargin
+
+  /** [[nearDupPairs]] of the adaptive margin-law book — shared by
+    * q_dedup_embedding_adaptive and q_dedup_semantic_adaptive. */
+  private def adaptivePairs(s: SparkSession, d: String): DataFrame = {
+    val e = trainedAdaptiveCells(s, d, AdaptNSupers, AdaptMaxProbes,
+      AdaptEpsNum, AdaptEpsDen, interleave = true)
+    nearDupPairs(e.selectExpr("vec_id AS vec_id_a", "embedding AS ea",
+      "n2 AS na2", "explode(probes) AS cell"), e)
   }
 
   val defs: Map[String, QueryDef] = Map(
@@ -2443,31 +2585,14 @@ object SimilarityQueries {
     "q_dedup_embedding_probe2" -> QueryDef(
       (s, d) => {
         val e = trainedCells(s, d, probe2 = true)
-        val probes = probeUnion(e, "vec_id_a", "ea", "na2", useCell3 = false)
-        val corpus = e.selectExpr("vec_id AS vec_id_b", "embedding AS eb",
-          "n2 AS nb2", "cell")
-        probes.join(corpus, Seq("cell"))
-          .filter(col("vec_id_a") =!= col("vec_id_b"))
-          .select(
-            expr("least(vec_id_a, vec_id_b) AS vec_id_a"),
-            expr("greatest(vec_id_a, vec_id_b) AS vec_id_b"),
-            // symmetric bit-exact: dot's fold order is the dimension
-            // order and float multiply commutes, so either endpoint
-            // ordering yields the identical double
-            cosine("ea", "eb", "na2", "nb2"))
-          .filter(col("cosine") >= NearDupThreshold)
-          .distinct()
-          .orderBy("vec_id_a", "vec_id_b")
+        nearDupPairs(probeUnion(e, "vec_id_a", "ea", "na2",
+            useCell3 = false), e)
+          .distinct().orderBy("vec_id_a", "vec_id_b")
       },
       s"""WITH $duckTrainedEb2Cte,
          |dprobes AS (
          |  ${duckProbes("eb2", useCell3 = false)})
-         |SELECT DISTINCT least(a.vec_id, b.vec_id) AS vec_id_a,
-         |  greatest(a.vec_id, b.vec_id) AS vec_id_b,
-         |  ${duckCos("a", "b")} AS cosine
-         |FROM dprobes a JOIN eb2 b ON a.cell = b.cell
-         |  AND a.vec_id <> b.vec_id
-         |WHERE ${duckCos("a", "b")} >= $NearDupThreshold
+         |${duckNearDupPairs("dprobes", "eb2")}
          |ORDER BY vec_id_a, vec_id_b""".stripMargin),
 
     // THREE-probe near-dup blocking: probe2's cross-super probe PLUS
@@ -2479,30 +2604,9 @@ object SimilarityQueries {
     // super's block; cell3 is a different child of the home block), so
     // the union stays duplicate-free before the pair-level dedup.
     "q_dedup_embedding_probe3" -> QueryDef(
-      (s, d) => {
-        val e = trainedCells(s, d, probe2 = true, probe3 = true)
-        val probes = probeUnion(e, "vec_id_a", "ea", "na2", useCell3 = true)
-        val corpus = e.selectExpr("vec_id AS vec_id_b", "embedding AS eb",
-          "n2 AS nb2", "cell")
-        probes.join(corpus, Seq("cell"))
-          .filter(col("vec_id_a") =!= col("vec_id_b"))
-          .select(
-            expr("least(vec_id_a, vec_id_b) AS vec_id_a"),
-            expr("greatest(vec_id_a, vec_id_b) AS vec_id_b"),
-            cosine("ea", "eb", "na2", "nb2"))
-          .filter(col("cosine") >= NearDupThreshold)
-          .distinct()
-          .orderBy("vec_id_a", "vec_id_b")
-      },
-      s"""WITH $duckTrainedEb3Cte,
-         |dprobes AS (
-         |  ${duckProbes("eb3", useCell3 = true)})
-         |SELECT DISTINCT least(a.vec_id, b.vec_id) AS vec_id_a,
-         |  greatest(a.vec_id, b.vec_id) AS vec_id_b,
-         |  ${duckCos("a", "b")} AS cosine
-         |FROM dprobes a JOIN eb3 b ON a.cell = b.cell
-         |  AND a.vec_id <> b.vec_id
-         |WHERE ${duckCos("a", "b")} >= $NearDupThreshold
+      (s, d) => probe3Pairs(s, d).distinct().orderBy("vec_id_a", "vec_id_b"),
+      s"""WITH $duckProbe3PairCtes
+         |${duckNearDupPairs("dprobes", "eb3")}
          |ORDER BY vec_id_a, vec_id_b""".stripMargin),
 
     // ADAPTIVE multi-probe near-dup blocking — the TARGET-RETENTION
@@ -2511,7 +2615,7 @@ object SimilarityQueries {
     // integer distance margin of its nearest alternative, interleaved
     // one-per-super and capped at maxProbes = THE stated mass budget
     // (graft.functions.TwoLevelProbesBroadcast). Knob defaults are
-    // CHOSEN from graft.ProbeTune's measured frontier on the 100×
+    // CHOSEN from the r10 measured frontier on the 100×
     // clustered corpus: retention 0.210 at 4.04× single-probe mass vs
     // probe3's 0.151 at 2.64× (AnnClusteredStress gates the adaptive
     // row at a raised 0.15 floor, and gates removal recall — the
@@ -2521,30 +2625,10 @@ object SimilarityQueries {
     // per-row blocking can buy on a corpus whose truth set grows
     // quadratically in cluster mass.
     "q_dedup_embedding_adaptive" -> QueryDef(
-      (s, d) => {
-        val e = trainedAdaptiveCells(s, d, AdaptNSupers, AdaptMaxProbes,
-          AdaptEpsNum, AdaptEpsDen, interleave = true)
-        val probes = e.selectExpr("vec_id AS vec_id_a", "embedding AS ea",
-          "n2 AS na2", "explode(probes) AS cell")
-        val corpus = e.selectExpr("vec_id AS vec_id_b", "embedding AS eb",
-          "n2 AS nb2", "cell")
-        probes.join(corpus, Seq("cell"))
-          .filter(col("vec_id_a") =!= col("vec_id_b"))
-          .select(
-            expr("least(vec_id_a, vec_id_b) AS vec_id_a"),
-            expr("greatest(vec_id_a, vec_id_b) AS vec_id_b"),
-            cosine("ea", "eb", "na2", "nb2"))
-          .filter(col("cosine") >= NearDupThreshold)
-          .distinct()
-          .orderBy("vec_id_a", "vec_id_b")
-      },
+      (s, d) => adaptivePairs(s, d).distinct()
+        .orderBy("vec_id_a", "vec_id_b"),
       s"""WITH $duckAdaptiveProbesCte
-         |SELECT DISTINCT least(a.vec_id, b.vec_id) AS vec_id_a,
-         |  greatest(a.vec_id, b.vec_id) AS vec_id_b,
-         |  ${duckCos("a", "b")} AS cosine
-         |FROM aprobes a JOIN eb b ON a.cell = b.cell
-         |  AND a.vec_id <> b.vec_id
-         |WHERE ${duckCos("a", "b")} >= $NearDupThreshold
+         |${duckNearDupPairs("aprobes", "eb")}
          |ORDER BY vec_id_a, vec_id_b""".stripMargin),
 
     // The SemDeDup REMOVAL DECISION riding the adaptive knob — the
@@ -2557,36 +2641,8 @@ object SimilarityQueries {
     // arrays bit-identical, AdaptiveDistSpec + the stress switch
     // gate), so this query's codebook state is bounded at any N.
     "q_dedup_semantic_adaptive" -> QueryDef(
-      (s, d) => {
-        val e = trainedAdaptiveCells(s, d, AdaptNSupers, AdaptMaxProbes,
-          AdaptEpsNum, AdaptEpsDen, interleave = true)
-        val probes = e.selectExpr("vec_id AS vec_id_a", "embedding AS ea",
-          "n2 AS na2", "explode(probes) AS cell")
-        val corpus = e.selectExpr("vec_id AS vec_id_b", "embedding AS eb",
-          "n2 AS nb2", "cell")
-        probes.join(corpus, Seq("cell"))
-          .filter(col("vec_id_a") =!= col("vec_id_b"))
-          .select(
-            expr("least(vec_id_a, vec_id_b) AS vec_id_a"),
-            expr("greatest(vec_id_a, vec_id_b) AS vec_id_b"),
-            cosine("ea", "eb", "na2", "nb2"))
-          .filter(col("cosine") >= NearDupThreshold)
-          .select("vec_id_a", "vec_id_b").distinct()
-          .groupBy("vec_id_b")
-          .agg(min("vec_id_a").as("kept_id"), count(lit(1)).as("n_dups"))
-          .selectExpr("vec_id_b AS vec_id", "kept_id", "n_dups")
-          .orderBy("vec_id")
-      },
-      s"""WITH $duckAdaptiveProbesCte,
-         |dpairs AS (
-         |  SELECT DISTINCT least(a.vec_id, b.vec_id) AS vec_id_a,
-         |    greatest(a.vec_id, b.vec_id) AS vec_id_b
-         |  FROM aprobes a JOIN eb b ON a.cell = b.cell
-         |    AND a.vec_id <> b.vec_id
-         |  WHERE ${duckCos("a", "b")} >= $NearDupThreshold)
-         |SELECT vec_id_b AS vec_id, min(vec_id_a) AS kept_id,
-         |  count(*) AS n_dups
-         |FROM dpairs GROUP BY vec_id_b ORDER BY vec_id""".stripMargin),
+      (s, d) => removals(adaptivePairs(s, d)),
+      duckRemovals(duckAdaptiveProbesCte, "aprobes", "eb")),
 
     // SemDeDup REMOVAL DECISION on the multi-probe trained blocking —
     // the engine's recommended semantic-dedup pass for clustered
@@ -2600,36 +2656,8 @@ object SimilarityQueries {
     // gated). Pair generation is q_dedup_embedding_probe3's; the
     // removal rollup adds one pair-keyed aggregate.
     "q_dedup_semantic_mp" -> QueryDef(
-      (s, d) => {
-        val e = trainedCells(s, d, probe2 = true, probe3 = true)
-        val probes = probeUnion(e, "vec_id_a", "ea", "na2", useCell3 = true)
-        val corpus = e.selectExpr("vec_id AS vec_id_b", "embedding AS eb",
-          "n2 AS nb2", "cell")
-        probes.join(corpus, Seq("cell"))
-          .filter(col("vec_id_a") =!= col("vec_id_b"))
-          .select(
-            expr("least(vec_id_a, vec_id_b) AS vec_id_a"),
-            expr("greatest(vec_id_a, vec_id_b) AS vec_id_b"),
-            cosine("ea", "eb", "na2", "nb2"))
-          .filter(col("cosine") >= NearDupThreshold)
-          .select("vec_id_a", "vec_id_b").distinct()
-          .groupBy("vec_id_b")
-          .agg(min("vec_id_a").as("kept_id"), count(lit(1)).as("n_dups"))
-          .selectExpr("vec_id_b AS vec_id", "kept_id", "n_dups")
-          .orderBy("vec_id")
-      },
-      s"""WITH $duckTrainedEb3Cte,
-         |dprobes AS (
-         |  ${duckProbes("eb3", useCell3 = true)}),
-         |dpairs AS (
-         |  SELECT DISTINCT least(a.vec_id, b.vec_id) AS vec_id_a,
-         |    greatest(a.vec_id, b.vec_id) AS vec_id_b
-         |  FROM dprobes a JOIN eb3 b ON a.cell = b.cell
-         |    AND a.vec_id <> b.vec_id
-         |  WHERE ${duckCos("a", "b")} >= $NearDupThreshold)
-         |SELECT vec_id_b AS vec_id, min(vec_id_a) AS kept_id,
-         |  count(*) AS n_dups
-         |FROM dpairs GROUP BY vec_id_b ORDER BY vec_id""".stripMargin),
+      (s, d) => removals(probe3Pairs(s, d)),
+      duckRemovals(duckProbe3PairCtes, "dprobes", "eb3")),
 
     // Exact brute-force top-k: query side broadcast, corpus scanned once.
     "q_ann_cosine" -> QueryDef(
@@ -2666,19 +2694,8 @@ object SimilarityQueries {
     "q_ann_lsh" -> QueryDef(
       (s, d) => {
         val e = ScratchCache.scratch(lshBucketed(s, d, adaptivePlanes(corpusN(s, d))))
-        val q = e.selectExpr("vec_id AS query_id", "embedding AS qe",
-          "n2 AS qn2", "bucket")
-        val c = e.selectExpr("vec_id AS neighbor_id", "embedding AS ce",
-          "n2 AS cn2", "bucket")
-        val w = Window.partitionBy("query_id")
-          .orderBy(col("cosine").desc, col("neighbor_id"))
-        q.join(c, Seq("bucket"))
-          .filter(col("query_id") =!= col("neighbor_id"))
-          .select(col("query_id"), col("neighbor_id"), col("bucket"),
-            cosine("qe", "ce", "qn2", "cn2"))
-          .withColumn("rn", row_number().over(w))
-          .filter(col("rn") <= 3)
-          .orderBy("query_id", "rn")
+        cosineTopK(asProbes(e, "query_id", "bucket"), asCorpus(e, "bucket"),
+          "query_id", Seq("bucket"), Seq("bucket"))
       }, lshOracle),
 
     // Salted LSH ANN: same semantics as q_ann_lsh (same oracle — salting
@@ -2696,21 +2713,11 @@ object SimilarityQueries {
         val sized = e.join(broadcast(counts), Seq("bucket"))
           .withColumn("nsalt",
             greatest(lit(1L), ceil(col("bn") / lit(SaltBucketRows))).cast("int"))
-        val c = sized.selectExpr("vec_id AS neighbor_id", "embedding AS ce",
-          "n2 AS cn2", "bucket",
+        val c = asCorpus(sized, "bucket",
           "CAST(pmod(xxhash64(vec_id), nsalt) AS INT) AS salt")
-        val q = sized.selectExpr("vec_id AS query_id", "embedding AS qe",
-          "n2 AS qn2", "bucket", "nsalt")
+        val q = asProbes(sized, "query_id", "bucket", "nsalt")
           .withColumn("salt", explode(sequence(lit(0), col("nsalt") - 1)))
-        val w = Window.partitionBy("query_id")
-          .orderBy(col("cosine").desc, col("neighbor_id"))
-        q.join(c, Seq("bucket", "salt"))
-          .filter(col("query_id") =!= col("neighbor_id"))
-          .select(col("query_id"), col("neighbor_id"), col("bucket"),
-            cosine("qe", "ce", "qn2", "cn2"))
-          .withColumn("rn", row_number().over(w))
-          .filter(col("rn") <= 3)
-          .orderBy("query_id", "rn")
+        cosineTopK(q, c, "query_id", Seq("bucket", "salt"), Seq("bucket"))
       }, lshOracle),
 
     // Density-adaptive LSH ANN — the clustered-corpus LSH path. Plain
@@ -2727,29 +2734,12 @@ object SimilarityQueries {
     "q_ann_lsh_adaptive" -> QueryDef(
       (s, d) => {
         val e = lshRefined(s, d)
-        val q = e.selectExpr("vec_id AS query_id", "embedding AS qe",
-          "n2 AS qn2", "bucket", "cell")
-        val c = e.selectExpr("vec_id AS neighbor_id", "embedding AS ce",
-          "n2 AS cn2", "bucket", "cell")
-        val w = Window.partitionBy("query_id")
-          .orderBy(col("cosine").desc, col("neighbor_id"))
-        q.join(c, Seq("bucket", "cell"))
-          .filter(col("query_id") =!= col("neighbor_id"))
-          .select(col("query_id"), col("neighbor_id"), col("bucket"), col("cell"),
-            cosine("qe", "ce", "qn2", "cn2"))
-          .withColumn("rn", row_number().over(w))
-          .filter(col("rn") <= 3)
-          .orderBy("query_id", "rn")
+        val keys = Seq("bucket", "cell")
+        cosineTopK(asProbes(e, "query_id", keys: _*), asCorpus(e, keys: _*),
+          "query_id", keys, keys)
       },
-      s"""WITH $duckLshRefinedEbCte
-         |SELECT query_id, neighbor_id, bucket, cell, cosine, rn FROM (
-         |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         |    q.bucket, q.cell, ${duckCos("q", "c")} AS cosine,
-         |    ROW_NUMBER() OVER (PARTITION BY q.vec_id
-         |      ORDER BY ${duckCos("q", "c")} DESC, c.vec_id) AS rn
-         |  FROM eb q JOIN eb c ON q.bucket = c.bucket AND q.cell = c.cell
-         |    AND q.vec_id <> c.vec_id
-         |) WHERE rn <= 3 ORDER BY query_id, rn""".stripMargin),
+      duckCosineTopK(duckLshRefinedEbCte, "eb", "eb", "query_id",
+        Seq("bucket", "cell"), DuckNotSelf)),
 
     // Incremental ANN: a batch of ARRIVING vectors (vec_id % 10 = 0, the
     // next ingest micro-batch) probes the EXISTING corpus's IVF cells
@@ -2764,29 +2754,10 @@ object SimilarityQueries {
         val e = ScratchCache.scratch(Tables.embeddingsParallel(s, d)
           .select(col("vec_id"), col("embedding"), norm2("embedding"),
             ivfCellH(col("embedding"), sc, mc).cast("int").as("cell")))
-        val q = e.filter(col("vec_id") % 10 === 0)
-          .selectExpr("vec_id AS arrival_id", "embedding AS qe", "n2 AS qn2", "cell")
-        val c = e.filter(col("vec_id") % 10 =!= 0)
-          .selectExpr("vec_id AS neighbor_id", "embedding AS ce", "n2 AS cn2", "cell")
-        val w = Window.partitionBy("arrival_id")
-          .orderBy(col("cosine").desc, col("neighbor_id"))
-        q.join(c, Seq("cell"))
-          .select(col("arrival_id"), col("neighbor_id"), col("cell"),
-            cosine("qe", "ce", "qn2", "cn2"))
-          .withColumn("rn", row_number().over(w))
-          .filter(col("rn") <= 3)
-          .orderBy("arrival_id", "rn")
-      }, {
-        s"""WITH $duckTwoLevelEbCte
-           |SELECT arrival_id, neighbor_id, cell, cosine, rn FROM (
-           |  SELECT q.vec_id AS arrival_id, c.vec_id AS neighbor_id, q.cell,
-           |    ${duckCos("q", "c")} AS cosine,
-           |    ROW_NUMBER() OVER (PARTITION BY q.vec_id
-           |      ORDER BY ${duckCos("q", "c")} DESC, c.vec_id) AS rn
-           |  FROM eb q JOIN eb c ON q.cell = c.cell
-           |  WHERE q.vec_id % 10 = 0 AND c.vec_id % 10 <> 0
-           |) WHERE rn <= 3 ORDER BY arrival_id, rn""".stripMargin
-      }),
+        servedIngestProbe(e)
+      },
+      duckCosineTopK(duckTwoLevelEbCte, "eb", "eb", "arrival_id",
+        Seq("cell"), DuckArrivals)),
 
     // Incremental ANN on the TRAINED codebook — the ingest story for
     // the clustered-corpus path. The codebook is trained on the
@@ -2872,19 +2843,10 @@ object SimilarityQueries {
             // partition-pruning predicate for the served-table scan
             val cells = batch.select("cell").distinct()
               .collect().map(_.getLong(0))
-            val corpus = corpusBase
-              .filter(col("cell").isin(cells: _*))
-              .selectExpr("vec_id AS neighbor_id", "embedding AS ce",
-                "n2 AS cn2", "cell")
-            val probes = batch.selectExpr("vec_id AS arrival_id",
-              "embedding AS qe", "n2 AS qn2", "cell")
-            val w = Window.partitionBy("arrival_id")
-              .orderBy(col("cosine").desc, col("neighbor_id"))
-            probes.join(corpus, Seq("cell"))
-              .select(col("arrival_id"), col("neighbor_id"), col("cell"),
-                cosine("qe", "ce", "qn2", "cn2"))
-              .withColumn("rn", row_number().over(w))
-              .filter(col("rn") <= 3)
+            val corpus = asCorpus(
+              corpusBase.filter(col("cell").isin(cells: _*)), "cell")
+            cosineTopKRows(asProbes(batch, "arrival_id", "cell"), corpus,
+                "arrival_id", Seq("cell"), Seq("cell"))
               .write.mode("append").parquet(s"$root/out")
             ()
           }
@@ -2950,29 +2912,10 @@ object SimilarityQueries {
         val e = ScratchCache.scratch(Tables.embeddingsParallel(s, d)
           .select(col("vec_id"), col("embedding"), norm2("embedding"),
             ivfCellH(col("embedding"), sc, mc).cast("int").as("cell")))
-        val q = e.selectExpr("vec_id AS query_id", "embedding AS qe",
-          "n2 AS qn2", "cell")
-        val c = e.selectExpr("vec_id AS neighbor_id", "embedding AS ce",
-          "n2 AS cn2", "cell")
-        val w = Window.partitionBy("query_id")
-          .orderBy(col("cosine").desc, col("neighbor_id"))
-        q.join(c, Seq("cell"))
-          .filter(col("query_id") =!= col("neighbor_id"))
-          .select(col("query_id"), col("neighbor_id"), col("cell"),
-            cosine("qe", "ce", "qn2", "cn2"))
-          .withColumn("rn", row_number().over(w))
-          .filter(col("rn") <= 3)
-          .orderBy("query_id", "rn")
-      }, {
-        s"""WITH $duckTwoLevelEbCte
-           |SELECT query_id, neighbor_id, cell, cosine, rn FROM (
-           |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id, q.cell,
-           |    ${duckCos("q", "c")} AS cosine,
-           |    ROW_NUMBER() OVER (PARTITION BY q.vec_id
-           |      ORDER BY ${duckCos("q", "c")} DESC, c.vec_id) AS rn
-           |  FROM eb q JOIN eb c ON q.cell = c.cell AND q.vec_id <> c.vec_id
-           |) WHERE rn <= 3 ORDER BY query_id, rn""".stripMargin
-      }),
+        homeCellSearch(e)
+      },
+      duckCosineTopK(duckTwoLevelEbCte, "eb", "eb", "query_id", Seq("cell"),
+        DuckNotSelf)),
 
     // TRAINED (data-seeded) IVF — the density-adaptive answer to the
     // clustered stress finding (SCALE_r08_clustered_ann.json:
@@ -2991,7 +2934,7 @@ object SimilarityQueries {
     // q_ann_ivf family documents, and the index build adds two bounded
     // collects (the budget-bounded codebook) + one broadcast.
     "q_ann_ivf_trained" -> QueryDef(
-      (s, d) => trainedAnnSearch(trainedCells(s, d)),
+      (s, d) => homeCellSearch(trainedCells(s, d)),
       duckTrainedAnnSql),
 
     // The DISTRIBUTED-codebook build of the same index — identical cell
@@ -3004,7 +2947,7 @@ object SimilarityQueries {
     // codebook-growth ceiling, closed by construction instead of a
     // Scaladoc promise. Search shape after the build is q_ann_ivf_trained's.
     "q_ann_ivf_trained_dist" -> QueryDef(
-      (s, d) => trainedAnnSearch(trainedCellsDist(s, d)),
+      (s, d) => homeCellSearch(trainedCellsDist(s, d)),
       duckTrainedAnnSql),
 
     // ADAPTIVE-nprobe ANN SEARCH — the target-retention knob
@@ -3030,29 +2973,10 @@ object SimilarityQueries {
       (s, d) => {
         val e = trainedAdaptiveCells(s, d, AdaptNSupers, AdaptMaxProbes,
           AdaptEpsNum, AdaptEpsDen, interleave = true)
-        val probes = e.selectExpr("vec_id AS query_id", "embedding AS qe",
-          "n2 AS qn2", "explode(probes) AS cell")
-        val c = e.selectExpr("vec_id AS neighbor_id", "embedding AS ce",
-          "n2 AS cn2", "cell")
-        val w = Window.partitionBy("query_id")
-          .orderBy(col("cosine").desc, col("neighbor_id"))
-        probes.join(c, Seq("cell"))
-          .filter(col("query_id") =!= col("neighbor_id"))
-          .select(col("query_id"), col("neighbor_id"), col("cell"),
-            cosine("qe", "ce", "qn2", "cn2"))
-          .withColumn("rn", row_number().over(w))
-          .filter(col("rn") <= 3)
-          .orderBy("query_id", "rn")
+        cellSearch(asProbes(e, "query_id", "explode(probes) AS cell"), e)
       },
-      s"""WITH $duckAdaptiveProbesCte
-         |SELECT query_id, neighbor_id, cell, cosine, rn FROM (
-         |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id, c.cell,
-         |    ${duckCos("q", "c")} AS cosine,
-         |    ROW_NUMBER() OVER (PARTITION BY q.vec_id
-         |      ORDER BY ${duckCos("q", "c")} DESC, c.vec_id) AS rn
-         |  FROM aprobes q JOIN eb c ON q.cell = c.cell
-         |    AND q.vec_id <> c.vec_id
-         |) WHERE rn <= 3 ORDER BY query_id, rn""".stripMargin),
+      duckCosineTopK(duckAdaptiveProbesCte, "aprobes", "eb", "query_id",
+        Seq("cell"), DuckNotSelf)),
 
     // The ANN FACADE (r11): one entry point, book picked by the cell
     // law ([[annBook]] — two-level while ⌈N/125⌉ fits the 2^24 cap,
@@ -3062,7 +2986,7 @@ object SimilarityQueries {
     // facade under the identical oracle; the forced-L3 arm is gated by
     // the _l3 twin below and by AnnClusteredStress's ann_auto rows.
     "q_ann_index_auto" -> QueryDef(
-      (s, d) => trainedAnnSearch(annIndex(s, d)),
+      (s, d) => homeCellSearch(annIndex(s, d)),
       duckTrainedAnnSql),
 
     // The facade's L3 arm under the oracle: the explicit cell-cap
@@ -3074,16 +2998,8 @@ object SimilarityQueries {
     // fixture scale END TO END (facade → L3 build → search → oracle),
     // not just route-asserted.
     "q_ann_index_auto_l3" -> QueryDef(
-      (s, d) => trainedAnnSearch(annIndex(s, d, cap = Some(1L))),
-      s"""WITH $duckTrainedL3Cte
-         |SELECT query_id, neighbor_id, cell, cosine, rn FROM (
-         |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id, q.cell,
-         |    ${duckCos("q", "c")} AS cosine,
-         |    ROW_NUMBER() OVER (PARTITION BY q.vec_id
-         |      ORDER BY ${duckCos("q", "c")} DESC, c.vec_id) AS rn
-         |  FROM ebl3 q JOIN ebl3 c ON q.cell = c.cell
-         |    AND q.vec_id <> c.vec_id
-         |) WHERE rn <= 3 ORDER BY query_id, rn""".stripMargin),
+      (s, d) => homeCellSearch(annIndex(s, d, cap = Some(1L))),
+      duckTrainedL3AnnSql),
 
     // The THREE-LEVEL trained quantizer — the routing law past the
     // two-level family's 2^24-cell cap (constant occupancy dies at
@@ -3097,16 +3013,8 @@ object SimilarityQueries {
     // reusing duckTrainedAnnSql; search shape after the build is
     // q_ann_ivf_trained's.
     "q_ann_ivf_trained_l3" -> QueryDef(
-      (s, d) => trainedAnnSearch(trainedCellsL3(s, d)),
-      s"""WITH $duckTrainedL3Cte
-         |SELECT query_id, neighbor_id, cell, cosine, rn FROM (
-         |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id, q.cell,
-         |    ${duckCos("q", "c")} AS cosine,
-         |    ROW_NUMBER() OVER (PARTITION BY q.vec_id
-         |      ORDER BY ${duckCos("q", "c")} DESC, c.vec_id) AS rn
-         |  FROM ebl3 q JOIN ebl3 c ON q.cell = c.cell
-         |    AND q.vec_id <> c.vec_id
-         |) WHERE rn <= 3 ORDER BY query_id, rn""".stripMargin),
+      (s, d) => homeCellSearch(trainedCellsL3(s, d)),
+      duckTrainedL3AnnSql),
 
     // The three-level route's nprobe=2 knob: each query also probes
     // the beam's best leaf in a DIFFERENT cell — the boundary-adjacent
@@ -3119,30 +3027,9 @@ object SimilarityQueries {
     "q_ann_ivf_trained_l3_probe2" -> QueryDef(
       (s, d) => {
         val e = trainedCellsL3(s, d, probe2 = true)
-        val probes = probeUnion(e, "query_id", "qe", "qn2", useCell3 = false)
-        val c = e.selectExpr("vec_id AS neighbor_id", "embedding AS ce",
-          "n2 AS cn2", "cell")
-        val w = Window.partitionBy("query_id")
-          .orderBy(col("cosine").desc, col("neighbor_id"))
-        probes.join(c, Seq("cell"))
-          .filter(col("query_id") =!= col("neighbor_id"))
-          .select(col("query_id"), col("neighbor_id"), col("cell"),
-            cosine("qe", "ce", "qn2", "cn2"))
-          .withColumn("rn", row_number().over(w))
-          .filter(col("rn") <= 3)
-          .orderBy("query_id", "rn")
+        cellSearch(probeUnion(e, "query_id", "qe", "qn2", useCell3 = false), e)
       },
-      s"""WITH $duckTrainedL3P2Cte,
-         |tprobes AS (
-         |  ${duckProbes("ebl3p", useCell3 = false)})
-         |SELECT query_id, neighbor_id, cell, cosine, rn FROM (
-         |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id, q.cell,
-         |    ${duckCos("q", "c")} AS cosine,
-         |    ROW_NUMBER() OVER (PARTITION BY q.vec_id
-         |      ORDER BY ${duckCos("q", "c")} DESC, c.vec_id) AS rn
-         |  FROM tprobes q JOIN ebl3p c ON q.cell = c.cell
-         |    AND q.vec_id <> c.vec_id
-         |) WHERE rn <= 3 ORDER BY query_id, rn""".stripMargin),
+      duckProbeSearch(duckTrainedL3P2Cte, "ebl3p", useCell3 = false)),
 
     // The ADAPTIVE-nprobe knob on the THREE-LEVEL book (r12) — the
     // margin law of q_ann_ivf_trained_adaptive applied where the L3
@@ -3159,29 +3046,10 @@ object SimilarityQueries {
     "q_ann_ivf_trained_l3_adaptive" -> QueryDef(
       (s, d) => {
         val e = trainedCellsL3(s, d, adaptive = true)
-        val probes = e.selectExpr("vec_id AS query_id", "embedding AS qe",
-          "n2 AS qn2", "explode(probes) AS cell")
-        val c = e.selectExpr("vec_id AS neighbor_id", "embedding AS ce",
-          "n2 AS cn2", "cell")
-        val w = Window.partitionBy("query_id")
-          .orderBy(col("cosine").desc, col("neighbor_id"))
-        probes.join(c, Seq("cell"))
-          .filter(col("query_id") =!= col("neighbor_id"))
-          .select(col("query_id"), col("neighbor_id"), col("cell"),
-            cosine("qe", "ce", "qn2", "cn2"))
-          .withColumn("rn", row_number().over(w))
-          .filter(col("rn") <= 3)
-          .orderBy("query_id", "rn")
+        cellSearch(asProbes(e, "query_id", "explode(probes) AS cell"), e)
       },
-      s"""WITH $duckTrainedL3AdpCte
-         |SELECT query_id, neighbor_id, cell, cosine, rn FROM (
-         |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id, c.cell,
-         |    ${duckCos("q", "c")} AS cosine,
-         |    ROW_NUMBER() OVER (PARTITION BY q.vec_id
-         |      ORDER BY ${duckCos("q", "c")} DESC, c.vec_id) AS rn
-         |  FROM l3aprobes q JOIN ebl3 c ON q.cell = c.cell
-         |    AND q.vec_id <> c.vec_id
-         |) WHERE rn <= 3 ORDER BY query_id, rn""".stripMargin),
+      duckCosineTopK(duckTrainedL3AdpCte, "l3aprobes", "ebl3", "query_id",
+        Seq("cell"), DuckNotSelf)),
 
     // L3 SERVED-INDEX PARITY (r11): the 10⁹+-row regime the L3 book
     // exists for gets the same serving surface the two-level book has.
@@ -3233,19 +3101,10 @@ object SimilarityQueries {
           .foreachBatch { (batch: DataFrame, _: Long) =>
             val cells = batch.select("cell").distinct()
               .collect().map(_.getLong(0))
-            val corpus = corpusBase
-              .filter(col("cell").isin(cells: _*))
-              .selectExpr("vec_id AS neighbor_id", "embedding AS ce",
-                "n2 AS cn2", "cell")
-            val probes = batch.selectExpr("vec_id AS arrival_id",
-              "embedding AS qe", "n2 AS qn2", "cell")
-            val w = Window.partitionBy("arrival_id")
-              .orderBy(col("cosine").desc, col("neighbor_id"))
-            probes.join(corpus, Seq("cell"))
-              .select(col("arrival_id"), col("neighbor_id"), col("cell"),
-                cosine("qe", "ce", "qn2", "cn2"))
-              .withColumn("rn", row_number().over(w))
-              .filter(col("rn") <= 3)
+            val corpus = asCorpus(
+              corpusBase.filter(col("cell").isin(cells: _*)), "cell")
+            cosineTopKRows(asProbes(batch, "arrival_id", "cell"), corpus,
+                "arrival_id", Seq("cell"), Seq("cell"))
               .write.mode("append").parquet(s"$root/out")
             ()
           }
@@ -3286,30 +3145,9 @@ object SimilarityQueries {
         // at fixture knobs); dropping that branch row keeps the probe
         // fan-out pair-disjoint instead of duplicating every
         // (query, neighbor) pair through the rn<=3 window
-        val probes = probeUnion(e, "query_id", "qe", "qn2", useCell3 = false)
-        val c = e.selectExpr("vec_id AS neighbor_id", "embedding AS ce",
-          "n2 AS cn2", "cell")
-        val w = Window.partitionBy("query_id")
-          .orderBy(col("cosine").desc, col("neighbor_id"))
-        probes.join(c, Seq("cell"))
-          .filter(col("query_id") =!= col("neighbor_id"))
-          .select(col("query_id"), col("neighbor_id"), col("cell"),
-            cosine("qe", "ce", "qn2", "cn2"))
-          .withColumn("rn", row_number().over(w))
-          .filter(col("rn") <= 3)
-          .orderBy("query_id", "rn")
+        cellSearch(probeUnion(e, "query_id", "qe", "qn2", useCell3 = false), e)
       },
-      s"""WITH $duckTrainedEb2Cte,
-         |tprobes AS (
-         |  ${duckProbes("eb2", useCell3 = false)})
-         |SELECT query_id, neighbor_id, cell, cosine, rn FROM (
-         |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id, q.cell,
-         |    ${duckCos("q", "c")} AS cosine,
-         |    ROW_NUMBER() OVER (PARTITION BY q.vec_id
-         |      ORDER BY ${duckCos("q", "c")} DESC, c.vec_id) AS rn
-         |  FROM tprobes q JOIN eb2 c ON q.cell = c.cell
-         |    AND q.vec_id <> c.vec_id
-         |) WHERE rn <= 3 ORDER BY query_id, rn""".stripMargin),
+      duckProbeSearch(duckTrainedEb2Cte, "eb2", useCell3 = false)),
 
     // Trained IVF with nprobe=3 — both boundary probes at once: the
     // second-nearest super's best child (cell2, cross-super seam) AND
@@ -3358,24 +3196,13 @@ object SimilarityQueries {
           .select(col("vec_id"), col("embedding"), norm2("embedding"),
             ivfCellH(col("embedding"), sc, mc).cast("int").as("cell1"),
             ivfCellH2(col("embedding"), sc, mc).cast("int").as("cell2")))
-        val probes = e.selectExpr("vec_id AS query_id", "embedding AS qe",
-            "n2 AS qn2", "cell1 AS cell")
-          .unionAll(e.selectExpr("vec_id AS query_id", "embedding AS qe",
-            "n2 AS qn2", "cell2 AS cell"))
-        val c = e.selectExpr("vec_id AS neighbor_id", "embedding AS ce",
-          "n2 AS cn2", "cell1 AS cell")
-        val w = Window.partitionBy("query_id")
-          .orderBy(col("cosine").desc, col("neighbor_id"))
-        probes.join(c, Seq("cell"))
-          .filter(col("query_id") =!= col("neighbor_id"))
-          .select(col("query_id"), col("neighbor_id"), col("cell"),
-            cosine("qe", "ce", "qn2", "cn2"))
-          .withColumn("rn", row_number().over(w))
-          .filter(col("rn") <= 3)
-          .orderBy("query_id", "rn")
+        val probes = asProbes(e, "query_id", "cell1 AS cell")
+          .unionAll(asProbes(e, "query_id", "cell2 AS cell"))
+        cosineTopK(probes, asCorpus(e, "cell1 AS cell"), "query_id",
+          Seq("cell"), Seq("cell"))
       }, {
         val d = DuckSql
-        s"""WITH $duckKnobsCte,
+        duckCosineTopK(s"""$duckKnobsCte,
            |e0 AS (SELECT vec_id, embedding,
            |    ${d.dotDbl("embedding", "embedding")} AS n2, s, m
            |  FROM embeddings, knobs),
@@ -3390,23 +3217,16 @@ object SimilarityQueries {
            |e3 AS (SELECT *, ${duckChildDists("embedding", "si")} AS cd,
            |    ${duckChildDists("embedding", "si2")} AS cd2 FROM e2c),
            |v3 AS (SELECT vec_id, embedding, n2,
-           |    CAST(si * m + list_position(cd, list_min(cd)) AS INT) AS cell1,
+           |    CAST(si * m + list_position(cd, list_min(cd)) AS INT) AS cell,
            |    CAST(si2 * m + list_position(cd2, list_min(cd2)) AS INT) AS cell2
            |  FROM e3),
            |probes AS (
-           |  SELECT vec_id, embedding, n2, cell1 AS cell FROM v3
+           |  SELECT vec_id, embedding, n2, cell FROM v3
            |  UNION ALL
            |  SELECT vec_id, embedding, n2, cell2 AS cell FROM v3
-           |)
-           |SELECT query_id, neighbor_id, cell, cosine, rn FROM (
-           |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id, q.cell,
-           |    ${duckCos("q", "c")} AS cosine,
-           |    ROW_NUMBER() OVER (PARTITION BY q.vec_id
-           |      ORDER BY ${duckCos("q", "c")} DESC, c.vec_id) AS rn
-           |  FROM probes q JOIN v3 c ON q.cell = c.cell1 AND q.vec_id <> c.vec_id
-           |) WHERE rn <= 3 ORDER BY query_id, rn""".stripMargin
+           |)""".stripMargin,
+          "probes", "v3", "query_id", Seq("cell"), DuckNotSelf)
       }),
-
 
     // PRODUCT QUANTIZATION ANN (the compression half of IVF-PQ; Jégou
     // et al., TPAMI'11): the 64-dim vector splits into 4 subvectors of
@@ -3434,35 +3254,8 @@ object SimilarityQueries {
     // bit-identical. The oracle derives the SAME codebook relationally
     // (windowed-argmin CTEs, shared text in pqOracleCtes).
     "q_ann_pq" -> QueryDef(
-      (s, d) => {
-        val v = pqQuantized(s, d)
-        val book = pqLearnBook(v)
-        val codes = pqCodes(v, book)
-        val qdist = pqQdist(s, v, book)
-        val est = codes.join(broadcast(qdist),
-            codes("ss") === qdist("ss") && codes("code") === qdist("cid"))
-          .filter(col("query_id") =!= col("vec_id"))
-          .groupBy("query_id", "vec_id")
-          .agg(sum("qd2").as("est_d2"))
-        val w = Window.partitionBy("query_id")
-          .orderBy(col("est_d2").asc, col("vec_id").asc)
-        est.withColumn("rn", row_number().over(w))
-          .filter(col("rn") <= TopK)
-          .selectExpr("query_id", "vec_id AS neighbor_id", "est_d2", "rn")
-          .orderBy("query_id", "rn")
-      },
-      s"""WITH $pqOracleCtes,
-         |est AS (
-         |  SELECT q.query_id, k.vec_id, CAST(sum(q.qd2) AS BIGINT) AS est_d2
-         |  FROM codes k JOIN qd q ON q.ss = k.ss AND q.cid = k.code
-         |  WHERE q.query_id <> k.vec_id
-         |  GROUP BY q.query_id, k.vec_id)
-         |SELECT query_id, neighbor_id, est_d2, rn FROM (
-         |  SELECT query_id, vec_id AS neighbor_id, est_d2,
-         |    ROW_NUMBER() OVER (PARTITION BY query_id
-         |      ORDER BY est_d2, vec_id) AS rn
-         |  FROM est) WHERE rn <= $TopK
-         |ORDER BY query_id, rn""".stripMargin),
+      (s, d) => estTopK(pqEst(s, pqQuantized(s, d), None)),
+      duckEstTopK(s"$pqOracleCtes,\n${duckAdcEst("")}")),
 
     // IVF-PQ — the COMPOSED production ANN index (Jégou et al.'s full
     // recipe, the FAISS IVFPQ shape): the IVF coarse quantizer routes
@@ -3483,43 +3276,15 @@ object SimilarityQueries {
     "q_ann_ivfpq" -> QueryDef(
       (s, d) => {
         val v = pqQuantized(s, d)
-        val book = pqLearnBook(v)
-        val codes = pqCodes(v, book)
-        val qdist = pqQdist(s, v, book)
-          .join(v.filter(col("vec_id") < PqQueries)
-            .selectExpr("vec_id AS query_id", "cell AS qcell"), "query_id")
-        val est = codes.join(broadcast(qdist),
-            codes("ss") === qdist("ss") && codes("code") === qdist("cid") &&
-              codes("cell") === qdist("qcell"))
-          .filter(col("query_id") =!= col("vec_id"))
-          .groupBy("query_id", "vec_id")
-          .agg(sum("qd2").as("est_d2"))
-        val w = Window.partitionBy("query_id")
-          .orderBy(col("est_d2").asc, col("vec_id").asc)
-        est.withColumn("rn", row_number().over(w))
-          .filter(col("rn") <= TopK)
-          .selectExpr("query_id", "vec_id AS neighbor_id", "est_d2", "rn")
-          .orderBy("query_id", "rn")
+        estTopK(pqEst(s, v, Some(homeCells(v))))
       },
-      s"""WITH $pqOracleCtes,
-         |cellt AS (
-         |  SELECT vec_id,
-         |    CAST(${argminPos(DuckSql, ivfDists(DuckSql, "embedding"))} AS INT) AS cell
-         |  FROM embeddings),
-         |est AS (
-         |  SELECT q.query_id, k.vec_id, CAST(sum(q.qd2) AS BIGINT) AS est_d2
-         |  FROM codes k
-         |  JOIN qd q ON q.ss = k.ss AND q.cid = k.code
-         |  JOIN cellt ck ON ck.vec_id = k.vec_id
-         |  JOIN cellt cq ON cq.vec_id = q.query_id
-         |  WHERE ck.cell = cq.cell AND q.query_id <> k.vec_id
-         |  GROUP BY q.query_id, k.vec_id)
-         |SELECT query_id, neighbor_id, est_d2, rn FROM (
-         |  SELECT query_id, vec_id AS neighbor_id, est_d2,
-         |    ROW_NUMBER() OVER (PARTITION BY query_id
-         |      ORDER BY est_d2, vec_id) AS rn
-         |  FROM est) WHERE rn <= $TopK
-         |ORDER BY query_id, rn""".stripMargin),
+      duckEstTopK(
+        s"""$pqOracleCtes,
+           |cellt AS (
+           |  SELECT vec_id,
+           |    CAST(${argminPos(DuckSql, ivfDists(DuckSql, "embedding"))} AS INT) AS cell
+           |  FROM embeddings),
+           |${duckAdcEst(duckHomeCellJoin("cellt"))}""".stripMargin)),
 
     // IVF-PQ on the TRAINED coarse quantizer — the composition FAISS
     // actually ships for clustered corpora (train nlist cells on the
@@ -3555,43 +3320,13 @@ object SimilarityQueries {
         // scale = q_ann_ivfpq_trained256 below: bounded-sample
         // training + two-level routed encode, LANDED in r10 (ratios
         // 1.26/1.56 at 10x/100x, SCALE_r10_pq256*.json).
-        val book = pqLearnBook(v)
-        val codes = pqCodes(v, book)
-        val qdist = pqQdist(s, v, book)
-          .join(v.filter(col("vec_id") < PqQueries)
-            .selectExpr("vec_id AS query_id", "cell AS qcell"), "query_id")
-        val est = codes.join(broadcast(qdist),
-            codes("ss") === qdist("ss") && codes("code") === qdist("cid") &&
-              codes("cell") === qdist("qcell"))
-          .filter(col("query_id") =!= col("vec_id"))
-          .groupBy("query_id", "vec_id")
-          .agg(sum("qd2").as("est_d2"))
-        val w = Window.partitionBy("query_id")
-          .orderBy(col("est_d2").asc, col("vec_id").asc)
-        est.withColumn("rn", row_number().over(w))
-          .filter(col("rn") <= TopK)
-          .selectExpr("query_id", "vec_id AS neighbor_id", "est_d2", "rn")
-          .orderBy("query_id", "rn")
+        estTopK(pqEst(s, v, Some(homeCells(v))))
       },
-      s"""WITH $duckTrainedEbCte,
-         |v AS (
-         |  SELECT vec_id, ${DuckSql.quantVec("embedding", 1000000L)} AS v
-         |  FROM embeddings),
-         |$pqOracleTail,
-         |est AS (
-         |  SELECT q.query_id, k.vec_id, CAST(sum(q.qd2) AS BIGINT) AS est_d2
-         |  FROM codes k
-         |  JOIN qd q ON q.ss = k.ss AND q.cid = k.code
-         |  JOIN eb ck ON ck.vec_id = k.vec_id
-         |  JOIN eb cq ON cq.vec_id = q.query_id
-         |  WHERE ck.cell = cq.cell AND q.query_id <> k.vec_id
-         |  GROUP BY q.query_id, k.vec_id)
-         |SELECT query_id, neighbor_id, est_d2, rn FROM (
-         |  SELECT query_id, vec_id AS neighbor_id, est_d2,
-         |    ROW_NUMBER() OVER (PARTITION BY query_id
-         |      ORDER BY est_d2, vec_id) AS rn
-         |  FROM est) WHERE rn <= $TopK
-         |ORDER BY query_id, rn""".stripMargin),
+      duckEstTopK(
+        s"""$duckTrainedEbCte,
+           |$duckQuantV,
+           |$pqOracleTail,
+           |${duckAdcEst(duckHomeCellJoin("eb"))}""".stripMargin)),
 
     // The PRODUCTION-SHAPED IVF-PQ (r10): trained coarse cells + k=256
     // codes per subspace (one byte — the FAISS ceiling), CONSTANT-COST
@@ -3605,28 +3340,10 @@ object SimilarityQueries {
     // q_ann_ivfpq_trained's ADC shape: same-cell candidates, 4
     // byte-code lookups each, broadcast lookup table.
     "q_ann_ivfpq_trained256" -> QueryDef(
-      (s, d) => pq256TopK(pq256Est(s, trainedCells(s, d)
+      (s, d) => estTopK(pq256Est(s, trainedCells(s, d)
         .selectExpr("vec_id",
           s"${SparkSql.quantVec("embedding", 1000000L)} AS v", "cell"))),
-      s"""WITH $duckTrainedEbCte,
-         |v AS (
-         |  SELECT vec_id, ${DuckSql.quantVec("embedding", 1000000L)} AS v
-         |  FROM embeddings),
-         |$pqOracleTail256,
-         |est AS (
-         |  SELECT q.query_id, k.vec_id, CAST(sum(q.qd2) AS BIGINT) AS est_d2
-         |  FROM codes k
-         |  JOIN qd q ON q.ss = k.ss AND q.cid = k.code
-         |  JOIN eb ck ON ck.vec_id = k.vec_id
-         |  JOIN eb cq ON cq.vec_id = q.query_id
-         |  WHERE ck.cell = cq.cell AND q.query_id <> k.vec_id
-         |  GROUP BY q.query_id, k.vec_id)
-         |SELECT query_id, neighbor_id, est_d2, rn FROM (
-         |  SELECT query_id, vec_id AS neighbor_id, est_d2,
-         |    ROW_NUMBER() OVER (PARTITION BY query_id
-         |      ORDER BY est_d2, vec_id) AS rn
-         |  FROM est) WHERE rn <= $TopK
-         |ORDER BY query_id, rn""".stripMargin),
+      duckEstTopK(duckPq256EstCtes(duckTrainedEbCte, "eb"))),
 
     // RESIDUAL encoding on the TRAINED-256 book (r11) — the FAISS
     // production shape complete: IndexIVFPQ quantizes r = x −
@@ -3669,9 +3386,9 @@ object SimilarityQueries {
         val vr = e.join(cents.hint("SHUFFLE_HASH"), Seq("cell"))
           .selectExpr("vec_id", "zip_with(qv, cv, (a, b) -> a - b) AS v",
             "cell")
-        pq256TopK(pq256Est(s, vr))
+        estTopK(pq256Est(s, vr))
       },
-      s"""WITH $duckTrainedEbCte,
+      duckEstTopK(s"""$duckTrainedEbCte,
          |qvv AS (SELECT vec_id, cell,
          |    ${DuckSql.quantVec("embedding", 1000000L)} AS qv
          |  FROM eb),
@@ -3684,20 +3401,7 @@ object SimilarityQueries {
          |  SELECT q.vec_id, ${DuckSql.zipSubBig("q.qv", "cm.cv")} AS v
          |  FROM qvv q JOIN cm ON cm.cell = q.cell),
          |$pqOracleTail256,
-         |est AS (
-         |  SELECT q.query_id, k.vec_id, CAST(sum(q.qd2) AS BIGINT) AS est_d2
-         |  FROM codes k
-         |  JOIN qd q ON q.ss = k.ss AND q.cid = k.code
-         |  JOIN eb ck ON ck.vec_id = k.vec_id
-         |  JOIN eb cq ON cq.vec_id = q.query_id
-         |  WHERE ck.cell = cq.cell AND q.query_id <> k.vec_id
-         |  GROUP BY q.query_id, k.vec_id)
-         |SELECT query_id, neighbor_id, est_d2, rn FROM (
-         |  SELECT query_id, vec_id AS neighbor_id, est_d2,
-         |    ROW_NUMBER() OVER (PARTITION BY query_id
-         |      ORDER BY est_d2, vec_id) AS rn
-         |  FROM est) WHERE rn <= $TopK
-         |ORDER BY query_id, rn""".stripMargin),
+         |${duckAdcEst(duckHomeCellJoin("eb"))}""".stripMargin)),
 
     // EXACT RE-RANK on the production IVF-PQ (r12) — the final stage
     // of the FAISS query pipeline the family was missing (Jégou et
@@ -3727,20 +3431,7 @@ object SimilarityQueries {
             s"${SparkSql.quantVec("embedding", 1000000L)} AS v", "cell"))
         pqRerankTopK(v, pq256Est(s, v))
       },
-      duckPqRerankSql(
-        s"""$duckTrainedEbCte,
-           |v AS (
-           |  SELECT vec_id, ${DuckSql.quantVec("embedding", 1000000L)} AS v
-           |  FROM embeddings),
-           |$pqOracleTail256,
-           |est AS (
-           |  SELECT q.query_id, k.vec_id, CAST(sum(q.qd2) AS BIGINT) AS est_d2
-           |  FROM codes k
-           |  JOIN qd q ON q.ss = k.ss AND q.cid = k.code
-           |  JOIN eb ck ON ck.vec_id = k.vec_id
-           |  JOIN eb cq ON cq.vec_id = q.query_id
-           |  WHERE ck.cell = cq.cell AND q.query_id <> k.vec_id
-           |  GROUP BY q.query_id, k.vec_id)""".stripMargin)),
+      duckPqRerankSql(duckPq256EstCtes(duckTrainedEbCte, "eb"))),
 
     // The COMPLETE production ANN serving query (r12) — all three
     // levers composed exactly as FAISS ships them: the margin-law
@@ -3769,19 +3460,10 @@ object SimilarityQueries {
       },
       duckPqRerankSql(
         s"""$duckAdaptiveProbesCte,
-           |v AS (
-           |  SELECT vec_id, ${DuckSql.quantVec("embedding", 1000000L)} AS v
-           |  FROM embeddings),
+           |$duckQuantV,
            |$pqOracleTail256,
-           |est AS (
-           |  SELECT q.query_id, k.vec_id, CAST(sum(q.qd2) AS BIGINT) AS est_d2
-           |  FROM codes k
-           |  JOIN qd q ON q.ss = k.ss AND q.cid = k.code
-           |  JOIN eb ck ON ck.vec_id = k.vec_id
-           |  JOIN (SELECT vec_id, cell FROM aprobes) pq
-           |    ON pq.vec_id = q.query_id AND pq.cell = ck.cell
-           |  WHERE q.query_id <> k.vec_id
-           |  GROUP BY q.query_id, k.vec_id)""".stripMargin)),
+           |${duckAdcEst(duckCellJoin("eb",
+              "(SELECT vec_id AS query_id, cell AS qcell FROM aprobes)"))}""".stripMargin)),
 
     // The POST-CAP production composition (r12): the same ADC scan +
     // exact re-rank, routed by the THREE-LEVEL book — the regime past
@@ -3801,20 +3483,7 @@ object SimilarityQueries {
             s"${SparkSql.quantVec("embedding", 1000000L)} AS v", "cell"))
         pqRerankTopK(v, pq256Est(s, v))
       },
-      duckPqRerankSql(
-        s"""$duckTrainedL3Cte,
-           |v AS (
-           |  SELECT vec_id, ${DuckSql.quantVec("embedding", 1000000L)} AS v
-           |  FROM embeddings),
-           |$pqOracleTail256,
-           |est AS (
-           |  SELECT q.query_id, k.vec_id, CAST(sum(q.qd2) AS BIGINT) AS est_d2
-           |  FROM codes k
-           |  JOIN qd q ON q.ss = k.ss AND q.cid = k.code
-           |  JOIN ebl3 ck ON ck.vec_id = k.vec_id
-           |  JOIN ebl3 cq ON cq.vec_id = q.query_id
-           |  WHERE ck.cell = cq.cell AND q.query_id <> k.vec_id
-           |  GROUP BY q.query_id, k.vec_id)""".stripMargin)),
+      duckPqRerankSql(duckPq256EstCtes(duckTrainedL3Cte, "ebl3"))),
 
     // SCALAR QUANTIZATION (r12) — the THIRD quantizer family beside
     // flat and PQ (FAISS IndexIVFScalarQuantizer, QT_8bit): per-dim
@@ -3834,14 +3503,8 @@ object SimilarityQueries {
     // drift risk on ingest (min/max only widen); scoring stays a
     // same-cell hash join exactly like the flat family.
     "q_ann_ivf_sq8" -> QueryDef(
-      (s, d) => pq256TopK(sq8Est(s, d)),
-      s"""WITH $duckSq8EstCtes
-         |SELECT query_id, neighbor_id, est_d2, rn FROM (
-         |  SELECT query_id, vec_id AS neighbor_id, est_d2,
-         |    ROW_NUMBER() OVER (PARTITION BY query_id
-         |      ORDER BY est_d2, vec_id) AS rn
-         |  FROM est) WHERE rn <= $TopK
-         |ORDER BY query_id, rn""".stripMargin),
+      (s, d) => estTopK(sq8Est(s, d)),
+      duckEstTopK(duckSq8EstCtes)),
 
     // SQ8 with the exact re-rank tail — [[pqRerankTopK]] and the
     // oracle tail are estimator-agnostic (any est(query_id, vec_id,
@@ -3869,26 +3532,12 @@ object SimilarityQueries {
     "q_ann_ivfpq_probe2" -> QueryDef(
       (s, d) => {
         val v = pqQuantized(s, d)
-        val book = pqLearnBook(v)
-        val codes = pqCodes(v, book)
         val q = v.filter(col("vec_id") < PqQueries)
         val probes = q.selectExpr("vec_id AS query_id", "cell AS qcell")
           .unionByName(q.selectExpr("vec_id AS query_id", "cell2 AS qcell"))
-        val qdist = pqQdist(s, v, book).join(probes, "query_id")
-        val est = codes.join(broadcast(qdist),
-            codes("ss") === qdist("ss") && codes("code") === qdist("cid") &&
-              codes("cell") === qdist("qcell"))
-          .filter(col("query_id") =!= col("vec_id"))
-          .groupBy("query_id", "vec_id")
-          .agg(sum("qd2").as("est_d2"))
-        val w = Window.partitionBy("query_id")
-          .orderBy(col("est_d2").asc, col("vec_id").asc)
-        est.withColumn("rn", row_number().over(w))
-          .filter(col("rn") <= TopK)
-          .selectExpr("query_id", "vec_id AS neighbor_id", "est_d2", "rn")
-          .orderBy("query_id", "rn")
+        estTopK(pqEst(s, v, Some(probes)))
       },
-      s"""WITH $pqOracleCtes,
+      duckEstTopK(s"""$pqOracleCtes,
          |raw AS (
          |  SELECT vec_id, ${ivfDists(DuckSql, "embedding")} AS dists
          |  FROM embeddings),
@@ -3909,20 +3558,7 @@ object SimilarityQueries {
          |  UNION ALL
          |  SELECT vec_id AS query_id, cell2 AS qcell FROM c2t
          |  WHERE vec_id < $PqQueries),
-         |est AS (
-         |  SELECT q.query_id, k.vec_id, CAST(sum(q.qd2) AS BIGINT) AS est_d2
-         |  FROM codes k
-         |  JOIN qd q ON q.ss = k.ss AND q.cid = k.code
-         |  JOIN c1t ck ON ck.vec_id = k.vec_id
-         |  JOIN probes p ON p.query_id = q.query_id AND p.qcell = ck.cell
-         |  WHERE q.query_id <> k.vec_id
-         |  GROUP BY q.query_id, k.vec_id)
-         |SELECT query_id, neighbor_id, est_d2, rn FROM (
-         |  SELECT query_id, vec_id AS neighbor_id, est_d2,
-         |    ROW_NUMBER() OVER (PARTITION BY query_id
-         |      ORDER BY est_d2, vec_id) AS rn
-         |  FROM est) WHERE rn <= $TopK
-         |ORDER BY query_id, rn""".stripMargin),
+         |${duckAdcEst(duckCellJoin("c1t", "probes"))}""".stripMargin)),
 
     // IVF-PQ with RESIDUAL encoding — the full IVFADC recipe (Jégou et
     // al., TPAMI'11 §IV): PQ codes quantize r = x − centroid(cell(x)),
@@ -3942,38 +3578,9 @@ object SimilarityQueries {
     "q_ann_ivfpq_res" -> QueryDef(
       (s, d) => {
         val vr = pqResidual(s, d)
-        val book = pqLearnBook(vr)
-        val codes = pqCodes(vr, book)
-        val qdist = pqQdist(s, vr, book)
-          .join(vr.filter(col("vec_id") < PqQueries)
-            .selectExpr("vec_id AS query_id", "cell AS qcell"), "query_id")
-        val est = codes.join(broadcast(qdist),
-            codes("ss") === qdist("ss") && codes("code") === qdist("cid") &&
-              codes("cell") === qdist("qcell"))
-          .filter(col("query_id") =!= col("vec_id"))
-          .groupBy("query_id", "vec_id")
-          .agg(sum("qd2").as("est_d2"))
-        val w = Window.partitionBy("query_id")
-          .orderBy(col("est_d2").asc, col("vec_id").asc)
-        est.withColumn("rn", row_number().over(w))
-          .filter(col("rn") <= TopK)
-          .selectExpr("query_id", "vec_id AS neighbor_id", "est_d2", "rn")
-          .orderBy("query_id", "rn")
+        estTopK(pqEst(s, vr, Some(homeCells(vr))))
       },
-      s"""WITH $pqResOracleCtes,
-         |est AS (
-         |  SELECT q.query_id, k.vec_id, CAST(sum(q.qd2) AS BIGINT) AS est_d2
-         |  FROM codes k
-         |  JOIN qd q ON q.ss = k.ss AND q.cid = k.code
-         |  JOIN cellt0 ck ON ck.vec_id = k.vec_id
-         |  JOIN cellt0 cq ON cq.vec_id = q.query_id
-         |  WHERE ck.cell = cq.cell AND q.query_id <> k.vec_id
-         |  GROUP BY q.query_id, k.vec_id)
-         |SELECT query_id, neighbor_id, est_d2, rn FROM (
-         |  SELECT query_id, vec_id AS neighbor_id, est_d2,
-         |    ROW_NUMBER() OVER (PARTITION BY query_id
-         |      ORDER BY est_d2, vec_id) AS rn
-         |  FROM est) WHERE rn <= $TopK
-         |ORDER BY query_id, rn""".stripMargin)
+      duckEstTopK(
+        s"$pqResOracleCtes,\n${duckAdcEst(duckHomeCellJoin("cellt0"))}"))
   )
 }
