@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.sources.Sources
+
 /** Table loaders over the driver-generated parquet fixtures.
   *
   * Mirrors the reference's root-input surface (`MRInput`,
@@ -11,14 +13,20 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * `FileSourceScanExec` partition packing, governed by
   * `spark.sql.files.maxPartitionBytes`.
   *
-  * Scale note (100 TB): these are plain `spark.read.parquet` scans so
+  * Every table reads through [[graft.sources.Sources.readParquet]]: a
+  * fixture table is one parquet file, so its schema comes from that
+  * file's footer, read on the driver, and building a query over it
+  * submits no job; a table stored as a directory (or a session with
+  * `spark.sql.parquet.mergeSchema=true`) gets Spark's own inference.
+  *
+  * Scale note (100 TB): these are plain parquet scans so
   * Catalyst pushes filters + prunes columns into the parquet reader;
   * every query in `graft.ops` is written so its predicates and
   * projections reach the scan (verified in PlanSpec).
   */
 object Tables {
   private def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    Sources.readParquet(spark, s"$dir/$name.parquet")
 
   def region(spark: SparkSession, dir: String): DataFrame    = t(spark, dir, "region")
   def nation(spark: SparkSession, dir: String): DataFrame    = t(spark, dir, "nation")

@@ -161,7 +161,7 @@ object BinaryPipeline {
     // the repartition shuffles only a LongType column). On a many-file
     // corpus the scan is already parallel and this costs one narrow
     // pass over 8-byte rows.
-    spark.read.parquet(s"$dir/documents.parquet")
+    graft.Tables.documents(spark, dir)
       .select(col("doc_id")).as[Long]
       .repartition(spark.sparkContext.defaultParallelism, col("doc_id"))
       .mapPartitions(_.map(id => (id, synthPng(id))))
@@ -305,7 +305,7 @@ object BinaryPipeline {
     // only query this round pushed NEAR its 2x anchor). On a many-file
     // corpus the scan parallelizes by itself; a caller that needs the
     // fanout repartitions before audioStats per the class doc.
-    spark.read.parquet(s"$dir/documents.parquet")
+    graft.Tables.documents(spark, dir)
       .select(col("doc_id")).as[Long]
       .mapPartitions(_.map(id => (id, synthWav(id))))
       .toDF("media_id", "payload")
@@ -346,7 +346,7 @@ object BinaryPipeline {
     * bytes). The real codecs get their own tables: [[mediaPng]]
     * (images), [[mediaWav]] (audio). */
   def mediaFromDocuments(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/documents.parquet")
+    graft.Tables.documents(spark, dir)
       .select(
         col("doc_id").as("media_id"),
         lit("text").as("kind"),

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{intersectSize, lcp, simhash, tokenHashes, weightedIntersect}
@@ -24,11 +24,10 @@ import graft.{QueryDef, ScratchCache, Tables}
   *    Jaccard ≥ 0.7. Linear in corpus size + one shuffle per band; this
   *    is the 100 TB path. The oracle replays the identical integer
   *    pipeline, so candidate sets (not just survivors) agree exactly.
-  *  - SimHash: 48-bit signature; candidates via 2×24-bit chunk banding.
-  *    With hamming threshold ≤ 1 < 2 chunks, the pigeonhole principle
-  *    guarantees the single differing bit cannot hit both chunks, so a
-  *    matching chunk always exists and the banded plan provably equals
-  *    the oracle's brute-force all-pairs scan (constants at lines 46-48).
+  *  - SimHash: 48-bit signature; candidates via a single-bit flip join
+  *    ([[simhashPairs]]): each pair at hamming ≤ 1 matches exactly one
+  *    probe row and no pair at distance ≥ 2 is a candidate, so the plan
+  *    provably equals the oracle's brute-force all-pairs scan.
   *
   * Pair-stage performance: Jaccard runs on per-document DISTINCT hashed
   * shingles (BIGINT) through native array_intersect — one set
@@ -58,13 +57,8 @@ object DedupQueries {
   private val Bands = 4
   private val Rows = 3 // minhashes per band; threshold ~ (1/4)^(1/3) ≈ 0.63
   private val SimBits = 48
-  // Candidate banding: with HammingMax = 1, two 24-bit chunks are lossless
-  // (pigeonhole: one differing bit cannot hit both chunks) and far more
-  // selective than byte-chunks on this fixture, whose shared 31-word
-  // vocabulary makes signatures cluster (hd ≤ 1 already admits ~1% of
-  // random pairs; real corpora are much sparser).
-  private val SimChunks = 2
-  private val SimChunkBits = 24
+  // the flip join in simhashPairs enumerates exactly the signatures at
+  // distance ≤ 1; the oracle states the same bound as a filter
   private val HammingMax = 1
 
   /** Per-doc DISTINCT hashed 3-gram shingles (BIGINT list) — DuckDB form. */
@@ -104,6 +98,29 @@ object DedupQueries {
       d.transform(d.seqIncl("0", (SimBits - 1).toString), "i",
         s"CASE WHEN $vote > 0 THEN ${d.shiftL("CAST(1 AS BIGINT)", "i")} ELSE 0 END"),
       "a", "x", "a + x")
+  }
+
+  /** SimHash near-dup pairs (hamming ≤ [[HammingMax]] = 1) of a
+    * `(doc_id, sh)` frame by a flip join, the [[SimilarityQueries]]
+    * `q_dedup_embedding_lsh` multi-probe trick: the probe side emits each
+    * signature plus its `SimBits` single-bit flips, the build side keeps
+    * the signature. A pair at distance 0 matches only the unflipped probe
+    * row, a pair at distance 1 only the flip of its differing bit, and a
+    * pair at distance ≥ 2 matches none, so every qualifying pair comes
+    * out exactly once with no dedup shuffle. The probe side is
+    * (SimBits + 1)× the input however the signatures cluster; a banded
+    * candidate key instead goes quadratic on clustered signatures (the
+    * fixture's shared vocabulary puts most docs in a few signatures). */
+  private[graft] def simhashPairs(docs: DataFrame): DataFrame = {
+    val flips = (0 until SimBits).map(b => col("sh").bitwiseXOR(lit(1L << b)))
+    val probes = docs.select(col("doc_id").as("doc_id_a"), col("sh").as("sha"),
+      explode(array(col("sh") +: flips: _*)).as("k"))
+    val corpus = docs.select(col("doc_id").as("doc_id_b"), col("sh").as("shb"),
+      col("sh").as("k"))
+    probes.join(corpus, Seq("k"))
+      .filter(col("doc_id_a") < col("doc_id_b"))
+      .selectExpr("doc_id_a", "doc_id_b",
+        s"CAST(bit_count(${SparkSql.xorB("sha", "shb")}) AS INT) AS hamming")
   }
 
   /** intersection-size / union-size from materialized columns. */
@@ -875,7 +892,7 @@ object DedupQueries {
            |ORDER BY arrival_id, corpus_id""".stripMargin
       }),
 
-    // SimHash near-dup: banded candidates, provably equal to all-pairs.
+    // SimHash near-dup: flip-join candidates, provably equal to all-pairs.
     "q_dedup_simhash" -> QueryDef(
       (s, d) => {
         // persist the tiny (doc_id, signature) frame so the self-join does
@@ -885,29 +902,7 @@ object DedupQueries {
           .select(col("doc_id"),
             tokenHashes(expr(SparkSql.tokens("text")), 12).as("th"))
           .select(col("doc_id"), simhash(col("th"), SimBits).cast("bigint").as("sh")))
-        // disjoint candidate generation — a pair joins on chunk 0, or on
-        // chunk 1 only when chunk 0 differs — so candidates are unique by
-        // construction and no dedup shuffle is needed
-        val withChunks = docs.selectExpr(Seq("doc_id", "sh") ++
-          (0 until SimChunks).map(c =>
-            s"(${SparkSql.shiftR("sh", (SimChunkBits * c).toString)} % ${1 << SimChunkBits}) AS chunk_$c"): _*)
-        val x = withChunks.selectExpr(Seq("doc_id AS doc_id_a", "sh AS sha") ++
-          (0 until SimChunks).map(c => s"chunk_$c AS xc_$c"): _*)
-        val y = withChunks.selectExpr(Seq("doc_id AS doc_id_b", "sh AS shb") ++
-          (0 until SimChunks).map(c => s"chunk_$c AS yc_$c"): _*)
-        val perChunk = (0 until SimChunks).map { c =>
-          val priorDiffer = (0 until c)
-            .map(p => col(s"xc_$p") =!= col(s"yc_$p"))
-            .foldLeft(lit(true))(_ && _)
-          x.join(y, col(s"xc_$c") === col(s"yc_$c") &&
-              col("doc_id_a") < col("doc_id_b") && priorDiffer)
-            .select(col("doc_id_a"), col("doc_id_b"), col("sha"), col("shb"))
-        }
-        perChunk.reduce(_ unionAll _)
-          .selectExpr("doc_id_a", "doc_id_b",
-            s"CAST(bit_count(${SparkSql.xorB("sha", "shb")}) AS INT) AS hamming")
-          .filter(col("hamming") <= HammingMax)
-          .orderBy("doc_id_a", "doc_id_b")
+        simhashPairs(docs).orderBy("doc_id_a", "doc_id_b")
       }, {
         val d = DuckSql
         s"""WITH th AS (SELECT doc_id,

@@ -104,7 +104,7 @@ object KeyedTable {
     val td = tableDir(root, table).toString
     val paths = manifest(spark, root, table, version)
       .map(e => s"$td/${e.relPath}")
-    spark.read.parquet(paths: _*)
+    Sources.readParquet(spark, paths: _*)
   }
 
   /** Key min/max/rowcount from the parquet FOOTER — a metadata read,
@@ -310,7 +310,7 @@ object KeyedTable {
       val rewriteFrame: Option[DataFrame] =
         if (touched.isEmpty) None
         else {
-          val curTouched = spark.read.parquet(
+          val curTouched = Sources.readParquet(spark,
             touched.map(i => s"$td/${entries(i).relPath}").toIndexedSeq: _*)
           val chTouched = slotted.filter(col("__slot") >= 0).drop("__slot")
           Some(mergeFn(curTouched, chTouched)
@@ -323,7 +323,7 @@ object KeyedTable {
           // the table schema (insert-only merge into an empty table)
           val curSchema =
             if (entries.isEmpty) changes.schema
-            else spark.read.parquet(s"$td/${entries.head.relPath}").schema
+            else Sources.readParquet(spark, s"$td/${entries.head.relPath}").schema
           val emptyCur = spark.createDataFrame(
             spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], curSchema)
           val chGap = slotted.filter(col("__slot") < 0)
@@ -405,7 +405,7 @@ object KeyedTable {
     val rewritten = runs.toSeq.flatMap { run =>
       val nOut = math.max(1,
         ((run.map(_.rows).sum + targetRows - 1) / targetRows).toInt)
-      val df = spark.read.parquet(
+      val df = Sources.readParquet(spark,
         run.map(e => s"$td/${e.relPath}").toIndexedSeq: _*)
       stageIn(spark, root, table, keyCol, "cmp") { dir =>
         df.repartitionByRange(nOut, col(keyCol))

@@ -1,7 +1,13 @@
 package graft.sources
 
+import scala.util.control.NonFatal
+
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.execution.datasources.parquet.GraftParquetBridge
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 
 /** Source/sink surface — the Spark rendition of the reference's
@@ -22,8 +28,46 @@ import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
   */
 object Sources {
 
-  def readParquet(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+  /** The library's parquet reader. For plain file paths the schema comes
+    * from ONE footer, read on the driver and converted by Spark's own
+    * `ParquetFileFormat.readSchema` under the session's confs, so
+    * building the frame submits no job (Spark's inference runs a one-task
+    * `mergeSchemasInParallel` job to read that same footer — the
+    * reference likewise plans root inputs on the AM, not in a task:
+    * MR/common/MRInputAMSplitGenerator.java:73). The footer is the one of
+    * the smallest path string: with `mergeSchema` off Spark sorts the
+    * files by path and takes the first (`ParquetUtils.splitFiles`), so the
+    * schema is the one Spark would infer. Directories (partition
+    * discovery), globs, missing or unreadable paths and sessions with
+    * `spark.sql.parquet.mergeSchema=true` take Spark's inference
+    * unchanged. Nothing is cached: every call reads its footer afresh. */
+  def readParquet(spark: SparkSession, paths: String*): DataFrame =
+    footerSchema(spark, paths) match {
+      case Some(schema) => spark.read.schema(schema).parquet(paths: _*)
+      case None         => spark.read.parquet(paths: _*)
+    }
+
+  private def footerSchema(spark: SparkSession,
+      paths: Seq[String]): Option[StructType] =
+    if (paths.isEmpty || spark.sessionState.conf.isParquetSchemaMergingEnabled) None
+    else try {
+      val conf = spark.sessionState.newHadoopConf()
+      val files = paths.map { p =>
+        val hp = new Path(p)
+        hp.getFileSystem(conf).getFileStatus(hp)
+      }
+      if (!files.forall(_.isFile)) None
+      else {
+        val first = files.minBy(_.getPath.toString)
+        val rd = ParquetFileReader.open(HadoopInputFile.fromStatus(first, conf))
+        val meta = try rd.getFooter finally rd.close()
+        GraftParquetBridge.readSchema(new Footer(first.getPath, meta), spark)
+      }
+    } catch {
+      // Spark's own inference reports the missing or corrupt file
+      case NonFatal(_) => None
+    }
+
   def readCsv(spark: SparkSession, path: String): DataFrame =
     spark.read.option("header", "true").option("inferSchema", "true").csv(path)
   def readJson(spark: SparkSession, path: String): DataFrame =

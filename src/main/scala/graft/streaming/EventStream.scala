@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.sources.Sources
+
 /** Structured Streaming surface over the `events` table.
   *
   * Tez has no stream processing (SURVEY.md §1: batch-only; its
@@ -54,20 +56,13 @@ object EventStream {
     // corpus (ScaleStress, downstream users) is a DIRECTORY of part
     // files under events.parquet/ (stream that directory itself — a
     // glob of the literal name would match nothing and die with
-    // UNABLE_TO_INFER_SCHEMA).
-    val asDir = new java.io.File(dir, "events.parquet")
-    if (asDir.isDirectory) {
-      val path = asDir.getPath
-      val fileSchema = spark.read.parquet(path).schema
-      decodeTs(spark.readStream.schema(fileSchema).parquet(path))
-    } else {
-      val fileSchema = spark.read
-        .option("pathGlobFilter", "events.parquet").parquet(dir).schema
-      decodeTs(spark.readStream
-        .schema(fileSchema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(dir))
-    }
+    // UNABLE_TO_INFER_SCHEMA). Either way the schema is the table's own,
+    // read once: from the file's footer, or by inference over the dir.
+    val path = s"$dir/events.parquet"
+    val stream = spark.readStream.schema(Sources.readParquet(spark, path).schema)
+    decodeTs(
+      if (new java.io.File(path).isDirectory) stream.parquet(path)
+      else stream.option("pathGlobFilter", "events.parquet").parquet(dir))
   }
 
   /** Tumbling 1-hour counts/sums per event type, 2-hour watermark. */
