@@ -48,6 +48,22 @@ import org.apache.spark.sql.SparkSession
   *  - `spark.sql.session.timeZone=UTC` — the oracle comparison
   *    contract (DuckDB reads naive timestamps; every entry point pins
   *    UTC so epoch math matches bit-exactly).
+  *  - `spark.hadoop.fs.file.impl` → [[graft.sources.NioLocalFileSystem]]
+  *    and `spark.hadoop.fs.AbstractFileSystem.file.impl` →
+  *    [[graft.sources.NioLocalFs]] — the `file:` scheme through the
+  *    `FileSystem` and the `FileContext` API, without Hadoop's forked
+  *    `chmod` per created file or directory and `readlink` per
+  *    `FileContext` rename (no libhadoop here). Measured on ext4: one
+  *    Hadoop create with its `.crc` in a new directory 15-22 ms (3
+  *    forks) and one `FileContext` rename 43-44 ms, against 0.2-0.5 ms
+  *    through these classes; a perfbench `ingest` run forked 927
+  *    processes before, 18 after. Results are Hadoop's own (`.crc`,
+  *    umask, rename).
+  *    Hadoop's `FileSystem` cache keeps the FIRST `file:` instance a
+  *    JVM creates, so the classes take effect only when this session is
+  *    the JVM's first user of `file:` — true of every graft main and of
+  *    perfbench; a session built after another one keeps the stock
+  *    `LocalFileSystem` (same results, the forks stay).
   */
 object GraftSession {
   /** Core count from the driver contract env var. */
@@ -77,6 +93,10 @@ object GraftSession {
       .config("spark.sql.constraintPropagation.enabled", "false")
       .config("spark.sql.streaming.checkpoint.fileChecksum.enabled",
         "false")
+      .config("spark.hadoop.fs.file.impl",
+        classOf[graft.sources.NioLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+        classOf[graft.sources.NioLocalFs].getName)
   }
 
   /** Runs `body` with each `key -> value` set on the session conf, then

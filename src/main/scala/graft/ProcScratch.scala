@@ -16,10 +16,15 @@ package graft
   * Placement (r13): parameterised via `$SPARK_GRAFT_SCRATCH_DIR`,
   * defaulting to tmpfs when present with ≥ 32 GiB usable, else /tmp —
   * the same rationale (and env-override discipline) as the shuffle
-  * scratch in [[GraftSession.localDir]]: this sandbox's root fs has
-  * pathologically slow file creates, and the write-path queries create
+  * scratch in [[GraftSession.localDir]]: the write-path queries create
   * hundreds of small files (checkpoint WALs, state deltas, manifest
-  * versions, container parts) per run. Everything under this tree is
+  * versions, container parts) per run. Measured split of such a create
+  * on ext4: without libhadoop, one Hadoop create with its `.crc` in a
+  * new directory forks `chmod` three times and takes 15-22 ms; the same
+  * file work through `java.nio` on the same disk takes 0.06-0.13 ms.
+  * The session contract names the in-process `file:` filesystem
+  * ([[graft.sources.NioLocalFileSystem]]), which takes the forks out
+  * wherever the tree lands. Everything under this tree is
   * scratch RE-CREATED by the query that reads it — nothing persists
   * across runs (the shutdown hook and the per-query root deletes both
   * enforce that), so placement cannot change any result. A production

@@ -249,21 +249,24 @@ object KeyedTable {
     *
     * Plan shape: one broadcast binary-search probe tags every change
     * key with its slot (file index or gap index); the touched-file set
-    * collects bounded by #files; ONE job rewrites the touched files
-    * (scan of touched files only — the change batch joins inside
-    * `mergeFn`, AQE broadcasts the small side); ONE job appends
-    * gap-keyed inserts. Output partitions BY SLOT so every replacement
-    * span nests inside its predecessor and every append span nests
-    * inside one gap — ranges stay non-overlapping for the next probe.
+    * collects bounded by #files; ONE partitioned write job stages both
+    * the rewrite of the touched files (scan of touched files only — the
+    * change batch joins inside `mergeFn`, AQE broadcasts the small side)
+    * and the gap-keyed inserts, unioned and split by slot (see the
+    * "ONE WRITE JOB" comment below). Output partitions BY SLOT so
+    * every replacement span nests inside its predecessor and every
+    * append span nests inside one gap — ranges stay non-overlapping for
+    * the next probe.
     *
     * Concurrency: OPTIMISTIC. Each call reads the latest manifest, does
     * its work against that snapshot, and commits the next version via an
     * atomic exclusive claim — of two racing merges on one table, exactly
     * one commits; the loser throws (`lost the version race`) AFTER
     * staging, leaving orphaned unreferenced data files that [[expire]]
-    * GCs (ConcurrentMergeSpec proves both halves). The probe function
-    * name and broadcast are unique per call, so concurrent merges on the
-    * SAME session cannot corrupt each other's plans either.
+    * GCs (ConcurrentMergeSpec proves both halves). The probe reads a
+    * broadcast created per call and registers no function, so
+    * concurrent merges on the SAME session cannot corrupt each other's
+    * plans either.
     *
     * Empty table: a table registered from a zero-row frame has an empty
     * manifest; an insert-only merge then passes `mergeFn` a zero-row
