@@ -4,6 +4,9 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import scala.collection.immutable.ListMap
+
+import graft.Harness.{field, fixed, num}
 import graft.functions.{cosine, ivfCellH, ivfCellH2, norm2}
 
 /** ANN stress on a DENSITY-SKEWED corpus — closes the r07 honesty gap:
@@ -29,7 +32,8 @@ import graft.functions.{cosine, ivfCellH, ivfCellH2, norm2}
   *    occupancy WITH recall collapse means the cells stopped being
   *    neighborhoods.
   *
-  * Artifact: one JSON with per-scale rows. Run:
+  * Artifact: one JSON with per-scale rows, at `outJson` (default
+  * SCALE_clustered_ann.json) resolved against the working directory. Run:
   * `SPARK_GRAFT_CPUS=32 sbt "runMain graft.AnnClusteredStress
   *  [baseSfDir] [factor] [outJson]"` (keep the host quiet).
   */
@@ -79,23 +83,169 @@ object AnnClusteredStress {
     * nothing once the corpus symmetry is gone). */
   private val L3IncShare = 0.70
 
-  private final case class ScaleRow(tag: String, n: Long, json: String)
+  /** The shared driver-seed budget forced below any corpus's seed count:
+    * under it every SIZE SWITCH build takes its dist route. */
+  private val OneSeed = ops.SimilarityQueries.MaxDriverSeedsKey -> "1"
+
+  /** The scale verdicts over the per-scale rows (pure; `rows` holds the
+    * 1× and factor× rows by tag): candidate mass must grow ~linearly
+    * (ratio ≲ factor × 1.5, same slack as ScaleStress), recall must not
+    * collapse. Each GATE lists the scale tags that breach it — empty in
+    * a committed artifact; a breach shows without reading per-scale
+    * rows. */
+  private[graft] def verdicts(rows: Seq[(String, ListMap[String, Any])],
+      factor: Int): ListMap[String, Any] = {
+    def d(r: Any, key: String): Double = num(r, key).getOrElse(Double.NaN)
+    def s(r: Any, key: String): Any = field(r, key).getOrElse("")
+    def tags(suffix: String = "")(bad: Any => Boolean): Seq[String] =
+      rows.collect { case (tag, r) if bad(r) => tag + suffix }.sorted
+    def nonzero(keys: String*): Seq[String] =
+      keys.flatMap(k => tags()(d(_, k) != 0.0))
+    def ratio(key: String): Number = {
+      val m = rows.toMap
+      fixed(d(m(s"${factor}x"), key) / d(m("1x"), key), 2)
+    }
+    // the RECOMMENDED near-dup blocker (multi-probe trained cells) must
+    // retain at least RetentionFloor of the true cosine≥0.4 pairs at
+    // EVERY measured scale (r09: retention and dist-equality used to be
+    // informational)
+    val retBreach =
+      tags()(d(_, "neardup_retention_multi_probe3") < RetentionFloor)
+    val adpRetBreach = tags()(r =>
+      d(r, "neardup_retention_adaptive_probe") < AdaptiveRetentionFloor)
+    val remBreach =
+      tags()(d(_, "removal_recall_adaptive") < RemovalRecallFloor)
+    // adaptive PQ must not quantize WORSE than the fixed 16-code book
+    val pqBreach = tags()(r =>
+      d(r, "pq_adc_relerr_adaptive") > d(r, "pq_adc_relerr_fixed"))
+    // residual-256 vs raw-256 — the HONEST r11 measurement: on this
+    // corpus residual encoding does NOT cut ADC error (raw 0.189 vs
+    // res 0.210 at 1×, stable across scales and centroid choices —
+    // mean-centroid beat seed-centroid but not raw). The physics:
+    // occupancy-125 trained cells already extract the cluster
+    // structure, so the residual blob is near-isotropic — 256 codes
+    // cover the low-entropy clustered raw sub-vectors better than a
+    // high-entropy isotropic residual (FAISS's residual win assumes
+    // COARSE cells that leave structure in the residual). The gate is
+    // therefore a 1.25× regression bound — catching a broken residual
+    // path (the seed-centroid variance mistake class) without
+    // pretending the fixture shows the production win.
+    val pqRes256Breach = tags()(r =>
+      d(r, "pq256_adc_relerr_res") > 1.25 * d(r, "pq256_adc_relerr_raw"))
+    // exact re-rank (r12, q_ann_ivfpq_rerank): the re-ranked top-5
+    // may never recall LESS than the raw ADC top-5 against the exact
+    // same-cell truth — both ratios share the identical deterministic
+    // truth set, so exact ≥ holds; the epsilon covers float printing
+    val pqRerankBreach = (tags()(r => d(r, "pq256_top5_recall_rerank") <
+        d(r, "pq256_top5_recall_adc") - 0.0005) ++
+      tags("(sq8)")(r => d(r, "sq8_top5_recall_rerank") <
+        d(r, "sq8_top5_recall_est") - 0.0005)).sorted
+    // the distributed codebook build must assign identically at every
+    // scale
+    val distBreach = nonzero("trained_dist_cell_diff")
+    // the L3 gates: the three-level build must keep every row (an
+    // inner-join drop = broken subset invariant), and its coarser
+    // routing must hold at least L3RecallShare of the two-level
+    // probe1 recall on the same corpus at every scale
+    val l3Lost = (nonzero("l3_rows_lost") ++
+      tags("(inc)")(d(_, "l3_inc_rows_lost") != 0.0)).sorted
+    val l3RecallBreach = tags()(r => d(r, "l3_recall3_probe2") <
+      L3RecallShare * d(r, "trained_recall3_probe1"))
+    // the served L3 book gate (re-based r11, see the control's comment
+    // above): the EXCLUSION COST — inc (trained on 9/10 of rows) vs
+    // the selection-law-matched control (same scheme, all rows) — must
+    // stay ≥ L3IncShare (worst measured point 0.74 at 100×, floored
+    // with slack at 0.70). The scheme-vs-full gap rides the artifact
+    // as a RECORD (l3_inc vs l3 rows) with the corpus-symmetry
+    // analysis, not a gate.
+    val l3IncBreach = tags()(r => d(r, "l3_inc_recall3_probe1") <
+      L3IncShare * d(r, "l3_incsel_recall3_probe1"))
+    // the adaptive SEARCH gate (r12): the margin-law probe set always
+    // contains the home cell, so its top-3 recall can never measure
+    // below probe1's on the same truth — a breach is a broken probe
+    // array or join, not a quality judgement (small epsilon: both
+    // recalls are ratios of the same ≤ ~300-pair truth set, so exact
+    // ≥ holds; the slack covers only float printing)
+    val adpSearchBreach = (tags()(r => d(r, "trained_recall3_adaptive") <
+        d(r, "trained_recall3_probe1") - 0.0005) ++
+      tags("(l3)")(r => d(r, "l3_recall3_adaptive") <
+        d(r, "l3_recall3_probe1") - 0.0005)).sorted
+    // the r10 switch gate: at every scale the forced-budget build must
+    // have actually taken the dist route AND agreed on every probe col
+    val switchBreach = (nonzero("switch_probe_diff", "sem_switch_diff",
+      "adp_switch_probe_diff", "lsh_switch_cell_diff", "ann_auto_cell_diff",
+      "ann_auto_ingest_diff") ++ tags() { r =>
+        s(r, "switch_route") != "dist" ||
+          s(r, "sem_switch_route") != "dist" ||
+          s(r, "adp_switch_route") != "dist" ||
+          // VACUOUS PASS (r12): on a corpus with NO hot buckets
+          // (seedCount = 0 — the decorrelated 1× geometry spreads the
+          // planted clusters below the refinement cap) the dist route
+          // is unreachable by the engine's own law (seedCount > budget
+          // is false for every budget) AND meaningless — both routes
+          // are the identity assignment, and the diff row already
+          // gates their equality. The switch gate therefore accepts
+          // lsh-broadcast ONLY in the zero-seed case.
+          !(s(r, "lsh_switch_route") == "lsh-dist" ||
+            (s(r, "lsh_switch_route") == "lsh-broadcast" &&
+              d(r, "lsh_switch_driver_seeds") == 0.0)) ||
+          s(r, "ann_auto_book") != "l3" ||
+          s(r, "ann_auto_ingest_book") != "l3"
+      }).distinct.sorted
+    ListMap(
+      "cell_pair_mass_ratio" -> ratio("cell_pair_mass"),
+      "trained_pair_mass_ratio" -> ratio("trained_pair_mass"),
+      "adaptive_lsh_pair_mass_ratio" -> ratio("adaptive_lsh_pair_mass"),
+      "sem_pair_mass_ratio" -> ratio("sem_pair_mass"),
+      "multi_probe3_pair_mass_ratio" -> ratio("multi_probe3_pair_mass"),
+      "adaptive_lsh_note" -> ("read mass_per_row, not the ratio: the " +
+        "cap engages only on buckets past it, so the 1x denominator " +
+        "is largely unsplit mass; per-row candidates are bounded by " +
+        "the cap at any corpus size"),
+      "l3_width_note" -> ("at measurable c the beamed L3 is WIDER " +
+        "than two-level (the 2*beam leaf scans dominate small " +
+        "blocks); the widths cross arithmetically near c~2^18 " +
+        "(2*sqrt(c) vs t+2t+2*beam*t, t=c^(1/3)) and at the 2^24 " +
+        "two-level cap the L3 routes at ~2816 evals/row vs 8192 — " +
+        "the L3 exists for the post-cap regime, not to win the " +
+        "fixture"),
+      "multi_probe_retention_floor" -> fixed(RetentionFloor, 2),
+      "adaptive_retention_floor" -> fixed(AdaptiveRetentionFloor, 2),
+      "removal_recall_floor" -> fixed(RemovalRecallFloor, 2),
+      "adaptive_retention_below_floor" -> adpRetBreach,
+      "removal_recall_below_floor" -> remBreach,
+      "pq_adaptive_worse" -> pqBreach,
+      "pq_res256_worse" -> pqRes256Breach,
+      "pq_rerank_below_adc" -> pqRerankBreach,
+      "pq_res256_note" -> ("measured negative: with occupancy-125 " +
+        "trained cells the residual blob is near-isotropic and " +
+        "raw-256 quantizes BETTER (0.189 vs 0.210 at 1x); the gate " +
+        "is a 1.25x regression bound, not a residual-wins claim — " +
+        "residual pays off on COARSE cells (the FAISS regime), " +
+        "which constant-occupancy cell laws deliberately avoid"),
+      "retention_below_floor" -> retBreach,
+      "dist_build_diff_nonzero" -> distBreach,
+      "l3_recall_share_floor" -> fixed(L3RecallShare, 2),
+      "l3_rows_lost_nonzero" -> l3Lost,
+      "l3_recall_below_share" -> l3RecallBreach,
+      "l3_inc_recall_below_share" -> l3IncBreach,
+      "adaptive_search_below_probe1" -> adpSearchBreach,
+      "switch_gate_breach" -> switchBreach,
+      "linear_bound" -> fixed(factor * 1.5, 1))
+  }
 
   def main(args: Array[String]): Unit = {
     val baseDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val factor = args.lift(1).map(_.toInt).getOrElse(10)
-    val outJson = args.lift(2).getOrElse("/root/repo/SCALE_clustered_ann.json")
+    val outJson = Harness.file(
+      args.lift(2).getOrElse("SCALE_clustered_ann.json"))
     // optional 4th arg: generator mode — "clustered" (default) or
     // "clustered_vocabrich" (r12: the combined arm, vocab-rich
     // documents beside the clustered embeddings, so the retention
     // table can be recomputed on the corpus whose TEXT side carries no
     // 31-word-vocabulary entropy bound)
     val mode = args.lift(3).getOrElse("clustered")
-    val spark = GraftSession.builder()
-      // stress mains keep the disk default: 100× shuffles can exceed RAM
-      .config("spark.local.dir", System.getProperty("java.io.tmpdir"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.stressSession()
 
     val root = s"${ProcScratch.base}/clustered_ann"
     val dir1 = s"$root/sf1x"
@@ -348,20 +498,22 @@ object AnnClusteredStress {
       // top-K candidates) — the probe ARRAYS must be bit-identical
       // while the driver held only the ~sqrt(c) supers; this was the
       // one remaining driver-growth ceiling in the trained family
-      spark.conf.set(ops.SimilarityQueries.MaxDriverSeedsKey, "1")
-      val adpSwitched = ops.SimilarityQueries.trainedAdaptiveCells(spark,
-        dir, ops.SimilarityQueries.AdaptNSupers,
-        ops.SimilarityQueries.AdaptMaxProbes,
-        ops.SimilarityQueries.AdaptEpsNum,
-        ops.SimilarityQueries.AdaptEpsDen, interleave = true)
-      val adpSwitchRoute = ops.SimilarityQueries.TrainedBuildStats.lastRoute
-      val adpSwitchSeeds =
-        ops.SimilarityQueries.TrainedBuildStats.lastDriverSeeds
-      val adpSwitchDiff = adp.selectExpr("vec_id", "probes AS p1")
-        .join(adpSwitched.selectExpr("vec_id", "probes AS p2"), "vec_id")
-        .filter("p1 <> p2").count() +
-        math.abs(adpSwitched.count() - n)
-      spark.conf.unset(ops.SimilarityQueries.MaxDriverSeedsKey)
+      val (adpSwitchRoute, adpSwitchSeeds, adpSwitchDiff) =
+        GraftSession.withConf(spark, OneSeed) {
+          val adpSwitched = ops.SimilarityQueries.trainedAdaptiveCells(spark,
+            dir, ops.SimilarityQueries.AdaptNSupers,
+            ops.SimilarityQueries.AdaptMaxProbes,
+            ops.SimilarityQueries.AdaptEpsNum,
+            ops.SimilarityQueries.AdaptEpsDen, interleave = true)
+          val adpSwitchRoute = ops.SimilarityQueries.TrainedBuildStats.lastRoute
+          val adpSwitchSeeds =
+            ops.SimilarityQueries.TrainedBuildStats.lastDriverSeeds
+          val adpSwitchDiff = adp.selectExpr("vec_id", "probes AS p1")
+            .join(adpSwitched.selectExpr("vec_id", "probes AS p2"), "vec_id")
+            .filter("p1 <> p2").count() +
+            math.abs(adpSwitched.count() - n)
+          (adpSwitchRoute, adpSwitchSeeds, adpSwitchDiff)
+        }
       // the 20 PQ queries' margin-law probe rows, kept past adp's
       // lifetime for the full-composition recall rows below
       val pqProbes = adp.filter(col("vec_id") < 20)
@@ -377,18 +529,20 @@ object AnnClusteredStress {
       // bit-identical while the driver held only Σ_b ⌈√k_b⌉ rows;
       // this was the last declared-query build with a
       // growing-with-corpus driver collect (r10 weak finding #2)
-      spark.conf.set(ops.SimilarityQueries.MaxDriverSeedsKey, "1")
-      val lshSwitched = ops.SimilarityQueries.lshRefined(spark, dir, refCap)
-      val lshSwitchRoute = ops.SimilarityQueries.TrainedBuildStats.lastRoute
-      val lshSwitchSeeds =
-        ops.SimilarityQueries.TrainedBuildStats.lastDriverSeeds
-      val lshSwitchDiff = ref
-        .selectExpr("vec_id", "bucket AS lb1", "cell AS lc1")
-        .join(lshSwitched.selectExpr(
-          "vec_id", "bucket AS lb2", "cell AS lc2"), "vec_id")
-        .filter("lb1 <> lb2 OR lc1 <> lc2").count() +
-        math.abs(lshSwitched.count() - n)
-      spark.conf.unset(ops.SimilarityQueries.MaxDriverSeedsKey)
+      val (lshSwitchRoute, lshSwitchSeeds, lshSwitchDiff) =
+        GraftSession.withConf(spark, OneSeed) {
+          val lshSwitched = ops.SimilarityQueries.lshRefined(spark, dir, refCap)
+          val lshSwitchRoute = ops.SimilarityQueries.TrainedBuildStats.lastRoute
+          val lshSwitchSeeds =
+            ops.SimilarityQueries.TrainedBuildStats.lastDriverSeeds
+          val lshSwitchDiff = ref
+            .selectExpr("vec_id", "bucket AS lb1", "cell AS lc1")
+            .join(lshSwitched.selectExpr(
+              "vec_id", "bucket AS lb2", "cell AS lc2"), "vec_id")
+            .filter("lb1 <> lb2 OR lc1 <> lc2").count() +
+            math.abs(lshSwitched.count() - n)
+          (lshSwitchRoute, lshSwitchSeeds, lshSwitchDiff)
+        }
       // REMOVAL recall — the decision metric of a dedup pass: a row with
       // ANY true lower-id duplicate is removed as long as the blocker
       // finds ANY ONE lower-id duplicate for it (every found pair is a
@@ -577,18 +731,21 @@ object AnnClusteredStress {
       // probe columns while the driver held only the ~sqrt(c) supers —
       // the "switch fires and is safe" proof on a corpus big enough to
       // trip it (the fixture suite can only prove it at c=16)
-      spark.conf.set(ops.SimilarityQueries.MaxDriverSeedsKey, "1")
-      val switched = ops.SimilarityQueries.trainedCells(spark, dir,
-        probe2 = true, probe3 = true)
-      val switchRoute = ops.SimilarityQueries.TrainedBuildStats.lastRoute
-      val switchSeeds = ops.SimilarityQueries.TrainedBuildStats.lastDriverSeeds
-      val switchDiff = bal
-        .selectExpr("vec_id", "cell AS c1", "cell2 AS c21", "cell3 AS c31")
-        .join(switched.selectExpr(
-          "vec_id", "cell AS c2", "cell2 AS c22", "cell3 AS c32"), "vec_id")
-        .filter("c1 <> c2 OR c21 <> c22 OR c31 <> c32").count() +
-        math.abs(switched.count() - n)
-      spark.conf.unset(ops.SimilarityQueries.MaxDriverSeedsKey)
+      val (switchRoute, switchSeeds, switchDiff) =
+        GraftSession.withConf(spark, OneSeed) {
+          val switched = ops.SimilarityQueries.trainedCells(spark, dir,
+            probe2 = true, probe3 = true)
+          val switchRoute = ops.SimilarityQueries.TrainedBuildStats.lastRoute
+          val switchSeeds =
+            ops.SimilarityQueries.TrainedBuildStats.lastDriverSeeds
+          val switchDiff = bal
+            .selectExpr("vec_id", "cell AS c1", "cell2 AS c21", "cell3 AS c31")
+            .join(switched.selectExpr(
+              "vec_id", "cell AS c2", "cell2 AS c22", "cell3 AS c32"), "vec_id")
+            .filter("c1 <> c2 OR c21 <> c22 OR c31 <> c32").count() +
+            math.abs(switched.count() - n)
+          (switchRoute, switchSeeds, switchDiff)
+        }
 
       // the THREE-LEVEL quantizer (q_ann_ivf_trained_l3): the routing
       // law past the two-level 2^24-cell cap (constant occupancy dies
@@ -757,15 +914,17 @@ object AnnClusteredStress {
       // corpus's K so the Lloyd rounds take the DataFrame-centroid
       // route, and assert the assignment is bit-identical while the
       // driver held only ~sqrt(K) centroid rows per round
-      spark.conf.set(ops.SimilarityQueries.MaxDriverSeedsKey, "1")
-      val semSwitched = ops.ClusteringQueries.semClusters(spark, dir)
-      val semSwitchRoute = ops.ClusteringQueries.SemBuildStats.lastRoute
-      val semSwitchDriver =
-        ops.ClusteringQueries.SemBuildStats.lastDriverCentroids
-      val semSwitchDiff = sem.selectExpr("vec_id", "cluster AS k1")
-        .join(semSwitched.selectExpr("vec_id", "cluster AS k2"), "vec_id")
-        .filter("k1 <> k2").count() + math.abs(semSwitched.count() - n)
-      spark.conf.unset(ops.SimilarityQueries.MaxDriverSeedsKey)
+      val (semSwitchRoute, semSwitchDriver, semSwitchDiff) =
+        GraftSession.withConf(spark, OneSeed) {
+          val semSwitched = ops.ClusteringQueries.semClusters(spark, dir)
+          val semSwitchRoute = ops.ClusteringQueries.SemBuildStats.lastRoute
+          val semSwitchDriver =
+            ops.ClusteringQueries.SemBuildStats.lastDriverCentroids
+          val semSwitchDiff = sem.selectExpr("vec_id", "cluster AS k1")
+            .join(semSwitched.selectExpr("vec_id", "cluster AS k2"), "vec_id")
+            .filter("k1 <> k2").count() + math.abs(semSwitched.count() - n)
+          (semSwitchRoute, semSwitchDriver, semSwitchDiff)
+        }
 
       def ret(s: Set[(Long, Long)]): Double =
         if (ndTruth.isEmpty) 1.0 else (ndTruth & s).size.toDouble / ndTruth.size
@@ -792,286 +951,102 @@ object AnnClusteredStress {
         f"(${mp3Mass / balSq}%.2fx) ADAPT=$retAdp%.3f " +
         f"(${adpMass / balSq}%.2fx, removal=$remAdp%.3f) | distDiff=$distDiff " +
         f"seeds one=$oneBroadcastSeeds dist=$distDriverSeeds")
-      ScaleRow(tag, n,
-        f"""{"n":$n,"cells":$cells,"cells_used":$cellsUsed,""" +
-          f""""cell_occ_max":$cellMax,"cell_occ_med":$cellMed,""" +
-          f""""cell_pair_mass":$cellSq%.0f,""" +
-          f""""planes":$planes,"buckets_used":$bUsed,""" +
-          f""""bucket_occ_max":$bMax,"bucket_occ_med":$bMed,""" +
-          f""""bucket_pair_mass":$bSq%.0f,""" +
-          f""""recall3_probe1":$r1%.3f,"recall3_probe2":$r2%.3f,""" +
-          f""""trained_cells_used":$balUsed,"trained_occ_max":$balMax,""" +
-          f""""trained_occ_med":$balMed,"trained_pair_mass":$balSq%.0f,""" +
-          f""""trained_recall3_probe1":$balR1%.3f,""" +
-          f""""trained_recall3_probe2":$balR2%.3f,""" +
-          f""""trained_recall3_probe3":$balR3%.3f,""" +
-          f""""cell_mass_per_row":${cellSq / n}%.1f,""" +
-          f""""bucket_mass_per_row":${bSq / n}%.1f,""" +
-          f""""trained_mass_per_row":${balSq / n}%.1f,""" +
-          f""""adaptive_lsh_mass_per_row":${refSq / n}%.1f,""" +
-          f""""adaptive_lsh_cap":$refCap,""" +
-          f""""adaptive_lsh_cells_used":$refUsed,"adaptive_lsh_occ_max":$refMax,""" +
-          f""""adaptive_lsh_occ_med":$refMed,"adaptive_lsh_pair_mass":$refSq%.0f,""" +
-          f""""adaptive_lsh_recall3_probe1":$refR1%.3f,""" +
-          f""""sem_clusters_used":$semUsed,"sem_occ_max":$semMax,""" +
-          f""""sem_occ_med":$semMed,"sem_pair_mass":$semSq%.0f,""" +
-          f""""sem_mass_per_row":${semSq / n}%.1f,""" +
-          f""""sem_k":$semK,"sem_route_width":${semSb + (semK + semSb - 1) / semSb},""" +
-          f""""sem_flat_width":$semK,"sem_build_s":$semBuildS%.2f,""" +
-          f""""sem_build_us_per_row":${semBuildS * 1e6 / n}%.1f,""" +
-          f""""multi_probe_pair_mass":$mpMass%.0f,""" +
-          f""""multi_probe_mass_per_row":${mpMass.toDouble / n}%.1f,""" +
-          f""""multi_probe_mass_vs_single":${mpMass / balSq}%.2f,""" +
-          f""""multi_probe3_pair_mass":$mp3Mass%.0f,""" +
-          f""""multi_probe3_mass_per_row":${mp3Mass.toDouble / n}%.1f,""" +
-          f""""multi_probe3_mass_vs_single":${mp3Mass / balSq}%.2f,""" +
-          f""""trained_dist_cell_diff":$distDiff,""" +
-          f""""trained_codebook_seeds":$oneBroadcastSeeds,""" +
-          f""""trained_dist_driver_seeds":$distDriverSeeds,""" +
-          s""""switch_route":"$switchRoute",""" +
-          f""""switch_driver_seeds":$switchSeeds,""" +
-          f""""switch_probe_diff":$switchDiff,""" +
-          f""""l3_cells_used":$l3Used,"l3_occ_max":$l3Max,""" +
-          f""""l3_occ_med":$l3Med,"l3_pair_mass":$l3Sq%.0f,""" +
-          f""""l3_mass_per_row":${l3Sq / n}%.1f,""" +
-          f""""l3_recall3_probe1":$l3R1%.3f,""" +
-          f""""l3_recall3_probe2":$l3R2%.3f,""" +
-          f""""l3_recall3_adaptive":$l3AdpRecall%.3f,""" +
-          f""""l3_driver_seeds":$l3DriverSeeds,""" +
-          f""""l3_supers":$l3Supers,"l3_children":$l3Children,""" +
-          f""""l3_rows_lost":$l3RowsLost,""" +
-          f""""l3_route_width":$l3Width%.1f,""" +
-          f""""trained_route_width":$twoLevelWidth%.1f,""" +
-          s""""sem_switch_route":"$semSwitchRoute",""" +
-          f""""sem_switch_driver_centroids":$semSwitchDriver,""" +
-          f""""sem_switch_diff":$semSwitchDiff,""" +
-          s""""adp_switch_route":"$adpSwitchRoute",""" +
-          f""""adp_switch_driver_seeds":$adpSwitchSeeds,""" +
-          f""""adp_switch_probe_diff":$adpSwitchDiff,""" +
-          s""""lsh_switch_route":"$lshSwitchRoute",""" +
-          f""""lsh_switch_driver_seeds":$lshSwitchSeeds,""" +
-          f""""lsh_switch_cell_diff":$lshSwitchDiff,""" +
-          s""""ann_auto_book":"$annAutoBook",""" +
-          f""""ann_auto_cell_diff":$annAutoDiff,""" +
-          s""""ann_auto_ingest_book":"$annIngBook",""" +
-          f""""ann_auto_ingest_diff":$annIngDiff,""" +
-          f""""l3_inc_recall3_probe1":$l3iR1%.3f,""" +
-          f""""l3_incsel_recall3_probe1":$l3iTR1%.3f,""" +
-          f""""l3_inc_rows_lost":$l3iRowsLost,""" +
-          f""""neardup_truth_pairs":${ndTruth.size},""" +
-          f""""neardup_retention_lsh":$retLsh%.3f,""" +
-          f""""neardup_retention_adaptive":$retRef%.3f,""" +
-          f""""neardup_retention_trained":$retBal%.3f,""" +
-          f""""neardup_retention_sem":$retSem%.3f,""" +
-          f""""neardup_retention_multi_probe":$retMp%.3f,""" +
-          f""""neardup_retention_multi_probe3":$retMp3%.3f,""" +
-          f""""adaptive_probe_pair_mass":$adpMass%.0f,""" +
-          f""""adaptive_probe_mass_vs_single":${adpMass / balSq}%.2f,""" +
-          f""""trained_recall3_adaptive":$adpRecall%.3f,""" +
-          f""""neardup_retention_adaptive_probe":$retAdp%.3f,""" +
-          f""""removal_recall_adaptive":$remAdp%.3f,""" +
-          f""""removal_recall_probe3":$remMp3%.3f,""" +
-          f""""pq_codes_adaptive":$kPq,""" +
-          f""""pq_adc_relerr_fixed":$pqErrFixed%.4f,""" +
-          f""""pq_adc_relerr_adaptive":$pqErrAdaptive%.4f,""" +
-          f""""pq256_adc_relerr_raw":$err256Raw%.4f,""" +
-          f""""pq256_adc_relerr_res":$err256Res%.4f,""" +
-          f""""pq256_top5_recall_adc":$pqRecallAdc%.3f,""" +
-          f""""pq256_top5_recall_rerank":$pqRecallRerank%.3f,""" +
-          f""""ivfpq_rerank_recall5_full":$pqRerankFull%.3f,""" +
-          f""""ivfpq_adaptive_recall5_full":$pqAdaptiveFull%.3f,""" +
-          f""""sq8_adc_relerr":$sq8RelErr%.4f,""" +
-          f""""sq8_top5_recall_est":$sq8RecallEst%.3f,""" +
-          f""""sq8_top5_recall_rerank":$sq8RecallRerank%.3f}""")
+      tag -> ListMap[String, Any](
+        "n" -> n, "cells" -> cells, "cells_used" -> cellsUsed,
+        "cell_occ_max" -> cellMax, "cell_occ_med" -> cellMed,
+        "cell_pair_mass" -> fixed(cellSq, 0), "planes" -> planes,
+        "buckets_used" -> bUsed, "bucket_occ_max" -> bMax,
+        "bucket_occ_med" -> bMed, "bucket_pair_mass" -> fixed(bSq, 0),
+        "recall3_probe1" -> fixed(r1, 3), "recall3_probe2" -> fixed(r2, 3),
+        "trained_cells_used" -> balUsed, "trained_occ_max" -> balMax,
+        "trained_occ_med" -> balMed, "trained_pair_mass" -> fixed(balSq, 0),
+        "trained_recall3_probe1" -> fixed(balR1, 3),
+        "trained_recall3_probe2" -> fixed(balR2, 3),
+        "trained_recall3_probe3" -> fixed(balR3, 3),
+        "cell_mass_per_row" -> fixed(cellSq / n, 1),
+        "bucket_mass_per_row" -> fixed(bSq / n, 1),
+        "trained_mass_per_row" -> fixed(balSq / n, 1),
+        "adaptive_lsh_mass_per_row" -> fixed(refSq / n, 1),
+        "adaptive_lsh_cap" -> refCap, "adaptive_lsh_cells_used" -> refUsed,
+        "adaptive_lsh_occ_max" -> refMax, "adaptive_lsh_occ_med" -> refMed,
+        "adaptive_lsh_pair_mass" -> fixed(refSq, 0),
+        "adaptive_lsh_recall3_probe1" -> fixed(refR1, 3),
+        "sem_clusters_used" -> semUsed, "sem_occ_max" -> semMax,
+        "sem_occ_med" -> semMed, "sem_pair_mass" -> fixed(semSq, 0),
+        "sem_mass_per_row" -> fixed(semSq / n, 1), "sem_k" -> semK,
+        "sem_route_width" -> (semSb + (semK + semSb - 1) / semSb),
+        "sem_flat_width" -> semK, "sem_build_s" -> fixed(semBuildS, 2),
+        "sem_build_us_per_row" -> fixed(semBuildS * 1e6 / n, 1),
+        "multi_probe_pair_mass" -> fixed(mpMass, 0),
+        "multi_probe_mass_per_row" -> fixed(mpMass.toDouble / n, 1),
+        "multi_probe_mass_vs_single" -> fixed(mpMass / balSq, 2),
+        "multi_probe3_pair_mass" -> fixed(mp3Mass, 0),
+        "multi_probe3_mass_per_row" -> fixed(mp3Mass.toDouble / n, 1),
+        "multi_probe3_mass_vs_single" -> fixed(mp3Mass / balSq, 2),
+        "trained_dist_cell_diff" -> distDiff,
+        "trained_codebook_seeds" -> oneBroadcastSeeds,
+        "trained_dist_driver_seeds" -> distDriverSeeds,
+        "switch_route" -> switchRoute, "switch_driver_seeds" -> switchSeeds,
+        "switch_probe_diff" -> switchDiff, "l3_cells_used" -> l3Used,
+        "l3_occ_max" -> l3Max, "l3_occ_med" -> l3Med,
+        "l3_pair_mass" -> fixed(l3Sq, 0),
+        "l3_mass_per_row" -> fixed(l3Sq / n, 1),
+        "l3_recall3_probe1" -> fixed(l3R1, 3),
+        "l3_recall3_probe2" -> fixed(l3R2, 3),
+        "l3_recall3_adaptive" -> fixed(l3AdpRecall, 3),
+        "l3_driver_seeds" -> l3DriverSeeds, "l3_supers" -> l3Supers,
+        "l3_children" -> l3Children, "l3_rows_lost" -> l3RowsLost,
+        "l3_route_width" -> fixed(l3Width, 1),
+        "trained_route_width" -> fixed(twoLevelWidth, 1),
+        "sem_switch_route" -> semSwitchRoute,
+        "sem_switch_driver_centroids" -> semSwitchDriver,
+        "sem_switch_diff" -> semSwitchDiff,
+        "adp_switch_route" -> adpSwitchRoute,
+        "adp_switch_driver_seeds" -> adpSwitchSeeds,
+        "adp_switch_probe_diff" -> adpSwitchDiff,
+        "lsh_switch_route" -> lshSwitchRoute,
+        "lsh_switch_driver_seeds" -> lshSwitchSeeds,
+        "lsh_switch_cell_diff" -> lshSwitchDiff,
+        "ann_auto_book" -> annAutoBook, "ann_auto_cell_diff" -> annAutoDiff,
+        "ann_auto_ingest_book" -> annIngBook,
+        "ann_auto_ingest_diff" -> annIngDiff,
+        "l3_inc_recall3_probe1" -> fixed(l3iR1, 3),
+        "l3_incsel_recall3_probe1" -> fixed(l3iTR1, 3),
+        "l3_inc_rows_lost" -> l3iRowsLost,
+        "neardup_truth_pairs" -> ndTruth.size,
+        "neardup_retention_lsh" -> fixed(retLsh, 3),
+        "neardup_retention_adaptive" -> fixed(retRef, 3),
+        "neardup_retention_trained" -> fixed(retBal, 3),
+        "neardup_retention_sem" -> fixed(retSem, 3),
+        "neardup_retention_multi_probe" -> fixed(retMp, 3),
+        "neardup_retention_multi_probe3" -> fixed(retMp3, 3),
+        "adaptive_probe_pair_mass" -> fixed(adpMass, 0),
+        "adaptive_probe_mass_vs_single" -> fixed(adpMass / balSq, 2),
+        "trained_recall3_adaptive" -> fixed(adpRecall, 3),
+        "neardup_retention_adaptive_probe" -> fixed(retAdp, 3),
+        "removal_recall_adaptive" -> fixed(remAdp, 3),
+        "removal_recall_probe3" -> fixed(remMp3, 3),
+        "pq_codes_adaptive" -> kPq,
+        "pq_adc_relerr_fixed" -> fixed(pqErrFixed, 4),
+        "pq_adc_relerr_adaptive" -> fixed(pqErrAdaptive, 4),
+        "pq256_adc_relerr_raw" -> fixed(err256Raw, 4),
+        "pq256_adc_relerr_res" -> fixed(err256Res, 4),
+        "pq256_top5_recall_adc" -> fixed(pqRecallAdc, 3),
+        "pq256_top5_recall_rerank" -> fixed(pqRecallRerank, 3),
+        "ivfpq_rerank_recall5_full" -> fixed(pqRerankFull, 3),
+        "ivfpq_adaptive_recall5_full" -> fixed(pqAdaptiveFull, 3),
+        "sq8_adc_relerr" -> fixed(sq8RelErr, 4),
+        "sq8_top5_recall_est" -> fixed(sq8RecallEst, 3),
+        "sq8_top5_recall_rerank" -> fixed(sq8RecallRerank, 3))
     }
-    // the scale verdicts: candidate mass must grow ~linearly (ratio ≲
-    // factor × 1.5, same slack as ScaleStress), recall must not collapse
-    def massOf(key: String): Map[String, Double] = rows.map(r => {
-      val m = ("\"" + key + "\":([0-9.eE+]+)").r
-        .findFirstMatchIn(r.json).get.group(1).toDouble
-      r.tag -> m
-    }).toMap
-    val mass = massOf("cell_pair_mass")
-    val balMass = massOf("trained_pair_mass")
-    val refMass = massOf("adaptive_lsh_pair_mass")
-    val semMass = massOf("sem_pair_mass")
-    val mpMassR = massOf("multi_probe3_pair_mass")
-    val massRatio = mass(s"${factor}x") / mass("1x")
-    val balRatio = balMass(s"${factor}x") / balMass("1x")
-    val refRatio = refMass(s"${factor}x") / refMass("1x")
-    val semRatio = semMass(s"${factor}x") / semMass("1x")
-    val mpRatio = mpMassR(s"${factor}x") / mpMassR("1x")
-    // GATES (r09 — retention and dist-equality used to be
-    // informational): the RECOMMENDED near-dup blocker (multi-probe
-    // trained cells) must retain at least RetentionFloor of the true
-    // cosine≥0.4 pairs at EVERY measured scale, and the distributed
-    // codebook build must assign identically at every scale. A breach
-    // populates the list and the run's consumer sees it without
-    // reading per-scale rows.
-    val retMpByTag = massOf("neardup_retention_multi_probe3")
-    val retBreach = retMpByTag.collect {
-      case (tag, r) if r < RetentionFloor => tag }.toSeq.sorted
-    val adpRetBreach = massOf("neardup_retention_adaptive_probe").collect {
-      case (tag, r) if r < AdaptiveRetentionFloor => tag }.toSeq.sorted
-    val remBreach = massOf("removal_recall_adaptive").collect {
-      case (tag, r) if r < RemovalRecallFloor => tag }.toSeq.sorted
-    // adaptive PQ must not quantize WORSE than the fixed 16-code book
-    val errF = massOf("pq_adc_relerr_fixed")
-    val pqBreach = massOf("pq_adc_relerr_adaptive").collect {
-      case (tag, e) if e > errF(tag) => tag }.toSeq.sorted
-    // residual-256 vs raw-256 — the HONEST r11 measurement: on this
-    // corpus residual encoding does NOT cut ADC error (raw 0.189 vs
-    // res 0.210 at 1×, stable across scales and centroid choices —
-    // mean-centroid beat seed-centroid but not raw). The physics:
-    // occupancy-125 trained cells already extract the cluster
-    // structure, so the residual blob is near-isotropic — 256 codes
-    // cover the low-entropy clustered raw sub-vectors better than a
-    // high-entropy isotropic residual (FAISS's residual win assumes
-    // COARSE cells that leave structure in the residual). The gate is
-    // therefore a 1.25× regression bound — catching a broken residual
-    // path (the seed-centroid variance mistake class) without
-    // pretending the fixture shows the production win.
-    val err256RawByTag = massOf("pq256_adc_relerr_raw")
-    val pqRes256Breach = massOf("pq256_adc_relerr_res").collect {
-      case (tag, e) if e > 1.25 * err256RawByTag(tag) => tag }.toSeq.sorted
-    // exact re-rank (r12, q_ann_ivfpq_rerank): the re-ranked top-5
-    // may never recall LESS than the raw ADC top-5 against the exact
-    // same-cell truth — both ratios share the identical deterministic
-    // truth set, so exact ≥ holds; the epsilon covers float printing
-    val adcR5ByTag = massOf("pq256_top5_recall_adc")
-    val sq8R5ByTag = massOf("sq8_top5_recall_est")
-    val pqRerankBreach = (massOf("pq256_top5_recall_rerank").collect {
-      case (tag, r) if r < adcR5ByTag(tag) - 0.0005 => tag }.toSeq ++
-      massOf("sq8_top5_recall_rerank").collect {
-        case (tag, r) if r < sq8R5ByTag(tag) - 0.0005 => s"$tag(sq8)" }
-        .toSeq).sorted
-    val distBreach = massOf("trained_dist_cell_diff").collect {
-      case (tag, d) if d != 0.0 => tag }.toSeq.sorted
-    // the L3 gates: the three-level build must keep every row (an
-    // inner-join drop = broken subset invariant), and its coarser
-    // routing must hold at least L3RecallShare of the two-level
-    // probe1 recall on the same corpus at every scale
-    val l3Lost = (massOf("l3_rows_lost").collect {
-      case (tag, d) if d != 0.0 => tag }.toSeq ++
-      massOf("l3_inc_rows_lost").collect {
-        case (tag, d) if d != 0.0 => s"$tag(inc)" }.toSeq).sorted
-    val balR1ByTag = massOf("trained_recall3_probe1")
-    val l3RecallBreach = massOf("l3_recall3_probe2").collect {
-      case (tag, r) if r < L3RecallShare * balR1ByTag(tag) => tag }
-      .toSeq.sorted
-    // the served L3 book gate (re-based r11, see the control's comment
-    // above): the EXCLUSION COST — inc (trained on 9/10 of rows) vs
-    // the selection-law-matched control (same scheme, all rows) — must
-    // stay ≥ L3IncShare (worst measured point 0.74 at 100×, floored
-    // with slack at 0.70). The scheme-vs-full gap rides the artifact
-    // as a RECORD (l3_inc vs l3 rows) with the corpus-symmetry
-    // analysis, not a gate.
-    val l3IncTByTag = massOf("l3_incsel_recall3_probe1")
-    val l3IncBreach = massOf("l3_inc_recall3_probe1").collect {
-      case (tag, r) if r < L3IncShare * l3IncTByTag(tag) => tag }
-      .toSeq.sorted
-    // the adaptive SEARCH gate (r12): the margin-law probe set always
-    // contains the home cell, so its top-3 recall can never measure
-    // below probe1's on the same truth — a breach is a broken probe
-    // array or join, not a quality judgement (small epsilon: both
-    // recalls are ratios of the same ≤ ~300-pair truth set, so exact
-    // ≥ holds; the slack covers only float printing)
-    val l3R1ByTag = massOf("l3_recall3_probe1")
-    val adpSearchBreach = (massOf("trained_recall3_adaptive").collect {
-      case (tag, r) if r < balR1ByTag(tag) - 0.0005 => tag }.toSeq ++
-      massOf("l3_recall3_adaptive").collect {
-        case (tag, r) if r < l3R1ByTag(tag) - 0.0005 => s"$tag(l3)" }
-        .toSeq).sorted
-    // the r10 switch gate: at every scale the forced-budget build must
-    // have actually taken the dist route AND agreed on every probe col
-    val switchBreach = (massOf("switch_probe_diff").collect {
-      case (tag, d) if d != 0.0 => tag }.toSeq ++
-      massOf("sem_switch_diff").collect {
-        case (tag, d) if d != 0.0 => tag }.toSeq ++
-      massOf("adp_switch_probe_diff").collect {
-        case (tag, d) if d != 0.0 => tag }.toSeq ++
-      massOf("lsh_switch_cell_diff").collect {
-        case (tag, d) if d != 0.0 => tag }.toSeq ++
-      massOf("ann_auto_cell_diff").collect {
-        case (tag, d) if d != 0.0 => tag }.toSeq ++
-      massOf("ann_auto_ingest_diff").collect {
-        case (tag, d) if d != 0.0 => tag }.toSeq ++
-      rows.collect {
-        case r if !r.json.contains(""""switch_route":"dist"""") ||
-          !r.json.contains(""""sem_switch_route":"dist"""") ||
-          !r.json.contains(""""adp_switch_route":"dist"""") ||
-          // VACUOUS PASS (r12): on a corpus with NO hot buckets
-          // (seedCount = 0 — the decorrelated 1× geometry spreads the
-          // planted clusters below the refinement cap) the dist route
-          // is unreachable by the engine's own law (seedCount > budget
-          // is false for every budget) AND meaningless — both routes
-          // are the identity assignment, and the diff row already
-          // gates their equality. The switch gate therefore accepts
-          // lsh-broadcast ONLY in the zero-seed case.
-          !(r.json.contains(""""lsh_switch_route":"lsh-dist"""") ||
-            (r.json.contains(""""lsh_switch_route":"lsh-broadcast"""") &&
-              r.json.contains(""""lsh_switch_driver_seeds":0"""))) ||
-          !r.json.contains(""""ann_auto_book":"l3"""") ||
-          !r.json.contains(""""ann_auto_ingest_book":"l3"""") => r.tag })
-      .distinct.sorted
-    val out =
-      s"""{"base_sf":"$baseDir","factor":$factor,"mode":"$mode",""" +
-        rows.map(r => s""""${r.tag}":${r.json}""").mkString("", ",", ",") +
-        f""""cell_pair_mass_ratio":$massRatio%.2f,""" +
-        f""""trained_pair_mass_ratio":$balRatio%.2f,""" +
-        f""""adaptive_lsh_pair_mass_ratio":$refRatio%.2f,""" +
-        f""""sem_pair_mass_ratio":$semRatio%.2f,""" +
-        f""""multi_probe3_pair_mass_ratio":$mpRatio%.2f,""" +
-        """"adaptive_lsh_note":"read mass_per_row, not the ratio: the """ +
-        """cap engages only on buckets past it, so the 1x denominator """ +
-        """is largely unsplit mass; per-row candidates are bounded by """ +
-        """the cap at any corpus size",""" +
-        """"l3_width_note":"at measurable c the beamed L3 is WIDER """ +
-        """than two-level (the 2*beam leaf scans dominate small """ +
-        """blocks); the widths cross arithmetically near c~2^18 """ +
-        """(2*sqrt(c) vs t+2t+2*beam*t, t=c^(1/3)) and at the 2^24 """ +
-        """two-level cap the L3 routes at ~2816 evals/row vs 8192 — """ +
-        """the L3 exists for the post-cap regime, not to win the """ +
-        """fixture",""" +
-        f""""multi_probe_retention_floor":$RetentionFloor%.2f,""" +
-        f""""adaptive_retention_floor":$AdaptiveRetentionFloor%.2f,""" +
-        f""""removal_recall_floor":$RemovalRecallFloor%.2f,""" +
-        s""""adaptive_retention_below_floor":${adpRetBreach.map("\"" + _ + "\"")
-          .mkString("[", ",", "]")},""" +
-        s""""removal_recall_below_floor":${remBreach.map("\"" + _ + "\"")
-          .mkString("[", ",", "]")},""" +
-        s""""pq_adaptive_worse":${pqBreach.map("\"" + _ + "\"")
-          .mkString("[", ",", "]")},""" +
-        s""""pq_res256_worse":${pqRes256Breach.map("\"" + _ + "\"")
-          .mkString("[", ",", "]")},""" +
-        s""""pq_rerank_below_adc":${pqRerankBreach.map("\"" + _ + "\"")
-          .mkString("[", ",", "]")},""" +
-        """"pq_res256_note":"measured negative: with occupancy-125 """ +
-        """trained cells the residual blob is near-isotropic and """ +
-        """raw-256 quantizes BETTER (0.189 vs 0.210 at 1x); the gate """ +
-        """is a 1.25x regression bound, not a residual-wins claim — """ +
-        """residual pays off on COARSE cells (the FAISS regime), """ +
-        """which constant-occupancy cell laws deliberately avoid",""" +
-        s""""retention_below_floor":${retBreach.map("\"" + _ + "\"")
-          .mkString("[", ",", "]")},""" +
-        s""""dist_build_diff_nonzero":${distBreach.map("\"" + _ + "\"")
-          .mkString("[", ",", "]")},""" +
-        f""""l3_recall_share_floor":$L3RecallShare%.2f,""" +
-        s""""l3_rows_lost_nonzero":${l3Lost.map("\"" + _ + "\"")
-          .mkString("[", ",", "]")},""" +
-        s""""l3_recall_below_share":${l3RecallBreach.map("\"" + _ + "\"")
-          .mkString("[", ",", "]")},""" +
-        s""""l3_inc_recall_below_share":${l3IncBreach.map("\"" + _ + "\"")
-          .mkString("[", ",", "]")},""" +
-        s""""adaptive_search_below_probe1":${adpSearchBreach
-          .map("\"" + _ + "\"").mkString("[", ",", "]")},""" +
-        s""""switch_gate_breach":${switchBreach.map("\"" + _ + "\"")
-          .mkString("[", ",", "]")},""" +
-        f""""linear_bound":${factor * 1.5}%.1f}"""
-    java.nio.file.Files.writeString(java.nio.file.Path.of(outJson), out)
+    val out = ListMap[String, Any]("base_sf" -> baseDir, "factor" -> factor,
+      "mode" -> mode) ++ rows ++ verdicts(rows, factor)
+    Harness.writeJson(outJson, out)
     println(s"[ann-clustered] wrote $outJson (pair-mass ratio hash=" +
-      f"$massRatio%.2f trained=$balRatio%.2f adaptiveLsh=$refRatio%.2f " +
-      f"vs linear bound ${factor * 1.5}%.1f)")
+      s"${out("cell_pair_mass_ratio")} " +
+      s"trained=${out("trained_pair_mass_ratio")} " +
+      s"adaptiveLsh=${out("adaptive_lsh_pair_mass_ratio")} vs linear bound " +
+      s"${out("linear_bound")})")
     spark.stop()
   }
 }

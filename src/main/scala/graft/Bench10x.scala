@@ -1,5 +1,8 @@
 package graft
 
+import scala.collection.immutable.ListMap
+
+import Harness.fixed
 
 /** 10×-corpus bench — the plan-dominated performance gate.
   *
@@ -14,8 +17,9 @@ package graft
   * Contract mirrors graft.Bench: per-query 3-pass medians vs
   * first-recorded rows in BASELINE_10x.md under the SAME 2× acceptance;
   * queries with no recorded row get one appended (first run seeds the
-  * baseline). Artifact: BENCH_10x.json — one line with per-query
-  * seconds, breaches, and the baseline ratio. Run:
+  * baseline). Artifact: BENCH_10x.json in the working directory — one
+  * line with per-query seconds, breaches, the baseline ratio and the
+  * run history. Run:
   * `SPARK_GRAFT_CPUS=32 sbt "runMain graft.Bench10x [baseSfDir]"`.
   * Keep the host otherwise idle (the ScaleStress co-load rule).
   */
@@ -30,40 +34,15 @@ object Bench10x {
   private val Extras =
     Seq("q_delta_merge", "q_pipeline_recovery", "q_keyed_compact")
 
-  private def baselineFile(): java.io.File =
-    Seq("BASELINE_10x.md", "/root/repo/BASELINE_10x.md")
-      .map(new java.io.File(_)).find(_.exists())
-      .getOrElse(new java.io.File("/root/repo/BASELINE_10x.md"))
-
-  private def baselines(): Map[String, Double] = {
-    val f = baselineFile()
-    if (!f.exists()) Map.empty
-    else {
-      val src = scala.io.Source.fromFile(f, "UTF-8")
-      try src.getLines().filter(_.startsWith("| q_")).flatMap { l =>
-        val c = l.split("\\|").map(_.trim)
-        if (c.length >= 3) scala.util.Try(c(1) -> c(2).toDouble).toOption
-        else None
-      }.toMap
-      finally src.close()
-    }
-  }
-
   def main(args: Array[String]): Unit = {
     val baseDir = args.headOption.getOrElse(
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    val cpus = GraftSession.cpus
     // ambient-load record (r11, same device as Bench): co-tenant waves
     // on this host shift 10× wall times uniformly 1.1-1.4×, which reads
     // as phantom 2× breaches — the artifact must carry the measured
     // interference so a breach list can be judged against it
-    val loadStart = Bench.loadAvg()
-    val spinStart = Bench.spinProbe()
-    val spark = GraftSession.builder()
-      // stress mains keep the disk default: 10× shuffles can exceed RAM
-      .config("spark.local.dir", System.getProperty("java.io.tmpdir"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val host = Harness.host()
+    val spark = Harness.stressSession()
     val dir = s"${ProcScratch.base}/bench10x"
     println(s"[bench10x] generating ${Factor}x corpus at $dir from $baseDir")
     ScaleStress.generate(spark, baseDir, dir, Factor)
@@ -73,35 +52,24 @@ object Bench10x {
         try spark.read.parquet(s"$dir/$t.parquet").count()
         catch { case _: Throwable => () }
       }
+    val baselineFile = Harness.file("BASELINE_10x.md")
     val errors = scala.collection.mutable.SortedSet.empty[String]
     // one timed phase over (names, corpus dir); baseline rows key by
     // name + keySuffix so the clustered phase's anchors never collide
     // with the default-mode rows of the same query
     def phase(names: Seq[String], corpusDir: String, keySuffix: String)
-        : (String, Double, Seq[String]) = {
-      def timeOne(name: String): Double = {
-        val t0 = System.nanoTime()
-        val ok = try { SparkEntry.queries(name)(spark, corpusDir).count(); true }
-          catch { case _: Throwable => errors += (name + keySuffix); false }
-          finally ScratchCache.release()
-        if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
-      }
-      val passes = (1 to 3).map { _ =>
-        spark.catalog.clearCache()
-        names.map(n => n -> timeOne(n)).toMap
-      }
-      val results: Seq[(String, Double)] = names.map { n =>
-        val ts = passes.map(_(n))
-        (n + keySuffix) ->
-          (if (ts.exists(_ < 0)) -1.0 else ts.sorted.apply(1))
-      }
-      val base = baselines()
+        : (ListMap[String, Any], Double, Seq[String]) = {
+      def run(name: String): Double =
+        Harness.seconds(SparkEntry.queries(name)(spark, corpusDir).count())
+      val results = Harness.medianOf3(spark, names)(run)
+        .map { case (n, t) => (n + keySuffix) -> t }
+      errors ++= results.collect { case (q, t) if t < 0 => q }
+      val base = Harness.baselines(baselineFile)
       // first run (or newly added queries): append first-recorded rows
       // so the NEXT round has an anchor — BASELINE.md's protocol
       val missing = results.filter { case (q, t) => t > 0 && !base.contains(q) }
       if (missing.nonEmpty) {
-        val f = baselineFile()
-        val header = if (f.exists()) "" else
+        val header = if (baselineFile.exists()) "" else
           s"""# BASELINE_10x — first-recorded per-query seconds on the
              |# ScaleStress ${Factor}x corpus (synthesized from sf0.1; 32
              |# files/table, decorrelated payloads). Gate: same 2×
@@ -115,66 +83,43 @@ object Bench10x {
              ||---|---|
              |""".stripMargin
         val rows = missing.map { case (q, t) => f"| $q | $t%.3f |\n" }.mkString
-        java.nio.file.Files.writeString(f.toPath, header + rows,
+        java.nio.file.Files.writeString(baselineFile.toPath, header + rows,
           java.nio.file.StandardOpenOption.CREATE,
           java.nio.file.StandardOpenOption.APPEND)
         println(s"[bench10x] recorded ${missing.size} new baseline rows$keySuffix")
       }
-      // OUTLIER RE-MEASURE PROTOCOL (r12, ported from graft.Bench —
-      // the r11 verdict's item 2): a suite breach re-runs ALONE (fresh
-      // 3-pass median, cache cleared) and both numbers land in the
-      // artifact. Substitution into the reported value follows Bench's
-      // exact rule: only when the suite breach is in the ambient-noise
-      // band (< 2.5×) AND the isolated median itself clears the 2×
-      // gate — a genuinely regressed query keeps its suite number and
-      // can never report its best-case time. The committed
-      // gate_2x_breaches list is therefore either empty or carries an
-      // isolated re-measure beside each survivor.
-      val suiteBreaches = results.filter { case (q, t) =>
-        t > 0 && base.get(q).exists(b => b > 0 && t > 2 * b) }
-      val remeasured: Seq[(String, Double, Double)] =
-        suiteBreaches.sortBy(_._1).map { case (q, suiteT) =>
-          val bare = q.stripSuffix(keySuffix)
-          val ts = (1 to 3).map { _ =>
-            spark.catalog.clearCache()
-            timeOne(bare)
-          }
-          (q, suiteT, if (ts.exists(_ < 0)) -1.0 else ts.sorted.apply(1))
-        }
-      val reported: Seq[(String, Double)] = {
-        val sub = remeasured.collect {
-          case (q, suiteT, isoT)
-              if isoT > 0 && base.get(q).exists(b =>
-                suiteT < 2.5 * b && isoT <= 2.0 * b) => q -> isoT
-        }.toMap
-        results.map { case (q, t) => q -> sub.getOrElse(q, t) }
+      // the same 2× gate as graft.Bench (Harness.gate): a suite breach
+      // re-runs alone and both numbers land in the artifact, so the
+      // committed gate_2x_breaches list is either empty or carries an
+      // isolated re-measure beside each survivor
+      val gate = Harness.gate(results, base) { q =>
+        val iso = Harness.medianOf3(spark, Seq(q.stripSuffix(keySuffix)))(run)
+          .head._2
+        if (iso < 0) errors += q
+        iso
       }
-      val breaches = reported.collect {
-        case (q, t) if t > 0 && base.get(q).exists(b => b > 0 && t > 2 * b) => q
+      val breaches = gate.reported.collect {
+        case (q, t) if Harness.breaches(base, q, t) => q
       }
       val ratio = {
-        val both = reported.filter { case (q, t) => t > 0 && base.contains(q) }
-        val num = both.map(_._2).sum
+        val both =
+          gate.reported.filter { case (q, t) => t > 0 && base.contains(q) }
         val den = both.map { case (q, _) => base(q) }.sum
-        if (den > 0) num / den else -1.0
+        if (den > 0) both.map(_._2).sum / den else -1.0
       }
-      val qs = reported.map { case (q, t) => f""""$q":$t%.3f""" }
-        .mkString("{", ",", "}")
-      val remJson = remeasured
-        .map { case (q, s0, i0) => f""""$q":{"suite":$s0%.3f,"isolated":$i0%.3f}""" }
-        .mkString("{", ",", "}")
-      val total = reported.map(_._2).filter(_ >= 0).sum
-      val json = s""""queries":$qs,""" +
-        s""""gate_2x_breaches":${breaches.map("\"" + _ + "\"")
-          .mkString("[", ",", "]")},""" +
-        s""""remeasured":$remJson,""" +
-        f""""vs_baseline_ratio":${ratio}%.2f"""
-      (json, total, breaches)
+      val fields = ListMap(
+        "queries" -> ListMap.from(gate.reported.map { case (q, t) =>
+          q -> fixed(t, 3) }),
+        "gate_2x_breaches" -> breaches,
+        "remeasured" -> ListMap.from(gate.remeasured.map { case (q, s, i) =>
+          q -> ListMap("suite" -> fixed(s, 3), "isolated" -> fixed(i, 3)) }),
+        "vs_baseline_ratio" -> fixed(ratio, 2))
+      (fields, gate.reported.map(_._2).filter(_ >= 0).sum, breaches)
     }
 
     val names =
       (ScaleStress.StressQueries ++ Extras).filter(SparkEntry.queries.contains)
-    val (defaultJson, defaultTotal, defaultBreaches) = phase(names, dir, "")
+    val (default, defaultTotal, defaultBreaches) = phase(names, dir, "")
 
     // CLUSTERED phase (r09): the trained-ANN family's raison d'être is
     // density-skewed data, yet the standing gate only timed the
@@ -201,54 +146,31 @@ object Bench10x {
     println(s"[bench10x] generating ${Factor}x clustered corpus at $cdir")
     ScaleStress.generate(spark, baseDir, cdir, Factor, mode = "clustered")
     spark.read.parquet(s"$cdir/embeddings.parquet").count(): Unit
-    val (clusteredJson, clusteredTotal, clusteredBreaches) =
+    val (clustered, clusteredTotal, clusteredBreaches) =
       phase(ClusteredQueries, cdir, "@clustered")
 
     val total =
       if (errors.nonEmpty) -1.0 else defaultTotal + clusteredTotal
-    val loadEnd = Bench.loadAvg()
-    val spinEnd = Bench.spinProbe()
-    // RUN HISTORY (r12, the r11 verdict's item 2): the r11
-    // "intersection of four runs' breach sets is EMPTY" defense was
-    // sound but unverifiable — only the last run was committed. Every
-    // run now appends its own breach set + host record to a bounded
-    // `runs` array carried in the artifact, so set-disjointness across
-    // re-runs is checkable from the committed file alone.
-    val allBreaches = (defaultBreaches ++ clusteredBreaches).sorted
-    val runEntry =
-      f"""{"value":$total%.1f,"breaches":${allBreaches
-        .map("\"" + _ + "\"").mkString("[", ",", "]")},""" +
-        f""""spin_s_start":$spinStart%.3f,"spin_s_end":$spinEnd%.3f,""" +
-        f""""loadavg_start":$loadStart,"loadavg_end":$loadEnd}"""
-    val prevRuns: Seq[String] =
-      try {
-        import org.json4s._
-        import org.json4s.jackson.JsonMethods
-        val f = java.nio.file.Path.of("/root/repo/BENCH_10x.json")
-        if (java.nio.file.Files.exists(f)) {
-          JsonMethods.parse(java.nio.file.Files.readString(f)) \ "runs" match {
-            case JArray(rs) =>
-              rs.map(r => JsonMethods.compact(JsonMethods.render(r)))
-            case _ => Nil
-          }
-        } else Nil
-      } catch { case _: Throwable => Nil }
-    val runsJson = (prevRuns :+ runEntry).takeRight(10)
-      .mkString("[", ",", "]")
-    val line =
-      f"""{"metric":"total_10x","value":$total%.1f,"unit":"sec","factor":$Factor,""" +
-        defaultJson + "," +
-        s""""errors":${errors.map("\"" + _ + "\"")
-          .mkString("[", ",", "]")},""" +
-        s""""clustered":{$clusteredJson},""" +
-        f""""host":{"cpus":$cpus,"loadavg_start":$loadStart,""" +
-        f""""loadavg_end":$loadEnd,"spin_s_start":$spinStart%.3f,""" +
-        f""""spin_s_end":$spinEnd%.3f},""" +
-        s""""runs":$runsJson,""" +
-        f""""base_sf":"$baseDir"}"""
-    java.nio.file.Files.writeString(
-      java.nio.file.Path.of("/root/repo/BENCH_10x.json"), line)
-    println(line)
+    val hostEnd = host.end()
+    // RUN HISTORY (r12): every run appends its own breach set + host
+    // record to a bounded `runs` array carried in the artifact, so
+    // set-disjointness of breaches across re-runs is checkable from the
+    // committed file alone.
+    val artifact = Harness.file("BENCH_10x.json")
+    val prevRuns = Harness.readJson(artifact).flatMap(Harness.field(_, "runs"))
+      .collect { case rs: Seq[Any] => rs }.getOrElse(Nil)
+    val run = ListMap("value" -> fixed(total, 1),
+      "breaches" -> (defaultBreaches ++ clusteredBreaches).sorted,
+      "spin_s_start" -> fixed(hostEnd.spinStart, 3),
+      "spin_s_end" -> fixed(hostEnd.spinEnd, 3),
+      "loadavg_start" -> hostEnd.loadStart, "loadavg_end" -> hostEnd.loadEnd)
+    val out = ListMap[String, Any]("metric" -> "total_10x",
+      "value" -> fixed(total, 1), "unit" -> "sec", "factor" -> Factor) ++
+      default ++ ListMap("errors" -> errors.toSeq, "clustered" -> clustered,
+        "host" -> hostEnd.fields, "runs" -> (prevRuns :+ run).takeRight(10),
+        "base_sf" -> baseDir)
+    Harness.writeJson(artifact, out)
+    println(Harness.json(out))
     println(s"[bench10x] default breaches=${defaultBreaches.size} " +
       s"clustered breaches=${clusteredBreaches.size}")
     spark.stop()

@@ -9,9 +9,10 @@ import org.apache.spark.sql.SparkSession
   * stress mains (Bench10x, ScaleStress, AnnClusteredStress), so the
   * benchmarked configuration and the verified configuration cannot
   * drift, and a production consumer of `SparkEntry.queries` has a
-  * named recipe instead of folklore. The stress mains override one
-  * conf: `spark.local.dir` goes back to the JVM tmpdir, because their
-  * shuffle volume can exceed RAM.
+  * named recipe instead of folklore. The stress mains build through
+  * [[Harness.stressSession]], which overrides one conf:
+  * `spark.local.dir` goes back to the JVM tmpdir, because their shuffle
+  * volume can exceed RAM.
   *
   * What the contract sets and why (full rationale at each conf):
   *

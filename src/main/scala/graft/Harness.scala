@@ -1,0 +1,243 @@
+package graft
+
+import java.io.File
+import java.math.{BigDecimal => JBigDecimal, RoundingMode}
+
+import scala.collection.immutable.ListMap
+
+import com.fasterxml.jackson.core.{JsonFactoryBuilder, JsonParser, JsonToken}
+import com.fasterxml.jackson.core.json.{JsonReadFeature, JsonWriteFeature}
+import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
+import org.apache.spark.sql.SparkSession
+
+/** The shared core of the harness mains (Bench, Bench10x, ScaleStress,
+  * AnnClusteredStress, Verify, ProfileQuery): each piece they all need
+  * is written once here, and each main stays its own entry point
+  * (`runMain graft.Bench`, `graft.Verify`, …) that builds its artifact
+  * as a value and writes it once.
+  *
+  *  - the timed execution ([[timed]], [[seconds]], [[medianOf3]]);
+  *  - the 2× gate: the BASELINE-file parser ([[baselines]]) and the
+  *    outlier re-measure/substitution rule ([[gate]]);
+  *  - the ambient-load host record ([[Host]]);
+  *  - the stress session ([[stressSession]]);
+  *  - the artifact location ([[file]]): the working directory;
+  *  - the JSON writer and reader ([[json]], [[writeJson]], [[readJson]])
+  *    over Spark's bundled Jackson.
+  */
+object Harness {
+
+  /** The stress mains' session: the contract ([[GraftSession.builder]])
+    * with `spark.local.dir` set back to the JVM tmpdir, because 10× and
+    * 100× shuffles can exceed RAM. */
+  def stressSession(): SparkSession = {
+    val spark = GraftSession.builder()
+      .config("spark.local.dir", System.getProperty("java.io.tmpdir"))
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    spark
+  }
+
+  /** Where an artifact or baseline named `name` lives: resolved against
+    * the working directory, so a run from another checkout reads and
+    * writes that checkout's files. */
+  def file(name: String): File = new File(name).getAbsoluteFile
+
+  /** One timed execution: the seconds `body` took, with the query's
+    * scratch frames released ([[ScratchCache.release]]) inside the
+    * timing. Throws what `body` throws. */
+  def timed[T](body: => T): (Double, T) = {
+    val t0 = System.nanoTime()
+    val v = try body finally ScratchCache.release()
+    ((System.nanoTime() - t0) / 1e9, v)
+  }
+
+  /** [[timed]] seconds, or the −1.0 sentinel when `body` throws — never a
+    * timing, so a broken query cannot read as a fast one. */
+  def seconds(body: => Any): Double =
+    try timed(body)._1 catch { case _: Throwable => -1.0 }
+
+  /** The median of `ts`, or −1.0 when any run failed. */
+  private def median(ts: Seq[Double]): Double =
+    if (ts.exists(_ < 0)) -1.0 else ts.sorted.apply(ts.size / 2)
+
+  /** Three passes over `names`, the DataFrame cache cleared (and
+    * `beforePass` run) before each pass so one pass's persist() calls
+    * cannot bleed into the next; per name, the [[median]] of its three
+    * `time`s, in `names` order. */
+  def medianOf3(spark: SparkSession, names: Seq[String],
+      beforePass: () => Unit = () => ())(time: String => Double)
+      : Seq[(String, Double)] = {
+    val passes = (1 to 3).map { _ =>
+      spark.catalog.clearCache()
+      beforePass()
+      names.map(n => n -> time(n)).toMap
+    }
+    names.map(n => n -> median(passes.map(_(n))))
+  }
+
+  /** First-recorded per-query seconds: the `| q_name | seconds |` rows
+    * of a BASELINE markdown table. Other lines and rows whose seconds do
+    * not parse are skipped; a missing file has no rows. */
+  def baselines(f: File): Map[String, Double] =
+    if (!f.exists()) Map.empty
+    else {
+      val src = scala.io.Source.fromFile(f, "UTF-8")
+      try src.getLines().filter(_.startsWith("| q_")).flatMap { l =>
+        val c = l.split("\\|").map(_.trim)
+        if (c.length >= 3) c(2).toDoubleOption.map(c(1) -> _) else None
+      }.toMap
+      finally src.close()
+    }
+
+  /** A successful time over twice its positive baseline row. */
+  def breaches(base: Map[String, Double], q: String, t: Double): Boolean =
+    t > 0 && base.get(q).exists(b => b > 0 && t > 2 * b)
+
+  /** The gate's outcome: per-query reported seconds (input order) and
+    * each re-measured query as (query, suite, isolated). */
+  final case class Gate(reported: Seq[(String, Double)],
+      remeasured: Seq[(String, Double, Double)])
+
+  /** OUTLIER RE-MEASURE PROTOCOL. In-suite medians carry interference
+    * (GC and load drain from adjacent heavy queries — the q_dedup_prefix
+    * 8.29 s vs 1.29 s incident in r03), so every query whose suite time
+    * [[breaches]] its baseline is re-measured in ISOLATION (`isolated`,
+    * a fresh median) and both numbers are kept.
+    *
+    * GATE ERGONOMICS (r05, tightened r07): a breach under 2.5× is the
+    * ambient-noise band, so the isolated median becomes the REPORTED
+    * value — but only when the isolated median itself clears 2×. A
+    * genuinely regressed query (isolated still over 2×) keeps its suite
+    * number and can never report its best-case time, and a breach of
+    * 2.5× or more keeps the suite value: at that size it is a plan
+    * problem until a human reads the isolated number. */
+  def gate(results: Seq[(String, Double)], base: Map[String, Double])(
+      isolated: String => Double): Gate = {
+    val remeasured = results.filter { case (q, t) => breaches(base, q, t) }
+      .sortBy(_._1)
+      .map { case (q, suite) => (q, suite, isolated(q)) }
+    val substituted = remeasured.collect {
+      case (q, suite, iso)
+          if iso > 0 && suite < 2.5 * base(q) && iso <= 2.0 * base(q) =>
+        q -> iso
+    }.toMap
+    Gate(results.map { case (q, t) => q -> substituted.getOrElse(q, t) },
+      remeasured)
+  }
+
+  /** Fixed-work single-thread spin — the ambient-load microprobe (r11):
+    * 3×10⁸ LCG steps take a fixed number of cycles, so the measured
+    * seconds move 1:1 with co-tenant CPU pressure. Median of 3 runs.
+    * The JIT cannot elide the loop: the accumulator escapes through the
+    * stderr guard. */
+  def spinProbe(): Double = {
+    def once(): Double = {
+      val t0 = System.nanoTime()
+      var h = 1234567891011L
+      var i = 0
+      while (i < 300000000) {
+        h = h * 6364136223846793005L + 1442695040888963407L
+        i += 1
+      }
+      if (h == 42L) System.err.print("")
+      (System.nanoTime() - t0) / 1e9
+    }
+    Seq(once(), once(), once()).sorted.apply(1)
+  }
+
+  /** 1/5/15-minute load averages from /proc/loadavg (−1 each off
+    * Linux). */
+  def loadAvg(): Seq[Double] =
+    try java.nio.file.Files.readString(java.nio.file.Path.of("/proc/loadavg"))
+      .trim.split("\\s+").take(3).map(_.toDouble).toSeq
+    catch { case _: Throwable => Seq(-1.0, -1.0, -1.0) }
+
+  /** The ambient-load record of a run: loadavg and [[spinProbe]] at the
+    * start and, after [[end]], at the end — so a round-over-round
+    * comparison can cite measured host noise instead of inferring it. */
+  final case class Host(loadStart: Seq[Double], spinStart: Double,
+      loadEnd: Seq[Double] = Nil, spinEnd: Double = -1.0) {
+    def end(): Host = copy(loadEnd = loadAvg(), spinEnd = spinProbe())
+    def fields: ListMap[String, Any] = ListMap(
+      "cpus" -> GraftSession.cpus.toIntOption.getOrElse(GraftSession.cpus),
+      "loadavg_start" -> loadStart, "loadavg_end" -> loadEnd,
+      "spin_s_start" -> fixed(spinStart, 3),
+      "spin_s_end" -> fixed(spinEnd, 3))
+  }
+
+  /** The start sample of a run's [[Host]] record. */
+  def host(): Host = Host(loadAvg(), spinProbe())
+
+  /** `x` as a JSON number with `digits` decimals, rounded half-up as
+    * `%.{digits}f` prints it; NaN and the infinities stay doubles and are
+    * written as the bare `NaN`/`Infinity` tokens `%f` printed. */
+  def fixed(x: Double, digits: Int): Number =
+    if (x.isNaN || x.isInfinite) x
+    else new JBigDecimal(java.lang.Double.toString(x))
+      .setScale(digits, RoundingMode.HALF_UP)
+
+  private val mapper = new ObjectMapper(new JsonFactoryBuilder()
+      .disable(JsonWriteFeature.WRITE_NAN_AS_STRINGS)
+      .enable(JsonReadFeature.ALLOW_NON_NUMERIC_NUMBERS)
+      .build())
+    .registerModule(DefaultScalaModule)
+
+  /** Compact JSON of a value built from Scala maps (a `ListMap` keeps its
+    * key order), sequences, options (None is null), strings, booleans
+    * and numbers. */
+  def json(v: Any): String = mapper.writeValueAsString(v)
+
+  def writeJson(f: File, v: Any): Unit =
+    java.nio.file.Files.writeString(f.toPath, json(v))
+
+  /** The JSON value in `f` as `ListMap`s (file key order), `Vector`s,
+    * strings, booleans, null, `Long` integers and exact `BigDecimal`
+    * decimals (`NaN`/`Infinity` as doubles); None when the file is
+    * missing or does not parse. */
+  def readJson(f: File): Option[Any] =
+    if (!f.exists()) None
+    else try {
+      val p = mapper.getFactory.createParser(f)
+      try { p.nextToken(); Some(value(p)) } finally p.close()
+    } catch { case _: Exception => None }
+
+  private def value(p: JsonParser): Any = p.currentToken() match {
+    case JsonToken.START_OBJECT =>
+      var m = ListMap.empty[String, Any]
+      while (p.nextToken() != JsonToken.END_OBJECT) {
+        val k = p.currentName()
+        p.nextToken()
+        m = m.updated(k, value(p))
+      }
+      m
+    case JsonToken.START_ARRAY =>
+      val b = Vector.newBuilder[Any]
+      while (p.nextToken() != JsonToken.END_ARRAY) b += value(p)
+      b.result()
+    case JsonToken.VALUE_STRING => p.getText
+    case JsonToken.VALUE_NUMBER_INT => p.getLongValue
+    case JsonToken.VALUE_NUMBER_FLOAT =>
+      if (p.isNaN) p.getDoubleValue else p.getDecimalValue
+    case JsonToken.VALUE_TRUE => true
+    case JsonToken.VALUE_FALSE => false
+    case _ => null
+  }
+
+  /** The value at `path` in a [[readJson]] value or in a value built for
+    * [[json]]; None when a step is missing, not an object, null or None. */
+  def field(v: Any, path: String*): Option[Any] =
+    path.foldLeft(Option(v)) {
+      case (Some(m: scala.collection.Map[String, Any] @unchecked), k) =>
+        m.get(k).flatMap {
+          case o: Option[Any] => o
+          case x => Option(x)
+        }
+      case _ => None
+    }
+
+  /** The number at `path`, as a double. */
+  def num(v: Any, path: String*): Option[Double] =
+    field(v, path: _*).collect { case n: Number => n.doubleValue }
+}

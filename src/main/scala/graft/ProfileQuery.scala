@@ -47,13 +47,10 @@ object ProfileQuery {
       spark.catalog.clearCache()
       analyzer.reset()
       analyzer.setLabel(name)
-      val t0 = System.nanoTime()
       // count(), not collect(): the drill-down exists for large-corpus
       // flags, where materializing a pair-heavy result on the driver
       // (quadratic in cluster mass at 100x) would OOM the profiler
-      try fn(spark, dir).count()
-      finally ScratchCache.release()
-      val sec = (System.nanoTime() - t0) / 1e9
+      val (sec, _) = Harness.timed(fn(spark, dir).count())
       Thread.sleep(1200) // drain the listener bus
       println(f"[profile] $name pass $pass: $sec%.2fs on $dir")
       analyzer.report().getOrElse(name, Nil).foreach { r =>

@@ -4,6 +4,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 
+import scala.collection.immutable.ListMap
+
+import Harness.{field, fixed, num}
+
 /** Empirical scale-stress harness: converts the "this plan survives
   * 100×" arguments (SURVEY §2 scale notes, PLANS.md shapes) into a
   * measurement. The reference makes the same claim structurally — its
@@ -44,7 +48,8 @@ import org.apache.spark.sql.functions._
   *     state sees factor× distinct keys.
   *
   * Run: `sbt "runMain graft.ScaleStress [baseSfDir] [factor] [out]"`
-  * Writes the per-query rows to SCALE_r06.json (committed artifact).
+  * Writes the per-query rows to `out` (default SCALE_r06.json), resolved
+  * against the working directory.
   */
 object ScaleStress extends AdaptiveSparkPlanHelper {
 
@@ -256,10 +261,9 @@ object ScaleStress extends AdaptiveSparkPlanHelper {
   /** Structural plan signature: the shape that must survive scale-up. */
   final case class PlanSig(shuffles: Int, broadcasts: Int, sorts: Int,
       aggs: Int, joins: Seq[String]) {
-    def json: String =
-      s"""{"shuffles":$shuffles,"broadcasts":$broadcasts,""" +
-        s""""sorts":$sorts,"aggs":$aggs,""" +
-        s""""joins":${joins.map("\"" + _ + "\"").mkString("[", ",", "]")}}"""
+    def fields: ListMap[String, Any] = ListMap("shuffles" -> shuffles,
+      "broadcasts" -> broadcasts, "sorts" -> sorts, "aggs" -> aggs,
+      "joins" -> joins)
   }
 
   def signature(df: DataFrame): PlanSig = {
@@ -279,14 +283,8 @@ object ScaleStress extends AdaptiveSparkPlanHelper {
       fn: (SparkSession, String) => DataFrame, dir: String,
       analyzer: metrics.StageAnalyzer, label: String): (Double, PlanSig) = {
     analyzer.setLabel(label)
-    val t0 = System.nanoTime()
-    val df =
-      try {
-        val d = fn(spark, dir)
-        d.collect()
-        d
-      } finally ScratchCache.release()
-    ((System.nanoTime() - t0) / 1e9, signature(df))
+    val (sec, df) = Harness.timed { val d = fn(spark, dir); d.collect(); d }
+    (sec, signature(df))
   }
 
   /** FIXED-SIZE-DELTA merge experiment, two delta SHAPES, each at 1×
@@ -305,7 +303,7 @@ object ScaleStress extends AdaptiveSparkPlanHelper {
     *
     * Reported beside the query rows as `cdc_delta`. */
   private def cdcDeltaExperiment(spark: SparkSession, dir1: String,
-      dirN: String, factor: Int): String = {
+      dirN: String, factor: Int): ListMap[String, Any] = {
     def upsert(cur: DataFrame, ch: DataFrame): DataFrame = {
       val upd = ch.selectExpr("event_id", "cents AS new_cents")
       cur.join(upd, Seq("event_id"), "left")
@@ -328,12 +326,8 @@ object ScaleStress extends AdaptiveSparkPlanHelper {
       val delta = keys.toDF("event_id")
         .selectExpr("event_id", "CAST(0 AS BIGINT) AS user_id",
           "CAST(1 AS BIGINT) AS cents")
-      def once() = {
-        val t0 = System.nanoTime()
-        val st = sources.KeyedTable.mergeDelta(
-          spark, root, "t", delta, "event_id")(upsert)
-        ((System.nanoTime() - t0) / 1e9, st)
-      }
+      def once() = Harness.timed(sources.KeyedTable.mergeDelta(
+        spark, root, "t", delta, "event_id")(upsert))
       val a = once(); val b = once() // best-of-2, min: noise only inflates
       if (a._1 <= b._1) a else b
     }
@@ -369,31 +363,84 @@ object ScaleStress extends AdaptiveSparkPlanHelper {
       f"ratio=${wN / w1}%5.2f rw=${ws1.filesRewritten}/${ws1.filesTotal} vs " +
       f"${wsN.filesRewritten}/${wsN.filesTotal} " +
       f"perFile=${perFile1}%.3f vs ${perFileN}%.3f")
-    f"""{"delta_rows":500,"t1_s":$t1%.3f,"t${factor}_s":$tN%.3f,""" +
-      f""""ratio":${tN / t1}%.2f,""" +
-      s""""files_total_1x":${s1.filesTotal},"files_rewritten_1x":${s1.filesRewritten},""" +
-      s""""files_total_${factor}x":${sN.filesTotal},"files_rewritten_${factor}x":${sN.filesRewritten},""" +
-      f""""wide":{"t1_s":$w1%.3f,"t${factor}_s":$wN%.3f,"ratio":${wN / w1}%.2f,""" +
-      s""""files_rewritten_1x":${ws1.filesRewritten},"files_rewritten_${factor}x":${wsN.filesRewritten},""" +
-      f""""per_file_s_1x":$perFile1%.3f,"per_file_s_${factor}x":$perFileN%.3f}}"""
+    ListMap("delta_rows" -> 500, "t1_s" -> fixed(t1, 3),
+      s"t${factor}_s" -> fixed(tN, 3), "ratio" -> fixed(tN / t1, 2),
+      "files_total_1x" -> s1.filesTotal,
+      "files_rewritten_1x" -> s1.filesRewritten,
+      s"files_total_${factor}x" -> sN.filesTotal,
+      s"files_rewritten_${factor}x" -> sN.filesRewritten,
+      "wide" -> ListMap("t1_s" -> fixed(w1, 3),
+        s"t${factor}_s" -> fixed(wN, 3), "ratio" -> fixed(wN / w1, 2),
+        "files_rewritten_1x" -> ws1.filesRewritten,
+        s"files_rewritten_${factor}x" -> wsN.filesRewritten,
+        "per_file_s_1x" -> fixed(perFile1, 3),
+        s"per_file_s_${factor}x" -> fixed(perFileN, 3)))
   }
 
-  /** Typed per-query artifact row — what the MERGED summary needs from
-    * both fresh measurements and kept prior rows. */
-  private final case class ArtRow(json: String, ratio: Double,
-      planEqual: Boolean, skew: Option[Double])
+  /** The SCALE artifact of one run (pure). Subset re-runs MERGE into the
+    * prior artifact when it has the same base_sf, factor and mutation
+    * mode (`prior` is None on full runs): re-measuring one repaired
+    * family must not discard the other queries' committed evidence.
+    * Fresh rows replace the prior rows of their queries, and a prior
+    * error stays on record unless this run attempted that query again.
+    * The SUMMARY is recomputed from the MERGED rows, so a kept row's
+    * breach or skew flag survives a subset re-run (the r06 artifact bug:
+    * the summary reflected only the fresh subset). */
+  private[graft] def artifact(baseDir: String, factor: Int, mode: String,
+      fresh: Seq[(String, ListMap[String, Any])],
+      errors: Seq[(String, String)], attempted: Set[String],
+      cdc: Option[Any], prior: Option[Any]): ListMap[String, Any] = {
+    val same = prior.filter(p => field(p, "base_sf").contains(baseDir) &&
+      field(p, "factor").contains(factor.toLong) &&
+      field(p, "mode").getOrElse("default") == mode)
+    val freshNames = fresh.map(_._1).toSet
+    val kept: Seq[(String, Any)] =
+      same.flatMap(field(_, "queries")).toSeq.flatMap {
+        case m: scala.collection.Map[String, Any] @unchecked =>
+          m.toSeq.filterNot { case (q, _) => freshNames(q) }
+        case _ => Nil
+      }
+    val keptErrors: Seq[(String, String)] =
+      same.flatMap(field(_, "summary", "errors")).toSeq.flatMap {
+        case items: Seq[Any] => items.flatMap { e =>
+          field(e, "query").collect {
+            case q: String if q.nonEmpty && !attempted(q) =>
+              q -> field(e, "error").fold("")(_.toString)
+          }
+        }
+        case _ => Nil
+      }
+    val rows = (kept ++ fresh).sortBy(_._1)
+    def flagged(p: Any => Boolean): Seq[String] =
+      rows.collect { case (q, r) if p(r) => q }
+    val skews = rows.flatMap { case (_, r) => num(r, s"skew_${factor}x") }
+    // the 20x task-skew alarm line is a GATE, not a narrative
+    // convention: r08's 38.2x flag on a probe2 row rode in silently
+    // because only ratio breaches populated a breach list
+    val summary = ListMap("queries_run" -> rows.size,
+      "errors" -> (keptErrors ++ errors).map { case (q, m) =>
+        ListMap("query" -> q, "error" -> m) },
+      s"ratio_gt_${factor}x1.5" ->
+        flagged(r => num(r, "ratio").exists(_ > factor * 1.5)),
+      "plan_shape_changed" ->
+        flagged(r => !field(r, "plan_equal").contains(true)),
+      "skew_gt_20" -> flagged(r => num(r, s"skew_${factor}x").exists(_ > 20.0)),
+      "max_skew" -> skews.maxOption.map(fixed(_, 1)))
+    ListMap[String, Any]("base_sf" -> baseDir, "factor" -> factor,
+      "files_per_table" -> 32, "mode" -> mode,
+      "queries" -> ListMap.from(rows)) ++
+      cdc.orElse(same.flatMap(field(_, "cdc_delta"))).map("cdc_delta" -> _) ++
+      Seq("summary" -> summary) ++
+      (if (kept.nonEmpty) Seq("merged_subset" -> fresh.map(_._1)) else Nil)
+  }
 
   def main(args: Array[String]): Unit = {
     val baseDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val factor = args.lift(1).map(_.toInt).getOrElse(10)
-    val outJson = args.lift(2).getOrElse("/root/repo/SCALE_r06.json")
+    val outJson = Harness.file(args.lift(2).getOrElse("SCALE_r06.json"))
     val only = args.lift(3).map(_.split(',').toSet)
     val mode = args.lift(4).getOrElse("default")
-    val spark = GraftSession.builder()
-      // stress mains keep the disk default: 100× shuffles can exceed RAM
-      .config("spark.local.dir", System.getProperty("java.io.tmpdir"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.stressSession()
     val root = s"${ProcScratch.base}/scale"
     val dir1 = s"$root/sf1x"
     val dirN = s"$root/sf${factor}x"
@@ -410,8 +457,17 @@ object ScaleStress extends AdaptiveSparkPlanHelper {
       Seq("documents", "embeddings", "events", "lineitem")
         .foreach(t => spark.read.parquet(s"$d/$t.parquet").count())
     }
+    // record and continue — one broken query must not cost the whole
+    // run's artifact
     val failed = scala.collection.mutable.ListBuffer.empty[(String, String)]
-    val rows = queries.flatMap { q =>
+    def fail(q: String, label: String, e: Throwable): None.type = {
+      val msg = Option(e.getMessage).getOrElse(e.getClass.getName)
+        .takeWhile(_ != '\n').take(200)
+      println(s"[scale] $label FAILED: $msg")
+      failed += ((q, msg))
+      None
+    }
+    val measured = queries.flatMap { q =>
       SparkEntry.queries.get(q).flatMap { fn => try {
         // small scale first (also the codegen warm-up for the query),
         // best-of-2 per scale: the MIN is the right statistic for a
@@ -426,147 +482,33 @@ object ScaleStress extends AdaptiveSparkPlanHelper {
         val (t1, sig1) = best(dir1, s"${q}@1x")
         analyzer.reset() // keep skew attribution = the FACTOR× runs only
         val (tN, sigN) = best(dirN, s"${q}@${factor}x")
-        val ratio = tN / t1
-        val planEqual = sig1 == sigN
         println(f"[scale] $q%-24s t1=$t1%6.2fs t$factor=$tN%7.2fs " +
-          f"ratio=$ratio%5.2f planEqual=$planEqual")
-        Some((q, t1, tN, ratio, sig1, sigN))
-      } catch { case e: Throwable =>
-        // record and continue — one broken query must not cost the
-        // whole run's artifact
-        val msg = Option(e.getMessage).getOrElse(e.getClass.getName)
-          .takeWhile(_ != '\n').take(200).replace("\"", "'")
-        println(s"[scale] $q FAILED: $msg")
-        failed += ((q, msg))
-        None
-      } }
+          f"ratio=${tN / t1}%5.2f planEqual=${sig1 == sigN}")
+        Some((q, t1, tN, sig1, sigN))
+      } catch { case e: Throwable => fail(q, q, e) } }
     }
     // fixed-size-delta CDC experiment (skipped only when an explicit
     // subset excludes it)
-    val cdcFresh: Option[String] =
-      if (only.forall(_.contains("x_cdc_delta")))
-        try Some(cdcDeltaExperiment(spark, dir1, dirN, factor))
-        catch { case e: Throwable =>
-          val msg = Option(e.getMessage).getOrElse(e.getClass.getName)
-            .takeWhile(_ != '\n').take(200).replace("\"", "'")
-          println(s"[scale] cdc_delta FAILED: $msg")
-          failed += (("x_cdc_delta", msg))
-          None
-        }
-      else None
+    val cdcOn = only.forall(_.contains("x_cdc_delta"))
+    val cdc =
+      if (!cdcOn) None
+      else try Some(cdcDeltaExperiment(spark, dir1, dirN, factor))
+      catch { case e: Throwable => fail("x_cdc_delta", "cdc_delta", e) }
 
     Thread.sleep(1500) // drain listener bus before reading skew
     val skew = analyzer.skewFlags()
-    val freshRows: Map[String, ArtRow] =
-      rows.map { case (q, t1, tN, ratio, sig1, sigN) =>
+    val fresh: Seq[(String, ListMap[String, Any])] =
+      measured.map { case (q, t1, tN, sig1, sigN) =>
         val sk = skew.collectFirst { case (k, v) if k.startsWith(q + "@") => v }
-        val json =
-          f"""{"t1_s":$t1%.3f,"t${factor}_s":$tN%.3f,"ratio":$ratio%.2f,""" +
-            s""""plan_equal":${sig1 == sigN},"plan_1x":${sig1.json},""" +
-            s""""plan_${factor}x":${sigN.json},""" +
-            s""""skew_${factor}x":${sk.map(v => f"$v%.1f").getOrElse("null")}}"""
-        q -> ArtRow(json, ratio, sig1 == sigN, sk)
-      }.toMap
-
-    // Subset re-runs MERGE into an existing artifact (matched on
-    // base_sf + factor + mutation mode): re-measuring one repaired
-    // family must not discard the other 20+ queries' committed
-    // evidence — and the SUMMARY is recomputed from the MERGED rows,
-    // so a kept row's breach/skew flag survives a subset re-run (the
-    // r06 artifact bug: summary reflected only the fresh subset).
-    import org.json4s._
-    import org.json4s.jackson.JsonMethods
-    val prior: Option[JValue] = {
-      val f = new java.io.File(outJson)
-      if (only.isEmpty || !f.exists()) None
-      else try {
-        val old = JsonMethods.parse(java.nio.file.Files.readString(f.toPath))
-        val oldMode = old \ "mode" match {
-          case JString(m) => m
-          case _ => "default"
-        }
-        if ((old \ "base_sf") == JString(baseDir) &&
-          (old \ "factor") == JInt(factor) && oldMode == mode) Some(old)
-        else None
-      } catch { case _: Throwable => None }
-    }
-    def num(v: JValue): Option[Double] = v match {
-      case JDouble(d) => Some(d)
-      case JInt(i) => Some(i.toDouble)
-      case JDecimal(d) => Some(d.toDouble)
-      case _ => None
-    }
-    val keptRows: Map[String, ArtRow] = prior match {
-      case Some(old) => old \ "queries" match {
-        case JObject(fields) => fields.collect {
-          case (q, v) if !freshRows.contains(q) =>
-            q -> ArtRow(JsonMethods.compact(JsonMethods.render(v)),
-              num(v \ "ratio").getOrElse(Double.NaN),
-              (v \ "plan_equal") == JBool(true),
-              num(v \ s"skew_${factor}x"))
-        }.toMap
-        case _ => Map.empty[String, ArtRow]
+        q -> ListMap("t1_s" -> fixed(t1, 3), s"t${factor}_s" -> fixed(tN, 3),
+          "ratio" -> fixed(tN / t1, 2), "plan_equal" -> (sig1 == sigN),
+          "plan_1x" -> sig1.fields, s"plan_${factor}x" -> sigN.fields,
+          s"skew_${factor}x" -> sk.map(fixed(_, 1)))
       }
-      case None => Map.empty[String, ArtRow]
-    }
-    // kept errors: a prior run's failure stays on record unless this
-    // run re-attempted that query
-    val attempted = queries.toSet ++
-      (if (only.forall(_.contains("x_cdc_delta"))) Set("x_cdc_delta")
-       else Set.empty[String])
-    val keptErrors: Seq[(String, String)] = prior.toSeq.flatMap { old =>
-      old \ "summary" \ "errors" match {
-        case JArray(items) => items.collect {
-          case obj if (obj \ "query") != JNothing =>
-            val q = obj \ "query" match { case JString(s) => s; case _ => "" }
-            val m = obj \ "error" match { case JString(s) => s; case _ => "" }
-            (q, m)
-        }.filter { case (q, _) => q.nonEmpty && !attempted.contains(q) }
-        case _ => Seq.empty
-      }
-    }
-    val cdcJson: Option[String] = cdcFresh.orElse(prior.flatMap { old =>
-      old \ "cdc_delta" match {
-        case JNothing | JNull => None
-        case v => Some(JsonMethods.compact(JsonMethods.render(v)))
-      }
-    })
-
-    val mergedRows = keptRows ++ freshRows
-    val allErrors = keptErrors ++ failed.toSeq
-    val linearBound = factor * 1.5
-    val summary = {
-      val over = mergedRows.collect {
-        case (q, r) if r.ratio > linearBound => q }.toSeq.sorted
-      val planDiff = mergedRows.collect {
-        case (q, r) if !r.planEqual => q }.toSeq.sorted
-      val skews = mergedRows.values.flatMap(_.skew)
-      // the 20x task-skew alarm line (Scaladoc above) is now a GATE,
-      // not a narrative convention: r08's 38.2x flag on a probe2 row
-      // rode in silently because only ratio breaches populated a
-      // breach list — a straggler class must fail loudly
-      val skewOver = mergedRows.collect {
-        case (q, r) if r.skew.exists(_ > 20.0) => q }.toSeq.sorted
-      s"""{"queries_run":${mergedRows.size},""" +
-        s""""errors":${allErrors.map { case (q, m) =>
-          s"""{"query":"$q","error":"$m"}""" }.mkString("[", ",", "]")},""" +
-        s""""ratio_gt_${factor}x1.5":${over.map("\"" + _ + "\"").mkString("[", ",", "]")},""" +
-        s""""plan_shape_changed":${planDiff.map("\"" + _ + "\"").mkString("[", ",", "]")},""" +
-        s""""skew_gt_20":${skewOver.map("\"" + _ + "\"").mkString("[", ",", "]")},""" +
-        s""""max_skew":${if (skews.isEmpty) "null" else f"${skews.max}%.1f"}}"""
-    }
-    val qJson = mergedRows.toSeq.sortBy(_._1)
-      .map { case (q, r) => s""""$q":${r.json}""" }.mkString("{", ",", "}")
-    val out =
-      s"""{"base_sf":"$baseDir","factor":$factor,"files_per_table":32,""" +
-        s""""mode":"$mode","queries":$qJson,""" +
-        cdcJson.map(c => s""""cdc_delta":$c,""").getOrElse("") +
-        s""""summary":$summary""" +
-        (if (keptRows.nonEmpty)
-          s""","merged_subset":${rows.map(r => "\"" + r._1 + "\"")
-            .mkString("[", ",", "]")}}"""
-         else "}")
-    java.nio.file.Files.writeString(java.nio.file.Path.of(outJson), out)
+    val attempted = queries.toSet ++ (if (cdcOn) Set("x_cdc_delta") else Nil)
+    Harness.writeJson(outJson, artifact(baseDir, factor, mode, fresh,
+      failed.toSeq, attempted, cdc,
+      if (only.isEmpty) None else Harness.readJson(outJson)))
     println(s"[scale] wrote $outJson")
     spark.stop()
   }

@@ -59,17 +59,7 @@ object Tables {
     // flag only affects TIMESTAMP(NANOS) parquet columns (which Spark
     // otherwise rejects outright), so µs/tz-typed reads are untouched.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    import org.apache.spark.sql.functions.{col, expr}
-    import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
-    val raw = t(spark, dir, "events")
-    val decoded = raw.schema("ts").dataType match {
-      case TimestampType    => raw
-      case TimestampNTZType => raw.withColumn("ts", col("ts").cast(TimestampType))
-      case LongType         => raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-      case other => throw new IllegalStateException(
-        s"events.ts: unsupported physical type $other in $dir/events.parquet " +
-          "(expected TIMESTAMP, TIMESTAMP_NTZ, or int64 nanos)")
-    }
+    val decoded = graft.streaming.EventStream.decodeTs(t(spark, dir, "events"))
     assertSaneEventTimes(decoded, s"$dir/events.parquet")
     decoded
   }

@@ -1,6 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
-import java.nio.file.{Files, Paths}
+import scala.collection.immutable.ListMap
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -35,24 +34,15 @@ object Verify {
       }
       finally ScratchCache.release() // drop this query's scratch frames
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql.filter(kv => keep(kv._1))
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    Files.writeString(Paths.get(s"$outDir/_errors.json"),
-      failures.map { case (k, v) => s"${q(k)}: ${q(v)}" }
-        .mkString("{", ",", "}"))
+    // oracle_sql.json and _errors.json go through the harness JSON
+    // writer, which escapes quotes, backslashes and every control char —
+    // a tab or CR in builder-authored SQL would otherwise make the
+    // oracle comparison's json.load fail and silently zero the round's
+    // correctness
+    Harness.writeJson(new java.io.File(outDir, "oracle_sql.json"),
+      SparkEntry.oracleSql.filter(kv => keep(kv._1)))
+    Harness.writeJson(new java.io.File(outDir, "_errors.json"),
+      ListMap.from(failures))
     if (failures.nonEmpty)
       println(s"[verify] ${failures.size} queries FAILED: " +
         failures.keys.mkString(", "))

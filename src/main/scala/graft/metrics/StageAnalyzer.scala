@@ -36,13 +36,6 @@ class StageAnalyzer extends SparkListener {
       //  - a stage with <2 working tasks has no distribution to judge.
       workTasks >= 2 && workMedSec > 0 && taskMaxSec >= 0.2 &&
         taskMaxSec / workMedSec > 4.0
-    def json: String =
-      f"""{"stage":$stageId,"wall":$wallSec%.3f,"tasks":$nTasks,""" +
-        f""""task_max":$taskMaxSec%.3f,"task_med":$taskMedSec%.3f,""" +
-        s""""spill":$spillBytes,"sh_read":$shuffleReadBytes,""" +
-        s""""sh_write":$shuffleWriteBytes,""" +
-        f""""work_tasks":$workTasks,"work_med":$workMedSec%.3f,""" +
-        s""""skew":$skewed}"""
   }
 
   // single listener-bus thread writes these; the bench thread only reads
@@ -124,12 +117,6 @@ class StageAnalyzer extends SparkListener {
       .filter(_.nTasks > 0)
       .groupBy(_.query)
       .map { case (q, rows) => q -> rows.sortBy(_.stageId) }
-
-  /** JSON object {query: [stageRow...]} for the bench artifact. */
-  def reportJson(): String =
-    report().toSeq.sortBy(_._1).map { case (q, rows) =>
-      s""""$q":${rows.map(_.json).mkString("[", ",", "]")}"""
-    }.mkString("{", ",", "}")
 
   /** Per-query critical path — the reference's CriticalPathAnalyzer
     * (tez-tools/analyzers/job-analyzer/.../CriticalPathAnalyzer.java)
@@ -228,12 +215,6 @@ class StageAnalyzer extends SparkListener {
       val nJobs = rows.map(r => stageJob.getOrElse(r.stageId, -1)).distinct.size
       q -> ((totalSec, chainLen, nJobs))
     }
-
-  /** JSON object {query: {"s":…,"chain":…,"jobs":…}} for the artifact. */
-  def criticalJson(): String =
-    criticalPaths().toSeq.sortBy(_._1).map { case (q, (s, c, j)) =>
-      f""""$q":{"s":$s%.3f,"chain":$c,"jobs":$j}"""
-    }.mkString("{", ",", "}")
 
   /** Queries with at least one skewed stage → worst max/median ratio. */
   def skewFlags(): Map[String, Double] =

@@ -28,7 +28,7 @@ import graft.sources.Sources
 object EventStream {
 
   /** Apply the precision-adaptive `ts` decode to any events-shaped frame
-    * (batch or streaming): same branching as Tables.events — TIMESTAMP
+    * (batch or streaming; Tables.events decodes through it) — TIMESTAMP
     * passes through, TIMESTAMP_NTZ casts exactly under the UTC session
     * timezone, int64 is the legacy ns layout. Specs that time-split the
     * fixture and replay their own written files go through this too, so
@@ -44,11 +44,10 @@ object EventStream {
 
   /** Streaming read of the events fixture directory, schema-adaptive. */
   def readEvents(spark: SparkSession, dir: String): DataFrame = {
-    // session-conf, not per-read option: see Tables.events for why this
-    // key cannot be scoped (executor-side scans re-read the session value)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // Batch-read the same path first: runs Tables.events' decoded-time
-    // sanity invariant loudly, driver-side, before any stream starts.
+    // Batch-read the same path first: sets the nanosAsLong session conf
+    // (see Tables.events for why it cannot be scoped per read) and runs
+    // Tables.events' decoded-time sanity invariant loudly, driver-side,
+    // before any stream starts.
     graft.Tables.events(spark, dir): Unit
     // Layout-adaptive, like every other reader: the driver fixture is a
     // single FILE named events.parquet inside the table dir (stream the
