@@ -892,7 +892,7 @@ object AnnClusteredStress {
       // measured HERE, at every scale, next to the flat width the old
       // kernel would have paid
       val semK = ops.ClusteringQueries.adaptiveSemK(n)
-      val semSb = (1 to 256).find(z => z * z >= semK).getOrElse(256)
+      val semSb = graft.functions.Codebook.superStride(semK)
       val semT0 = System.nanoTime()
       val sem = ops.ClusteringQueries.semClusters(spark, dir)
       val semAll = assigned.join(sem, "vec_id").persist()

@@ -17,9 +17,12 @@ import Harness.fixed
   * Contract mirrors graft.Bench: per-query 3-pass medians vs
   * first-recorded rows in BASELINE_10x.md under the SAME 2× acceptance;
   * queries with no recorded row get one appended (first run seeds the
-  * baseline). Artifact: BENCH_10x.json in the working directory — one
-  * line with per-query seconds, breaches, the baseline ratio and the
-  * run history. Run:
+  * baseline). The anchors were recorded on the corpus synthesized from
+  * sf0.1, so only a run on that base is gated, re-measured or appended
+  * ([[anchored]]); any other base reports per-query seconds with
+  * `vs_baseline_ratio` −1 and empty breach lists. Artifact:
+  * BENCH_10x.json in the working directory — one line with per-query
+  * seconds, breaches, the baseline ratio and the run history. Run:
   * `SPARK_GRAFT_CPUS=32 sbt "runMain graft.Bench10x [baseSfDir]"`.
   * Keep the host otherwise idle (the ScaleStress co-load rule).
   */
@@ -33,6 +36,18 @@ object Bench10x {
     * their 10×-corpus wall time is a real plan-dominated signal. */
   private val Extras =
     Seq("q_delta_merge", "q_pipeline_recovery", "q_keyed_compact")
+
+  /** The base corpus BASELINE_10x.md's anchors were measured on. */
+  private val AnchorBase = "sf0.1"
+
+  /** Whether a run on `baseDir` is comparable with the anchors: its
+    * 10× corpus must be synthesized from the anchors' own base. A run
+    * on another base (sf0.01 — a 10× smaller corpus) would otherwise
+    * report a meaningless ratio and append first-recorded rows measured
+    * on the wrong corpus. */
+  private[graft] def anchored(baseDir: String): Boolean =
+    Option(java.nio.file.Paths.get(baseDir).normalize().getFileName)
+      .exists(_.toString == AnchorBase)
 
   def main(args: Array[String]): Unit = {
     val baseDir = args.headOption.getOrElse(
@@ -53,6 +68,10 @@ object Bench10x {
         catch { case _: Throwable => () }
       }
     val baselineFile = Harness.file("BASELINE_10x.md")
+    val gated = anchored(baseDir)
+    if (!gated)
+      println(s"[bench10x] base $baseDir is not the anchors' $AnchorBase: " +
+        "reporting seconds only, no gate and no new baseline rows")
     val errors = scala.collection.mutable.SortedSet.empty[String]
     // one timed phase over (names, corpus dir); baseline rows key by
     // name + keySuffix so the clustered phase's anchors never collide
@@ -64,10 +83,14 @@ object Bench10x {
       val results = Harness.medianOf3(spark, names)(run)
         .map { case (n, t) => (n + keySuffix) -> t }
       errors ++= results.collect { case (q, t) if t < 0 => q }
-      val base = Harness.baselines(baselineFile)
+      // an unanchored run compares against nothing: no breach, no
+      // re-measure, ratio −1 (Harness.gate skips queries with no row)
+      val base =
+        if (gated) Harness.baselines(baselineFile) else Map.empty[String, Double]
       // first run (or newly added queries): append first-recorded rows
       // so the NEXT round has an anchor — BASELINE.md's protocol
-      val missing = results.filter { case (q, t) => t > 0 && !base.contains(q) }
+      val missing = results.filter { case (q, t) =>
+        gated && t > 0 && !base.contains(q) }
       if (missing.nonEmpty) {
         val header = if (baselineFile.exists()) "" else
           s"""# BASELINE_10x — first-recorded per-query seconds on the

@@ -17,11 +17,9 @@ import org.apache.spark.sql.types.{DataType, LongType}
   * absent from the map (occupancy within the cap — nothing to split)
   * return -1: the whole cold bucket keeps a single refined cell.
   *
-  * All distances are exact integer squared-L2; both argmins tie to the
-  * smallest seed id (seed arrays are fed sorted ascending; strict `<`
-  * keeps the first minimum) — the same total order the DuckDB oracle's
-  * `ROW_NUMBER() OVER (ORDER BY dist2, sid)` chain evaluates, so cell
-  * ids are bit-identical across engines.
+  * Both levels are [[Codebook.argmin]] — the shared (d2, id) tie law
+  * the DuckDB oracle's `ROW_NUMBER()` chain evaluates, so cell ids are
+  * bit-identical across engines.
   *
   * Cost: O((√k + children-of-super)·d) per row inside whole-stage
   * codegen, k = the bucket's seed count; the codebook moves once per
@@ -31,8 +29,7 @@ import org.apache.spark.sql.types.{DataType, LongType}
   * (`tez-runtime-library/src/main/java/org/apache/tez/runtime/library/conf/UnorderedKVEdgeConfig.java`).
   */
 case class BucketedArgminBroadcast(
-    codebook: Broadcast[Map[Long, (Array[Long], Array[Array[Long]],
-      Array[Array[Long]], Array[Array[Array[Long]]])]],
+    codebook: Broadcast[Map[Long, TwoLevelBook]],
     left: Expression, right: Expression) extends BinaryExpression {
 
   override def dataType: DataType = LongType
@@ -40,35 +37,16 @@ case class BucketedArgminBroadcast(
 
   @transient private lazy val books = codebook.value
 
-  private def argminIdx(x: Array[Long], vecs: Array[Array[Long]]): Int = {
-    var best = 0
-    var bestD = Long.MaxValue
-    var i = 0
-    while (i < vecs.length) {
-      val c = vecs(i)
-      var d = 0L
-      var j = 0
-      while (j < x.length && d < bestD) {
-        val t = x(j) - c(j)
-        d += t * t
-        j += 1
-      }
-      if (d < bestD) { bestD = d; best = i }
-      i += 1
-    }
-    best
-  }
-
   /** Executor-side probe; also the codegen entry point. */
   def cellOf(bucket: Long, v: ArrayData): Long = books.get(bucket) match {
     case None => -1L
     case Some((_, superVecs, childIds, childVecs)) =>
       val x = v.toLongArray()
-      val si = argminIdx(x, superVecs)
+      val si = Codebook.argmin(x, superVecs, -1)
       // a probed super always has children: every super seed is its own
       // nearest child (supers are a subset of the child seeds), and
       // exact-integer ties route to the smallest duplicate id
-      childIds(si)(argminIdx(x, childVecs(si)))
+      childIds(si)(Codebook.argmin(x, childVecs(si), -1))
   }
 
   override def nullSafeEval(b: Any, v: Any): Any =
@@ -96,14 +74,12 @@ case class BucketedArgminBroadcast(
   * second level — the same split [[SuperArgminBroadcast]] +
   * child-blocks gives the trained-IVF builder past its driver budget.
   *
-  * Tie law: super arrays are fed sorted ascending by id; the strict-`<`
-  * first-minimum scan keeps the smallest id on equal exact-integer
-  * squared-L2 — identical to [[BucketedArgminBroadcast]] and the DuckDB
-  * twin's `ROW_NUMBER() OVER (ORDER BY dist2, sid)`. Buckets absent
-  * from the map (cold — occupancy within the cap) return -1.
+  * The scan is [[Codebook.argmin]], as in [[BucketedArgminBroadcast]].
+  * Buckets absent from the map (cold — occupancy within the cap)
+  * return -1.
   */
 case class BucketSuperArgminBroadcast(
-    supers: Broadcast[Map[Long, (Array[Long], Array[Array[Long]])]],
+    supers: Broadcast[Map[Long, SeedBook]],
     left: Expression, right: Expression) extends BinaryExpression {
 
   override def dataType: DataType = LongType
@@ -115,23 +91,8 @@ case class BucketSuperArgminBroadcast(
   def superOf(bucket: Long, v: ArrayData): Long = books.get(bucket) match {
     case None => -1L
     case Some((sids, vecs)) =>
-      val x = v.toLongArray()
-      var best = -1L
-      var bestD = Long.MaxValue
-      var i = 0
-      while (i < vecs.length) {
-        val c = vecs(i)
-        var d = 0L
-        var j = 0
-        while (j < x.length && d < bestD) {
-          val t = x(j) - c(j)
-          d += t * t
-          j += 1
-        }
-        if (d < bestD) { bestD = d; best = sids(i) }
-        i += 1
-      }
-      best
+      val si = Codebook.argmin(v.toLongArray(), vecs, -1)
+      if (si < 0) -1L else sids(si)
   }
 
   override def nullSafeEval(b: Any, v: Any): Any =

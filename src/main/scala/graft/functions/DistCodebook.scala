@@ -2,17 +2,16 @@ package graft.functions
 
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression,
+  GenericInternalRow, UnaryExpression}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{DataType, LongType}
 
 /** SUPER-level routing for the DISTRIBUTED trained codebook
   * (ops.SimilarityQueries.trainedCellsDist): given a 1e-6-quantized
-  * vector, return the vec_id of the nearest SUPER seed — exact integer
-  * squared-L2, ties to the smallest seed id (seeds fed sorted
-  * ascending; strict `<` keeps the first minimum — the identical tie
-  * law as [[TwoLevelArgminBroadcast]]'s outer level and the oracle's
-  * `ROW_NUMBER() OVER (ORDER BY dist2, sid)`).
+  * vector, return the vec_id of the nearest SUPER seed —
+  * [[Codebook.argmin]], the same scan as [[TwoLevelArgminBroadcast]]'s
+  * outer level.
   *
   * This kernel is the piece of the codebook that IS allowed to transit
   * the driver: only the ⌈√c⌉ super seeds ride the broadcast (O(√c·d)
@@ -23,7 +22,7 @@ import org.apache.spark.sql.types.{DataType, LongType}
   * state (`tez-runtime-library/src/main/java/org/apache/tez/runtime/library/conf/UnorderedKVEdgeConfig.java`).
   */
 case class SuperArgminBroadcast(
-    supers: Broadcast[(Array[Long], Array[Array[Long]])],
+    supers: Broadcast[SeedBook],
     child: Expression) extends UnaryExpression {
 
   override def dataType: DataType = LongType
@@ -33,25 +32,8 @@ case class SuperArgminBroadcast(
   @transient private lazy val vecs = supers.value._2
 
   /** Executor-side probe; also the codegen entry point. */
-  def argmin(v: ArrayData): Long = {
-    val x = v.toLongArray()
-    var best = 0
-    var bestD = Long.MaxValue
-    var i = 0
-    while (i < vecs.length) {
-      val c = vecs(i)
-      var d = 0L
-      var j = 0
-      while (j < x.length && d < bestD) {
-        val t = x(j) - c(j)
-        d += t * t
-        j += 1
-      }
-      if (d < bestD) { bestD = d; best = i }
-      i += 1
-    }
-    sids(best)
-  }
+  def argmin(v: ArrayData): Long =
+    sids(Codebook.argmin(v.toLongArray(), vecs, -1))
 
   override def nullSafeEval(v: Any): Any = argmin(v.asInstanceOf[ArrayData])
 
@@ -66,17 +48,16 @@ case class SuperArgminBroadcast(
 }
 
 /** SECOND-nearest super routing — the distributed twin of
-  * [[TwoLevelArgmin2Broadcast]]'s outer level: exclude the nearest
-  * super (first minimum over ascending seed ids), return the first
-  * minimum of the rest. On a single-super codebook it returns the HOME
-  * super id, so the downstream block join + argmin lands on the home
-  * cell — exactly the broadcast kernel's degenerate fallback (and the
-  * oracle's `LEFT JOIN … COALESCE(cell2, cell)`); the other fallback
-  * (second super with an EMPTY child block) falls out of the join
-  * itself: a childless super has no blocks row, the LEFT join misses,
-  * and the caller's COALESCE lands on the home cell. */
+  * [[TwoLevelArgmin2Broadcast]]'s outer level: [[Codebook.argmin]]
+  * with the nearest super excluded. On a single-super codebook it returns
+  * the HOME super id, so the downstream block join + argmin lands on the
+  * home cell — exactly the broadcast kernel's degenerate fallback (and
+  * the oracle's `LEFT JOIN … COALESCE(cell2, cell)`); the other fallback
+  * (second super with an EMPTY child block) falls out of the join itself:
+  * a childless super has no blocks row, the LEFT join misses, and the
+  * caller's COALESCE lands on the home cell. */
 case class SuperArgmin2Broadcast(
-    supers: Broadcast[(Array[Long], Array[Array[Long]])],
+    supers: Broadcast[SeedBook],
     child: Expression) extends UnaryExpression {
 
   override def dataType: DataType = LongType
@@ -85,32 +66,11 @@ case class SuperArgmin2Broadcast(
   @transient private lazy val sids = supers.value._1
   @transient private lazy val vecs = supers.value._2
 
-  private def argminExcl(x: Array[Long], excl: Int): Int = {
-    var best = -1
-    var bestD = Long.MaxValue
-    var i = 0
-    while (i < vecs.length) {
-      if (i != excl) {
-        val c = vecs(i)
-        var d = 0L
-        var j = 0
-        while (j < x.length && d < bestD) {
-          val t = x(j) - c(j)
-          d += t * t
-          j += 1
-        }
-        if (d < bestD) { bestD = d; best = i }
-      }
-      i += 1
-    }
-    best
-  }
-
   /** Executor-side probe; also the codegen entry point. */
   def argmin2(v: ArrayData): Long = {
     val x = v.toLongArray()
-    val si = argminExcl(x, -1)
-    if (vecs.length < 2) sids(si) else sids(argminExcl(x, si))
+    val si = Codebook.argmin(x, vecs, -1)
+    if (vecs.length < 2) sids(si) else sids(Codebook.argmin(x, vecs, si))
   }
 
   override def nullSafeEval(v: Any): Any = argmin2(v.asInstanceOf[ArrayData])
@@ -129,14 +89,12 @@ case class SuperArgmin2Broadcast(
   * distributed trained codebook: `argmin(qv, block)` over
   * `block: array<struct<cid bigint, cv array<bigint>>>` (sorted
   * ascending by cid — `sort_array` on the struct sorts by the leading
-  * field) returns the cid of the nearest child seed, exact integer
-  * squared-L2, strict-`<` first-minimum = smallest-cid ties. The block
+  * field) returns the cid of the nearest child seed by
+  * [[Codebook.argmin]]'s block form. The block
   * arrives through a SHUFFLE join keyed on the super id, so each task
   * holds only its partition's child blocks and the full codebook never
   * materializes in any single JVM — the shape that survives c ∝ N.
-  * Distances read the struct's array in place (no per-child copy);
-  * the early exit abandons a child once its partial sum exceeds the
-  * best so far, exactly like the broadcast kernels. */
+  * Distances read the struct's array in place (no per-child copy). */
 case class ChildBlockArgmin(left: Expression, right: Expression)
     extends BinaryExpression {
 
@@ -147,25 +105,8 @@ case class ChildBlockArgmin(left: Expression, right: Expression)
     * an empty block (unreachable through trainedCellsDist's inner join
     * — a group only exists when a child seed routed to it). */
   def argmin(qv: ArrayData, block: ArrayData): Long = {
-    val x = qv.toLongArray()
-    var best = -1L
-    var bestD = Long.MaxValue
-    var i = 0
-    val n = block.numElements()
-    while (i < n) {
-      val row = block.getStruct(i, 2)
-      val cv = row.getArray(1)
-      var d = 0L
-      var j = 0
-      while (j < x.length && d < bestD) {
-        val t = x(j) - cv.getLong(j)
-        d += t * t
-        j += 1
-      }
-      if (d < bestD) { bestD = d; best = row.getLong(0) }
-      i += 1
-    }
-    best
+    val ci = Codebook.argmin(qv.toLongArray(), block, -1)
+    if (ci < 0) -1L else Codebook.id(block, ci)
   }
 
   override def nullSafeEval(a: Any, b: Any): Any =
@@ -187,11 +128,11 @@ case class ChildBlockArgmin(left: Expression, right: Expression)
   * [[SuperArgmin2Broadcast]] for the adaptive multi-probe family's
   * DISTRIBUTED route: a row's nSupers nearest supers in one scan,
   * exploded into the SHUFFLE_HASH join against the child blocks.
-  * Identical selection and tie law as the block-side [[ChildBlockTopKD]]
-  * (first-minimum insertion over ascending ids). Returns fewer than K
-  * entries when the codebook has fewer supers. */
+  * [[Codebook.topK]], the same selection as the block-side
+  * [[ChildBlockTopKD]]. Returns fewer than K entries when the codebook
+  * has fewer supers, none for K ≤ 0. */
 case class SuperTopKBroadcast(k: Int,
-    supers: Broadcast[(Array[Long], Array[Array[Long]])],
+    supers: Broadcast[SeedBook],
     child: Expression) extends UnaryExpression {
 
   override def dataType: DataType =
@@ -202,43 +143,9 @@ case class SuperTopKBroadcast(k: Int,
   @transient private lazy val vecs = supers.value._2
 
   /** Executor-side probe; also the codegen entry point. */
-  def topk(qv: ArrayData): ArrayData = {
-    val x = qv.toLongArray()
-    val n = vecs.length
-    val m = math.min(k, n)
-    // degenerate width (k <= 0, or an empty codebook): agree with the
-    // broadcast prober's graceful degradation instead of indexing m-1
-    if (m <= 0)
-      return new org.apache.spark.sql.catalyst.util.GenericArrayData(
-        Array.empty[Long])
-    val dists = Array.fill(m)(Long.MaxValue)
-    val ids = new Array[Long](m)
-    var filled = 0
-    var i = 0
-    while (i < n) {
-      val cv = vecs(i)
-      val bound = dists(m - 1)
-      var d = 0L
-      var j = 0
-      while (j < x.length && d < bound) {
-        val t = x(j) - cv(j)
-        d += t * t
-        j += 1
-      }
-      if (d < bound) {
-        var p = filled
-        while (p > 0 && dists(p - 1) > d) p -= 1
-        var q = math.min(filled, m - 1)
-        while (q > p) { dists(q) = dists(q - 1); ids(q) = ids(q - 1); q -= 1 }
-        dists(p) = d
-        ids(p) = sids(i)
-        if (filled < m) filled += 1
-      }
-      i += 1
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      java.util.Arrays.copyOf(ids, filled))
-  }
+  def topk(qv: ArrayData): ArrayData =
+    new GenericArrayData(
+      Codebook.topK(qv.toLongArray(), vecs, k).pos.map(i => sids(i)))
 
   override def nullSafeEval(v: Any): Any = topk(v.asInstanceOf[ArrayData])
 
@@ -256,9 +163,8 @@ case class SuperTopKBroadcast(k: Int,
   * distance-carrying block top-K, for reductions
   * that must COMPARE candidates across blocks downstream (the
   * adaptive prober's home / margin-base / interleave law needs the
-  * distances, not just the ids). Kept entries carry EXACT distances
-  * (the early exit only abandons candidates that cannot enter the
-  * top-K). Same first-minimum tie law throughout. */
+  * distances, not just the ids): [[Codebook.topK]]'s block form, whose
+  * kept entries carry EXACT distances. Empty for K ≤ 0. */
 case class ChildBlockTopKD(k: Int, left: Expression, right: Expression)
     extends BinaryExpression {
 
@@ -271,43 +177,9 @@ case class ChildBlockTopKD(k: Int, left: Expression, right: Expression)
 
   /** Executor-side probe; also the codegen entry point. */
   def topkd(qv: ArrayData, block: ArrayData): ArrayData = {
-    val x = qv.toLongArray()
-    val n = block.numElements()
-    val m = math.min(k, n)
-    // degenerate width: same guard as SuperTopKBroadcast.topk
-    if (m <= 0)
-      return new org.apache.spark.sql.catalyst.util.GenericArrayData(
-        Array.empty[org.apache.spark.sql.catalyst.InternalRow])
-    val dists = Array.fill(m)(Long.MaxValue)
-    val ids = new Array[Long](m)
-    var filled = 0
-    var i = 0
-    while (i < n) {
-      val row = block.getStruct(i, 2)
-      val cv = row.getArray(1)
-      val bound = dists(m - 1)
-      var d = 0L
-      var j = 0
-      while (j < x.length && d < bound) {
-        val t = x(j) - cv.getLong(j)
-        d += t * t
-        j += 1
-      }
-      if (d < bound) {
-        var p = filled
-        while (p > 0 && dists(p - 1) > d) p -= 1
-        var q = math.min(filled, m - 1)
-        while (q > p) { dists(q) = dists(q - 1); ids(q) = ids(q - 1); q -= 1 }
-        dists(p) = d
-        ids(p) = row.getLong(0)
-        if (filled < m) filled += 1
-      }
-      i += 1
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      (0 until filled).map(i =>
-        new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-          Array[Any](dists(i), ids(i)))).toArray[Any])
+    val top = Codebook.topK(qv.toLongArray(), block, k)
+    new GenericArrayData(Array.tabulate[Any](top.size)(i => new GenericInternalRow(
+      Array[Any](top.dist(i), Codebook.id(block, top.pos(i))))))
   }
 
   override def nullSafeEval(a: Any, b: Any): Any =
@@ -326,8 +198,8 @@ case class ChildBlockTopKD(k: Int, left: Expression, right: Expression)
 
 /** SECOND-best child within a joined block — the distributed twin of
   * [[TwoLevelArgminH2Broadcast]]'s inner level: the home ranking's
-  * `rn = 2` (first minimum excluded, first minimum of the rest,
-  * ascending-cid blocks + strict `<`). On a single-child block it
+  * `rn = 2`, [[Codebook.argmin]]'s block form with the best child
+  * excluded. On a single-child block it
   * returns the best child itself — i.e. the home cell — the broadcast
   * kernel's fallback and the oracle's `COALESCE(cell3, cell)`; probe
   * fan-outs drop `cell3 = cell` rows exactly as before. Returns -1 on
@@ -342,31 +214,12 @@ case class ChildBlockArgmin2(left: Expression, right: Expression)
   def argmin2(qv: ArrayData, block: ArrayData): Long = {
     val x = qv.toLongArray()
     val n = block.numElements()
-    if (n == 0) return -1L
-    def scan(excl: Int): Int = {
-      var best = -1
-      var bestD = Long.MaxValue
-      var i = 0
-      while (i < n) {
-        if (i != excl) {
-          val row = block.getStruct(i, 2)
-          val cv = row.getArray(1)
-          var d = 0L
-          var j = 0
-          while (j < x.length && d < bestD) {
-            val t = x(j) - cv.getLong(j)
-            d += t * t
-            j += 1
-          }
-          if (d < bestD) { bestD = d; best = i }
-        }
-        i += 1
-      }
-      best
+    if (n == 0) -1L
+    else if (n < 2) Codebook.id(block, 0) // single child: home
+    else {
+      val ci = Codebook.argmin(x, block, -1)
+      Codebook.id(block, Codebook.argmin(x, block, ci))
     }
-    val ci = scan(-1)
-    if (n < 2) block.getStruct(ci, 2).getLong(0) // single child: home
-    else block.getStruct(scan(ci), 2).getLong(0)
   }
 
   override def nullSafeEval(a: Any, b: Any): Any =

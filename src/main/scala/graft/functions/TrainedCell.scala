@@ -10,12 +10,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * ops.SimilarityQueries.trainedCells): given a 1e-6-quantized vector
   * (array<bigint>) and a broadcast codebook of (superIds, superVecs,
   * childIdsBySuper, childVecsBySuper), return the vec_id of the nearest
-  * CHILD seed within the nearest SUPER seed. All distances are exact
-  * integer squared-L2; both argmins tie to the smallest seed id (seed
-  * arrays are fed sorted ascending; strict `<` keeps the first
-  * minimum) — the same total order the DuckDB oracle's
-  * `ROW_NUMBER() OVER (ORDER BY dist2, sid)` CTE chain evaluates, so
-  * cell ids are bit-identical across engines.
+  * CHILD seed within the nearest SUPER seed. Both levels are
+  * [[Codebook.argmin]] — the shared (d2, id) tie law the DuckDB
+  * oracle's `ROW_NUMBER()` chain evaluates, so cell ids are
+  * bit-identical across engines.
   *
   * Cost: O((√c + children-of-super)·d) per row in tight long loops with
   * a running-best early exit, inside whole-stage codegen; the codebook
@@ -28,46 +26,24 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * (`tez-runtime-library/src/main/java/org/apache/tez/runtime/library/conf/UnorderedKVEdgeConfig.java`).
   */
 case class TwoLevelArgminBroadcast(
-    codebook: Broadcast[(Array[Long], Array[Array[Long]],
-      Array[Array[Long]], Array[Array[Array[Long]]])],
+    codebook: Broadcast[TwoLevelBook],
     child: Expression) extends UnaryExpression {
 
   override def dataType: DataType = LongType
   override def prettyName: String = "graft_trained_cell"
 
-  @transient private lazy val superIds = codebook.value._1
   @transient private lazy val superVecs = codebook.value._2
   @transient private lazy val childIds = codebook.value._3
   @transient private lazy val childVecs = codebook.value._4
 
-  private def argminIdx(x: Array[Long], vecs: Array[Array[Long]]): Int = {
-    var best = 0
-    var bestD = Long.MaxValue
-    var i = 0
-    while (i < vecs.length) {
-      val c = vecs(i)
-      var d = 0L
-      var j = 0
-      while (j < x.length && d < bestD) {
-        val t = x(j) - c(j)
-        d += t * t
-        j += 1
-      }
-      if (d < bestD) { bestD = d; best = i }
-      i += 1
-    }
-    best
-  }
-
   /** Executor-side probe; also the codegen entry point. */
   def cellOf(v: ArrayData): Long = {
     val x = v.toLongArray()
-    val si = argminIdx(x, superVecs)
-    val kids = childVecs(si)
+    val si = Codebook.argmin(x, superVecs, -1)
     // a probed super always has children: every super seed is its own
     // nearest child (ss is a multiple of sc), and exact-integer ties
     // route rows to the smallest duplicate id on both engines
-    childIds(si)(argminIdx(x, kids))
+    childIds(si)(Codebook.argmin(x, childVecs(si), -1))
   }
 
   override def nullSafeEval(v: Any): Any = cellOf(v.asInstanceOf[ArrayData])
@@ -86,11 +62,10 @@ case class TwoLevelArgminBroadcast(
   * the SECOND-nearest super seed — under two-level routing, the recall
   * that parent-flips lose sits exactly across the super boundary, so
   * that is where the second probe goes (the trained-codebook twin of
-  * `graft_ivf_cell_h2`). Tie semantics match the oracle's
-  * `ROW_NUMBER() ... WHERE rn = 2`: exclude the nearest super (first
-  * minimum over ascending seed ids), then take the first minimum of
-  * the rest. Normally returns a cell id from a DIFFERENT super's child
-  * block than the home cell; in the two degenerate cases it returns
+  * `graft_ivf_cell_h2`), the oracle's `ROW_NUMBER() ... WHERE rn = 2`:
+  * [[Codebook.argmin]] with the nearest super excluded. Normally
+  * returns a cell id from a DIFFERENT super's child block than the
+  * home cell; in the two degenerate cases it returns
   * the HOME cell instead — a single-super codebook, and a
   * second-nearest super with an EMPTY child block (two super seeds
   * with identical quantized vectors tie every child to the smaller id,
@@ -100,8 +75,7 @@ case class TwoLevelArgminBroadcast(
   * must therefore drop `cell2 = cell` rows to keep pairs disjoint
   * (the declared probe2 query filters that branch). */
 case class TwoLevelArgmin2Broadcast(
-    codebook: Broadcast[(Array[Long], Array[Array[Long]],
-      Array[Array[Long]], Array[Array[Array[Long]]])],
+    codebook: Broadcast[TwoLevelBook],
     child: Expression) extends UnaryExpression {
 
   override def dataType: DataType = LongType
@@ -111,28 +85,6 @@ case class TwoLevelArgmin2Broadcast(
   @transient private lazy val childIds = codebook.value._3
   @transient private lazy val childVecs = codebook.value._4
 
-  private def argminIdxExcl(x: Array[Long], vecs: Array[Array[Long]],
-      excl: Int): Int = {
-    var best = -1
-    var bestD = Long.MaxValue
-    var i = 0
-    while (i < vecs.length) {
-      if (i != excl) {
-        val c = vecs(i)
-        var d = 0L
-        var j = 0
-        while (j < x.length && d < bestD) {
-          val t = x(j) - c(j)
-          d += t * t
-          j += 1
-        }
-        if (d < bestD) { bestD = d; best = i }
-      }
-      i += 1
-    }
-    best
-  }
-
   /** Executor-side probe; also the codegen entry point. Falls back to
     * the home cell on a single-super codebook AND on an empty
     * second-super child block (duplicate super vectors) — both are the
@@ -141,13 +93,13 @@ case class TwoLevelArgmin2Broadcast(
     * one si2-block scan, exactly the pre-guard cost. */
   def cellOf(v: ArrayData): Long = {
     val x = v.toLongArray()
-    val si = argminIdxExcl(x, superVecs, -1)
-    def home: Long = childIds(si)(argminIdxExcl(x, childVecs(si), -1))
+    val si = Codebook.argmin(x, superVecs, -1)
+    def home: Long = childIds(si)(Codebook.argmin(x, childVecs(si), -1))
     if (superVecs.length < 2) home
     else {
-      val si2 = argminIdxExcl(x, superVecs, si)
+      val si2 = Codebook.argmin(x, superVecs, si)
       if (childVecs(si2).isEmpty) home
-      else childIds(si2)(argminIdxExcl(x, childVecs(si2), -1))
+      else childIds(si2)(Codebook.argmin(x, childVecs(si2), -1))
     }
   }
 
@@ -167,14 +119,12 @@ case class TwoLevelArgmin2Broadcast(
   * WITHIN the home super — the intra-super boundary, complementing
   * [[TwoLevelArgmin2Broadcast]]'s cross-super boundary (a near-dup
   * pair lost by single-probe blocking sits across one of exactly those
-  * two seams). Tie semantics are the home ranking's `rn = 2`: first
-  * minimum excluded, first minimum of the rest, ascending-id arrays +
-  * strict `<`. Falls back to the HOME cell when the home super has a
-  * single child — the oracle's LEFT JOIN + COALESCE twin — so probe
-  * fan-out must drop `cell3 = cell` rows exactly like cell2's. */
+  * two seams): the home ranking's `rn = 2`, [[Codebook.argmin]] with
+  * the home child excluded. Falls back to the HOME cell when the home
+  * super has a single child — the oracle's LEFT JOIN + COALESCE twin —
+  * so probe fan-out must drop `cell3 = cell` rows exactly like cell2's. */
 case class TwoLevelArgminH2Broadcast(
-    codebook: Broadcast[(Array[Long], Array[Array[Long]],
-      Array[Array[Long]], Array[Array[Array[Long]]])],
+    codebook: Broadcast[TwoLevelBook],
     child: Expression) extends UnaryExpression {
 
   override def dataType: DataType = LongType
@@ -184,45 +134,23 @@ case class TwoLevelArgminH2Broadcast(
   @transient private lazy val childIds = codebook.value._3
   @transient private lazy val childVecs = codebook.value._4
 
-  private def argminIdxExcl(x: Array[Long], vecs: Array[Array[Long]],
-      excl: Int): Int = {
-    var best = -1
-    var bestD = Long.MaxValue
-    var i = 0
-    while (i < vecs.length) {
-      if (i != excl) {
-        val c = vecs(i)
-        var d = 0L
-        var j = 0
-        while (j < x.length && d < bestD) {
-          val t = x(j) - c(j)
-          d += t * t
-          j += 1
-        }
-        if (d < bestD) { bestD = d; best = i }
-      }
-      i += 1
-    }
-    best
-  }
-
   /** Executor-side probe; also the codegen entry point. */
   def cellOf(v: ArrayData): Long = {
     val x = v.toLongArray()
-    val si = argminIdxExcl(x, superVecs, -1)
+    val si = Codebook.argmin(x, superVecs, -1)
     val kids = childVecs(si)
     // every builder keeps supers a SUBSET of children, so the home
     // super always has ≥1 child (a super seed is its own nearest
     // child; duplicate-vector ties route to the smaller id on both
     // engines, and so does the row's home-super choice) — fail loudly
     // if a future builder breaks that invariant instead of throwing
-    // AIOOBE off argminIdxExcl's -1 sentinel
+    // AIOOBE off Codebook.argmin's -1 sentinel
     require(kids.nonEmpty,
       "TwoLevelArgminH2Broadcast: empty home child block — the " +
         "codebook violates the supers-subset-of-children invariant")
-    val ci = argminIdxExcl(x, kids, -1)
+    val ci = Codebook.argmin(x, kids, -1)
     if (kids.length < 2) childIds(si)(ci) // single child: home fallback
-    else childIds(si)(argminIdxExcl(x, kids, ci))
+    else childIds(si)(Codebook.argmin(x, kids, ci))
   }
 
   override def nullSafeEval(v: Any): Any = cellOf(v.asInstanceOf[ArrayData])
@@ -254,15 +182,14 @@ case class TwoLevelArgminH2Broadcast(
   * (measured in AnnClusteredStress on the clustered corpus).
   *
   * Returns the probe cells as array<bigint>: the home cell first,
-  * then qualifying cells ordered by (d2, cid) — the same total order
-  * as every argmin kernel, so the DuckDB twin is a windowed ranking
+  * then qualifying cells ordered by (d2, cid) — [[Codebook]]'s total
+  * order, so the DuckDB twin is a windowed ranking
   * with the identical integer margin predicate. Cells are distinct by
   * construction (a child belongs to exactly one super; home is
   * excluded from the qualifying scan). Cost: O(nSupers·√c·d)/row with
   * the margin bound as an early exit — the probe3 cost class. */
 case class TwoLevelProbesBroadcast(
-    codebook: Broadcast[(Array[Long], Array[Array[Long]],
-      Array[Array[Long]], Array[Array[Array[Long]]])],
+    codebook: Broadcast[TwoLevelBook],
     nSupers: Int, maxProbes: Int, epsNum: Long, epsDen: Long,
     child: Expression, interleave: Boolean = false)
     extends UnaryExpression {
@@ -274,55 +201,18 @@ case class TwoLevelProbesBroadcast(
   @transient private lazy val childIds = codebook.value._3
   @transient private lazy val childVecs = codebook.value._4
 
-  private def d2(x: Array[Long], c: Array[Long], bound: Long): Long = {
-    var d = 0L
-    var j = 0
-    while (j < x.length && d <= bound) {
-      val t = x(j) - c(j)
-      d += t * t
-      j += 1
-    }
-    d
-  }
-
   /** Executor-side probe; also the codegen entry point. */
   def probesOf(v: ArrayData): ArrayData = {
     val x = v.toLongArray()
-    // top-nSupers supers by (d2, sid): repeated excluded argmin scans
-    // (nSupers is 2-4, supers are ~sqrt(c) — quadratic in a tiny k)
-    val nS = math.min(nSupers, superVecs.length)
-    val sel = new Array[Int](nS)
-    var k = 0
-    while (k < nS) {
-      var best = -1
-      var bestD = Long.MaxValue
-      var i = 0
-      while (i < superVecs.length) {
-        var taken = false
-        var t = 0
-        while (t < k) { if (sel(t) == i) taken = true; t += 1 }
-        if (!taken) {
-          val d = d2(x, superVecs(i), bestD)
-          if (d < bestD) { bestD = d; best = i }
-        }
-        i += 1
-      }
-      sel(k) = best
-      k += 1
-    }
-    // home = best child of the nearest super (exact d2, no bound)
+    // the nSupers nearest supers in (d2, sid) order
+    val sel = Codebook.topK(x, superVecs, nSupers).pos
+    val nS = sel.length
+    // home = best child of the nearest super
     val homeKids = childVecs(sel(0))
     require(homeKids.nonEmpty,
       "TwoLevelProbesBroadcast: empty home child block — the codebook " +
         "violates the supers-subset-of-children invariant")
-    var hi = 0
-    var hd = Long.MaxValue
-    var i = 0
-    while (i < homeKids.length) {
-      val d = d2(x, homeKids(i), hd - 1)
-      if (d < hd) { hd = d; hi = i }
-      i += 1
-    }
+    val hi = Codebook.argmin(x, homeKids, -1)
     val home = childIds(sel(0))(hi)
     // full distance scan of the pooled non-home children: the margin
     // base is hd2 — the NEAREST NON-HOME child distance — not hd (a
@@ -335,14 +225,14 @@ case class TwoLevelProbesBroadcast(
     val perSuper = Array.fill(nS)(
       scala.collection.mutable.ArrayBuffer.empty[(Long, Long)])
     var hd2 = Long.MaxValue
-    k = 0
+    var k = 0
     while (k < nS) {
       val kids = childVecs(sel(k))
       val ids = childIds(sel(k))
       var j = 0
       while (j < kids.length) {
         if (ids(j) != home) {
-          val d = d2(x, kids(j), Long.MaxValue - 1)
+          val d = Codebook.d2(x, kids(j), Long.MaxValue)
           perSuper(k) += ((d, ids(j)))
           if (d < hd2) hd2 = d
         }

@@ -3,7 +3,8 @@ package graft.ops
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.functions.{blockArgmin, cosine, joinKey, norm2, superArgmin, trainedCell}
+import graft.functions.{Codebook, blockArgmin, cosine, joinKey, norm2, superArgmin,
+  trainedCell}
 import graft.oracle.{Dialect, DuckSql, SparkSql}
 import graft.{QueryDef, ScratchCache, Tables}
 
@@ -158,24 +159,18 @@ object ClusteringQueries {
   private val duckSemKExpr =
     s"(SELECT GREATEST(8, (count(*) + ${SemOcc - 1}) // $SemOcc) FROM v)"
 
-  /** Two-level codebook over the CURRENT centroids: centroids sorted
-    * by cid, supers = every ⌈√K⌉-th centroid in cid rank order, then
-    * the SHARED tie-law grouping ([[graft.functions.Codebook]] — one
-    * source of truth with trainedCells and lshRefined). */
-  private def twoLevelBook(cents: Seq[(Int, Seq[Long])])
-      : (Array[Long], Array[Array[Long]],
-        Array[Array[Long]], Array[Array[Array[Long]]]) = {
-    val children = cents.sortBy(_._1)
-      .map { case (cid, v) => cid.toLong -> v.toArray }.toArray
-    val sb = (1 to 256).find(z => z * z >= children.length).getOrElse(256)
-    val supers = children.zipWithIndex.collect {
-      case (c, j) if j % sb == 0 => c
-    }
-    graft.functions.Codebook.group(children, supers)
+  /** Deterministic init: the first `k` vectors are the centroids
+    * (cid = vec_id; vec_ids are contiguous from 0). */
+  private def firstCentroids(v: DataFrame, k: Long): Seq[(Int, Seq[Long])] = {
+    val (ids, vecs) = SimilarityQueries.seedBook(v.filter(col("vec_id") < k))
+    ids.map(_.toInt).toSeq.zip(vecs.map(_.toSeq))
   }
 
   /** One assignment at arbitrary K through TWO-LEVEL routing: the
-    * centroid codebook travels as a broadcast into the codegen'd
+    * centroids' rank book ([[graft.functions.Codebook.rankBook]] —
+    * supers every ⌈√K⌉-th centroid in cid order, the construction
+    * trainedCells and lshRefined share) travels as a broadcast into
+    * the codegen'd
     * [[graft.functions.TwoLevelArgminBroadcast]] kernel — argmin over
     * the ⌈√K⌉ super centroids, then over that super's child block, so
     * the per-row cost is O(√K·d), not O(K·d). With K = ⌈N/250⌉ that is
@@ -186,7 +181,9 @@ object ClusteringQueries {
     * centroid id exactly like [[assign]]'s flat scan. */
   private def assignTwoLevel(v: DataFrame,
       cents: Seq[(Int, Seq[Long])]): DataFrame = {
-    val bc = v.sparkSession.sparkContext.broadcast(twoLevelBook(cents))
+    val sorted = cents.sortBy(_._1)
+    val bc = v.sparkSession.sparkContext.broadcast(Codebook.rankBook(
+      (sorted.map(_._1.toLong).toArray, sorted.map(_._2.toArray).toArray)))
     v.select(col("vec_id"), col("v"),
       trainedCell(bc, col("v")).cast("int").as("cluster"))
   }
@@ -228,22 +225,18 @@ object ClusteringQueries {
   private def assignTwoLevelDist(v: DataFrame, cents: DataFrame): DataFrame = {
     val s = v.sparkSession
     val kCur = cents.count()
-    val sb = (1 to 256).find(z => z * z >= kCur).getOrElse(256)
-    val supers = cents.orderBy("cid").rdd.zipWithIndex()
-      .filter(_._2 % sb == 0)
-      .map { case (r, _) => r.getLong(0) -> r.getSeq[Long](1).toArray }
-      .collect().sortBy(_._1)
-    require(supers.nonEmpty, s"assignTwoLevelDist: no supers (K=$kCur)")
+    val supers = SimilarityQueries.seedBook(SimilarityQueries.rankStride(s,
+        cents.selectExpr("cid AS vec_id", "c AS qv"),
+        Codebook.superStride(kCur), kCur)
+      .selectExpr("vec_id", "qv"))
+    require(supers._1.nonEmpty, s"assignTwoLevelDist: no supers (K=$kCur)")
     SemBuildStats.lastDriverCentroids =
-      math.max(SemBuildStats.lastDriverCentroids, supers.length)
-    val bc = s.sparkContext.broadcast(
-      (supers.map(_._1), supers.map(_._2)))
-    val blocks = cents
+      math.max(SemBuildStats.lastDriverCentroids, supers._1.length)
+    val bc = s.sparkContext.broadcast(supers)
+    val blocks = SimilarityQueries.seedBlocks(cents
       .select(col("cid"), col("c").as("cv"),
-        joinKey(superArgmin(bc, col("c"))).as("csuper"))
-      .groupBy("csuper")
-      .agg(sort_array(collect_list(struct(col("cid"), col("cv"))))
-        .as("block"))
+        joinKey(superArgmin(bc, col("c"))).as("csuper")),
+      Seq("csuper"), "cid", "cv", "block")
     v.select(col("vec_id"), col("v"),
         joinKey(superArgmin(bc, col("v"))).as("rsuper"))
       .join(blocks.hint("SHUFFLE_HASH"), col("rsuper") === col("csuper"))
@@ -290,9 +283,7 @@ object ClusteringQueries {
       assignTwoLevelDist(v, cents).select("vec_id", "cluster")
     } else {
       SemBuildStats.lastRoute = "broadcast"
-      var cents: Seq[(Int, Seq[Long])] =
-        v.filter(col("vec_id") < k).orderBy("vec_id").collect()
-          .map(r => r.getLong(0).toInt -> r.getSeq[Long](1).toSeq).toSeq
+      var cents = firstCentroids(v, k)
       SemBuildStats.lastDriverCentroids = cents.length
       for (_ <- 1 to Iters) {
         cents = update(assignTwoLevel(v, cents))
@@ -383,11 +374,7 @@ object ClusteringQueries {
       (s, d) => {
         val v = ScratchCache.scratch(Tables.embeddingsParallel(s, d)
           .selectExpr("vec_id", s"${quantCol(SparkSql)} AS v"))
-        // deterministic init: the first K vectors are the centroids
-        // (cid = vec_id; the fixture ids are contiguous from 0)
-        var cents: Seq[(Int, Seq[Long])] =
-          v.filter(col("vec_id") < K).orderBy("vec_id").collect()
-            .map(r => r.getLong(0).toInt -> r.getSeq[Long](1).toSeq).toSeq
+        var cents = firstCentroids(v, K)
         for (_ <- 1 to Iters) cents = update(assign(v, cents))
         assign(v, cents)
           .select("vec_id", "cluster", "dist2")

@@ -5,10 +5,10 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
-import graft.functions.{SeedBook, blockArgmin, blockArgmin2, blockTopKD,
-  cosine, ivfCell2, ivfCellH, ivfCellH2, joinKey, lshCell, lshSuper, norm2,
-  superArgmin, superArgmin2, superTopK, trainedCell, trainedCell2,
-  trainedCellH2, trainedProbes}
+import graft.functions.{Codebook, SeedBook, TwoLevelBook, blockArgmin,
+  blockArgmin2, blockTopKD, cosine, ivfCell2, ivfCellH, ivfCellH2, joinKey,
+  lshCell, lshSuper, norm2, superArgmin, superArgmin2, superTopK,
+  trainedCell, trainedCell2, trainedCellH2, trainedProbes}
 import graft.oracle.{Dialect, DuckSql, SparkSql}
 import graft.{QueryDef, ScratchCache, Tables}
 
@@ -239,40 +239,58 @@ object SimilarityQueries {
         expr(s"${SparkSql.quantVec("embedding", 1000000L)} AS qv")))
   }
 
-  /** Driver-side seed collection of the BROADCAST trained-codebook
-    * route — one place for the seed-selection rule (see
-    * [[trainedCells]]' Scaladoc for the per-mode rationale): strided
-    * children (raw modulus unfiltered, LCG-mixed under a filter),
-    * supers by modulus (unfiltered) or rank-stride over the collected
-    * children (filtered). Updates [[TrainedBuildStats]]. */
-  private def collectSeeds(seedSrc: DataFrame, n: Long, sc: Long, ss: Long,
-      seedWhere: String)
-      : (Array[(Long, Array[Long])], Array[(Long, Array[Long])]) = {
+  /** Child-seed predicate of the trained books: every sc-th vec_id
+    * (`lcg` off — unfiltered training), or the LCG-MIXED stride over
+    * the same constants as the hyperplane LCG (`lcg` on — training
+    * under a filter; see [[trainedCells]]' seed-selection rule). */
+  private def childStride(sc: Long, lcg: Boolean): String =
+    if (!lcg) s"vec_id % $sc = 0"
+    else s"(((vec_id % 2147483648) * 1103515245 + 12345) % 2147483648) % $sc = 0"
+
+  /** `seeds(id, vec)` collected to the driver in id order. */
+  private[ops] def seedBook(seeds: DataFrame): SeedBook = {
+    val rows = seeds.orderBy(seeds.columns.head).collect()
+    (rows.map(_.getLong(0)), rows.map(_.getSeq[Long](1).toArray))
+  }
+
+  /** Seed blocks: the (`id`, `vec`) seeds of `keyed` grouped by its
+    * parent `keys` into one `block` per parent, ascending by id — the
+    * `array<struct<id, vec>>` every block kernel scans in place, built
+    * once per distributed route (children per super, supers per grand,
+    * per (bucket, super), centroids per super). */
+  private[ops] def seedBlocks(keyed: DataFrame, keys: Seq[String],
+      id: String, vec: String, block: String): DataFrame =
+    keyed.groupBy(keys.map(col): _*)
+      .agg(sort_array(collect_list(struct(col(id), col(vec)))).as(block))
+
+  /** Driver-side book of the BROADCAST trained-codebook route — one
+    * place for the seed-selection rule (see [[trainedCells]]' Scaladoc
+    * for the per-mode rationale): strided children ([[childStride]]),
+    * supers by modulus (unfiltered) or the rank book over the collected
+    * children (filtered, [[Codebook.rankBook]]). Updates
+    * [[TrainedBuildStats]]. */
+  private def collectBook(seedSrc: DataFrame, n: Long, sc: Long, ss: Long,
+      seedWhere: String): TwoLevelBook = {
     val defaultMode = seedWhere == "TRUE"
-    val childPred =
-      if (defaultMode) s"vec_id % $sc = 0"
-      else s"(((vec_id % 2147483648) * 1103515245 + 12345) % 2147483648) % $sc = 0"
-    val childSeeds = seedSrc.filter(expr(childPred))
-      .selectExpr("vec_id", "qv").orderBy("vec_id").collect()
-      .map(r => r.getLong(0) -> r.getSeq[Long](1).toArray)
+    val children = seedBook(seedSrc.filter(expr(childStride(sc, !defaultMode)))
+      .selectExpr("vec_id", "qv"))
     // fail fast, not deep in an executor kernel over empty arrays: an
     // LCG stride CAN select zero rows from a tiny filtered sub-corpus
     // (n < sc), and the silent alternative — an empty broadcast
     // codebook — would crash probe routing with an opaque AIOOBE while
     // the DuckDB twin silently returned an empty frame
-    require(childSeeds.nonEmpty,
+    require(children._1.nonEmpty,
       s"trainedCells: seed selection produced no child seeds " +
         s"(n=$n, sc=$sc, seedWhere=$seedWhere) — the training " +
         s"sub-corpus is too small for the stride; widen seedWhere")
-    val superSeeds =
-      if (defaultMode) childSeeds.filter(_._1 % ss == 0)
-      else {
-        val sb = (1 to 256).find(z => z * z >= childSeeds.length).getOrElse(256)
-        childSeeds.zipWithIndex.collect { case (c, j) if j % sb == 0 => c }
-      }
     TrainedBuildStats.lastRoute = "broadcast"
-    TrainedBuildStats.lastDriverSeeds = childSeeds.length
-    (childSeeds, superSeeds)
+    TrainedBuildStats.lastDriverSeeds = children._1.length
+    if (!defaultMode) Codebook.rankBook(children)
+    else {
+      val (ids, vecs) = children
+      val at = ids.indices.filter(j => ids(j) % ss == 0).toArray
+      Codebook.group(children, (at.map(j => ids(j)), at.map(j => vecs(j))))
+    }
   }
 
   /** Embeddings with their trained home cell AND the ADAPTIVE probe
@@ -304,9 +322,7 @@ object SimilarityQueries {
     if (adaptiveCells(n) > maxDriverSeeds(s))
       return trainedAdaptiveCellsDistFrom(s, v, nSupers, maxProbes,
         epsNum, epsDen, interleave)
-    val (childSeeds, superSeeds) = collectSeeds(v, n, sc, ss, "TRUE")
-    val bc = s.sparkContext.broadcast(
-      graft.functions.Codebook.group(childSeeds, superSeeds))
+    val bc = s.sparkContext.broadcast(collectBook(v, n, sc, ss, "TRUE"))
     graft.ScratchCache.scratch(
       v.select(col("vec_id"), col("embedding"), col("n2"),
           trainedProbes(bc, nSupers, maxProbes, epsNum, epsDen, col("qv"),
@@ -350,23 +366,19 @@ object SimilarityQueries {
       interleave: Boolean): DataFrame = {
     val n = v.count()
     val (sc, ss) = trainedStrides(n)
-    val superSeeds = v.filter(expr(s"vec_id % $ss = 0"))
-      .selectExpr("vec_id", "qv").orderBy("vec_id").collect()
-      .map(r => r.getLong(0) -> r.getSeq[Long](1).toArray)
-    require(superSeeds.nonEmpty,
+    val superSeeds = seedBook(v.filter(expr(s"vec_id % $ss = 0"))
+      .selectExpr("vec_id", "qv"))
+    require(superSeeds._1.nonEmpty,
       s"trainedAdaptiveCellsDist: no super seeds (n=$n, ss=$ss)")
     TrainedBuildStats.lastRoute = "dist"
-    TrainedBuildStats.lastDriverSeeds = superSeeds.length
-    val bcS = s.sparkContext.broadcast(
-      (superSeeds.map(_._1), superSeeds.map(_._2)))
-    val blocks = graft.ScratchCache.scratch(
-      v.filter(expr(s"vec_id % $sc = 0"))
+    TrainedBuildStats.lastDriverSeeds = superSeeds._1.length
+    val bcS = s.sparkContext.broadcast(superSeeds)
+    val blocks = graft.ScratchCache.scratch(seedBlocks(
+      v.filter(expr(childStride(sc, lcg = false)))
         .selectExpr("vec_id AS cid", "qv AS cv")
         .select(col("cid"), col("cv"),
-          joinKey(superArgmin(bcS, col("cv"))).as("csuper"))
-        .groupBy("csuper")
-        .agg(sort_array(collect_list(struct(col("cid"), col("cv"))))
-          .as("block")))
+          joinKey(superArgmin(bcS, col("cv"))).as("csuper")),
+      Seq("csuper"), "cid", "cv", "block"))
     val cands = v.selectExpr("vec_id", "qv")
       .select(col("vec_id"), col("qv"),
         posexplode(superTopK(nSupers, bcS, col("qv"))).as(Seq("srk0", "rs")))
@@ -487,11 +499,7 @@ object SimilarityQueries {
     // scale.
     if (adaptiveCells(n) > maxDriverSeeds(s))
       return trainedCellsDistFrom(s, v, probe2, seedWhere, probe3)
-    val (childSeeds, superSeeds) = collectSeeds(seedSrc, n, sc, ss, seedWhere)
-    // driver-side: each child seed routes to its super (the shared
-    // tie-law construction — graft.functions.Codebook.group)
-    val bc = s.sparkContext.broadcast(
-      graft.functions.Codebook.group(childSeeds, superSeeds))
+    val bc = s.sparkContext.broadcast(collectBook(seedSrc, n, sc, ss, seedWhere))
     val qv = col("qv")
     val cols = Seq(col("vec_id"), col("embedding"), col("n2"),
       trainedCell(bc, qv).as("cell")) ++
@@ -639,10 +647,10 @@ object SimilarityQueries {
     * lets the switch route EVERY trained-family query):
     *  - `seedWhere` — children by the same LCG-mixed stride over the
     *    filtered sub-corpus; supers are the rank-strided children
-    *    (`j % sb = 0`, sb = ⌈√k⌉), ranked DISTRIBUTEDLY (sorted child
-    *    frame + zipWithIndex — the standard per-partition-offset rank,
-    *    no single-task window) and only the ≈√c selected supers are
-    *    collected;
+    *    (`j % sb = 0`, sb = ⌈√k⌉) ranked by [[rankStride]] (past the
+    *    driver budget — where this route runs behind the switch — a
+    *    sorted frame + zipWithIndex, no single-task window) and only
+    *    the ≈√c selected supers are collected;
     *  - `probe2` — rows also route to their SECOND-nearest super
     *    ([[graft.functions.SuperArgmin2Broadcast]], home super when the
     *    codebook has one super) and a second SHUFFLE_HASH join (LEFT —
@@ -662,40 +670,31 @@ object SimilarityQueries {
     val seedSrc = if (defaultMode) v else v.filter(expr(seedWhere))
     val n = seedSrc.count()
     val (sc, ss) = trainedStrides(n)
-    val childPred =
-      if (defaultMode) s"vec_id % $sc = 0"
-      else s"(((vec_id % 2147483648) * 1103515245 + 12345) % 2147483648) % $sc = 0"
-    val childDf = seedSrc.filter(expr(childPred))
-      .selectExpr("vec_id AS cid", "qv AS cv")
-    val superSeeds: Array[(Long, Array[Long])] =
+    val childSeeds = seedSrc.filter(expr(childStride(sc, !defaultMode)))
+      .selectExpr("vec_id", "qv")
+    val superSeeds =
       if (defaultMode)
-        seedSrc.filter(expr(s"vec_id % $ss = 0"))
-          .selectExpr("vec_id", "qv").orderBy("vec_id").collect()
-          .map(r => r.getLong(0) -> r.getSeq[Long](1).toArray)
+        seedBook(seedSrc.filter(expr(s"vec_id % $ss = 0"))
+          .selectExpr("vec_id", "qv"))
       else {
-        val k = childDf.count()
+        val k = childSeeds.count()
         require(k > 0,
           s"trainedCellsDist: seed selection produced no child seeds " +
             s"(n=$n, sc=$sc, seedWhere=$seedWhere) — the training " +
             s"sub-corpus is too small for the stride; widen seedWhere")
-        val sb = (1 to 256).find(z => z * z >= k).getOrElse(256)
-        childDf.orderBy("cid").rdd.zipWithIndex()
-          .filter(_._2 % sb == 0)
-          .map { case (r, _) => r.getLong(0) -> r.getSeq[Long](1).toArray }
-          .collect().sortBy(_._1)
+        seedBook(rankStride(s, childSeeds, Codebook.superStride(k), k)
+          .selectExpr("vec_id", "qv"))
       }
-    require(superSeeds.nonEmpty,
+    require(superSeeds._1.nonEmpty,
       s"trainedCellsDist: no super seeds (n=$n, ss=$ss)")
     TrainedBuildStats.lastRoute = "dist"
-    TrainedBuildStats.lastDriverSeeds = superSeeds.length
-    val bcS = s.sparkContext.broadcast(
-      (superSeeds.map(_._1), superSeeds.map(_._2)))
-    val blocks = graft.ScratchCache.scratch(childDf
-      .select(col("cid"), col("cv"),
-        joinKey(superArgmin(bcS, col("cv"))).as("csuper"))
-      .groupBy("csuper")
-      .agg(sort_array(collect_list(struct(col("cid"), col("cv"))))
-        .as("block")))
+    TrainedBuildStats.lastDriverSeeds = superSeeds._1.length
+    val bcS = s.sparkContext.broadcast(superSeeds)
+    val blocks = graft.ScratchCache.scratch(seedBlocks(
+      childSeeds.selectExpr("vec_id AS cid", "qv AS cv")
+        .select(col("cid"), col("cv"),
+          joinKey(superArgmin(bcS, col("cv"))).as("csuper")),
+      Seq("csuper"), "cid", "cv", "block"))
     val qv = col("qv")
     val routedCols = Seq(col("vec_id"), col("embedding"), col("n2"), qv,
       joinKey(superArgmin(bcS, qv)).as("rsuper")) ++
@@ -845,10 +844,8 @@ object SimilarityQueries {
     val n = sub.count()
     val c = adaptiveCellsL3(n)
     val scInc = math.max(1L, n / c)
-    val childSrc = ScratchCache.scratch(sub.filter(expr(
-        s"(((vec_id % 2147483648) * 1103515245 + 12345) % 2147483648) " +
-          s"% $scInc = 0"))
-      .selectExpr("vec_id", "qv"))
+    val childSrc = ScratchCache.scratch(
+      sub.filter(expr(childStride(scInc, lcg = true))).selectExpr("vec_id", "qv"))
     val k = childSrc.count()
     require(k > 0,
       s"trainedCellsL3Inc: no child seeds (n=$n, sc=$scInc, " +
@@ -877,7 +874,7 @@ object SimilarityQueries {
     * class the r10/r11 driver-collect work removed, ADVICE r11).
     * `nHint` is the caller's already-computed seed count (an upper
     * bound is fine — it only picks the route, never the rows). */
-  private def rankStride(s: SparkSession, seeds: DataFrame,
+  private[ops] def rankStride(s: SparkSession, seeds: DataFrame,
       tb: Int, nHint: Long): DataFrame = {
     if (nHint <= maxDriverSeeds(s)) {
       val w = Window.orderBy("vec_id")
@@ -899,33 +896,26 @@ object SimilarityQueries {
   private def trainedCellsL3Build(s: SparkSession, v: DataFrame,
       grandSrc: DataFrame, superSrc: DataFrame, childSrc: DataFrame,
       probe2: Boolean, adaptive: Boolean = false): DataFrame = {
-    val grandSeeds = grandSrc
-      .orderBy("vec_id").collect()
-      .map(r => r.getLong(0) -> r.getSeq[Long](1).toArray)
-    require(grandSeeds.nonEmpty, "trainedCellsL3: no grand seeds")
+    val grandSeeds = seedBook(grandSrc)
+    require(grandSeeds._1.nonEmpty, "trainedCellsL3: no grand seeds")
     TrainedBuildStats.lastRoute = "dist3"
-    TrainedBuildStats.lastDriverSeeds = grandSeeds.length
-    val bcG = s.sparkContext.broadcast(
-      (grandSeeds.map(_._1), grandSeeds.map(_._2)))
-    val sblocks = graft.ScratchCache.scratch(
+    TrainedBuildStats.lastDriverSeeds = grandSeeds._1.length
+    val bcG = s.sparkContext.broadcast(grandSeeds)
+    val sblocks = graft.ScratchCache.scratch(seedBlocks(
       superSrc
         .selectExpr("vec_id AS sid", "qv AS sv")
         .select(col("sid"), col("sv"),
-          joinKey(superArgmin(bcG, col("sv"))).as("sgrand"))
-        .groupBy("sgrand")
-        .agg(sort_array(collect_list(struct(col("sid"), col("sv"))))
-          .as("sblock")))
-    val cblocks = graft.ScratchCache.scratch(
+          joinKey(superArgmin(bcG, col("sv"))).as("sgrand")),
+      Seq("sgrand"), "sid", "sv", "sblock"))
+    val cblocks = graft.ScratchCache.scratch(seedBlocks(
       childSrc
         .selectExpr("vec_id AS cid", "qv AS cv")
         .select(col("cid"), col("cv"),
           joinKey(superArgmin(bcG, col("cv"))).as("cgrand"))
         .join(sblocks.hint("SHUFFLE_HASH"), col("cgrand") === col("sgrand"))
         .select(col("cid"), col("cv"),
-          joinKey(blockArgmin(col("cv"), col("sblock"))).as("csuper"))
-        .groupBy("csuper")
-        .agg(sort_array(collect_list(struct(col("cid"), col("cv"))))
-          .as("cblock")))
+          joinKey(blockArgmin(col("cv"), col("sblock"))).as("csuper")),
+      Seq("csuper"), "cid", "cv", "cblock"))
     // BEAMED descent: each row descends its TWO nearest grands, and
     // within each grand's super block its L3SuperBeam nearest supers
     // (ONE ChildBlockTopKD scan per grand, exploded), then keeps the
@@ -1439,6 +1429,68 @@ object SimilarityQueries {
       asCorpus(e.filter(col("vec_id") % 10 =!= 0), "cell"),
       "arrival_id", Seq("cell"), Seq("cell"))
 
+  /** The STREAMING served-index ingest body shared by
+    * q_stream_ann_ingest (two-level book) and q_stream_ann_ingest_l3
+    * (three-level book): the existing rows of the book's cell frame
+    * `e` (vec_id % 10 <> 0) are written PARTITIONED BY cell under
+    * `<scratch>/<name>/<corpus tag>`, the arrivals (vec_id % 10 = 0)
+    * land as an unbounded file stream in 3 key-disjoint chunks
+    * (maxFilesPerTrigger=1 → 3 real triggers), and each micro-batch
+    * probes ONLY its arrivals' home cells — a partition-pruned read of
+    * the served table, per-batch cost ∝ batch size — appending its
+    * top-3 rows. Arrival batches are key-disjoint, so the appended
+    * union equals [[servedIngestProbe]]'s one-shot batch query. */
+  private def servedStreamProbe(s: SparkSession, d: String, name: String,
+      e: DataFrame): DataFrame = {
+    import org.apache.spark.sql.streaming.Trigger
+    val tag = new java.io.File(d).getName
+    val root = s"${graft.ProcScratch.base}/$name/$tag"
+    val watch = s"$root/_arrivals"
+    val fs = new org.apache.hadoop.fs.Path(root)
+      .getFileSystem(s.sparkContext.hadoopConfiguration)
+    fs.delete(new org.apache.hadoop.fs.Path(root), true)
+    // the SERVED table: existing rows, one directory per cell
+    e.filter(col("vec_id") % 10 =!= 0)
+      .select("vec_id", "embedding", "n2", "cell")
+      .write.partitionBy("cell").parquet(s"$root/corpus")
+    // the arrival feed: 3 key-disjoint chunks (vec_id/10 mod 3),
+    // staged by ONE partitioned write (r13: was 3 coalesce(1) jobs
+    // over a persisted frame; the chunk column is write-layout
+    // only — partitionBy drops it from the file bytes, and chunk
+    // content is the identical key predicate)
+    graft.sources.Sources.stageChunks(
+      e.filter(col("vec_id") % 10 === 0)
+        .select("vec_id", "embedding", "n2", "cell"),
+      expr("(vec_id div 10) % 3"), 3, s"$root/_arr_stage", watch, "arr")
+    val arrSchema = s.read.parquet(watch).schema
+    // hoisted OUT of the trigger body (r13): the served table is
+    // immutable across triggers, so its directory listing + schema
+    // inference need to run once, not once per micro-batch; the
+    // per-batch cell filter below still partition-prunes this frame
+    val corpusBase = s.read.parquet(s"$root/corpus")
+      .withColumn("cell", col("cell").cast("long"))
+    val q = s.readStream.schema(arrSchema)
+      .option("maxFilesPerTrigger", "1").parquet(watch)
+      .writeStream
+      .option("checkpointLocation", s"$root/_checkpoint")
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        // bounded collect: the batch's distinct home cells — the
+        // partition-pruning predicate for the served-table scan
+        val cells = batch.select("cell").distinct()
+          .collect().map(_.getLong(0))
+        val corpus = asCorpus(
+          corpusBase.filter(col("cell").isin(cells: _*)), "cell")
+        cosineTopKRows(asProbes(batch, "arrival_id", "cell"), corpus,
+            "arrival_id", Seq("cell"), Seq("cell"))
+          .write.mode("append").parquet(s"$root/out")
+        ()
+      }
+      .trigger(Trigger.AvailableNow())
+      .start()
+    q.awaitTermination()
+    s.read.parquet(s"$root/out").orderBy("arrival_id", "rn")
+  }
+
   /** The served-index DELETE body shared by q_ann_delete,
     * q_ann_delete_l3 and the facade arms: the index lives as a
     * versioned KeyedTable, a delete batch (vec_id % 7 = 0) lands via
@@ -1696,20 +1748,12 @@ object SimilarityQueries {
       .orderBy("bucket", "vec_id").collect()
     TrainedBuildStats.lastRoute = "lsh-broadcast"
     TrainedBuildStats.lastDriverSeeds = seedRows.length
-    val books: Map[Long, (Array[Long], Array[Array[Long]],
-        Array[Array[Long]], Array[Array[Array[Long]]])] =
+    // per bucket: children ascending by vec_id (the collect's ORDER
+    // BY), then the shared rank book (functions.Codebook)
+    val books: Map[Long, TwoLevelBook] =
       seedRows.groupBy(_.getLong(0)).map { case (bucket, rows) =>
-        // children sorted ascending by vec_id (the collect's ORDER BY);
-        // supers = every ⌈√k⌉-th child seed, ids ascending; grouping
-        // through the shared tie-law builder (functions.Codebook)
-        val children = rows.map(r =>
-          r.getLong(1) -> r.getSeq[Long](2).toArray)
-        val k = children.length
-        val sb = (1 to 256).find(z => z * z >= k).getOrElse(256)
-        val supers = children.zipWithIndex.collect {
-          case (c, j) if j % sb == 0 => c
-        }
-        bucket -> graft.functions.Codebook.group(children, supers)
+        bucket -> Codebook.rankBook(
+          (rows.map(_.getLong(1)), rows.map(_.getSeq[Long](2).toArray)))
       }
     val bc = s.sparkContext.broadcast(books)
     ScratchCache.scratch(
@@ -1766,19 +1810,17 @@ object SimilarityQueries {
       .orderBy("bucket", "cid").collect()
     TrainedBuildStats.lastRoute = "lsh-dist"
     TrainedBuildStats.lastDriverSeeds = superRows.length
-    val superMap: Map[Long, (Array[Long], Array[Array[Long]])] =
+    val superMap: Map[Long, SeedBook] =
       superRows.groupBy(_.getLong(0)).map { case (b, rows) =>
         // ascending sid order — the collect's ORDER BY; the kernel's
         // strict-< scan then ties to the smallest id
         b -> (rows.map(_.getLong(1)), rows.map(_.getSeq[Long](2).toArray))
       }
     val bcS = s.sparkContext.broadcast(superMap)
-    val blocks = ScratchCache.scratch(seeds
+    val blocks = ScratchCache.scratch(seedBlocks(seeds
       .select(col("bucket").as("bbucket"), col("cid"), col("cv"),
-        lshSuper(bcS, col("bucket"), col("cv")).as("csuper"))
-      .groupBy("bbucket", "csuper")
-      .agg(sort_array(collect_list(struct(col("cid"), col("cv"))))
-        .as("block")))
+        lshSuper(bcS, col("bucket"), col("cv")).as("csuper")),
+      Seq("bbucket", "csuper"), "cid", "cv", "block"))
     // INNER join is total over the hot mass: a super is its own nearest
     // super (supers ⊆ children of the same bucket), so every routed
     // (bucket, rsuper) has a non-empty block
@@ -1934,15 +1976,13 @@ object SimilarityQueries {
         ivfCell2(col("embedding"), NCells).cast("int").as("cell2")))
   }
 
-  /** Per-subspace flat broadcast-argmin books over a codebook
-    * — the r12 replacement for the literal [[pqCidExpr]] at the
-    * 16-code family's two hot call sites (train assignment + encode):
-    * the literal form is an interpreted higher-order-function pile
-    * evaluated per row (measured ~1.7 ms/row on the 128-task encode
-    * stage), while [[graft.functions.SuperArgminBroadcast]] is the
-    * same exact-integer (d2, ascending-id) first-min law in compiled
-    * form — the device pq256Est already uses, property-tested against
-    * the naive mirror in ArgminKernelProps. */
+  /** Per-subspace flat broadcast-argmin books over a codebook, for
+    * the 16-code family's two hot call sites (train assignment +
+    * encode): [[graft.functions.SuperArgminBroadcast]] is the
+    * exact-integer (d2, ascending-id) first-min law in compiled form
+    * (r12 measured the literal centroid expression it replaced at
+    * ~1.7 ms/row on the 128-task encode stage), property-tested
+    * against the naive mirror in ArgminKernelProps. */
   private def pqArgminBooks(s: SparkSession,
       book: Int => Seq[(Int, Seq[Long])]): IndexedSeq[Broadcast[SeedBook]] =
     (0 until PqSubSpaces).map { ss =>
@@ -1960,26 +2000,20 @@ object SimilarityQueries {
   private def pqArgmin(book: Broadcast[SeedBook], ss: Int): Column =
     superArgmin(book, pqSub(ss)).cast("int")
 
-  /** Map-side first-position-argmin code expression for subspace `ss`
-    * under centroid literals (cid-ascending dists array → ties take the
-    * smallest cid). */
-  private def pqCidExpr(cents: Seq[(Int, Seq[Long])], ss: Int): String = {
-    val sub = s"slice(v, ${ss * PqSubDims + 1}, $PqSubDims)"
-    val dists = cents
-      .map { case (_, c) =>
-        SparkSql.dist2Big(sub, c.mkString("array(", "L,", "L)")) }
-      .mkString("array(", ",", ")")
-    val cids = cents.map(_._1).mkString("array(", ",", ")")
-    s"element_at($cids, CAST(array_position($dists, array_min($dists)) AS INT))"
-  }
-
   /** Learn the per-subspace PQ codebooks: seeds = subvectors of
     * vec_id 0..PqCodes-1, then ONE Lloyd round — map-side assignment
-    * against seed literals plus a single map-combinable (ss, cid, dim)
+    * through the seed books plus a single map-combinable (ss, cid, dim)
     * update bounded at 4×16×16 rows. The driver holds only the
     * codebook (the broadcast-variable pattern, as in q_kmeans). */
   private[graft] def pqLearnBook(v: DataFrame,
-      nCodes: Int = PqCodes): Int => Seq[(Int, Seq[Long])] = {
+      nCodes: Int = PqCodes): Int => Seq[(Int, Seq[Long])] =
+    pqLloyd(v, v, nCodes)
+
+  /** [[pqLearnBook]]'s Lloyd round with the seeds read from `v` and the
+    * round run over `train` — the whole corpus, or [[pq256Est]]'s
+    * bounded sample. */
+  private def pqLloyd(v: DataFrame, train: DataFrame,
+      nCodes: Int): Int => Seq[(Int, Seq[Long])] = {
     val seedRows = v.filter(col("vec_id") < nCodes)
       .select("vec_id", "v").collect().sortBy(_.getLong(0))
     val seeds: Int => Seq[(Int, Seq[Long])] = ss => seedRows.toSeq.map { r =>
@@ -1988,7 +2022,7 @@ object SimilarityQueries {
     }
     val books = pqArgminBooks(v.sparkSession, seeds)
     val perSs = (0 until PqSubSpaces).map { ss =>
-      v.select(pqArgmin(books(ss), ss).as("cid"), pqSub(ss).as("vs"))
+      train.select(pqArgmin(books(ss), ss).as("cid"), pqSub(ss).as("vs"))
         .select(lit(ss).as("ss"), col("cid"),
           posexplode(col("vs")).as(Seq("dim", "x")))
     }
@@ -2215,54 +2249,17 @@ object SimilarityQueries {
     val v = ScratchCache.scratch(v0)
     val n = v.count()
     val st = math.max(1L, (n + PqTrainCap - 1) / PqTrainCap)
-    val seedRows = v.filter(col("vec_id") < PqCodes256)
-      .select("vec_id", "v").collect().sortBy(_.getLong(0))
-    val seeds: Int => Seq[(Int, Seq[Long])] = ss => seedRows.toSeq.map { r =>
-      (r.getLong(0).toInt,
-        r.getSeq[Long](1).slice(ss * PqSubDims, (ss + 1) * PqSubDims))
-    }
-    // ONE Lloyd round on the bounded sample. Assignment runs
-    // through the flat broadcast-argmin KERNEL (SuperArgminBroadcast
-    // — identical (d2, ascending-id) first-min law as the literal
-    // pqCidExpr and the oracle's a1 ROW_NUMBER), not a 256-entry
-    // literal expression: at k=256 the literal form is a ~40 KB
-    // Catalyst tree per subspace whose compile alone dominated the
-    // fixture wall (measured 12.7 s vs 3.1 s in DuckDB before the
-    // swap).
-    val sample = v.filter(expr(s"vec_id % $st = 0"))
-    val seedBooks = pqArgminBooks(s, seeds)
-    val perSs = (0 until PqSubSpaces).map { ss =>
-      sample.select(
-          coalesce(superArgmin(seedBooks(ss), pqSub(ss)), lit(-1L))
-            .cast("int").as("cid"),
-          pqSub(ss).as("vs"))
-        .select(lit(ss).as("ss"), col("cid"),
-          posexplode(col("vs")).as(Seq("dim", "x")))
-    }
-    val c1 = perSs.reduce(_ unionByName _)
-      .groupBy("ss", "cid", "dim")
-      .agg(sum("x").as("sx"), count(lit(1)).as("n"))
-      .selectExpr("ss", "cid", "dim", "sx div n AS c")
-      .collect()
-    val bookMap = c1.groupBy(_.getInt(0)).map { case (ss, rows) =>
-      ss -> rows.groupBy(_.getInt(1)).map { case (cid, rs) =>
-        cid -> rs.sortBy(_.getInt(2)).map(_.getLong(3)).toSeq
-      }.toSeq.sortBy(_._1)
-    }
-    val book: Int => Seq[(Int, Seq[Long])] = bookMap(_)
-    // TWO-LEVEL routed encode: one broadcast book per subspace,
-    // same rank-strided supers + shared tie law as every trained
-    // codebook in this file (functions.Codebook)
+    // ONE Lloyd round of the 256 seeds on the bounded sample, through
+    // the flat broadcast-argmin kernel (SuperArgminBroadcast, the
+    // oracle's a1 ROW_NUMBER law) — a 256-entry literal expression was
+    // a ~40 KB Catalyst tree per subspace whose compile alone dominated
+    // the fixture wall (measured 12.7 s vs 3.1 s in DuckDB)
+    val book = pqLloyd(v, v.filter(expr(s"vec_id % $st = 0")), PqCodes256)
+    // TWO-LEVEL routed encode: one rank book per subspace, the shared
+    // construction of every trained codebook (functions.Codebook)
     val books = (0 until PqSubSpaces).map { ss =>
-      val children = book(ss)
-        .map { case (cid, c) => cid.toLong -> c.toArray }.toArray
-      val sb = (1 to 256).find(z => z * z >= children.length)
-        .getOrElse(256)
-      val supers = children.zipWithIndex.collect {
-        case (c, j) if j % sb == 0 => c
-      }
-      s.sparkContext.broadcast(
-        graft.functions.Codebook.group(children, supers))
+      s.sparkContext.broadcast(Codebook.rankBook(
+        (book(ss).map(_._1.toLong).toArray, book(ss).map(_._2.toArray).toArray)))
     }
     val codeCols = (0 until PqSubSpaces).map(ss =>
       trainedCell(books(ss), pqSub(ss)).cast("int").as(s"code$ss"))
@@ -2306,9 +2303,14 @@ object SimilarityQueries {
   }
 
   private[graft] def sq8Est(s: SparkSession, d: String): DataFrame =
-    sq8EstFrom(s, ScratchCache.scratch(trainedCells(s, d)
-      .selectExpr("vec_id",
-        s"${SparkSql.quantVec("embedding", 1000000L)} AS v", "cell")))
+    sq8EstFrom(s, quantized(trainedCells(s, d)))
+
+  /** (vec_id, v, cell): a book's cell frame with each row's
+    * 1e-6-quantized vector, scratch-cached — the input of every
+    * PQ/SQ8 estimator over a trained book. */
+  private def quantized(cells: DataFrame): DataFrame =
+    ScratchCache.scratch(cells.selectExpr("vec_id",
+      s"${SparkSql.quantVec("embedding", 1000000L)} AS v", "cell"))
 
   /** DuckDB twin of [[sq8EstFrom]] over the trained cells — ends in
     * `est(query_id, vec_id, est_d2)` with `v(vec_id, v)` in scope, the
@@ -2793,68 +2795,14 @@ object SimilarityQueries {
     // production write path of the clustered-corpus family, now under
     // the oracle as one declared query instead of only a spec
     // (TrainedWriteSpec proves the pruning mechanics; this proves the
-    // composed micro-batch SEMANTICS): the existing corpus is written
-    // PARTITIONED BY its trained cell (cells are stable — the codebook
-    // trains on existing rows only, q_ann_incremental_trained's
-    // seedWhere contract), the arrival feed lands as an unbounded file
-    // stream (maxFilesPerTrigger=1 → 3 real triggers), and each
-    // micro-batch probes ONLY its arrivals' home cells — a
-    // partition-pruned read of the served table, per-batch cost
-    // ∝ batch size at any corpus size — appending its top-3 rows.
-    // Arrival batches are key-disjoint, so per-arrival top-3 completes
-    // within one batch and the appended union EQUALS the one-shot
-    // batch query: SAME oracle as q_ann_incremental_trained.
+    // composed micro-batch SEMANTICS, [[servedStreamProbe]]). Cells are
+    // stable — the codebook trains on existing rows only,
+    // q_ann_incremental_trained's seedWhere contract — and the appended
+    // union EQUALS the one-shot batch query: SAME oracle as
+    // q_ann_incremental_trained.
     "q_stream_ann_ingest" -> QueryDef(
-      (s, d) => {
-        import org.apache.spark.sql.streaming.Trigger
-        val tag = new java.io.File(d).getName
-        val root = s"${graft.ProcScratch.base}/stream_ann/$tag"
-        val watch = s"$root/_arrivals"
-        val fs = new org.apache.hadoop.fs.Path(root)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        fs.delete(new org.apache.hadoop.fs.Path(root), true)
-        val e = trainedCells(s, d, seedWhere = "vec_id % 10 <> 0")
-        // the SERVED table: existing rows, one directory per cell
-        e.filter(col("vec_id") % 10 =!= 0)
-          .select("vec_id", "embedding", "n2", "cell")
-          .write.partitionBy("cell").parquet(s"$root/corpus")
-        // the arrival feed: 3 key-disjoint chunks (vec_id/10 mod 3),
-        // staged by ONE partitioned write (r13: was 3 coalesce(1) jobs
-        // over a persisted frame; the chunk column is write-layout
-        // only — partitionBy drops it from the file bytes, and chunk
-        // content is the identical key predicate)
-        graft.sources.Sources.stageChunks(
-          e.filter(col("vec_id") % 10 === 0)
-            .select("vec_id", "embedding", "n2", "cell"),
-          expr("(vec_id div 10) % 3"), 3, s"$root/_arr_stage", watch, "arr")
-        val arrSchema = s.read.parquet(watch).schema
-        // hoisted OUT of the trigger body (r13): the served table is
-        // immutable across triggers, so its directory listing + schema
-        // inference need to run once, not once per micro-batch; the
-        // per-batch cell filter below still partition-prunes this frame
-        val corpusBase = s.read.parquet(s"$root/corpus")
-          .withColumn("cell", col("cell").cast("long"))
-        val q = s.readStream.schema(arrSchema)
-          .option("maxFilesPerTrigger", "1").parquet(watch)
-          .writeStream
-          .option("checkpointLocation", s"$root/_checkpoint")
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            // bounded collect: the batch's distinct home cells — the
-            // partition-pruning predicate for the served-table scan
-            val cells = batch.select("cell").distinct()
-              .collect().map(_.getLong(0))
-            val corpus = asCorpus(
-              corpusBase.filter(col("cell").isin(cells: _*)), "cell")
-            cosineTopKRows(asProbes(batch, "arrival_id", "cell"), corpus,
-                "arrival_id", Seq("cell"), Seq("cell"))
-              .write.mode("append").parquet(s"$root/out")
-            ()
-          }
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        s.read.parquet(s"$root/out").orderBy("arrival_id", "rn")
-      },
+      (s, d) => servedStreamProbe(s, d, "stream_ann",
+        trainedCells(s, d, seedWhere = "vec_id % 10 <> 0")),
       duckIncrementalTrainedSql),
 
     // DELETES on the served ANN index (r10, the r09 verdict's item 5):
@@ -3065,54 +3013,11 @@ object SimilarityQueries {
       duckIncrementalL3Sql),
 
     // STREAMING ingest on the served L3 index — q_stream_ann_ingest's
-    // micro-batch semantics (served table partitioned by cell, arrival
-    // file stream, per-batch home-cell-pruned probe, append) with the
-    // THREE-level book underneath. Arrival batches are key-disjoint,
-    // so the appended union equals the one-shot batch query: same
-    // oracle as q_ann_incremental_l3.
+    // body ([[servedStreamProbe]]) with the THREE-level book
+    // underneath: same oracle as q_ann_incremental_l3.
     "q_stream_ann_ingest_l3" -> QueryDef(
-      (s, d) => {
-        import org.apache.spark.sql.streaming.Trigger
-        val tag = new java.io.File(d).getName
-        val root = s"${graft.ProcScratch.base}/stream_ann_l3/$tag"
-        val watch = s"$root/_arrivals"
-        val fs = new org.apache.hadoop.fs.Path(root)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        fs.delete(new org.apache.hadoop.fs.Path(root), true)
-        val e = trainedCellsL3Inc(s, d, "vec_id % 10 <> 0")
-        e.filter(col("vec_id") % 10 =!= 0)
-          .select("vec_id", "embedding", "n2", "cell")
-          .write.partitionBy("cell").parquet(s"$root/corpus")
-        // one partitioned write stages all 3 key-disjoint chunks — the
-        // q_stream_ann_ingest staging treatment (r13)
-        graft.sources.Sources.stageChunks(
-          e.filter(col("vec_id") % 10 === 0)
-            .select("vec_id", "embedding", "n2", "cell"),
-          expr("(vec_id div 10) % 3"), 3, s"$root/_arr_stage", watch, "arr")
-        val arrSchema = s.read.parquet(watch).schema
-        // hoisted corpus read — one listing/inference for all triggers
-        // (q_stream_ann_ingest's rationale)
-        val corpusBase = s.read.parquet(s"$root/corpus")
-          .withColumn("cell", col("cell").cast("long"))
-        val q = s.readStream.schema(arrSchema)
-          .option("maxFilesPerTrigger", "1").parquet(watch)
-          .writeStream
-          .option("checkpointLocation", s"$root/_checkpoint")
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            val cells = batch.select("cell").distinct()
-              .collect().map(_.getLong(0))
-            val corpus = asCorpus(
-              corpusBase.filter(col("cell").isin(cells: _*)), "cell")
-            cosineTopKRows(asProbes(batch, "arrival_id", "cell"), corpus,
-                "arrival_id", Seq("cell"), Seq("cell"))
-              .write.mode("append").parquet(s"$root/out")
-            ()
-          }
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        s.read.parquet(s"$root/out").orderBy("arrival_id", "rn")
-      },
+      (s, d) => servedStreamProbe(s, d, "stream_ann_l3",
+        trainedCellsL3Inc(s, d, "vec_id % 10 <> 0")),
       duckIncrementalL3Sql),
 
     // DELETES on the served L3 index — q_ann_delete's contract
@@ -3303,9 +3208,7 @@ object SimilarityQueries {
     // a query reads its cell's files + 4×16 lookup rows.
     "q_ann_ivfpq_trained" -> QueryDef(
       (s, d) => {
-        val v = ScratchCache.scratch(trainedCells(s, d)
-          .selectExpr("vec_id",
-            s"${SparkSql.quantVec("embedding", 1000000L)} AS v", "cell"))
+        val v = quantized(trainedCells(s, d))
         // PQ code count stays CONSTANT here — r10 tried the nlist law
         // (k = ⌈N/125⌉ clamped 256) and the 10× stress measured the
         // consequence immediately: literal-scan encoding is O(N·k·d),
@@ -3340,9 +3243,7 @@ object SimilarityQueries {
     // q_ann_ivfpq_trained's ADC shape: same-cell candidates, 4
     // byte-code lookups each, broadcast lookup table.
     "q_ann_ivfpq_trained256" -> QueryDef(
-      (s, d) => estTopK(pq256Est(s, trainedCells(s, d)
-        .selectExpr("vec_id",
-          s"${SparkSql.quantVec("embedding", 1000000L)} AS v", "cell"))),
+      (s, d) => estTopK(pq256Est(s, quantized(trainedCells(s, d)))),
       duckEstTopK(duckPq256EstCtes(duckTrainedEbCte, "eb"))),
 
     // RESIDUAL encoding on the TRAINED-256 book (r11) — the FAISS
@@ -3426,9 +3327,7 @@ object SimilarityQueries {
     // matched candidate mass.
     "q_ann_ivfpq_rerank" -> QueryDef(
       (s, d) => {
-        val v = ScratchCache.scratch(trainedCells(s, d)
-          .selectExpr("vec_id",
-            s"${SparkSql.quantVec("embedding", 1000000L)} AS v", "cell"))
+        val v = quantized(trainedCells(s, d))
         pqRerankTopK(v, pq256Est(s, v))
       },
       duckPqRerankSql(duckPq256EstCtes(duckTrainedEbCte, "eb"))),
@@ -3452,8 +3351,7 @@ object SimilarityQueries {
         val e = ScratchCache.scratch(trainedAdaptiveCells(s, d,
           AdaptNSupers, AdaptMaxProbes, AdaptEpsNum, AdaptEpsDen,
           interleave = true))
-        val v = ScratchCache.scratch(e.selectExpr("vec_id",
-          s"${SparkSql.quantVec("embedding", 1000000L)} AS v", "cell"))
+        val v = quantized(e)
         val qprobes = e.filter(col("vec_id") < PqQueries)
           .selectExpr("vec_id AS query_id", "explode(probes) AS qcell")
         pqRerankTopK(v, pq256Est(s, v, Some(qprobes)))
@@ -3478,9 +3376,7 @@ object SimilarityQueries {
     // and oracle-gated.
     "q_ann_ivfpq_l3_rerank" -> QueryDef(
       (s, d) => {
-        val v = ScratchCache.scratch(trainedCellsL3(s, d)
-          .selectExpr("vec_id",
-            s"${SparkSql.quantVec("embedding", 1000000L)} AS v", "cell"))
+        val v = quantized(trainedCellsL3(s, d))
         pqRerankTopK(v, pq256Est(s, v))
       },
       duckPqRerankSql(duckPq256EstCtes(duckTrainedL3Cte, "ebl3"))),
@@ -3512,9 +3408,7 @@ object SimilarityQueries {
     // byte-coded scan, exact top-R re-score, exact final ordering.
     "q_ann_ivf_sq8_rerank" -> QueryDef(
       (s, d) => {
-        val v = ScratchCache.scratch(trainedCells(s, d)
-          .selectExpr("vec_id",
-            s"${SparkSql.quantVec("embedding", 1000000L)} AS v", "cell"))
+        val v = quantized(trainedCells(s, d))
         pqRerankTopK(v, sq8EstFrom(s, v))
       },
       duckPqRerankSql(duckSq8EstCtes)),

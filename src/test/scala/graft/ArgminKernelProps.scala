@@ -1,10 +1,14 @@
 package graft
 
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.scalacheck.{Gen, Properties}
 import org.scalacheck.Prop.forAll
 
-import graft.functions.{BucketedArgminBroadcast, TwoLevelArgmin2Broadcast, TwoLevelArgminBroadcast, TwoLevelArgminH2Broadcast}
+import graft.functions.{BucketSuperArgminBroadcast, BucketedArgminBroadcast,
+  ChildBlockArgmin, ChildBlockArgmin2, ChildBlockTopKD, SuperArgmin2Broadcast,
+  SuperArgminBroadcast, SuperTopKBroadcast, TwoLevelArgmin2Broadcast,
+  TwoLevelArgminBroadcast, TwoLevelArgminH2Broadcast, TwoLevelProbesBroadcast}
 
 /** ScalaCheck properties for the broadcast-codebook argmin kernels,
   * against a naive reference argmin — the tie totality the DuckDB
@@ -187,5 +191,119 @@ object ArgminKernelProps extends Properties("ArgminKernels") {
       }
       bc.destroy()
       ok
+    }
+
+  // ---- flat seed lists and joined blocks ------------------------------
+
+  /** A seed list sorted ascending by id — the order every builder
+    * feeds the flat and block kernels. */
+  private def sorted(seeds: List[(Long, Array[Long])])
+      : (Array[Long], Array[Array[Long]]) = {
+    val s = seeds.sortBy(_._1)
+    (s.map(_._1).toArray, s.map(_._2).toArray)
+  }
+
+  /** The reference (d2, id) ranking of a seed list: ids nearest first. */
+  private def ranked(x: Array[Long], ids: Array[Long],
+      vecs: Array[Array[Long]]): Seq[Long] =
+    ids.zip(vecs).map { case (id, v) => (d2(x, v), id) }.sorted.map(_._2).toSeq
+
+  /** `array<struct<id, vec>>` as a joined block arrives at the kernel. */
+  private def block(ids: Array[Long], vecs: Array[Array[Long]]): ArrayData =
+    new GenericArrayData(ids.zip(vecs).map { case (id, v) =>
+      InternalRow(id, ArrayData.toArrayData(v)): Any })
+
+  private val blockGen: Gen[List[(Long, Array[Long])]] =
+    Gen.oneOf(Gen.const(Nil), seedsGen)
+
+  property("super argmin = smallest (d2, id)") =
+    forAll(seedsGen, vec) { (seeds, x) =>
+      val (ids, vecs) = sorted(seeds)
+      val bc = SparkTestSession.spark.sparkContext.broadcast((ids, vecs))
+      val got = SuperArgminBroadcast(bc, null).argmin(ArrayData.toArrayData(x))
+      bc.destroy()
+      got == refArgmin(x, ids, vecs)
+    }
+
+  property("super argmin2: second of the (d2, id) ranking, home on one super") =
+    forAll(seedsGen, vec) { (seeds, x) =>
+      val (ids, vecs) = sorted(seeds)
+      val bc = SparkTestSession.spark.sparkContext.broadcast((ids, vecs))
+      val got = SuperArgmin2Broadcast(bc, null).argmin2(ArrayData.toArrayData(x))
+      bc.destroy()
+      val r = ranked(x, ids, vecs)
+      got == (if (ids.length < 2) r.head else r(1))
+    }
+
+  property("super top-K: the first min(k, n) of the (d2, id) ranking") =
+    forAll(seedsGen, vec, Gen.choose(-1, 14)) { (seeds, x, k) =>
+      val (ids, vecs) = sorted(seeds)
+      val bc = SparkTestSession.spark.sparkContext.broadcast((ids, vecs))
+      val got = SuperTopKBroadcast(k, bc, null)
+        .topk(ArrayData.toArrayData(x)).toLongArray().toSeq
+      bc.destroy()
+      got == ranked(x, ids, vecs).take(math.max(k, 0))
+    }
+
+  property("block argmin = smallest (d2, id) in place; -1 on an empty block") =
+    forAll(blockGen, vec) { (seeds, x) =>
+      val (ids, vecs) = sorted(seeds)
+      val got = ChildBlockArgmin(null, null)
+        .argmin(ArrayData.toArrayData(x), block(ids, vecs))
+      got == (if (ids.isEmpty) -1L else refArgmin(x, ids, vecs))
+    }
+
+  property("block argmin2: rn=2 of the block ranking, single-child home, -1 empty") =
+    forAll(blockGen, vec) { (seeds, x) =>
+      val (ids, vecs) = sorted(seeds)
+      val got = ChildBlockArgmin2(null, null)
+        .argmin2(ArrayData.toArrayData(x), block(ids, vecs))
+      val r = ranked(x, ids, vecs)
+      got == (if (r.isEmpty) -1L else if (r.length < 2) r.head else r(1))
+    }
+
+  property("block top-K carries exact distances in (d2, id) order") =
+    forAll(blockGen, vec, Gen.choose(-1, 14)) { (seeds, x, k) =>
+      val (ids, vecs) = sorted(seeds)
+      val out = ChildBlockTopKD(k, null, null)
+        .topkd(ArrayData.toArrayData(x), block(ids, vecs))
+      val got = (0 until out.numElements()).map { i =>
+        val r = out.getStruct(i, 2); (r.getLong(0), r.getLong(1)) }
+      val want = ids.zip(vecs).map { case (id, v) => (d2(x, v), id) }
+        .sorted.take(math.max(k, 0)).toSeq
+      got == want
+    }
+
+  private val bucketedSupersGen: Gen[Map[Long, List[(Long, Array[Long])]]] = for {
+    nb <- Gen.choose(1, 4)
+    buckets <- Gen.listOfN(nb, Gen.choose(0L, 9L)).map(_.distinct)
+    per <- Gen.listOfN(buckets.length, seedsGen)
+  } yield buckets.zip(per).toMap
+
+  property("bucketed super argmin routes per bucket; absent bucket yields -1") =
+    forAll(bucketedSupersGen, vec, Gen.choose(0L, 9L)) { (books, x, probe) =>
+      val built = books.map { case (b, seeds) => b -> sorted(seeds) }
+      val bc = SparkTestSession.spark.sparkContext.broadcast(built)
+      val got = BucketSuperArgminBroadcast(bc, null, null)
+        .superOf(probe, ArrayData.toArrayData(x))
+      bc.destroy()
+      got == built.get(probe).fold(-1L) { case (ids, vecs) =>
+        refArgmin(x, ids, vecs) }
+    }
+
+  property("adaptive probes: home cell first, distinct, at most maxProbes") =
+    forAll(seedsGen, vec, Gen.choose(1, 4), Gen.choose(1, 5),
+        Gen.choose(1L, 20L), Gen.choose(1L, 10L), Gen.oneOf(false, true)) {
+      (seeds, x, nSupers, maxProbes, epsNum, epsDen, interleave) =>
+        val (sIds, sVecs, cIds, cVecs) = build(seeds)
+        val bc = SparkTestSession.spark.sparkContext
+          .broadcast((sIds, sVecs, cIds, cVecs))
+        val xd = ArrayData.toArrayData(x)
+        val probes = TwoLevelProbesBroadcast(bc, nSupers, maxProbes, epsNum,
+          epsDen, null, interleave).probesOf(xd).toLongArray()
+        val home = TwoLevelArgminBroadcast(bc, null).cellOf(xd)
+        bc.destroy()
+        probes.head == home && probes.distinct.length == probes.length &&
+          probes.length <= maxProbes
     }
 }

@@ -47,6 +47,17 @@ class HarnessSpec extends AnyFunSuite {
     assert(!Harness.breaches(base, "q_a", -1.0))
   }
 
+  test("Bench10x gates only a run on the anchors' base corpus") {
+    assert(Bench10x.anchored("/data/sf0.1"))
+    assert(Bench10x.anchored("/data/sf0.1/"))
+    assert(Bench10x.anchored("sf0.1"))
+    assert(Bench10x.anchored("/data/x/../sf0.1"))
+    assert(!Bench10x.anchored("/data/sf0.01"))
+    assert(!Bench10x.anchored("/data/sf0.10"))
+    assert(!Bench10x.anchored("/data/sf0.1/embeddings.parquet"))
+    assert(!Bench10x.anchored("/"))
+  }
+
   test("the BASELINE parser reads q_ rows and skips headers and bad rows") {
     val f = tempFile(".md")
     java.nio.file.Files.writeString(f.toPath,
