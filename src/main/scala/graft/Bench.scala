@@ -1,5 +1,6 @@
 package graft
 import scala.collection.immutable.ListMap
+import org.apache.spark.metrics.source.CodegenMetrics
 import Harness.{field, fixed, num}
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -38,12 +39,22 @@ object Bench {
     val selected =
       if (args.isEmpty) SparkEntry.queries
       else SparkEntry.queries.view.filterKeys(args(0).split(',').toSet).toMap
+    // classes each query compiles in warm passes 2-3: pass 1 filled the
+    // codegen cache, so a non-zero count is a cache miss or generated
+    // code that differs from run to run
+    var pass = 0
+    val warmClasses = scala.collection.mutable.Map.empty[String, Long]
     def run(q: String): Double = {
       analyzer.setLabel(q)
-      Harness.seconds(selected(q)(spark, sfDir).count())
+      val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val t = Harness.seconds(selected(q)(spark, sfDir).count())
+      if (pass >= 2) warmClasses(q) = warmClasses.getOrElse(q, 0L) +
+        CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
+      t
     }
     val results = Harness.medianOf3(spark, selected.keys.toSeq.sorted,
-      () => analyzer.reset())(run)
+      () => { analyzer.reset(); pass += 1 })(run)
+    val warmCompiled = ListMap.from(warmClasses.toSeq.sortBy(_._1))
     // let the listener bus drain before reading the stage report
     Thread.sleep(1500)
     // Snapshot the stage report, the critical paths (CriticalPathAnalyzer
@@ -151,7 +162,8 @@ object Bench {
     // only the budgeted contract line below.
     val detail = ListMap("metric" -> "total", "value" -> total,
       "value_load_normalized" -> totalNorm, "unit" -> "sec",
-      "queries" -> ListMap.from(gate.reported), "errors" -> errors,
+      "queries" -> ListMap.from(gate.reported),
+      "warm_codegen_classes" -> warmCompiled, "errors" -> errors,
       "remeasured" -> ListMap.from(gate.remeasured.map { case (q, s, i) =>
         q -> ListMap("suite" -> s, "isolated" -> i) }),
       "skew" -> ListMap.from(skewMap.toSeq.sortBy(_._1)

@@ -43,6 +43,25 @@ import org.apache.spark.sql.SparkSession
   *    ~450 distinct whole-stage-codegen units; the default 100-entry
   *    Janino cache evicts everything each pass and every query re-pays
   *    50-200 ms of compilation per stage per run.
+  *  - `spark.sql.artifact.isolation.enabled=false` — every session
+  *    shares the root class loader, so the codegen cache hits across
+  *    stream starts. `CodeGenerator.compile` keys its cache on the
+  *    context class loader AND the code; each `StreamExecution` runs in a
+  *    cloned session with a new session UUID, and under the default
+  *    (isolation on) each clone gets its own artifact state, so its
+  *    tasks run under a fresh class loader and byte-identical code
+  *    compiles again on every start and in every `foreachBatch` body.
+  *    Measured (Spark 4.1.2, one query rerun in one JVM), classes
+  *    compiled per rerun, isolation on → off: q_stream_tumbling 12 → 0
+  *    (224-305 ms of compile → 0), q_stream_cdc 32-34 → 0-6 (the 0-6
+  *    differ from earlier classes only in the codegen stage id AQE
+  *    assigns at run time; 0 with AQE off), q_stream_join 21 → 0,
+  *    q_stream_session 19 → 0. Graft adds no artifacts (no
+  *    `addArtifact`, no `addJar`), so isolation buys it nothing.
+  *    PRODUCTION NOTE: a multi-tenant Spark Connect server needs
+  *    isolation, so that one client's jars and classes stay out of
+  *    another's sessions; this contract is a single-tenant embedded
+  *    session.
   *  - `spark.sql.shuffle.partitions = cpus` — scale-adaptive via
   *    `$SPARK_GRAFT_CPUS` (the driver contract), not a constant; AQE
   *    coalescing stays on (default) for the byte-sized stages.
@@ -91,6 +110,7 @@ object GraftSession {
       .config("spark.ui.enabled", "false")
       .config("spark.local.dir", localDir)
       .config("spark.sql.codegen.cache.maxEntries", "4000")
+      .config("spark.sql.artifact.isolation.enabled", "false")
       .config("spark.sql.constraintPropagation.enabled", "false")
       .config("spark.sql.streaming.checkpoint.fileChecksum.enabled",
         "false")

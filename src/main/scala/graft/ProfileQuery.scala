@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 /** Per-stage profile of ONE declared query on an arbitrary corpus dir —
   * the interactive end of the job-analyzer parity surface
@@ -10,7 +12,10 @@ import org.apache.spark.sql.SparkSession
   * flag fires, THIS is the drill-down that names the stage: wall,
   * task count, max/median task seconds, shuffle bytes, and the skew
   * verdict per stage, for each of `runs` repetitions (stage-cache
-  * timing effects show up as run-to-run differences).
+  * timing effects show up as run-to-run differences). Each pass line
+  * also counts the classes codegen compiled in the pass: after pass 1 a
+  * non-zero count is a codegen-cache miss or generated code that differs
+  * from run to run.
   *
   * Run: `SPARK_GRAFT_CPUS=32 sbt "runMain graft.ProfileQuery q_name
   * [corpusDirOrFactor] [runs] [mode]"`. A bare integer as the second
@@ -50,9 +55,14 @@ object ProfileQuery {
       // count(), not collect(): the drill-down exists for large-corpus
       // flags, where materializing a pair-heavy result on the driver
       // (quadratic in cluster mass at 100x) would OOM the profiler
+      val classes0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val compile0 = CodeGenerator.compileTime
       val (sec, _) = Harness.timed(fn(spark, dir).count())
+      val classes = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - classes0
+      val compileSec = (CodeGenerator.compileTime - compile0) / 1e9
       Thread.sleep(1200) // drain the listener bus
-      println(f"[profile] $name pass $pass: $sec%.2fs on $dir")
+      println(f"[profile] $name pass $pass: $sec%.2fs on $dir, " +
+        f"$classes classes compiled in $compileSec%.3fs")
       analyzer.report().getOrElse(name, Nil).foreach { r =>
         println(f"[profile]   stage ${r.stageId}%4d wall=${r.wallSec}%7.3f " +
           f"tasks=${r.nTasks}%4d max=${r.taskMaxSec}%7.3f " +

@@ -18,6 +18,11 @@ object SparkTestSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
       .config("spark.ui.enabled", "false")
+      // as in GraftSession: streams' cloned sessions share the root class
+      // loader, and the codegen cache holds a whole suite's classes, so a
+      // stream start reuses the classes earlier starts compiled
+      .config("spark.sql.artifact.isolation.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", "4000")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
