@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import scala.collection.immutable.ListMap
 
 import graft.Harness.{field, fixed, num}
-import graft.functions.{cosine, ivfCellH, ivfCellH2, norm2}
+import graft.functions.{BookRoute, cosine, ivfCellH, ivfCellH2, norm2}
 
 /** ANN stress on a DENSITY-SKEWED corpus — closes the r07 honesty gap:
   * every IVF/LSH scale number so far rode the fixture's near-uniform
@@ -82,10 +82,6 @@ object AnnClusteredStress {
     * 0.89/1.01/1.26 at 1×/10×/100× — training on 90% of rows costs
     * nothing once the corpus symmetry is gone). */
   private val L3IncShare = 0.70
-
-  /** The shared driver-seed budget forced below any corpus's seed count:
-    * under it every SIZE SWITCH build takes its dist route. */
-  private val OneSeed = ops.SimilarityQueries.MaxDriverSeedsKey -> "1"
 
   /** The scale verdicts over the per-scale rows (pure; `rows` holds the
     * 1× and factor× rows by tag): candidate mass must grow ~linearly
@@ -492,28 +488,22 @@ object AnnClusteredStress {
         (truth & got).size.toDouble / truth.size
       }
 
-      // adaptive SIZE SWITCH: force the shared budget below this
+      // adaptive SIZE SWITCH: pass a budget below this
       // corpus's c so trainedAdaptiveCells delegates to its DIST
       // route (the relational replay of the probe law over per-block
       // top-K candidates) — the probe ARRAYS must be bit-identical
       // while the driver held only the ~sqrt(c) supers; this was the
       // one remaining driver-growth ceiling in the trained family
-      val (adpSwitchRoute, adpSwitchSeeds, adpSwitchDiff) =
-        GraftSession.withConf(spark, OneSeed) {
-          val adpSwitched = ops.SimilarityQueries.trainedAdaptiveCells(spark,
-            dir, ops.SimilarityQueries.AdaptNSupers,
-            ops.SimilarityQueries.AdaptMaxProbes,
-            ops.SimilarityQueries.AdaptEpsNum,
-            ops.SimilarityQueries.AdaptEpsDen, interleave = true)
-          val adpSwitchRoute = ops.SimilarityQueries.TrainedBuildStats.lastRoute
-          val adpSwitchSeeds =
-            ops.SimilarityQueries.TrainedBuildStats.lastDriverSeeds
-          val adpSwitchDiff = adp.selectExpr("vec_id", "probes AS p1")
-            .join(adpSwitched.selectExpr("vec_id", "probes AS p2"), "vec_id")
-            .filter("p1 <> p2").count() +
-            math.abs(adpSwitched.count() - n)
-          (adpSwitchRoute, adpSwitchSeeds, adpSwitchDiff)
-        }
+      val adpSwitched = ops.SimilarityQueries.trainedAdaptiveCells(spark,
+        dir, ops.SimilarityQueries.AdaptNSupers,
+        ops.SimilarityQueries.AdaptMaxProbes,
+        ops.SimilarityQueries.AdaptEpsNum,
+        ops.SimilarityQueries.AdaptEpsDen, interleave = true, budget = 1)
+      val BookRoute(adpSwitchRoute, adpSwitchSeeds) = BookRoute.of(adpSwitched)
+      val adpSwitchDiff = adp.selectExpr("vec_id", "probes AS p1")
+        .join(adpSwitched.selectExpr("vec_id", "probes AS p2"), "vec_id")
+        .filter("p1 <> p2").count() +
+        math.abs(adpSwitched.count() - n)
       // the 20 PQ queries' margin-law probe rows, kept past adp's
       // lifetime for the full-composition recall rows below
       val pqProbes = adp.filter(col("vec_id") < 20)
@@ -522,27 +512,22 @@ object AnnClusteredStress {
       pqProbes.count()
       adp.unpersist()
 
-      // LSH SIZE SWITCH (r11): force the shared budget below this
+      // LSH SIZE SWITCH (r11): pass a budget below this
       // corpus's hot-seed count so lshRefined delegates to its DIST
       // route (per-bucket supers broadcast, child seeds met as
       // SHUFFLE_HASH blocks) — the (bucket, cell) frames must be
       // bit-identical while the driver held only Σ_b ⌈√k_b⌉ rows;
       // this was the last declared-query build with a
       // growing-with-corpus driver collect (r10 weak finding #2)
-      val (lshSwitchRoute, lshSwitchSeeds, lshSwitchDiff) =
-        GraftSession.withConf(spark, OneSeed) {
-          val lshSwitched = ops.SimilarityQueries.lshRefined(spark, dir, refCap)
-          val lshSwitchRoute = ops.SimilarityQueries.TrainedBuildStats.lastRoute
-          val lshSwitchSeeds =
-            ops.SimilarityQueries.TrainedBuildStats.lastDriverSeeds
-          val lshSwitchDiff = ref
-            .selectExpr("vec_id", "bucket AS lb1", "cell AS lc1")
-            .join(lshSwitched.selectExpr(
-              "vec_id", "bucket AS lb2", "cell AS lc2"), "vec_id")
-            .filter("lb1 <> lb2 OR lc1 <> lc2").count() +
-            math.abs(lshSwitched.count() - n)
-          (lshSwitchRoute, lshSwitchSeeds, lshSwitchDiff)
-        }
+      val lshSwitched = ops.SimilarityQueries.lshRefined(spark, dir, refCap,
+        budget = 1)
+      val BookRoute(lshSwitchRoute, lshSwitchSeeds) = BookRoute.of(lshSwitched)
+      val lshSwitchDiff = ref
+        .selectExpr("vec_id", "bucket AS lb1", "cell AS lc1")
+        .join(lshSwitched.selectExpr(
+          "vec_id", "bucket AS lb2", "cell AS lc2"), "vec_id")
+        .filter("lb1 <> lb2 OR lc1 <> lc2").count() +
+        math.abs(lshSwitched.count() - n)
       // REMOVAL recall — the decision metric of a dedup pass: a row with
       // ANY true lower-id duplicate is removed as long as the blocker
       // finds ANY ONE lower-id duplicate for it (every found pair is a
@@ -711,7 +696,7 @@ object AnnClusteredStress {
       // is the "recall within a stated delta" point: delta = 0) while
       // the driver only ever collects the ⌈√c⌉ super seeds instead of
       // all ≈c child seeds
-      val dist = ops.SimilarityQueries.trainedCellsDist(spark, dir)
+      val dist = ops.SimilarityQueries.trainedCells(spark, dir, budget = 0)
       // mismatches + any row-count delta: the dist build's inner join
       // could silently DROP rows if the supers-subset-of-children
       // invariant broke, and an inner-join equality alone would miss it
@@ -725,27 +710,21 @@ object AnnClusteredStress {
       val distDriverSeeds =
         assigned.filter(pmod(col("vec_id"), lit(ssStride)) === 0).count()
 
-      // the SIZE SWITCH itself (r10): force the driver-seed budget
+      // the SIZE SWITCH itself (r10): pass a driver-seed budget
       // below this corpus's c so trainedCells DELEGATES to the dist
       // build, and assert the switched build is bit-identical on ALL
       // probe columns while the driver held only the ~sqrt(c) supers —
       // the "switch fires and is safe" proof on a corpus big enough to
       // trip it (the fixture suite can only prove it at c=16)
-      val (switchRoute, switchSeeds, switchDiff) =
-        GraftSession.withConf(spark, OneSeed) {
-          val switched = ops.SimilarityQueries.trainedCells(spark, dir,
-            probe2 = true, probe3 = true)
-          val switchRoute = ops.SimilarityQueries.TrainedBuildStats.lastRoute
-          val switchSeeds =
-            ops.SimilarityQueries.TrainedBuildStats.lastDriverSeeds
-          val switchDiff = bal
-            .selectExpr("vec_id", "cell AS c1", "cell2 AS c21", "cell3 AS c31")
-            .join(switched.selectExpr(
-              "vec_id", "cell AS c2", "cell2 AS c22", "cell3 AS c32"), "vec_id")
-            .filter("c1 <> c2 OR c21 <> c22 OR c31 <> c32").count() +
-            math.abs(switched.count() - n)
-          (switchRoute, switchSeeds, switchDiff)
-        }
+      val switched = ops.SimilarityQueries.trainedCells(spark, dir,
+        probe2 = true, probe3 = true, budget = 1)
+      val BookRoute(switchRoute, switchSeeds) = BookRoute.of(switched)
+      val switchDiff = bal
+        .selectExpr("vec_id", "cell AS c1", "cell2 AS c21", "cell3 AS c31")
+        .join(switched.selectExpr(
+          "vec_id", "cell AS c2", "cell2 AS c22", "cell3 AS c32"), "vec_id")
+        .filter("c1 <> c2 OR c21 <> c22 OR c31 <> c32").count() +
+        math.abs(switched.count() - n)
 
       // the THREE-LEVEL quantizer (q_ann_ivf_trained_l3): the routing
       // law past the two-level 2^24-cell cap (constant occupancy dies
@@ -757,8 +736,7 @@ object AnnClusteredStress {
       // only if the recursive subset invariant breaks — gated).
       val l3 = ops.SimilarityQueries.trainedCellsL3(spark, dir,
         probe2 = true, adaptive = true)
-      val l3DriverSeeds =
-        ops.SimilarityQueries.TrainedBuildStats.lastDriverSeeds
+      val l3DriverSeeds = BookRoute.of(l3).driverSeeds
       val l3RowsLost = math.abs(l3.count() - n)
       val l3Counts = l3.groupBy("cell").count()
         .select("count").collect().map(_.getLong(0)).sorted
@@ -852,8 +830,8 @@ object AnnClusteredStress {
       // facade delivered exactly the L3 book's frame — the crossover a
       // 3×10⁹-row user previously had to know to take by hand
       val annAuto = ops.SimilarityQueries.annIndex(spark, dir,
-        probe2 = true, cap = Some(1L))
-      val annAutoBook = ops.SimilarityQueries.AnnIndexStats.lastBook
+        probe2 = true, cap = 1L)
+      val annAutoBook = ops.SimilarityQueries.routedBook(annAuto)
       val annAutoDiff = l3
         .selectExpr("vec_id", "cell AS f1", "cell2 AS f21")
         .join(annAuto.selectExpr(
@@ -867,9 +845,8 @@ object AnnClusteredStress {
       // over the SAME inc build (l3i above). A nonzero diff means the
       // facade's route or its frozen-book contract drifted from the
       // declared per-book serving query.
-      val annIng = ops.SimilarityQueries.annIngest(spark, dir,
-        cap = Some(1L))
-      val annIngBook = ops.SimilarityQueries.AnnIndexStats.lastBook
+      val annIng = ops.SimilarityQueries.annIngest(spark, dir, cap = 1L)
+      val annIngBook = ops.SimilarityQueries.routedBook(annIng)
       val annIngRef = ops.SimilarityQueries.servedIngestProbe(l3i)
       val cmpCols = Seq("arrival_id", "neighbor_id", "rn")
       val annIngDiff =
@@ -910,21 +887,16 @@ object AnnClusteredStress {
       val ndSem = ndPairs(semQnd.join(semCand, col("pcl") === col("ccl")))
       semAll.unpersist()
 
-      // sem SIZE SWITCH (r10): force the shared budget below this
-      // corpus's K so the Lloyd rounds take the DataFrame-centroid
-      // route, and assert the assignment is bit-identical while the
-      // driver held only ~sqrt(K) centroid rows per round
-      val (semSwitchRoute, semSwitchDriver, semSwitchDiff) =
-        GraftSession.withConf(spark, OneSeed) {
-          val semSwitched = ops.ClusteringQueries.semClusters(spark, dir)
-          val semSwitchRoute = ops.ClusteringQueries.SemBuildStats.lastRoute
-          val semSwitchDriver =
-            ops.ClusteringQueries.SemBuildStats.lastDriverCentroids
-          val semSwitchDiff = sem.selectExpr("vec_id", "cluster AS k1")
-            .join(semSwitched.selectExpr("vec_id", "cluster AS k2"), "vec_id")
-            .filter("k1 <> k2").count() + math.abs(semSwitched.count() - n)
-          (semSwitchRoute, semSwitchDriver, semSwitchDiff)
-        }
+      // sem SIZE SWITCH (r10): pass a budget below this corpus's K so
+      // the Lloyd rounds take the DataFrame-centroid route, and assert
+      // the assignment is bit-identical while the driver held only
+      // ~sqrt(K) centroid rows per round
+      val semSwitched = ops.ClusteringQueries.semClusters(spark, dir,
+        budget = 1)
+      val BookRoute(semSwitchRoute, semSwitchDriver) = BookRoute.of(semSwitched)
+      val semSwitchDiff = sem.selectExpr("vec_id", "cluster AS k1")
+        .join(semSwitched.selectExpr("vec_id", "cluster AS k2"), "vec_id")
+        .filter("k1 <> k2").count() + math.abs(semSwitched.count() - n)
 
       def ret(s: Set[(Long, Long)]): Double =
         if (ndTruth.isEmpty) 1.0 else (ndTruth & s).size.toDouble / ndTruth.size

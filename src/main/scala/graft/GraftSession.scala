@@ -99,8 +99,9 @@ object GraftSession {
     else System.getProperty("java.io.tmpdir")
   })
 
-  /** The contract session builder. `shufflePartitions` defaults to the
-    * core count; stress mains pass their own. */
+  /** The contract session builder: `local[cpus]` with
+    * `spark.sql.shuffle.partitions` at the same core count. Stress mains
+    * override settings on top of it through [[Harness.stressSession]]. */
   def builder(): SparkSession.Builder = {
     val c = cpus
     SparkSession.builder()

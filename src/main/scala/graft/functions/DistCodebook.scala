@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{DataType, LongType}
 
 /** SUPER-level routing for the DISTRIBUTED trained codebook
-  * (ops.SimilarityQueries.trainedCellsDist): given a 1e-6-quantized
+  * (ops.SimilarityQueries.trainedCells' dist route): given a 1e-6-quantized
   * vector, return the vec_id of the nearest SUPER seed —
   * [[Codebook.argmin]], the same scan as [[TwoLevelArgminBroadcast]]'s
   * outer level.
@@ -102,7 +102,7 @@ case class ChildBlockArgmin(left: Expression, right: Expression)
   override def prettyName: String = "graft_block_argmin"
 
   /** Executor-side probe; also the codegen entry point. Returns -1 on
-    * an empty block (unreachable through trainedCellsDist's inner join
+    * an empty block (unreachable through the dist route's inner join
     * — a group only exists when a child seed routed to it). */
   def argmin(qv: ArrayData, block: ArrayData): Long = {
     val ci = Codebook.argmin(qv.toLongArray(), block, -1)

@@ -17,9 +17,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   *
   * Cost: O((√c + children-of-super)·d) per row in tight long loops with
   * a running-best early exit, inside whole-stage codegen; the codebook
-  * (bounded by spark.graft.trained.maxDriverSeeds; past the budget
-  * the distributed build takes over) moves once per executor as a
-  * broadcast —
+  * (bounded by the builder's driver-seed budget,
+  * ops.SimilarityQueries.MaxDriverSeeds; past it the distributed build
+  * takes over) moves once per executor as a broadcast —
   * the same device as [[IntervalSlotBroadcast]] and
   * [[SuperArgminBroadcast]]. Reference analog: broadcast edges
   * feeding per-task lookup state

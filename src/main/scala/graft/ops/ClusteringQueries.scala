@@ -188,14 +188,6 @@ object ClusteringQueries {
       trainedCell(bc, col("v")).cast("int").as("cluster"))
   }
 
-  /** Which route the last [[semClusters]] build took and the largest
-    * per-round driver collect it paid — observability for the size
-    * switch (asserted by SemDistSpec and AnnClusteredStress). */
-  private[graft] object SemBuildStats {
-    @volatile var lastRoute: String = ""
-    @volatile var lastDriverCentroids: Int = 0
-  }
-
   /** One centroid UPDATE kept as a DataFrame — the distributed twin of
     * [[update]]: the same map-combinable (cluster, dim) integer sums
     * and `sum div count` floor means, reshaped by a per-cluster
@@ -221,17 +213,17 @@ object ClusteringQueries {
     * (rank-stride over ascending cid), same tie law
     * ([[graft.functions.Codebook]]'s (dist2, id) order) — assignment
     * is bit-identical to [[assignTwoLevel]]'s broadcast book, so the
-    * DuckDB oracle ([[semAssignCte]]) gates both routes unchanged. */
-  private def assignTwoLevelDist(v: DataFrame, cents: DataFrame): DataFrame = {
+    * DuckDB oracle ([[semAssignCte]]) gates both routes unchanged.
+    * `budget` picks [[SimilarityQueries.rankStride]]'s route. */
+  private def assignTwoLevelDist(v: DataFrame, cents: DataFrame,
+      budget: Long): DataFrame = {
     val s = v.sparkSession
     val kCur = cents.count()
     val supers = SimilarityQueries.seedBook(SimilarityQueries.rankStride(s,
         cents.selectExpr("cid AS vec_id", "c AS qv"),
-        Codebook.superStride(kCur), kCur)
+        Codebook.superStride(kCur), kCur, budget)
       .selectExpr("vec_id", "qv"))
     require(supers._1.nonEmpty, s"assignTwoLevelDist: no supers (K=$kCur)")
-    SemBuildStats.lastDriverCentroids =
-      math.max(SemBuildStats.lastDriverCentroids, supers._1.length)
     val bc = s.sparkContext.broadcast(supers)
     val blocks = SimilarityQueries.seedBlocks(cents
       .select(col("cid"), col("c").as("cv"),
@@ -256,10 +248,11 @@ object ClusteringQueries {
     * Driver state (r10 — the r09 verdict's stated ceiling, now a
     * SWITCH like trainedCells'): the default route collects the K
     * updated centroids each Lloyd round (K×64 longs, K ∝ N/250 — a
-    * growing-with-corpus collect past ~10⁶ clusters). Past the shared
-    * driver-seed budget ([[SimilarityQueries.MaxDriverSeedsKey]]) the
-    * build keeps centroids as a DATAFRAME end-to-end: init is a
-    * filter (no collect), the update is [[updateDf]], and assignment
+    * growing-with-corpus collect past ~10⁶ clusters). Past `budget`,
+    * the trained family's driver-seed budget
+    * ([[SimilarityQueries.MaxDriverSeeds]]; 0 forces it), the build
+    * keeps centroids as a DATAFRAME end-to-end: init is a filter (no
+    * collect), the update is [[updateDf]], and assignment
     * is [[assignTwoLevelDist]] (the driver holds ⌈√K⌉ supers only).
     * Assignment is bit-identical between routes, so the oracle is
     * unaffected by which route ran (SemDistSpec pins fixture equality;
@@ -267,29 +260,21 @@ object ClusteringQueries {
     * diff). Routing cost is already covered either way: √K·d per row
     * stays below the 250·d within-block pair cost until far past the
     * switch point. */
-  private[graft] def semClusters(s: SparkSession, d: String): DataFrame = {
+  private[graft] def semClusters(s: SparkSession, d: String,
+      budget: Long = SimilarityQueries.MaxDriverSeeds): DataFrame = {
     val v = ScratchCache.scratch(Tables.embeddingsParallel(s, d)
       .selectExpr("vec_id", s"${quantCol(SparkSql)} AS v"))
     val k = adaptiveSemK(v.count())
-    val budget = s.conf.get(SimilarityQueries.MaxDriverSeedsKey,
-      SimilarityQueries.DefaultMaxDriverSeeds.toString).toInt
     if (k > budget) {
-      SemBuildStats.lastRoute = "dist"
-      SemBuildStats.lastDriverCentroids = 0
       var cents = ScratchCache.scratch(v.filter(col("vec_id") < k)
         .selectExpr("vec_id AS cid", "v AS c"))
       for (_ <- 1 to Iters)
-        cents = ScratchCache.scratch(updateDf(assignTwoLevelDist(v, cents)))
-      assignTwoLevelDist(v, cents).select("vec_id", "cluster")
+        cents = ScratchCache.scratch(
+          updateDf(assignTwoLevelDist(v, cents, budget)))
+      assignTwoLevelDist(v, cents, budget).select("vec_id", "cluster")
     } else {
-      SemBuildStats.lastRoute = "broadcast"
       var cents = firstCentroids(v, k)
-      SemBuildStats.lastDriverCentroids = cents.length
-      for (_ <- 1 to Iters) {
-        cents = update(assignTwoLevel(v, cents))
-        SemBuildStats.lastDriverCentroids =
-          math.max(SemBuildStats.lastDriverCentroids, cents.length)
-      }
+      for (_ <- 1 to Iters) cents = update(assignTwoLevel(v, cents))
       assignTwoLevel(v, cents).select("vec_id", "cluster")
     }
   }

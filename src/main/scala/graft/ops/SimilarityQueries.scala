@@ -5,10 +5,10 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
-import graft.functions.{Codebook, SeedBook, TwoLevelBook, blockArgmin,
-  blockArgmin2, blockTopKD, cosine, ivfCell2, ivfCellH, ivfCellH2, joinKey,
-  lshCell, lshSuper, norm2, superArgmin, superArgmin2, superTopK,
-  trainedCell, trainedCell2, trainedCellH2, trainedProbes}
+import graft.functions.{BookRoute, Codebook, SeedBook, TwoLevelBook,
+  blockArgmin, blockArgmin2, blockTopKD, cosine, ivfCell2, ivfCellH,
+  ivfCellH2, joinKey, lshCell, lshSuper, norm2, superArgmin, superArgmin2,
+  superTopK, trainedCell, trainedCell2, trainedCellH2, trainedProbes}
 import graft.oracle.{Dialect, DuckSql, SparkSql}
 import graft.{QueryDef, ScratchCache, Tables}
 
@@ -203,26 +203,19 @@ object SimilarityQueries {
     (sc, ss)
   }
 
-  /** Driver-seed budget for the trained-codebook build. The broadcast
-    * route holds all c = ⌈N/125⌉ child seeds on the driver (and one
-    * copy per executor) at ~520 B per quantized seed (64 longs + id);
-    * the default budget of 2^18 seeds ≈ 134 MB caps that state at a
-    * sane broadcast size (N ≈ 33M rows) — past it [[trainedCells]]
+  /** Driver-seed budget of the size-switched book builders. The
+    * broadcast route holds all c = ⌈N/125⌉ child seeds on the driver
+    * (and one copy per executor) at ~520 B per quantized seed (64
+    * longs + id); 2^18 seeds ≈ 134 MB caps that state at a sane
+    * broadcast size (N ≈ 33M rows) — past it [[trainedCells]]
     * delegates to the distributed build, whose driver state is the
-    * ⌈√c⌉ supers only. Session conf so tests can trip the switch. */
-  private[graft] val MaxDriverSeedsKey = "spark.graft.trained.maxDriverSeeds"
-  private[graft] val DefaultMaxDriverSeeds = 262144
-  private def maxDriverSeeds(s: SparkSession): Int =
-    s.conf.get(MaxDriverSeedsKey, DefaultMaxDriverSeeds.toString).toInt
-
-  /** Which route the last trained-codebook build took and how many
-    * seed rows it held on the driver — observability for the size
-    * switch (asserted by TrainedDistSpec and AnnClusteredStress; a
-    * Scaladoc claim that the switch fires is not evidence). */
-  private[graft] object TrainedBuildStats {
-    @volatile var lastRoute: String = ""
-    @volatile var lastDriverSeeds: Int = 0
-  }
+    * ⌈√c⌉ supers only. Every switched builder ([[trainedCells]],
+    * [[trainedAdaptiveCells]], [[lshRefined]],
+    * [[ClusteringQueries.semClusters]]) takes it as its `budget`
+    * argument and passes it down to [[rankStride]]; `budget = 0`
+    * forces the dist route. [[graft.functions.BookRoute]] reads the
+    * route a frame took back from its plan. */
+  private[graft] val MaxDriverSeeds = 262144L
 
   /** Shared prelude of both trained-codebook builders: the corpus
     * projection (id, embedding, |v|², 1e-6-quantized vector),
@@ -267,8 +260,7 @@ object SimilarityQueries {
     * place for the seed-selection rule (see [[trainedCells]]' Scaladoc
     * for the per-mode rationale): strided children ([[childStride]]),
     * supers by modulus (unfiltered) or the rank book over the collected
-    * children (filtered, [[Codebook.rankBook]]). Updates
-    * [[TrainedBuildStats]]. */
+    * children (filtered, [[Codebook.rankBook]]). */
   private def collectBook(seedSrc: DataFrame, n: Long, sc: Long, ss: Long,
       seedWhere: String): TwoLevelBook = {
     val defaultMode = seedWhere == "TRUE"
@@ -283,8 +275,6 @@ object SimilarityQueries {
       s"trainedCells: seed selection produced no child seeds " +
         s"(n=$n, sc=$sc, seedWhere=$seedWhere) — the training " +
         s"sub-corpus is too small for the stride; widen seedWhere")
-    TrainedBuildStats.lastRoute = "broadcast"
-    TrainedBuildStats.lastDriverSeeds = children._1.length
     if (!defaultMode) Codebook.rankBook(children)
     else {
       val (ids, vecs) = children
@@ -308,19 +298,20 @@ object SimilarityQueries {
     * probes[0]; ONE kernel evaluation per row.
     *
     * State bound: like [[trainedCells]], the broadcast route holds
-    * all c child seeds on the driver, so past the SAME driver budget
-    * this builder delegates to [[trainedAdaptiveCellsDistFrom]] —
-    * identical probe arrays (AdaptiveDistSpec pins bit-equality;
-    * AnnClusteredStress forces the switch at scale), child seeds kept
-    * as DataFrame blocks met in a SHUFFLE_HASH join. */
+    * all c child seeds on the driver, so past the SAME driver
+    * `budget` ([[MaxDriverSeeds]]) this builder delegates to
+    * [[trainedAdaptiveCellsDistFrom]] — identical probe arrays
+    * (AdaptiveDistSpec pins bit-equality; AnnClusteredStress forces
+    * the switch at scale), child seeds kept as DataFrame blocks met in
+    * a SHUFFLE_HASH join. */
   private[graft] def trainedAdaptiveCells(s: SparkSession, d: String,
       nSupers: Int, maxProbes: Int, epsNum: Long, epsDen: Long,
-      interleave: Boolean = false): DataFrame = {
+      interleave: Boolean = false, budget: Long = MaxDriverSeeds): DataFrame = {
     val v = trainedVecs(s, d)
     val n = v.count()
     val (sc, ss) = trainedStrides(n)
-    if (adaptiveCells(n) > maxDriverSeeds(s))
-      return trainedAdaptiveCellsDistFrom(s, v, nSupers, maxProbes,
+    if (adaptiveCells(n) > budget)
+      return trainedAdaptiveCellsDistFrom(s, v, n, nSupers, maxProbes,
         epsNum, epsDen, interleave)
     val bc = s.sparkContext.broadcast(collectBook(v, n, sc, ss, "TRUE"))
     graft.ScratchCache.scratch(
@@ -354,24 +345,16 @@ object SimilarityQueries {
     * pooled → thd2 → margin → js → rnp), so the law lives
     * relationally in BOTH engines; AdaptiveDistSpec pins probe-array
     * bit-equality against the broadcast kernel at the fixture, and
-    * AnnClusteredStress gates it at every stress scale. */
-  private[graft] def trainedAdaptiveCellsDist(s: SparkSession, d: String,
-      nSupers: Int, maxProbes: Int, epsNum: Long, epsDen: Long,
-      interleave: Boolean = false): DataFrame =
-    trainedAdaptiveCellsDistFrom(s, trainedVecs(s, d), nSupers, maxProbes,
-      epsNum, epsDen, interleave)
-
+    * AnnClusteredStress gates it at every stress scale. `n` is the
+    * row count the switch already took. */
   private def trainedAdaptiveCellsDistFrom(s: SparkSession, v: DataFrame,
-      nSupers: Int, maxProbes: Int, epsNum: Long, epsDen: Long,
+      n: Long, nSupers: Int, maxProbes: Int, epsNum: Long, epsDen: Long,
       interleave: Boolean): DataFrame = {
-    val n = v.count()
     val (sc, ss) = trainedStrides(n)
     val superSeeds = seedBook(v.filter(expr(s"vec_id % $ss = 0"))
       .selectExpr("vec_id", "qv"))
     require(superSeeds._1.nonEmpty,
-      s"trainedAdaptiveCellsDist: no super seeds (n=$n, ss=$ss)")
-    TrainedBuildStats.lastRoute = "dist"
-    TrainedBuildStats.lastDriverSeeds = superSeeds._1.length
+      s"trainedAdaptiveCells: no super seeds (n=$n, ss=$ss)")
     val bcS = s.sparkContext.broadcast(superSeeds)
     val blocks = graft.ScratchCache.scratch(seedBlocks(
       v.filter(expr(childStride(sc, lcg = false)))
@@ -481,7 +464,7 @@ object SimilarityQueries {
     * non-empty child set guarantees a non-empty super set). */
   private[graft] def trainedCells(s: SparkSession, d: String,
       probe2: Boolean = false, seedWhere: String = "TRUE",
-      probe3: Boolean = false): DataFrame = {
+      probe3: Boolean = false, budget: Long = MaxDriverSeeds): DataFrame = {
     val v = trainedVecs(s, d)
     val defaultMode = seedWhere == "TRUE"
     val seedSrc = if (defaultMode) v else v.filter(expr(seedWhere))
@@ -490,15 +473,15 @@ object SimilarityQueries {
     // SIZE SWITCH (r10, the r09 verdict's top item): the broadcast
     // route below collects c = ⌈N/125⌉ child seeds to the driver —
     // ~520 B each quantized (64 longs + id), a ~40 GB object at 10¹⁰
-    // rows. Past the stated budget the build delegates to the
-    // DISTRIBUTED route (driver holds only the ⌈√c⌉ supers; blocks
-    // meet rows in a SHUFFLE_HASH join) — assignment is bit-identical
+    // rows. Past `budget` the build delegates to the DISTRIBUTED route
+    // (driver holds only the ⌈√c⌉ supers; blocks meet rows in a
+    // SHUFFLE_HASH join) — assignment is bit-identical
     // (TrainedDistSpec / AnnClusteredStress's dist_build_diff gate),
-    // so every oracle is unaffected by which route ran. The budget is
-    // a session conf so tests/stress can trip the switch at fixture
-    // scale.
-    if (adaptiveCells(n) > maxDriverSeeds(s))
-      return trainedCellsDistFrom(s, v, probe2, seedWhere, probe3)
+    // so every oracle is unaffected by which route ran. `budget = 0`
+    // takes the dist route at any size (q_ann_ivf_trained_dist, the
+    // route-equality specs and the stress).
+    if (adaptiveCells(n) > budget)
+      return trainedCellsDistFrom(s, v, n, probe2, seedWhere, probe3, budget)
     val bc = s.sparkContext.broadcast(collectBook(seedSrc, n, sc, ss, seedWhere))
     val qv = col("qv")
     val cols = Seq(col("vec_id"), col("embedding"), col("n2"),
@@ -633,24 +616,19 @@ object SimilarityQueries {
     * c-sized driver collect/broadcast — the documented trade, taken
     * only when c no longer fits the driver (the declared query exists
     * to keep the scale path under the fixture oracle; the stress
-    * harness proves assignment equality on the clustered corpus). */
-  private[graft] def trainedCellsDist(s: SparkSession, d: String,
-      probe2: Boolean = false, seedWhere: String = "TRUE",
-      probe3: Boolean = false): DataFrame =
-    trainedCellsDistFrom(s, trainedVecs(s, d), probe2, seedWhere, probe3)
-
-  /** Body of [[trainedCellsDist]] over an already-built vector frame —
-    * shared with [[trainedCells]]' size switch so the delegation does
-    * not re-scratch-cache a second copy of the corpus projection.
+    * harness proves assignment equality on the clustered corpus).
     *
+    * The body runs over [[trainedCells]]' already-built vector frame
+    * and the row count `n` its switch took, so the delegation neither
+    * re-scratch-caches the corpus projection nor counts it again.
     * Full option parity with the broadcast builder (r10 — this is what
     * lets the switch route EVERY trained-family query):
     *  - `seedWhere` — children by the same LCG-mixed stride over the
     *    filtered sub-corpus; supers are the rank-strided children
-    *    (`j % sb = 0`, sb = ⌈√k⌉) ranked by [[rankStride]] (past the
-    *    driver budget — where this route runs behind the switch — a
-    *    sorted frame + zipWithIndex, no single-task window) and only
-    *    the ≈√c selected supers are collected;
+    *    (`j % sb = 0`, sb = ⌈√k⌉) ranked by [[rankStride]] under the
+    *    same `budget` (past it — where this route runs behind the
+    *    switch — a sorted frame + zipWithIndex, no single-task window)
+    *    and only the ≈√c selected supers are collected;
     *  - `probe2` — rows also route to their SECOND-nearest super
     *    ([[graft.functions.SuperArgmin2Broadcast]], home super when the
     *    codebook has one super) and a second SHUFFLE_HASH join (LEFT —
@@ -664,11 +642,11 @@ object SimilarityQueries {
     * [[trainedCells]]' broadcast route — same seeds, same tie law —
     * so the DuckDB twins are REUSED verbatim (TrainedDistSpec pins
     * fixture equality; AnnClusteredStress pins it at 10×–100×). */
-  private def trainedCellsDistFrom(s: SparkSession, v: DataFrame,
-      probe2: Boolean, seedWhere: String, probe3: Boolean): DataFrame = {
+  private def trainedCellsDistFrom(s: SparkSession, v: DataFrame, n: Long,
+      probe2: Boolean, seedWhere: String, probe3: Boolean,
+      budget: Long): DataFrame = {
     val defaultMode = seedWhere == "TRUE"
     val seedSrc = if (defaultMode) v else v.filter(expr(seedWhere))
-    val n = seedSrc.count()
     val (sc, ss) = trainedStrides(n)
     val childSeeds = seedSrc.filter(expr(childStride(sc, !defaultMode)))
       .selectExpr("vec_id", "qv")
@@ -679,16 +657,14 @@ object SimilarityQueries {
       else {
         val k = childSeeds.count()
         require(k > 0,
-          s"trainedCellsDist: seed selection produced no child seeds " +
+          s"trainedCells: seed selection produced no child seeds " +
             s"(n=$n, sc=$sc, seedWhere=$seedWhere) — the training " +
             s"sub-corpus is too small for the stride; widen seedWhere")
-        seedBook(rankStride(s, childSeeds, Codebook.superStride(k), k)
+        seedBook(rankStride(s, childSeeds, Codebook.superStride(k), k, budget)
           .selectExpr("vec_id", "qv"))
       }
     require(superSeeds._1.nonEmpty,
-      s"trainedCellsDist: no super seeds (n=$n, ss=$ss)")
-    TrainedBuildStats.lastRoute = "dist"
-    TrainedBuildStats.lastDriverSeeds = superSeeds._1.length
+      s"trainedCells: no super seeds (n=$n, ss=$ss)")
     val bcS = s.sparkContext.broadcast(superSeeds)
     val blocks = graft.ScratchCache.scratch(seedBlocks(
       childSeeds.selectExpr("vec_id AS cid", "qv AS cv")
@@ -830,7 +806,7 @@ object SimilarityQueries {
     * level deeper: children by an LCG-MIXED stride (raw moduli are
     * unsound under a correlated filter — measured on the two-level
     * family), then RANK-strided supers and grands (every tb-th child,
-    * every tb-th super, tb = min z: z³ ≥ k) — rank 0 is always
+    * every tb-th super, tb = [[triSplit]](k)) — rank 0 is always
     * selected, so non-empty children guarantee non-empty supers AND
     * grands, where an LCG modulus at the grand stride would select
     * ~n/gs ≈ 2 rows and can go empty at fixture scale. The rank
@@ -850,10 +826,11 @@ object SimilarityQueries {
     require(k > 0,
       s"trainedCellsL3Inc: no child seeds (n=$n, sc=$scInc, " +
         s"seedWhere=$seedWhere) — widen seedWhere")
-    val tb = (1 to 4096).find(z => z.toLong * z * z >= k).getOrElse(4096)
+    val tb = triSplit(k)
     val superSrc = ScratchCache.scratch(
-      rankStride(s, childSrc, tb, k).selectExpr("vec_id", "qv"))
-    val grandSrc = rankStride(s, superSrc, tb, k).selectExpr("vec_id", "qv")
+      rankStride(s, childSrc, tb, k, MaxDriverSeeds).selectExpr("vec_id", "qv"))
+    val grandSrc =
+      rankStride(s, superSrc, tb, k, MaxDriverSeeds).selectExpr("vec_id", "qv")
     trainedCellsL3Build(s, v, grandSrc, superSrc, childSrc, probe2)
   }
 
@@ -864,7 +841,7 @@ object SimilarityQueries {
     * holds on both routes.
     *
     * SIZE SWITCH (r13, the trainedCells pattern): when the caller's
-    * seed count fits the driver-seed budget, a no-partition window is
+    * seed count fits its driver-seed `budget`, a no-partition window is
     * the cheaper plan — it is LAZY (no extra Spark actions) and its
     * single-task sort ranks only the ≤ budget seed rows. Past the
     * budget, rank derivation goes DISTRIBUTIVE: range-sort +
@@ -875,8 +852,8 @@ object SimilarityQueries {
     * `nHint` is the caller's already-computed seed count (an upper
     * bound is fine — it only picks the route, never the rows). */
   private[ops] def rankStride(s: SparkSession, seeds: DataFrame,
-      tb: Int, nHint: Long): DataFrame = {
-    if (nHint <= maxDriverSeeds(s)) {
+      tb: Int, nHint: Long, budget: Long): DataFrame = {
+    if (nHint <= budget) {
       val w = Window.orderBy("vec_id")
       return seeds
         .withColumn("j", row_number().over(w).cast("long") - 1)
@@ -898,8 +875,6 @@ object SimilarityQueries {
       probe2: Boolean, adaptive: Boolean = false): DataFrame = {
     val grandSeeds = seedBook(grandSrc)
     require(grandSeeds._1.nonEmpty, "trainedCellsL3: no grand seeds")
-    TrainedBuildStats.lastRoute = "dist3"
-    TrainedBuildStats.lastDriverSeeds = grandSeeds._1.length
     val bcG = s.sparkContext.broadcast(grandSeeds)
     val sblocks = graft.ScratchCache.scratch(seedBlocks(
       superSrc
@@ -1339,14 +1314,6 @@ object SimilarityQueries {
        |  count(*) AS n_dups
        |FROM dpairs GROUP BY vec_id_b ORDER BY vec_id""".stripMargin
 
-  /** Conf override of the two-level cell cap the FACADE routes on —
-    * production never sets it (the law is [[CellCap]]); tests and the
-    * stress force the L3 arm with it, the [[MaxDriverSeedsKey]]
-    * pattern. */
-  private[graft] val AnnCellCapKey = "spark.graft.ann.cellCap"
-  private def annCellCap(s: SparkSession): Long =
-    s.conf.get(AnnCellCapKey, CellCap.toString).toLong
-
   /** The facade's route LAW — pure arithmetic, spec-testable without a
     * 2.1×10⁹-row corpus: the two-level book holds constant occupancy
     * while the UNCAPPED cell demand ⌈N/125⌉ fits its cap; past it the
@@ -1354,12 +1321,12 @@ object SimilarityQueries {
   private[graft] def annBook(n: Long, cap: Long): String =
     if (math.max(NCells.toLong, (n + 124) / 125) > cap) "l3" else "two-level"
 
-  /** Which book the last [[annIndex]] call routed to — observability
-    * for the facade (AnnFacadeSpec and AnnClusteredStress assert it;
-    * a Scaladoc claim that the arm is taken is not evidence). */
-  private[graft] object AnnIndexStats {
-    @volatile var lastBook: String = ""
-  }
+  /** Which book built a facade frame, read from the frame itself
+    * ([[graft.functions.BookRoute]]): the L3 book is always a dist
+    * route, the two-level book under its default budget a broadcast
+    * one. */
+  private[graft] def routedBook(df: DataFrame): String =
+    if (BookRoute.of(df).route == "dist") "l3" else "two-level"
 
   /** ONE ANN index entry — the r10 verdict's missing crossover: a user
     * at 3×10⁹ rows had to KNOW to call the L3 family past the
@@ -1383,18 +1350,17 @@ object SimilarityQueries {
     * surface). Driver state and join shape follow the routed book's
     * documented bounds.
     *
-    * `cap` overrides the two-level cell cap for THIS call only —
-    * forced-route tests/stress pass it explicitly so they no longer
-    * race on shared session conf (ADVICE r11: a concurrent caller of
-    * the facade would silently inherit a set-then-unset conf key).
-    * The conf key remains the DEFAULT source only. */
+    * `cap` is the two-level cell cap the law routes on, [[CellCap]]
+    * unless the caller forces the L3 arm (`cap = 1`: the _l3 queries,
+    * the specs and the stress). It rides the call, never session conf,
+    * so concurrent facade callers cannot inherit each other's route
+    * (ADVICE r11). Which book routed shows in the frame
+    * ([[routedBook]]). */
   private[graft] def annIndex(s: SparkSession, d: String,
-      probe2: Boolean = false, cap: Option[Long] = None): DataFrame = {
-    val book = annBook(corpusN(s, d), cap.getOrElse(annCellCap(s)))
+      probe2: Boolean = false, cap: Long = CellCap): DataFrame = {
     val base =
-      if (book == "l3") trainedCellsL3(s, d, probe2)
+      if (annBook(corpusN(s, d), cap) == "l3") trainedCellsL3(s, d, probe2)
       else trainedCells(s, d, probe2)
-    AnnIndexStats.lastBook = book
     val cols = if (probe2) Seq("vec_id", "embedding", "n2", "cell", "cell2")
       else Seq("vec_id", "embedding", "n2", "cell")
     base.select(cols.map(col): _*)
@@ -1409,12 +1375,11 @@ object SimilarityQueries {
     * REUSED, not re-derived, so the facade can never drift from the
     * declared per-book queries. */
   private[graft] def annIndexInc(s: SparkSession, d: String,
-      seedWhere: String, cap: Option[Long] = None): DataFrame = {
-    val book = annBook(corpusN(s, d), cap.getOrElse(annCellCap(s)))
+      seedWhere: String, cap: Long = CellCap): DataFrame = {
     val base =
-      if (book == "l3") trainedCellsL3Inc(s, d, seedWhere)
+      if (annBook(corpusN(s, d), cap) == "l3")
+        trainedCellsL3Inc(s, d, seedWhere)
       else trainedCells(s, d, seedWhere = seedWhere)
-    AnnIndexStats.lastBook = book
     base.select("vec_id", "embedding", "n2", "cell")
   }
 
@@ -1524,7 +1489,7 @@ object SimilarityQueries {
     * (vec_id % 10 = 0) are excluded from training and probe the
     * existing rows through the routed frozen book. */
   private[graft] def annIngest(s: SparkSession, d: String,
-      cap: Option[Long] = None): DataFrame =
+      cap: Long = CellCap): DataFrame =
     servedIngestProbe(annIndexInc(s, d, "vec_id % 10 <> 0", cap))
 
   /** FACADE-LEVEL DELETE: [[annIndex]]'s routed book served from a
@@ -1532,7 +1497,7 @@ object SimilarityQueries {
     * caller's scratch/table location (each declared query uses its
     * own so runs never clobber each other). */
   private[graft] def annDelete(s: SparkSession, d: String, root: String,
-      cap: Option[Long] = None): DataFrame =
+      cap: Long = CellCap): DataFrame =
     servedDeleteProbe(s, root, annIndex(s, d, cap = cap))
 
   /** Every row of `e` searches its own home cell (nprobe = 1). */
@@ -1710,8 +1675,8 @@ object SimilarityQueries {
     * Returns (vec_id, embedding, n2, bucket, cell) scratch-cached and
     * pre-partitioned on the refined key. Driver-side state is bounded
     * by the SEED count (≈ hot-mass/cap — the trained-codebook pattern
-    * of [[trainedCells]]); past the SAME driver budget as the trained
-    * family ([[MaxDriverSeedsKey]]) the build delegates to
+    * of [[trainedCells]]); past the SAME driver `budget` as the trained
+    * family ([[MaxDriverSeeds]]) the build delegates to
     * [[lshRefinedDistFrom]], which holds only the per-bucket SUPER
     * seeds (Σ_b ⌈√k_b⌉) on the driver and keeps the child seeds as
     * DataFrame blocks met in a SHUFFLE_HASH join — identical frames
@@ -1723,7 +1688,7 @@ object SimilarityQueries {
     * and AnnClusteredStress measures the production-shaped point
     * (cap = 125, the IVF occupancy target) on the clustered corpus. */
   private[graft] def lshRefined(s: SparkSession, d: String,
-      cap: Int = LshCellRows): DataFrame = {
+      cap: Int = LshCellRows, budget: Long = MaxDriverSeeds): DataFrame = {
     val np = adaptivePlanes(corpusN(s, d))
     val e = ScratchCache.scratch(Tables.embeddingsParallel(s, d)
       .select(col("vec_id"), col("embedding"), norm2("embedding"),
@@ -1736,7 +1701,7 @@ object SimilarityQueries {
     val seedCount = hot
       .agg(coalesce(sum(expr(s"(bn + $cap - 1) DIV $cap")), lit(0L)))
       .head().getLong(0)
-    if (seedCount > maxDriverSeeds(s))
+    if (seedCount > budget)
       return lshRefinedDistFrom(s, e, hot, cap)
     val w = Window.partitionBy("bucket").orderBy("vec_id")
     // seed rows: every cap-th member of each hot bucket, in vec_id rank
@@ -1746,8 +1711,6 @@ object SimilarityQueries {
       .filter((col("rn") - 1) % cap === 0)
       .selectExpr("bucket", "vec_id", "qv")
       .orderBy("bucket", "vec_id").collect()
-    TrainedBuildStats.lastRoute = "lsh-broadcast"
-    TrainedBuildStats.lastDriverSeeds = seedRows.length
     // per bucket: children ascending by vec_id (the collect's ORDER
     // BY), then the shared rank book (functions.Codebook)
     val books: Map[Long, TwoLevelBook] =
@@ -1808,8 +1771,6 @@ object SimilarityQueries {
       .filter(col("j") % col("sb") === 0)
       .selectExpr("bucket", "cid", "cv")
       .orderBy("bucket", "cid").collect()
-    TrainedBuildStats.lastRoute = "lsh-dist"
-    TrainedBuildStats.lastDriverSeeds = superRows.length
     val superMap: Map[Long, SeedBook] =
       superRows.groupBy(_.getLong(0)).map { case (b, rows) =>
         // ascending sid order — the collect's ORDER BY; the kernel's
@@ -2639,7 +2600,7 @@ object SimilarityQueries {
     // / q_dedup_semantic_mp, pair generation from the knob-ridden
     // adaptive probes above. Both routes are now scale-safe: the
     // adaptive builder takes the same driver-budget size switch as
-    // trainedCells (delegating to trainedAdaptiveCellsDist — probe
+    // trainedCells (delegating to its dist route — probe
     // arrays bit-identical, AdaptiveDistSpec + the stress switch
     // gate), so this query's codebook state is bounded at any N.
     "q_dedup_semantic_adaptive" -> QueryDef(
@@ -2788,7 +2749,7 @@ object SimilarityQueries {
       (s, d) => annIngest(s, d),
       duckIncrementalTrainedSql),
     "q_ann_ingest_auto_l3" -> QueryDef(
-      (s, d) => annIngest(s, d, cap = Some(1L)),
+      (s, d) => annIngest(s, d, cap = 1L),
       duckIncrementalL3Sql),
 
     // STREAMING ANN ingest on the served trained index — the
@@ -2840,7 +2801,7 @@ object SimilarityQueries {
     "q_ann_delete_auto_l3" -> QueryDef(
       (s, d) => annDelete(s, d,
         s"${graft.ProcScratch.base}/ann_delete_auto_l3/" +
-          new java.io.File(d).getName, cap = Some(1L)),
+          new java.io.File(d).getName, cap = 1L),
       duckDeleteL3Sql),
 
     // IVF-flat ANN: coarse-quantize into Voronoi cells, then search
@@ -2890,12 +2851,13 @@ object SimilarityQueries {
     // point), with the codebook kept out of the driver: only the ⌈√c⌉
     // super seeds are collected/broadcast, child seeds flow as a
     // DataFrame into per-super blocks met through a SHUFFLE_HASH join
-    // ([[trainedCellsDist]]). This is the build path once c = N/125
+    // ([[trainedCells]] at `budget = 0`, its size switch forced).
+    // This is the build path once c = N/125
     // outgrows a single JVM (~40 GB of seeds at 10¹⁰ rows) — the r08
     // codebook-growth ceiling, closed by construction instead of a
     // Scaladoc promise. Search shape after the build is q_ann_ivf_trained's.
     "q_ann_ivf_trained_dist" -> QueryDef(
-      (s, d) => homeCellSearch(trainedCellsDist(s, d)),
+      (s, d) => homeCellSearch(trainedCells(s, d, budget = 0)),
       duckTrainedAnnSql),
 
     // ADAPTIVE-nprobe ANN SEARCH — the target-retention knob
@@ -2946,7 +2908,7 @@ object SimilarityQueries {
     // fixture scale END TO END (facade → L3 build → search → oracle),
     // not just route-asserted.
     "q_ann_index_auto_l3" -> QueryDef(
-      (s, d) => homeCellSearch(annIndex(s, d, cap = Some(1L))),
+      (s, d) => homeCellSearch(annIndex(s, d, cap = 1L)),
       duckTrainedL3AnnSql),
 
     // The THREE-LEVEL trained quantizer — the routing law past the
@@ -3079,7 +3041,7 @@ object SimilarityQueries {
     // ride a green default gate).
     "q_ann_ivf_trained_probe3_dist" -> QueryDef(
       (s, d) => trainedProbe3Search(
-        trainedCellsDist(s, d, probe2 = true, probe3 = true)),
+        trainedCells(s, d, probe2 = true, probe3 = true, budget = 0)),
       duckTrainedProbe3Sql),
 
     // IVF with nprobe=2 — the canonical recall knob: each query probes

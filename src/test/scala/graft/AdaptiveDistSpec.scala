@@ -4,7 +4,7 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The DISTRIBUTED adaptive multi-probe build
-  * (trainedAdaptiveCellsDist) vs the broadcast-kernel build
+  * (trainedAdaptiveCells at `budget = 0`) vs the broadcast-kernel build
   * (trainedAdaptiveCells): same seeds, same margin law, same probe
   * order — the probe ARRAYS must be bit-identical element for
   * element, in both probe orders (interleaved and distance-global).
@@ -32,8 +32,8 @@ class AdaptiveDistSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     val one = probesOf(trainedAdaptiveCells(spark, sf, AdaptNSupers,
       AdaptMaxProbes, AdaptEpsNum, AdaptEpsDen, interleave))
     ScratchCache.release()
-    val dist = probesOf(trainedAdaptiveCellsDist(spark, sf, AdaptNSupers,
-      AdaptMaxProbes, AdaptEpsNum, AdaptEpsDen, interleave))
+    val dist = probesOf(trainedAdaptiveCells(spark, sf, AdaptNSupers,
+      AdaptMaxProbes, AdaptEpsNum, AdaptEpsDen, interleave, budget = 0))
     ScratchCache.release()
     assert(one.nonEmpty)
     assert(dist.size === one.size, "dist route lost or duplicated rows")
@@ -60,8 +60,8 @@ class AdaptiveDistSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     val m = 1000000L
     val one = probesOf(trainedAdaptiveCells(spark, sf, 2, 3, m, 1L, true))
     ScratchCache.release()
-    val dist = probesOf(trainedAdaptiveCellsDist(spark, sf, 2, 3, m, 1L,
-      interleave = true))
+    val dist = probesOf(trainedAdaptiveCells(spark, sf, 2, 3, m, 1L,
+      interleave = true, budget = 0))
     ScratchCache.release()
     assert(dist.size === one.size)
     one.foreach { case (id, p) =>
@@ -75,33 +75,34 @@ class AdaptiveDistSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   }
 
   test("past the driver budget trainedAdaptiveCells takes the dist route") {
-    val base = probesOf(trainedAdaptiveCells(spark, sf, AdaptNSupers,
-      AdaptMaxProbes, AdaptEpsNum, AdaptEpsDen, interleave = true))
-    assert(TrainedBuildStats.lastRoute === "broadcast")
-    val broadcastSeeds = TrainedBuildStats.lastDriverSeeds
+    import graft.functions.BookRoute
+    val one = trainedAdaptiveCells(spark, sf, AdaptNSupers,
+      AdaptMaxProbes, AdaptEpsNum, AdaptEpsDen, interleave = true)
+    val base = probesOf(one)
+    val BookRoute(baseRoute, broadcastSeeds) = BookRoute.of(one)
+    assert(baseRoute === "broadcast")
     ScratchCache.release()
-    spark.conf.set(MaxDriverSeedsKey, "1")
     try {
-      val switched = probesOf(trainedAdaptiveCells(spark, sf, AdaptNSupers,
-        AdaptMaxProbes, AdaptEpsNum, AdaptEpsDen, interleave = true))
-      assert(TrainedBuildStats.lastRoute === "dist",
+      val dist = trainedAdaptiveCells(spark, sf, AdaptNSupers,
+        AdaptMaxProbes, AdaptEpsNum, AdaptEpsDen, interleave = true,
+        budget = 1)
+      val switched = probesOf(dist)
+      val BookRoute(route, distSeeds) = BookRoute.of(dist)
+      assert(route === "dist",
         "budget=1 must delegate to the distributed build")
-      assert(TrainedBuildStats.lastDriverSeeds < broadcastSeeds,
-        s"dist route held ${TrainedBuildStats.lastDriverSeeds} seeds, " +
-          s"broadcast held $broadcastSeeds")
+      assert(distSeeds < broadcastSeeds,
+        s"dist route held $distSeeds seeds, broadcast held $broadcastSeeds")
       assert(switched.size === base.size)
       base.foreach { case (id, p) =>
         assert(switched(id) === p, s"vec_id $id differs through the switch")
       }
-    } finally {
-      spark.conf.unset(MaxDriverSeedsKey)
-      ScratchCache.release()
-    }
+    } finally ScratchCache.release()
   }
 
   test("child blocks meet rows through a shuffle join, not a broadcast") {
-    val dist = trainedAdaptiveCellsDist(spark, sf, AdaptNSupers,
-      AdaptMaxProbes, AdaptEpsNum, AdaptEpsDen, interleave = true)
+    val dist = trainedAdaptiveCells(spark, sf, AdaptNSupers,
+      AdaptMaxProbes, AdaptEpsNum, AdaptEpsDen, interleave = true,
+      budget = 0)
     try {
       dist.collect()
       val outer = dist.queryExecution.executedPlan

@@ -14,8 +14,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *     trainedCells at the fixture) and the forced arm IS the
   *     three-level book (frame-identical to trainedCellsL3), with the
   *     same normalized columns either way;
-  *  3. the facade records which book routed (AnnIndexStats), so the
-  *     stress's forced-switch gate has something to assert.
+  *  3. the returned frame shows which book routed (routedBook reads
+  *     its plan), so the stress's forced-switch gate has something to
+  *     assert.
   */
 class AnnFacadeSpec extends AnyFunSuite {
   import SparkTestSession._
@@ -40,10 +41,10 @@ class AnnFacadeSpec extends AnyFunSuite {
   }
 
   test("default arm is the two-level book, frame-identical") {
-    val auto = annIndex(spark, sf, probe2 = true)
-      .selectExpr("vec_id", "cell", "cell2").collect()
+    val autoDf = annIndex(spark, sf, probe2 = true)
+    val auto = autoDf.selectExpr("vec_id", "cell", "cell2").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(AnnIndexStats.lastBook === "two-level")
+    assert(routedBook(autoDf) === "two-level")
     ScratchCache.release()
     val book = trainedCells(spark, sf, probe2 = true)
       .selectExpr("vec_id", "cell", "cell2").collect()
@@ -57,8 +58,8 @@ class AnnFacadeSpec extends AnyFunSuite {
     // the cap rides the CALL, not session conf (ADVICE r11): a
     // concurrent facade caller must not inherit this test's override
     try {
-      val auto = annIndex(spark, sf, probe2 = true, cap = Some(1L))
-      assert(AnnIndexStats.lastBook === "l3")
+      val auto = annIndex(spark, sf, probe2 = true, cap = 1L)
+      assert(routedBook(auto) === "l3")
       assert(auto.columns.toSeq ===
         Seq("vec_id", "embedding", "n2", "cell", "cell2"),
         "the facade surface must not depend on the routed book")
@@ -80,10 +81,10 @@ class AnnFacadeSpec extends AnyFunSuite {
     // L3 one — row-identical, because annIngest shares
     // servedIngestProbe and the per-book inc builds rather than
     // re-deriving them
-    val auto = annIngest(spark, sf)
-      .select("arrival_id", "neighbor_id", "rn").collect()
+    val autoDf = annIngest(spark, sf)
+    val auto = autoDf.select("arrival_id", "neighbor_id", "rn").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    assert(AnnIndexStats.lastBook === "two-level")
+    assert(routedBook(autoDf) === "two-level")
     ScratchCache.release()
     val manual = servedIngestProbe(
       trainedCells(spark, sf, seedWhere = "vec_id % 10 <> 0"))
@@ -92,10 +93,10 @@ class AnnFacadeSpec extends AnyFunSuite {
     ScratchCache.release()
     assert(auto === manual)
     assert(auto.nonEmpty)
-    val autoL3 = annIngest(spark, sf, cap = Some(1L))
-      .select("arrival_id", "neighbor_id", "rn").collect()
+    val autoL3Df = annIngest(spark, sf, cap = 1L)
+    val autoL3 = autoL3Df.select("arrival_id", "neighbor_id", "rn").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    assert(AnnIndexStats.lastBook === "l3")
+    assert(routedBook(autoL3Df) === "l3")
     ScratchCache.release()
     val manualL3 = servedIngestProbe(
       trainedCellsL3Inc(spark, sf, "vec_id % 10 <> 0"))
@@ -104,15 +105,5 @@ class AnnFacadeSpec extends AnyFunSuite {
     ScratchCache.release()
     assert(autoL3 === manualL3)
     assert(autoL3.nonEmpty)
-  }
-
-  test("explicit cap does not disturb the conf-keyed default route") {
-    // the parameter must be call-scoped: after a forced-L3 call the
-    // very next default call still routes by the conf/law default
-    annIndex(spark, sf, cap = Some(1L)).select("cell").head()
-    ScratchCache.release()
-    annIndex(spark, sf).select("cell").head()
-    assert(AnnIndexStats.lastBook === "two-level")
-    ScratchCache.release()
   }
 }

@@ -24,15 +24,21 @@ class ConcurrentQueriesSpec extends AnyFunSuite {
   private implicit val ec: ExecutionContext = ExecutionContext.global
 
   test("concurrent DAGs in one session match their sequential results") {
-    val names = Seq("q_agg_sum_count", "q_hash_join_inner", "q_token_count", "q_topk")
+    // the ANN rows are size-switched builds: each takes its route from
+    // its own arguments, so concurrent builds cannot bleed routes
+    val names = Seq("q_agg_sum_count", "q_hash_join_inner", "q_token_count",
+      "q_topk", "q_ann_ivf_trained", "q_ann_ivf_trained_dist",
+      "q_ann_index_auto_l3", "q_dedup_semantic")
     def run(n: String): Seq[String] =
       SparkEntry.queries(n)(spark, sf).collect().map(_.toString).sorted.toSeq
-    val sequential = names.map(n => n -> run(n)).toMap
-    val concurrent = Await.result(
-      Future.sequence(names.map(n => Future(n -> run(n)))), 5.minutes).toMap
-    names.foreach { n =>
-      assert(concurrent(n) == sequential(n), s"$n diverged under concurrency")
-    }
+    try {
+      val sequential = names.map(n => n -> run(n)).toMap
+      val concurrent = Await.result(
+        Future.sequence(names.map(n => Future(n -> run(n)))), 5.minutes).toMap
+      names.foreach { n =>
+        assert(concurrent(n) == sequential(n), s"$n diverged under concurrency")
+      }
+    } finally ScratchCache.release()
   }
 
   test("cancelling one job group leaves the session healthy for others") {

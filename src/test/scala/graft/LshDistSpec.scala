@@ -4,7 +4,7 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The DISTRIBUTED density-adaptive LSH build (lshRefinedDistFrom,
-  * taken by lshRefined past the shared driver-seed budget) vs the
+  * taken by lshRefined past its driver-seed budget) vs the
   * broadcast-kernel build: same bucketing, same rank-stride seed
   * selection, same per-bucket ⌈√k⌉ super rule, same tie law — the
   * (bucket, cell) frames must be bit-identical row for row. What
@@ -21,6 +21,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class LshDistSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   import SparkTestSession._
   import ops.SimilarityQueries._
+  import graft.functions.BookRoute
 
   private def cellsOf(df: org.apache.spark.sql.DataFrame)
       : Map[Long, (Long, Long)] =
@@ -28,44 +29,43 @@ class LshDistSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
 
   test("past the driver budget lshRefined takes the dist route, bit-identical") {
-    val base = cellsOf(lshRefined(spark, sf))
-    assert(TrainedBuildStats.lastRoute === "lsh-broadcast")
-    val broadcastSeeds = TrainedBuildStats.lastDriverSeeds
+    val one = lshRefined(spark, sf)
+    val base = cellsOf(one)
+    val BookRoute(baseRoute, broadcastSeeds) = BookRoute.of(one)
+    assert(baseRoute === "lsh-broadcast")
     assert(broadcastSeeds > 0, "fixture produced no hot buckets — the " +
       "spec would compare two all-cold frames and prove nothing")
     // non-degenerate: the split path must engage (refined cells >= 0)
     assert(base.values.exists(_._2 >= 0), "no refined cells at the fixture")
     assert(base.values.exists(_._2 == -1L), "no cold buckets at the fixture")
     ScratchCache.release()
-    spark.conf.set(MaxDriverSeedsKey, "1")
     try {
-      val dist = cellsOf(lshRefined(spark, sf))
-      assert(TrainedBuildStats.lastRoute === "lsh-dist",
+      val distDf = lshRefined(spark, sf, budget = 1)
+      val dist = cellsOf(distDf)
+      val BookRoute(route, distSeeds) = BookRoute.of(distDf)
+      assert(route === "lsh-dist",
         "budget=1 must delegate to the distributed build")
-      assert(TrainedBuildStats.lastDriverSeeds < broadcastSeeds,
-        s"dist route held ${TrainedBuildStats.lastDriverSeeds} driver " +
-          s"rows, broadcast held $broadcastSeeds")
+      assert(distSeeds < broadcastSeeds,
+        s"dist route held $distSeeds driver rows, " +
+          s"broadcast held $broadcastSeeds")
       assert(dist.size === base.size, "dist route lost or duplicated rows")
       base.foreach { case (id, bc) =>
         assert(dist(id) === bc,
           s"vec_id $id differs through the switch: broadcast $bc, " +
             s"dist ${dist(id)}")
       }
-    } finally {
-      spark.conf.unset(MaxDriverSeedsKey)
-      ScratchCache.release()
-    }
+    } finally ScratchCache.release()
   }
 
   test("driver rows on the dist route are the per-bucket supers (≈ Σ√k)") {
-    spark.conf.set(MaxDriverSeedsKey, "1")
     try {
-      lshRefined(spark, sf).count()
-      val distSeeds = TrainedBuildStats.lastDriverSeeds
+      val dist = lshRefined(spark, sf, budget = 1)
+      dist.count()
+      val distSeeds = BookRoute.of(dist).driverSeeds
       ScratchCache.release()
-      spark.conf.unset(MaxDriverSeedsKey)
-      lshRefined(spark, sf).count()
-      val childSeeds = TrainedBuildStats.lastDriverSeeds
+      val one = lshRefined(spark, sf)
+      one.count()
+      val childSeeds = BookRoute.of(one).driverSeeds
       // Σ_b ⌈√k_b⌉ ≤ Σ_b ⌈(k_b + sb − 1)/sb⌉ bound: with the fixture's
       // tiny cap every hot bucket has k ≥ 1, so supers per bucket are
       // ≤ ⌈√k⌉ ≤ k with equality only at k ≤ 3 — the aggregate must
@@ -73,16 +73,12 @@ class LshDistSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       assert(distSeeds <= childSeeds,
         s"dist $distSeeds > broadcast $childSeeds")
       assert(distSeeds > 0, "dist route collected nothing")
-    } finally {
-      spark.conf.unset(MaxDriverSeedsKey)
-      ScratchCache.release()
-    }
+    } finally ScratchCache.release()
   }
 
   test("child blocks meet rows through a shuffle join, not a broadcast") {
-    spark.conf.set(MaxDriverSeedsKey, "1")
     try {
-      val dist = lshRefined(spark, sf)
+      val dist = lshRefined(spark, sf, budget = 1)
       dist.collect()
       val outer = dist.queryExecution.executedPlan
       val cached = collect(outer) {
@@ -96,9 +92,6 @@ class LshDistSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
         s"expected ShuffledHashJoin in ${nodes.distinct.sorted}")
       assert(!nodes.exists(_.contains("BroadcastHashJoin")),
         s"codebook must not broadcast: ${nodes.distinct.sorted}")
-    } finally {
-      spark.conf.unset(MaxDriverSeedsKey)
-      ScratchCache.release()
-    }
+    } finally ScratchCache.release()
   }
 }

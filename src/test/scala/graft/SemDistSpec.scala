@@ -14,30 +14,27 @@ class SemDistSpec extends AnyFunSuite {
   import SparkTestSession._
 
   test("dist Lloyd route assigns identically and holds only sqrt(K) centroids") {
-    import ops.ClusteringQueries.SemBuildStats
-    import ops.SimilarityQueries.MaxDriverSeedsKey
-    val base = ops.ClusteringQueries.semClusters(spark, sf)
-      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    assert(SemBuildStats.lastRoute === "broadcast")
-    val kDriver = SemBuildStats.lastDriverCentroids
+    import graft.functions.BookRoute
+    val one = ops.ClusteringQueries.semClusters(spark, sf)
+    val base = one.collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+    val BookRoute(baseRoute, kDriver) = BookRoute.of(one)
+    assert(baseRoute === "broadcast")
     assert(base.nonEmpty)
     ScratchCache.release()
-    spark.conf.set(MaxDriverSeedsKey, "1")
     try {
-      val dist = ops.ClusteringQueries.semClusters(spark, sf).collect()
-      assert(SemBuildStats.lastRoute === "dist",
+      val distDf = ops.ClusteringQueries.semClusters(spark, sf, budget = 1)
+      val dist = distDf.collect()
+      val BookRoute(route, distCentroids) = BookRoute.of(distDf)
+      assert(route === "dist",
         "budget=1 must take the DataFrame-centroid route")
-      assert(SemBuildStats.lastDriverCentroids < math.max(kDriver, 2),
-        s"dist route held ${SemBuildStats.lastDriverCentroids} centroid " +
+      assert(distCentroids < math.max(kDriver, 2),
+        s"dist route held $distCentroids centroid " +
           s"rows on the driver vs broadcast's $kDriver")
       assert(dist.length === base.size)
       dist.foreach { r =>
         assert(r.getInt(1) === base(r.getLong(0)),
           s"vec_id ${r.getLong(0)} clusters differently through the switch")
       }
-    } finally {
-      spark.conf.unset(MaxDriverSeedsKey)
-      ScratchCache.release()
-    }
+    } finally ScratchCache.release()
   }
 }

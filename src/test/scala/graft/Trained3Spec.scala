@@ -103,18 +103,19 @@ class Trained3Spec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   }
 
   test("driver holds only the grand seeds (~c^(1/3))") {
-    import ops.SimilarityQueries.TrainedBuildStats
+    import graft.functions.BookRoute
     val e = ops.SimilarityQueries.trainedCellsL3(spark, sf)
     try {
       val n = e.count()
       assert(n > 0)
-      assert(TrainedBuildStats.lastRoute === "dist3")
+      val BookRoute(route, driverSeeds) = BookRoute.of(e)
+      assert(route === "dist")
       val (sc, ss, gs) = ops.SimilarityQueries.trainedStridesL3(n)
       val expGrands = (0L until n).count(_ % gs == 0)
       val expSupers = (0L until n).count(_ % ss == 0)
-      assert(TrainedBuildStats.lastDriverSeeds === expGrands,
-        s"driver held ${TrainedBuildStats.lastDriverSeeds}, law says $expGrands")
-      assert(TrainedBuildStats.lastDriverSeeds < expSupers,
+      assert(driverSeeds === expGrands,
+        s"driver held $driverSeeds, law says $expGrands")
+      assert(driverSeeds < expSupers,
         "grand level must be strictly narrower than the super level")
       // sanity on sc: children ≈ c cells exist as distinct assignments
       val cells = e.selectExpr("cell").distinct().count()

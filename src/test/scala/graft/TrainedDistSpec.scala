@@ -3,16 +3,17 @@ package graft
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The DISTRIBUTED trained-codebook build (trainedCellsDist) vs the
-  * one-broadcast build (trainedCells): same seeds, same two-level
-  * integer argmin, same tie law — so the ASSIGNMENTS must be
-  * bit-identical row for row. What differs is state placement, and
-  * that is what the second test pins: the distributed build's child
-  * blocks must meet the corpus through a SHUFFLE join (each task
-  * hashes only its partition's blocks), never a broadcast of the full
-  * codebook — the shape that holds when c = N/125 outgrows one JVM
-  * (the r08 codebook-growth ceiling). The shared DuckDB oracle gates
-  * values; this spec gates the equality CLAIM and the plan shape.
+/** The DISTRIBUTED trained-codebook build (trainedCells at
+  * `budget = 0`) vs the one-broadcast build (trainedCells): same
+  * seeds, same two-level integer argmin, same tie law — so the
+  * ASSIGNMENTS must be bit-identical row for row. What differs is
+  * state placement, and that is what the last test pins: the
+  * distributed build's child blocks must meet the corpus through a
+  * SHUFFLE join (each task hashes only its partition's blocks), never
+  * a broadcast of the full codebook — the shape that holds when
+  * c = N/125 outgrows one JVM (the r08 codebook-growth ceiling). The
+  * shared DuckDB oracle gates values; this spec gates the equality
+  * CLAIM and the plan shape.
   */
 class TrainedDistSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   import SparkTestSession._
@@ -20,7 +21,7 @@ class TrainedDistSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   test("distributed build assigns the identical cell to every row") {
     val one = ops.SimilarityQueries.trainedCells(spark, sf)
       .selectExpr("vec_id", "cell AS cell_one")
-    val dist = ops.SimilarityQueries.trainedCellsDist(spark, sf)
+    val dist = ops.SimilarityQueries.trainedCells(spark, sf, budget = 0)
       .selectExpr("vec_id", "cell AS cell_dist")
     val joined = one.join(dist, "vec_id").cache()
     try {
@@ -47,7 +48,7 @@ class TrainedDistSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       .trainedCells(spark, sf, probe2 = true, probe3 = true)
       .selectExpr("vec_id", "cell AS c1", "cell2 AS c21", "cell3 AS c31")
     val dist = ops.SimilarityQueries
-      .trainedCellsDist(spark, sf, probe2 = true, probe3 = true)
+      .trainedCells(spark, sf, probe2 = true, probe3 = true, budget = 0)
       .selectExpr("vec_id", "cell AS c2", "cell2 AS c22", "cell3 AS c32")
     val joined = one.join(dist, "vec_id").cache()
     try {
@@ -74,7 +75,7 @@ class TrainedDistSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       .trainedCells(spark, sf, seedWhere = w)
       .selectExpr("vec_id", "cell AS cell_one")
     val dist = ops.SimilarityQueries
-      .trainedCellsDist(spark, sf, seedWhere = w)
+      .trainedCells(spark, sf, seedWhere = w, budget = 0)
       .selectExpr("vec_id", "cell AS cell_dist")
     val joined = one.join(dist, "vec_id").cache()
     try {
@@ -90,37 +91,35 @@ class TrainedDistSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   }
 
   test("size switch: past the driver-seed budget trainedCells takes the dist route") {
-    import ops.SimilarityQueries.{MaxDriverSeedsKey, TrainedBuildStats}
+    import graft.functions.BookRoute
     // baseline: default budget, fixture c is tiny -> broadcast route
-    val base = ops.SimilarityQueries
+    val one = ops.SimilarityQueries
       .trainedCells(spark, sf, probe2 = true, probe3 = true)
+    val base = one
       .selectExpr("vec_id", "cell AS c1", "cell2 AS c21", "cell3 AS c31")
       .collect().map(r => (r.getLong(0), (r.getLong(1), r.getLong(2), r.getLong(3))))
       .toMap
-    assert(TrainedBuildStats.lastRoute === "broadcast")
-    val broadcastSeeds = TrainedBuildStats.lastDriverSeeds
+    val BookRoute(baseRoute, broadcastSeeds) = BookRoute.of(one)
+    assert(baseRoute === "broadcast")
     ScratchCache.release()
-    spark.conf.set(MaxDriverSeedsKey, "1")
     try {
-      val switched = ops.SimilarityQueries
-        .trainedCells(spark, sf, probe2 = true, probe3 = true)
-        .selectExpr("vec_id", "cell", "cell2", "cell3").collect()
-      assert(TrainedBuildStats.lastRoute === "dist",
+      val dist = ops.SimilarityQueries
+        .trainedCells(spark, sf, probe2 = true, probe3 = true, budget = 1)
+      val switched =
+        dist.selectExpr("vec_id", "cell", "cell2", "cell3").collect()
+      val BookRoute(route, distSeeds) = BookRoute.of(dist)
+      assert(route === "dist",
         "budget=1 must delegate to the distributed build")
       // driver state drops from c child seeds to ~sqrt(c) supers
-      assert(TrainedBuildStats.lastDriverSeeds < broadcastSeeds,
-        s"dist route held ${TrainedBuildStats.lastDriverSeeds} seeds, " +
-          s"broadcast held $broadcastSeeds")
+      assert(distSeeds < broadcastSeeds,
+        s"dist route held $distSeeds seeds, broadcast held $broadcastSeeds")
       assert(switched.length === base.size)
       switched.foreach { r =>
         val exp = base(r.getLong(0))
         assert((r.getLong(1), r.getLong(2), r.getLong(3)) === exp,
           s"vec_id ${r.getLong(0)} differs through the switch")
       }
-    } finally {
-      spark.conf.unset(MaxDriverSeedsKey)
-      ScratchCache.release()
-    }
+    } finally ScratchCache.release()
   }
 
   test("the default budget is reachable: adaptiveCells outgrows it") {
@@ -129,7 +128,7 @@ class TrainedDistSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     // the 2^18 default budget, so the size switch could never fire
     // outside conf-forced tests. The law must outgrow the budget at
     // real corpus sizes and stay fixture-identical at small N.
-    assert(adaptiveCells(10000000000L) > DefaultMaxDriverSeeds,
+    assert(adaptiveCells(10000000000L) > MaxDriverSeeds,
       "the dist route is unreachable under the default budget")
     assert(adaptiveCells(2000) === 16)
     assert(adaptiveCells(200000) === 1600)
@@ -137,7 +136,7 @@ class TrainedDistSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   }
 
   test("child blocks meet the corpus through a shuffle join, not a broadcast") {
-    val dist = ops.SimilarityQueries.trainedCellsDist(spark, sf)
+    val dist = ops.SimilarityQueries.trainedCells(spark, sf, budget = 0)
     try {
       dist.collect()
       // the frame is scratch-cached: the join lives in the cached
