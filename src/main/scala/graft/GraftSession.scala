@@ -65,6 +65,16 @@ import org.apache.spark.sql.SparkSession
   *  - `spark.sql.shuffle.partitions = cpus` — scale-adaptive via
   *    `$SPARK_GRAFT_CPUS` (the driver contract), not a constant; AQE
   *    coalescing stays on (default) for the byte-sized stages.
+  *  - `spark.sql.legacy.parquet.nanosAsLong=true` — an int64
+  *    TIMESTAMP(NANOS) parquet column reads as raw longs, which
+  *    [[Tables.events]] decodes to µs timestamps. The key cannot be
+  *    scoped to one read: Spark's ParquetFileFormat copies the session
+  *    value into every scan's hadoopConf at execution, over any
+  *    DataFrameReader option, so it is a session setting. It touches
+  *    only nanos-typed columns (µs- and tz-typed reads are unchanged;
+  *    the fixtures and the perfbench corpus are `timestamp[us]`). A
+  *    session built without it gets Spark's PARQUET_TYPE_ILLEGAL error
+  *    on an int64-nanos file; readers never set it themselves.
   *  - `spark.sql.session.timeZone=UTC` — the oracle comparison
   *    contract (DuckDB reads naive timestamps; every entry point pins
   *    UTC so epoch math matches bit-exactly).
@@ -108,6 +118,7 @@ object GraftSession {
       .master(s"local[$c]")
       .config("spark.sql.shuffle.partitions", c)
       .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
       .config("spark.local.dir", localDir)
       .config("spark.sql.codegen.cache.maxEntries", "4000")

@@ -45,20 +45,16 @@ object Tables {
     *   - TIMESTAMP_NTZ (µs, isAdjustedToUTC=false) → cast to TimestampType,
     *     an exact epoch mapping under the UTC session timezone every entry
     *     point pins (matches DuckDB's naive read of the same file);
-    *   - INT64 (ns-precision files surfaced as raw longs via nanosAsLong,
-    *     which Spark's vectorized reader otherwise rejects with
-    *     PARQUET_TYPE_ILLEGAL) → convert nanos → µs TimestampType.
+    *   - INT64 (ns-precision files surfaced as raw longs by
+    *     `spark.sql.legacy.parquet.nanosAsLong`, which the session
+    *     contract sets — [[GraftSession]]; a session without it gets
+    *     Spark's PARQUET_TYPE_ILLEGAL error on such a file) → convert
+    *     nanos → µs TimestampType.
     * Any other layout throws loudly, and a once-per-path min/max-year
     * invariant catches unit drift (a wrong divisor lands decades away
     * from the fixture's range) instead of letting windows silently
     * collapse — the round-4 failure mode. */
   def events(spark: SparkSession, dir: String): DataFrame = {
-    // SESSION CONTRACT: nanosAsLong cannot be scoped per-read — Spark's
-    // ParquetFileFormat re-copies the session-conf value into every scan's
-    // hadoopConf at execution, overriding a DataFrameReader option. The
-    // flag only affects TIMESTAMP(NANOS) parquet columns (which Spark
-    // otherwise rejects outright), so µs/tz-typed reads are untouched.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val decoded = graft.streaming.EventStream.decodeTs(t(spark, dir, "events"))
     assertSaneEventTimes(decoded, s"$dir/events.parquet")
     decoded

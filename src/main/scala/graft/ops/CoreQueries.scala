@@ -76,29 +76,30 @@ object CoreQueries {
     // table read (hours) for the audit/accounting queries every
     // pipeline runs constantly. Pushdown needs the DSv2 parquet scan
     // (only ParquetScanBuilder implements SupportsPushDownAggregates),
-    // so the fn scopes BOTH confs — aggregatePushdown on, parquet off
-    // the V1 list — executes eagerly under them, and restores session
-    // state before returning (a lazily-returned frame would plan after
-    // the restore); the returned frame is the materialized one-row
-    // result. StatsAggPushdownSpec asserts PushedAggregation appears
-    // in the executed plan and the row matches the conf-off aggregate.
+    // so the fn plans and collects in a PRIVATE session (`newSession`:
+    // same SparkContext and cache, its own conf) carrying both confs —
+    // aggregatePushdown on, parquet off the V1 list — and never writes
+    // the caller's conf, so concurrent queries in `s` cannot see them;
+    // the returned frame is the materialized one-row result.
+    // StatsAggPushdownSpec asserts PushedAggregation appears in the
+    // executed plan and the row matches the conf-off aggregate.
     "q_stats_only_agg" -> QueryDef(
       (s, d) => {
         val kV1 = "spark.sql.sources.useV1SourceList"
-        // Drop ONLY parquet from the resolved V1 list: getOption
-        // resolves the entry's registered default, whereas
+        // Drop ONLY parquet from the caller's resolved V1 list:
+        // getOption resolves the entry's registered default, whereas
         // get(kV1, "") returns "" when never explicitly set — which
         // would silently flip EVERY file source to DSv2 here.
         val v1 = s.conf.getOption(kV1).getOrElse("").split(",")
           .map(_.trim).filter(v => v.nonEmpty && v != "parquet")
           .mkString(",")
-        val row = graft.GraftSession.withConf(s,
-            "spark.sql.parquet.aggregatePushdown" -> "true", kV1 -> v1) {
-          Tables.lineitem(s, d).agg(
-            count(lit(1)).as("n_rows"),
-            min("l_orderkey").as("min_key"),
-            max("l_orderkey").as("max_key")).collect()(0)
-        }
+        val ps = s.newSession()
+        ps.conf.set("spark.sql.parquet.aggregatePushdown", "true")
+        ps.conf.set(kV1, v1)
+        val row = Tables.lineitem(ps, d).agg(
+          count(lit(1)).as("n_rows"),
+          min("l_orderkey").as("min_key"),
+          max("l_orderkey").as("max_key")).collect()(0)
         import s.implicits._
         Seq((row.getLong(0), row.getLong(1), row.getLong(2)))
           .toDF("n_rows", "min_key", "max_key")

@@ -189,6 +189,22 @@ object SimilarityQueries {
     (s, (c + s - 1) / s)
   }
 
+  /** The HASH-seeded two-level book (q_ann_ivf, q_ann_incremental,
+    * q_ann_ivf_probe2): (vec_id, embedding, n2, cell[, cell2]),
+    * scratch-cached — [[trainedCells]]' column convention. `cell` is
+    * the native two-level argmin over the [[adaptiveCells]] split;
+    * with `probe2`, `cell2` is the best child of the second-nearest
+    * super (always in another super's id block than `cell`). */
+  private[graft] def hashCells(s: SparkSession, d: String,
+      probe2: Boolean = false): DataFrame = {
+    val (sc, mc) = superSplit(adaptiveCells(corpusN(s, d)))
+    val e = col("embedding")
+    val cols = Seq(col("vec_id"), e, norm2("embedding"),
+      ivfCellH(e, sc, mc).cast("int").as("cell")) ++
+      (if (probe2) Seq(ivfCellH2(e, sc, mc).cast("int").as("cell2")) else Nil)
+    ScratchCache.scratch(Tables.embeddingsParallel(s, d).select(cols: _*))
+  }
+
   /** Seed strides for the TRAINED (data-seeded) quantizer: child seeds
     * are every `sc`-th vec_id (≈ c of them), super seeds every `ss`-th
     * (≈ ⌈√c⌉ of them, a SUBSET of the child seeds — ss is a multiple of
@@ -1167,7 +1183,7 @@ object SimilarityQueries {
     * fallback rows (cellX = cell) FILTERED so the fan-out stays
     * pair-disjoint. Column aliases are caller-chosen (the dedup family
     * speaks vec_id_a/ea/na2, the ANN family query_id/qe/qn2). */
-  private def probeUnion(e: DataFrame, idAs: String, embAs: String,
+  private[graft] def probeUnion(e: DataFrame, idAs: String, embAs: String,
       n2As: String, useCell3: Boolean): DataFrame = {
     def sel(cellExpr: String) = Seq(s"vec_id AS $idAs",
       s"embedding AS $embAs", s"n2 AS $n2As", s"$cellExpr AS cell")
@@ -1198,12 +1214,13 @@ object SimilarityQueries {
   // The three tails of the "book + tail" shape (object Scaladoc).
 
   /** Search side of an embedding frame: (id, qe, qn2, keys…). */
-  private def asProbes(e: DataFrame, id: String, keys: String*): DataFrame =
+  private[graft] def asProbes(e: DataFrame, id: String,
+      keys: String*): DataFrame =
     e.selectExpr(Seq(s"vec_id AS $id", "embedding AS qe", "n2 AS qn2") ++
       keys: _*)
 
   /** Corpus side of an embedding frame: (neighbor_id, ce, cn2, keys…). */
-  private def asCorpus(e: DataFrame, keys: String*): DataFrame =
+  private[graft] def asCorpus(e: DataFrame, keys: String*): DataFrame =
     e.selectExpr(Seq("vec_id AS neighbor_id", "embedding AS ce",
       "n2 AS cn2") ++ keys: _*)
 
@@ -1920,7 +1937,7 @@ object SimilarityQueries {
   }
 
   /** Query subset for the PQ queries (matches the ANN family). */
-  private val PqQueries = 20
+  private[graft] val PqQueries = 20
 
   /** Quantized-BIGINT vectors + IVF routing cell, scratch-cached: the
     * shared base frame of q_ann_pq / q_ann_ivfpq. The PQ family keeps
@@ -2269,9 +2286,24 @@ object SimilarityQueries {
   /** (vec_id, v, cell): a book's cell frame with each row's
     * 1e-6-quantized vector, scratch-cached — the input of every
     * PQ/SQ8 estimator over a trained book. */
-  private def quantized(cells: DataFrame): DataFrame =
+  private[graft] def quantized(cells: DataFrame): DataFrame =
     ScratchCache.scratch(cells.selectExpr("vec_id",
       s"${SparkSql.quantVec("embedding", 1000000L)} AS v", "cell"))
+
+  /** A (vec_id, v, cell) frame with each `v` replaced by its residual
+    * wrt its cell's integer MEAN (per-dim sum div count) — the input
+    * of q_ann_ivfpq_res256's estimator. */
+  private[graft] def cellResiduals(v: DataFrame): DataFrame = {
+    val cents = v.selectExpr("cell", "posexplode(v) AS (dim, x)")
+      .groupBy("cell", "dim")
+      .agg(sum("x").as("sx"), count(lit(1)).as("n"))
+      .selectExpr("cell", "dim", "sx div n AS c")
+      .groupBy("cell")
+      .agg(expr("transform(sort_array(collect_list(struct(dim, c))), " +
+        "p -> p.c)").as("cv"))
+    v.join(cents.hint("SHUFFLE_HASH"), Seq("cell"))
+      .selectExpr("vec_id", "zip_with(v, cv, (a, b) -> a - b) AS v", "cell")
+  }
 
   /** DuckDB twin of [[sq8EstFrom]] over the trained cells — ends in
     * `est(query_id, vec_id, est_d2)` with `v(vec_id, v)` in scope, the
@@ -2356,7 +2388,7 @@ object SimilarityQueries {
     * candidates in its probed cells (IVF-PQ); without, every candidate
     * (flat PQ). A query's probe cells are distinct and a candidate has
     * one home cell, so the join stays (query, candidate)-unique. */
-  private def adcEst(codes: DataFrame, qdist: DataFrame,
+  private[graft] def adcEst(codes: DataFrame, qdist: DataFrame,
       qcells: Option[DataFrame]): DataFrame = {
     val lut = qcells.fold(qdist)(qdist.join(_, "query_id"))
     val sameCode = codes("ss") === lut("ss") && codes("code") === lut("cid")
@@ -2370,7 +2402,7 @@ object SimilarityQueries {
   }
 
   /** Each sampled query's home cell — nprobe = 1 for [[adcEst]]. */
-  private def homeCells(v: DataFrame): DataFrame =
+  private[graft] def homeCells(v: DataFrame): DataFrame =
     v.filter(col("vec_id") < PqQueries)
       .selectExpr("vec_id AS query_id", "cell AS qcell")
 
@@ -2383,7 +2415,7 @@ object SimilarityQueries {
   }
 
   /** Tail (c), the est-top-K: per-query top-K by (est_d2, vec_id). */
-  private def estTopK(est: DataFrame): DataFrame = {
+  private[graft] def estTopK(est: DataFrame): DataFrame = {
     val w = Window.partitionBy("query_id")
       .orderBy(col("est_d2").asc, col("vec_id").asc)
     est.withColumn("rn", row_number().over(w))
@@ -2712,13 +2744,7 @@ object SimilarityQueries {
     // vectors quantize to; per-batch cost ∝ batch size, not corpus size
     // — the vector twin of q_dedup_incremental.
     "q_ann_incremental" -> QueryDef(
-      (s, d) => {
-        val (sc, mc) = superSplit(adaptiveCells(corpusN(s, d)))
-        val e = ScratchCache.scratch(Tables.embeddingsParallel(s, d)
-          .select(col("vec_id"), col("embedding"), norm2("embedding"),
-            ivfCellH(col("embedding"), sc, mc).cast("int").as("cell")))
-        servedIngestProbe(e)
-      },
+      (s, d) => servedIngestProbe(hashCells(s, d)),
       duckCosineTopK(duckTwoLevelEbCte, "eb", "eb", "arrival_id",
         Seq("cell"), DuckArrivals)),
 
@@ -2814,15 +2840,9 @@ object SimilarityQueries {
     // r06 flat argmin forced c ∝ √N and an O(N^1.5) floor, measured
     // 60.7× at 100×.
     "q_ann_ivf" -> QueryDef(
-      (s, d) => {
-        // native two-level argmin kernel (bit-identical to the SQL CTE
-        // chain) + persist so the self-join doesn't assign cells twice
-        val (sc, mc) = superSplit(adaptiveCells(corpusN(s, d)))
-        val e = ScratchCache.scratch(Tables.embeddingsParallel(s, d)
-          .select(col("vec_id"), col("embedding"), norm2("embedding"),
-            ivfCellH(col("embedding"), sc, mc).cast("int").as("cell")))
-        homeCellSearch(e)
-      },
+      // native two-level argmin kernel (bit-identical to the SQL CTE
+      // chain), scratch-cached so the self-join doesn't assign cells twice
+      (s, d) => homeCellSearch(hashCells(s, d)),
       duckCosineTopK(duckTwoLevelEbCte, "eb", "eb", "query_id", Seq("cell"),
         DuckNotSelf)),
 
@@ -3058,15 +3078,10 @@ object SimilarityQueries {
         // native two-level kernels (graft_ivf_cell_h2 masks the nearest
         // super and rescans — bit-identical to the oracle's +inf-mask
         // CTE chain, one codegen'd call instead of a HOF pile)
-        val (sc, mc) = superSplit(adaptiveCells(corpusN(s, d)))
-        val e = ScratchCache.scratch(Tables.embeddingsParallel(s, d)
-          .select(col("vec_id"), col("embedding"), norm2("embedding"),
-            ivfCellH(col("embedding"), sc, mc).cast("int").as("cell1"),
-            ivfCellH2(col("embedding"), sc, mc).cast("int").as("cell2")))
-        val probes = asProbes(e, "query_id", "cell1 AS cell")
+        val e = hashCells(s, d, probe2 = true)
+        val probes = asProbes(e, "query_id", "cell")
           .unionAll(asProbes(e, "query_id", "cell2 AS cell"))
-        cosineTopK(probes, asCorpus(e, "cell1 AS cell"), "query_id",
-          Seq("cell"), Seq("cell"))
+        cellSearch(probes, e)
       }, {
         val d = DuckSql
         duckCosineTopK(s"""$duckKnobsCte,
@@ -3235,22 +3250,8 @@ object SimilarityQueries {
     // two-level routed encode, and broadcast lookup are byte-shared
     // ([[pq256Est]]).
     "q_ann_ivfpq_res256" -> QueryDef(
-      (s, d) => {
-        val e = ScratchCache.scratch(trainedCells(s, d)
-          .selectExpr("vec_id",
-            s"${SparkSql.quantVec("embedding", 1000000L)} AS qv", "cell"))
-        val cents = e.selectExpr("cell", "posexplode(qv) AS (dim, x)")
-          .groupBy("cell", "dim")
-          .agg(sum("x").as("sx"), count(lit(1)).as("n"))
-          .selectExpr("cell", "dim", "sx div n AS c")
-          .groupBy("cell")
-          .agg(expr("transform(sort_array(collect_list(struct(dim, c))), " +
-            "p -> p.c)").as("cv"))
-        val vr = e.join(cents.hint("SHUFFLE_HASH"), Seq("cell"))
-          .selectExpr("vec_id", "zip_with(qv, cv, (a, b) -> a - b) AS v",
-            "cell")
-        estTopK(pq256Est(s, vr))
-      },
+      (s, d) =>
+        estTopK(pq256Est(s, cellResiduals(quantized(trainedCells(s, d))))),
       duckEstTopK(s"""$duckTrainedEbCte,
          |qvv AS (SELECT vec_id, cell,
          |    ${DuckSql.quantVec("embedding", 1000000L)} AS qv

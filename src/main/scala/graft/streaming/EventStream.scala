@@ -44,10 +44,10 @@ object EventStream {
 
   /** Streaming read of the events fixture directory, schema-adaptive. */
   def readEvents(spark: SparkSession, dir: String): DataFrame = {
-    // Batch-read the same path first: sets the nanosAsLong session conf
-    // (see Tables.events for why it cannot be scoped per read) and runs
-    // Tables.events' decoded-time sanity invariant loudly, driver-side,
-    // before any stream starts.
+    // Batch-read the same path first: runs Tables.events' decoded-time
+    // sanity invariant loudly, driver-side, before any stream starts
+    // (an int64-nanos file needs the contract session's nanosAsLong —
+    // see GraftSession).
     graft.Tables.events(spark, dir): Unit
     // Layout-adaptive, like every other reader: the driver fixture is a
     // single FILE named events.parquet inside the table dir (stream the

@@ -25,10 +25,12 @@ class ConcurrentQueriesSpec extends AnyFunSuite {
 
   test("concurrent DAGs in one session match their sequential results") {
     // the ANN rows are size-switched builds: each takes its route from
-    // its own arguments, so concurrent builds cannot bleed routes
+    // its own arguments, so concurrent builds cannot bleed routes;
+    // q_stats_only_agg plans under its confs in a private session, so
+    // they cannot reach the others
     val names = Seq("q_agg_sum_count", "q_hash_join_inner", "q_token_count",
       "q_topk", "q_ann_ivf_trained", "q_ann_ivf_trained_dist",
-      "q_ann_index_auto_l3", "q_dedup_semantic")
+      "q_ann_index_auto_l3", "q_dedup_semantic", "q_stats_only_agg")
     def run(n: String): Seq[String] =
       SparkEntry.queries(n)(spark, sf).collect().map(_.toString).sorted.toSeq
     try {

@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The events-reader layout guard, exercised NEGATIVELY — the test that
   * would have caught round 4's silent 1000× time shrink before any
-  * query ran. Three contracts:
+  * query ran. Three contracts, and the reader's session contract:
   *  1. a TIMESTAMP(µs) fixture decodes through the adaptive branch to
   *     the same rows as the live fixture (positive control);
   *  2. an int64 column that holds MILLISECONDS (a unit the nanos branch
@@ -52,5 +52,19 @@ class EventsLayoutGuardSpec extends AnyFunSuite {
       Tables.events(spark, dir).count()
     }
     assert(e.getMessage.contains("unsupported physical type"), e.getMessage)
+  }
+
+  test("reading events writes nothing into a contract session's conf") {
+    // a session of its own carrying every runtime SQL setting of
+    // GraftSession.builder(); nanosAsLong is one of them, so the reader
+    // has nothing to set
+    val b = GraftSession.builder()
+    val opts = b.getClass.getMethod("options").invoke(b)
+      .asInstanceOf[scala.collection.Map[String, String]]
+    val s = spark.newSession()
+    opts.foreach { case (k, v) => if (s.conf.isModifiable(k)) s.conf.set(k, v) }
+    val before = s.conf.getAll
+    assert(Tables.events(s, sf).count() > 0)
+    assert(s.conf.getAll == before)
   }
 }

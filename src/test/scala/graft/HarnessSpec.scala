@@ -9,7 +9,8 @@ import graft.Harness.fixed
 /** The harness core's pure pieces (graft.Harness) and the artifact
   * functions the stress mains build on them: the 2× gate rule, the
   * BASELINE parser, the JSON writer/reader, the ScaleStress subset merge
-  * and the AnnClusteredStress gates. In-test data only, no session. */
+  * and the AnnClusteredStress gates and arithmetic. In-test data only, no
+  * session. */
 class HarnessSpec extends AnyFunSuite {
 
   private def tempFile(suffix: String): java.io.File = {
@@ -197,6 +198,34 @@ class HarnessSpec extends AnyFunSuite {
     "adp_switch_route" -> "dist", "lsh_switch_route" -> "lsh-broadcast",
     "lsh_switch_driver_seeds" -> 0L, "ann_auto_book" -> "l3",
     "ann_auto_ingest_book" -> "l3")
+
+  test("AnnClusteredStress occupancy: block count, max, sorted middle, pair mass") {
+    // unsorted input; the median is element size/2 of the sorted list
+    assert(AnnClusteredStress.occupancyOf(Seq(5L, 1L, 3L)) == (3, 5L, 3L, 35.0))
+    assert(AnnClusteredStress.occupancyOf(Seq(4L, 1L, 2L, 8L)) ==
+      (4, 8L, 4L, 85.0))
+    assert(AnnClusteredStress.occupancyOf(Seq(7L)) == (1, 7L, 7L, 49.0))
+    // Σc² in doubles: exact past the Int range
+    assert(AnnClusteredStress.occupancyOf(Seq(3000000000L))._4 == 9.0e18)
+  }
+
+  test("AnnClusteredStress recall, retention and removal-recall arithmetic") {
+    import AnnClusteredStress.{removalRecall, share}
+    val truth = Set((1L, 2L), (1L, 3L), (4L, 2L), (5L, 3L))
+    // found pairs outside the truth set never count
+    assert(share(truth, Set((1L, 2L), (4L, 2L), (7L, 8L))) == 0.5)
+    assert(share(truth, truth) == 1.0)
+    assert(share(truth, Set.empty[(Long, Long)]) == 0.0)
+    // nothing to find reads 1.0, whatever was found
+    assert(share(Set.empty[(Long, Long)], Set((1L, 2L))) == 1.0)
+    // removal: query rows with a lower-id true partner are 4 and 5; any
+    // one found lower-id partner removes the row, higher-id ones do not
+    assert(removalRecall(truth, Set((4L, 2L))) == 0.5)
+    assert(removalRecall(truth, Set((4L, 2L), (5L, 1L))) == 1.0)
+    assert(removalRecall(truth, Set((1L, 2L), (1L, 3L))) == 0.0)
+    // a truth set without lower-id partners removes nothing: 1.0
+    assert(removalRecall(Set((1L, 2L)), Set.empty) == 1.0)
+  }
 
   private def gateLists(v: ListMap[String, Any]): Map[String, Seq[Any]] =
     v.collect { case (k, s: Seq[Any]) => k -> s }

@@ -23,7 +23,6 @@ class RunningSpendWmSpec extends AnyFunSuite {
   import SparkTestSession._
 
   test("watermark-buffered running totals survive an out-of-order batch split") {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val providerKey = "spark.sql.streaming.stateStore.providerClass"
     val prevProvider = spark.conf.getOption(providerKey)
     spark.conf.set(providerKey,

@@ -20,7 +20,6 @@ class SessionTimerV2Spec extends AnyFunSuite {
   private val Gap = 1800L
 
   test("v2 timer sessionizer matches batch session windows across a replayed stream") {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val providerKey = "spark.sql.streaming.stateStore.providerClass"
     val prevProvider = spark.conf.getOption(providerKey)
     spark.conf.set(providerKey,

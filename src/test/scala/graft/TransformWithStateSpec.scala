@@ -17,7 +17,6 @@ class TransformWithStateSpec extends AnyFunSuite {
   import SparkTestSession._
 
   test("transformWithState running totals carry across a 4-batch replay") {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val providerKey = "spark.sql.streaming.stateStore.providerClass"
     val prevProvider = spark.conf.getOption(providerKey)
     spark.conf.set(providerKey,
