@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import scala.collection.immutable.ListMap
 
 import graft.Harness.{field, fixed, num}
-import graft.functions.{BookRoute, cosine}
+import graft.functions.{BookRoute, cosine, dist2}
 import graft.ops.ClusteringQueries
 import graft.ops.SimilarityQueries._
 
@@ -463,8 +463,7 @@ object AnnClusteredStress {
     def exactD2(sameCell: Boolean) = vq.selectExpr("vec_id", "v AS cv", "cell")
       .join(broadcast(pqQ), col("query_id") =!= col("vec_id") &&
         (if (sameCell) col("cell") === col("qcell") else lit(true)))
-      .selectExpr("query_id", "vec_id",
-        s"${graft.oracle.SparkSql.dist2Big("qv", "cv")} AS d2")
+      .select(col("query_id"), col("vec_id"), dist2(col("qv"), col("cv")).as("d2"))
     val pqTrue = ScratchCache.scratch(exactD2(sameCell = true))
     def relErr(est: DataFrame): Double =
       est.join(pqTrue, Seq("query_id", "vec_id"))

@@ -28,6 +28,11 @@ object Tables {
   private def t(spark: SparkSession, dir: String, name: String): DataFrame =
     Sources.readParquet(spark, s"$dir/$name.parquet")
 
+  /** Row count of table `name`, from its parquet footers when it is a
+    * plain file ([[graft.sources.Sources.countRows]]): no Spark job. */
+  def rowCount(spark: SparkSession, dir: String, name: String): Long =
+    Sources.countRows(spark, s"$dir/$name.parquet")
+
   def region(spark: SparkSession, dir: String): DataFrame    = t(spark, dir, "region")
   def nation(spark: SparkSession, dir: String): DataFrame    = t(spark, dir, "nation")
   def customer(spark: SparkSession, dir: String): DataFrame  = t(spark, dir, "customer")

@@ -6,6 +6,7 @@ import org.apache.spark.sql.GraftSqlBridge.{column, expression}
 import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.functions.{coalesce, col, lit, sqrt}
+import org.apache.spark.sql.internal.SQLConf
 
 /** Column constructors for the graft kernels — the query-building
   * surface of the expression family. Each returns the same Catalyst
@@ -45,6 +46,16 @@ package object functions {
     * vector and squared-norm columns. */
   def cosine(a: String, b: String, an2: String, bn2: String): Column =
     (vecDot(col(a), col(b)) / sqrt(col(an2) * col(bn2))).as("cosine")
+
+  // the quantized-vector kernels ([[VecKernels]]); ANSI errors follow
+  // the session conf at Column build, as Spark's arithmetic does
+  private def ansi = SQLConf.get.ansiEnabled
+  def quantize(v: Column, scale: Long): Column = column(QuantizeExpr(e(v), scale))
+  def dist2(a: Column, b: Column): Column = column(Dist2Expr(e(a), e(b), ansi))
+  def sub(a: Column, b: Column): Column = column(VecSubExpr(e(a), e(b), ansi))
+  def sq8(v: Column, mn: Column, mx: Column): Column =
+    column(Sq8Expr(e(v), e(mn), e(mx), ansi))
+  def tokens(text: Column): Column = column(TokensExpr(e(text)))
 
   def lcp(a: Column, b: Column): Column = column(Lcp(e(a), e(b)))
   def tokenHashes(tokens: Column, width: Int): Column =

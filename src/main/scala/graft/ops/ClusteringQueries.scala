@@ -3,9 +3,9 @@ package graft.ops
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.functions.{Codebook, blockArgmin, cosine, joinKey, norm2, superArgmin,
-  trainedCell}
-import graft.oracle.{Dialect, DuckSql, SparkSql}
+import graft.functions.{Codebook, blockArgmin, cosine, dist2, joinKey, norm2,
+  quantize, superArgmin, trainedCell}
+import graft.oracle.DuckSql
 import graft.{QueryDef, ScratchCache, Tables}
 
 /** Distributed k-means over the embeddings table — the clustering step a
@@ -44,19 +44,21 @@ object ClusteringQueries {
   private val Scale = 1000000L
   private val Dims = 64
 
-  private def quantCol(d: Dialect) = d.quantVec("embedding", Scale)
+  private def duckQuantCol = DuckSql.quantVec("embedding", Scale)
+
+  /** (vec_id, v): the corpus quantized by the compiled twin of
+    * [[duckQuantCol]] ([[graft.functions.VecKernels]]), scratch-cached. */
+  private def quantizedCorpus(s: SparkSession, d: String): DataFrame =
+    ScratchCache.scratch(Tables.embeddingsParallel(s, d)
+      .select(col("vec_id"), quantize(col("embedding"), Scale).as("v")))
 
   /** One assignment under the current centroids, Spark side: dists built
     * in ascending-cid order, first-position argmin = smallest-cid
     * tie-break. Pure map — no join, no shuffle. */
   private def assign(v: DataFrame, cents: Seq[(Int, Seq[Long])]): DataFrame = {
-    val distExprs = cents.map { case (_, c) =>
-      val lit = c.mkString("array(", "L,", "L)")
-      SparkSql.dist2Big("v", lit)
-    }
+    val dists = array(cents.map { case (_, c) => dist2(col("v"), typedLit(c)) }: _*)
     val cidArr = cents.map(_._1).mkString("array(", ",", ")")
-    val distArr = distExprs.mkString("array(", ",", ")")
-    v.selectExpr("vec_id", "v", s"$distArr AS dists")
+    v.select(col("vec_id"), col("v"), dists.as("dists"))
       .selectExpr("vec_id", "v",
         s"element_at($cidArr, CAST(array_position(dists, array_min(dists)) AS INT)) AS cluster",
         "array_min(dists) AS dist2")
@@ -262,9 +264,8 @@ object ClusteringQueries {
     * switch point. */
   private[graft] def semClusters(s: SparkSession, d: String,
       budget: Long = SimilarityQueries.MaxDriverSeeds): DataFrame = {
-    val v = ScratchCache.scratch(Tables.embeddingsParallel(s, d)
-      .selectExpr("vec_id", s"${quantCol(SparkSql)} AS v"))
-    val k = adaptiveSemK(v.count())
+    val v = quantizedCorpus(s, d)
+    val k = adaptiveSemK(SimilarityQueries.corpusN(s, d))
     if (k > budget) {
       var cents = ScratchCache.scratch(v.filter(col("vec_id") < k)
         .selectExpr("vec_id AS cid", "v AS c"))
@@ -336,7 +337,7 @@ object ClusteringQueries {
           .mkString(",\n")
         val cos = s"(${DuckSql.dotDbl("a.embedding", "b.embedding")}" +
           " / sqrt(a.n2 * b.n2))"
-        s"""WITH v AS (SELECT vec_id, ${quantCol(DuckSql)} AS v FROM embeddings),
+        s"""WITH v AS (SELECT vec_id, ${duckQuantCol} AS v FROM embeddings),
            |c0 AS (SELECT CAST(vec_id AS INT) AS cid, v AS c FROM v
            |  WHERE vec_id < $duckSemKExpr),
            |$cteChain,
@@ -357,8 +358,7 @@ object ClusteringQueries {
 
     "q_kmeans" -> QueryDef(
       (s, d) => {
-        val v = ScratchCache.scratch(Tables.embeddingsParallel(s, d)
-          .selectExpr("vec_id", s"${quantCol(SparkSql)} AS v"))
+        val v = quantizedCorpus(s, d)
         var cents = firstCentroids(v, K)
         for (_ <- 1 to Iters) cents = update(assign(v, cents))
         assign(v, cents)
@@ -368,7 +368,7 @@ object ClusteringQueries {
         val cteChain = (1 to Iters).flatMap(i =>
           Seq(assignCte(s"a$i", s"c${i - 1}"), updateCte(s"c$i", s"a$i")))
           .mkString(",\n")
-        s"""WITH v AS (SELECT vec_id, ${quantCol(DuckSql)} AS v FROM embeddings),
+        s"""WITH v AS (SELECT vec_id, ${duckQuantCol} AS v FROM embeddings),
            |c0 AS (SELECT CAST(vec_id AS INT) AS cid, v AS c FROM v WHERE vec_id < $K),
            |$cteChain,
            |${assignCte("afinal", s"c$Iters")}

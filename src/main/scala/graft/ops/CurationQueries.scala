@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.functions._
 
-import graft.functions.{bloomAgg, bloomProbe, textStats}
+import graft.functions.{bloomAgg, bloomProbe, textStats, tokens}
 import graft.oracle.{Dialect, DuckSql, SparkSql}
 import graft.{QueryDef, ScratchCache, Tables}
 
@@ -92,7 +92,7 @@ object CurationQueries {
   private[graft] def curationGate(in: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
     in.select(col("doc_id"), col("text"), col("lang"), col("n_chars"),
-        textStats(expr(SparkSql.tokens("text"))).as("st"))
+        textStats(tokens(col("text"))).as("st"))
       .filter(expr("NOT (st.n_tokens < 20 OR st.n_tokens > 500" +
         " OR (CAST(st.n_distinct AS DOUBLE) / st.n_tokens) < 0.3" +
         " OR (CAST(st.stop_hits AS DOUBLE) / st.n_tokens) < 0.01)"))

@@ -3,7 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.functions.{intersectSize, lcp, simhash, tokenHashes, weightedIntersect}
+import graft.functions.{intersectSize, lcp, simhash, tokenHashes, tokens,
+  weightedIntersect}
 import graft.oracle.{Dialect, DuckSql, SparkSql}
 import graft.{QueryDef, ScratchCache, Tables}
 
@@ -68,7 +69,7 @@ object DedupQueries {
   /** Spark form of the same set via the native ShingleHashSet3 expression
     * (identical arithmetic, tight JVM loop instead of interpreted HOFs). */
   private[graft] def shingleSet: Column =
-    graft.functions.shingleHashSet(expr(SparkSql.tokens("text")))
+    graft.functions.shingleHashSet(tokens(col("text")))
 
   /** The same set through the `graft_shingle_hash_set` SQL name, for SQL
     * text in sessions that registered it ([[graft.functions.TextHashFunctions]]). */
@@ -900,7 +901,7 @@ object DedupQueries {
         // the native TokenPolyHashes + SimHashExpr loops
         val docs = ScratchCache.scratch(Tables.documentsParallel(s, d)
           .select(col("doc_id"),
-            tokenHashes(expr(SparkSql.tokens("text")), 12).as("th"))
+            tokenHashes(tokens(col("text")), 12).as("th"))
           .select(col("doc_id"), simhash(col("th"), SimBits).cast("bigint").as("sh")))
         simhashPairs(docs).orderBy("doc_id_a", "doc_id_b")
       }, {

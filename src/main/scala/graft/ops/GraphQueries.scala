@@ -182,8 +182,10 @@ object GraphQueries {
             "IF(rka < rkb, a, b) AS u",
             "IF(rka < rkb, b, a) AS v",
             "IF(rka < rkb, rkb, rka) AS rkv"))
+        // a self-join of the cached `dir`: the hint pins the build
+        // side, which AQE otherwise picks by which stage reports first
         val wedges = dir.selectExpr("u", "v AS x", "rkv AS rkx")
-          .join(dir.selectExpr("u", "v AS y", "rkv AS rky"), "u")
+          .join(dir.selectExpr("u", "v AS y", "rkv AS rky").hint("SHUFFLE_HASH"), "u")
           .filter(col("rkx") < col("rky"))
           .select("u", "x", "y")
         val tri = wedges.join(

@@ -6,9 +6,10 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 import graft.functions.{BookRoute, Codebook, SeedBook, TwoLevelBook,
-  blockArgmin, blockArgmin2, blockTopKD, cosine, ivfCell2, ivfCellH,
-  ivfCellH2, joinKey, lshCell, lshSuper, norm2, superArgmin, superArgmin2,
-  superTopK, trainedCell, trainedCell2, trainedCellH2, trainedProbes}
+  blockArgmin, blockArgmin2, blockTopKD, cosine, dist2, ivfCell2, ivfCellH,
+  ivfCellH2, joinKey, lshCell, lshSuper, norm2, quantize, sq8, sub,
+  superArgmin, superArgmin2, superTopK, trainedCell, trainedCell2,
+  trainedCellH2, trainedProbes}
 import graft.oracle.{Dialect, DuckSql, SparkSql}
 import graft.{QueryDef, ScratchCache, Tables}
 
@@ -122,10 +123,12 @@ object SimilarityQueries {
   // which compute the SAME formulas inline from count(*) — keep every
   // fixture row bit-identical. The corpus count is one driver-side
   // parquet count-star per query invocation (the bounded-scalar
-  // pattern); recall-vs-cost still moves with occupancy exactly as in a
-  // real IVF/LSH deployment (FAISS sizes nlist from N the same way).
-  private def corpusN(s: SparkSession, d: String): Long =
-    Tables.embeddings(s, d).count()
+  // pattern), read from the file footers on the driver when the table
+  // is a plain file; recall-vs-cost still moves with occupancy exactly
+  // as in a real IVF/LSH deployment (FAISS sizes nlist from N the same
+  // way).
+  private[ops] def corpusN(s: SparkSession, d: String): Long =
+    Tables.rowCount(s, d, "embeddings")
 
   /** Smallest p ≥ NPlanes with 2^p · 125 ≥ 4N (occupancy ≤ 31.25). */
   private[graft] def adaptivePlanes(n: Long): Int =
@@ -233,6 +236,10 @@ object SimilarityQueries {
     * route a frame took back from its plan. */
   private[graft] val MaxDriverSeeds = 262144L
 
+  /** `embedding` quantized to BIGINT at 1e-6 ([[Dialect.quantVec]]'s
+    * floor(x·1e6 + 0.5), compiled: [[graft.functions.VecKernels]]). */
+  private def quantEmb: Column = quantize(col("embedding"), 1000000L)
+
   /** Shared prelude of both trained-codebook builders: the corpus
     * projection (id, embedding, |v|², 1e-6-quantized vector),
     * scratch-cached ONCE so the size switch's delegation does not
@@ -245,7 +252,7 @@ object SimilarityQueries {
     // (r12 optimization, guide §2.5 input skew).
     graft.ScratchCache.scratch(Tables.embeddingsParallel(s, d)
       .select(col("vec_id"), col("embedding"), norm2("embedding"),
-        expr(s"${SparkSql.quantVec("embedding", 1000000L)} AS qv")))
+        quantEmb.as("qv")))
   }
 
   /** Child-seed predicate of the trained books: every sc-th vec_id
@@ -256,9 +263,11 @@ object SimilarityQueries {
     if (!lcg) s"vec_id % $sc = 0"
     else s"(((vec_id % 2147483648) * 1103515245 + 12345) % 2147483648) % $sc = 0"
 
-  /** `seeds(id, vec)` collected to the driver in id order. */
+  /** `seeds(id, vec)` collected to the driver in id order: one job, the
+    * ids sorted on the driver (they are unique, so the order is the one
+    * a range sort would give, without its sample job and shuffle). */
   private[ops] def seedBook(seeds: DataFrame): SeedBook = {
-    val rows = seeds.orderBy(seeds.columns.head).collect()
+    val rows = seeds.collect().sortBy(_.getLong(0))
     (rows.map(_.getLong(0)), rows.map(_.getSeq[Long](1).toArray))
   }
 
@@ -324,7 +333,7 @@ object SimilarityQueries {
       nSupers: Int, maxProbes: Int, epsNum: Long, epsDen: Long,
       interleave: Boolean = false, budget: Long = MaxDriverSeeds): DataFrame = {
     val v = trainedVecs(s, d)
-    val n = v.count()
+    val n = corpusN(s, d)
     val (sc, ss) = trainedStrides(n)
     if (adaptiveCells(n) > budget)
       return trainedAdaptiveCellsDistFrom(s, v, n, nSupers, maxProbes,
@@ -484,7 +493,7 @@ object SimilarityQueries {
     val v = trainedVecs(s, d)
     val defaultMode = seedWhere == "TRUE"
     val seedSrc = if (defaultMode) v else v.filter(expr(seedWhere))
-    val n = seedSrc.count()
+    val n = if (defaultMode) corpusN(s, d) else seedSrc.count()
     val (sc, ss) = trainedStrides(n)
     // SIZE SWITCH (r10, the r09 verdict's top item): the broadcast
     // route below collects c = ⌈N/125⌉ child seeds to the driver —
@@ -800,11 +809,10 @@ object SimilarityQueries {
 
   private[graft] def trainedCellsL3(s: SparkSession, d: String,
       probe2: Boolean = false, adaptive: Boolean = false): DataFrame =
-    trainedCellsL3From(s, trainedVecs(s, d), probe2, adaptive)
+    trainedCellsL3From(s, trainedVecs(s, d), corpusN(s, d), probe2, adaptive)
 
-  private def trainedCellsL3From(s: SparkSession, v: DataFrame,
-      probe2: Boolean = false, adaptive: Boolean = false): DataFrame = {
-    val n = v.count()
+  private def trainedCellsL3From(s: SparkSession, v: DataFrame, n: Long,
+      probe2: Boolean, adaptive: Boolean): DataFrame = {
     val (sc, ss, gs) = trainedStridesL3(n)
     trainedCellsL3Build(s, v,
       v.filter(expr(s"vec_id % $gs = 0")).selectExpr("vec_id", "qv"),
@@ -1404,10 +1412,13 @@ object SimilarityQueries {
     * declared query — two-level, L3, and the facade arms: arrivals
     * (vec_id % 10 = 0) probe ONLY existing rows through the frozen
     * book's home cells, per-arrival top-3. One body so the per-book
-    * routes and the facade can never drift apart. */
+    * routes and the facade can never drift apart. Both sides read one
+    * scratch-cached frame, so without a hint AQE broadcasts whichever
+    * side's cache stage reports first and the plan changes from run to
+    * run; the SHUFFLE_HASH hint builds the arrivals at every size. */
   private[graft] def servedIngestProbe(e: DataFrame): DataFrame =
     cosineTopK(asProbes(e.filter(col("vec_id") % 10 === 0), "arrival_id",
-        "cell"),
+        "cell").hint("SHUFFLE_HASH"),
       asCorpus(e.filter(col("vec_id") % 10 =!= 0), "cell"),
       "arrival_id", Seq("cell"), Seq("cell"))
 
@@ -1710,7 +1721,7 @@ object SimilarityQueries {
     val e = ScratchCache.scratch(Tables.embeddingsParallel(s, d)
       .select(col("vec_id"), col("embedding"), norm2("embedding"),
         graft.functions.lshBucket(col("embedding"), np).as("bucket"),
-        expr(s"${SparkSql.quantVec("embedding", 1000000L)} AS qv")))
+        quantEmb.as("qv")))
     val hot = e.groupBy("bucket").agg(count(lit(1)).as("bn"))
       .filter(col("bn") > cap)
     // exact child-seed count before anything collects: every cap-th
@@ -1949,7 +1960,7 @@ object SimilarityQueries {
   private def pqQuantized(s: SparkSession, d: String): DataFrame = {
     ScratchCache.scratch(Tables.embeddingsParallel(s, d)
       .select(col("vec_id"),
-        expr(s"${SparkSql.quantVec("embedding", 1000000L)} AS v"),
+        quantEmb.as("v"),
         graft.functions.ivfCell(col("embedding"), NCells).cast("int").as("cell"),
         ivfCell2(col("embedding"), NCells).cast("int").as("cell2")))
   }
@@ -2045,8 +2056,8 @@ object SimilarityQueries {
           s"slice(v, ${ss * PqSubDims + 1}, $PqSubDims) AS qs")
     }.reduce(_ unionByName _)
     qsub.join(bookDf, "ss")
-      .selectExpr("query_id", "ss", "cid",
-        s"${SparkSql.dist2Big("qs", "c")} AS qd2")
+      .select(col("query_id"), col("ss"), col("cid"),
+        dist2(col("qs"), col("c")).as("qd2"))
   }
 
   /** Quantized RESIDUAL frame for the IVFADC variant: v := quantVec(x)
@@ -2060,8 +2071,7 @@ object SimilarityQueries {
       s"CAST(floor(${planeCoef(SparkSql, "(7000 + cell - 1)", "dd - 1")}" +
         " * 1000000.0 + 0.5) AS BIGINT)")
     ScratchCache.scratch(pqQuantized(s, d)
-      .selectExpr("vec_id", "cell",
-        s"${SparkSql.zipSubBig("v", cq)} AS v"))
+      .select(col("vec_id"), col("cell"), sub(col("v"), expr(cq)).as("v")))
   }
 
   /** Shared tail of the PQ oracle derivation — everything downstream of
@@ -2263,32 +2273,26 @@ object SimilarityQueries {
     val stats = v.selectExpr("posexplode(v) AS (dim, x)")
       .groupBy("dim").agg(min("x").as("mn"), max("x").as("mx"))
       .collect().sortBy(_.getInt(0))
-    val mnA = stats.map(_.getLong(1)).mkString("array(", "L,", "L)")
-    val mxA = stats.map(_.getLong(2)).mkString("array(", "L,", "L)")
-    def mn = s"element_at($mnA, dd)"
-    def mx = s"element_at($mxA, dd)"
-    val recon = s"transform(sequence(1, 64), dd -> " +
-      s"$mn + ((CASE WHEN $mx = $mn THEN 0L " +
-      s"ELSE (255 * (element_at(v, dd) - $mn)) div ($mx - $mn) END) " +
-      s"* ($mx - $mn)) div 255)"
-    val cand = v.selectExpr("vec_id", "cell", s"$recon AS rv")
+    val recon = sq8(col("v"), typedLit(stats.map(_.getLong(1))),
+      typedLit(stats.map(_.getLong(2))))
+    val cand = v.select(col("vec_id"), col("cell"), recon.as("rv"))
     val q = v.filter(col("vec_id") < PqQueries)
       .selectExpr("vec_id AS query_id", "cell AS qcell", "v AS qv")
     cand.join(broadcast(q), col("cell") === col("qcell") &&
         col("query_id") =!= col("vec_id"))
-      .selectExpr("query_id", "vec_id",
-        s"${SparkSql.dist2Big("qv", "rv")} AS est_d2")
+      .select(col("query_id"), col("vec_id"), dist2(col("qv"), col("rv")).as("est_d2"))
   }
 
   private[graft] def sq8Est(s: SparkSession, d: String): DataFrame =
     sq8EstFrom(s, quantized(trainedCells(s, d)))
 
   /** (vec_id, v, cell): a book's cell frame with each row's
-    * 1e-6-quantized vector, scratch-cached — the input of every
-    * PQ/SQ8 estimator over a trained book. */
+    * 1e-6-quantized vector — the input of every PQ/SQ8 estimator over a
+    * trained book. A projection, not a cache: the book's frame is
+    * cached already, and the compiled quantizer costs less per read
+    * than a second cached copy of the vectors costs to build. */
   private[graft] def quantized(cells: DataFrame): DataFrame =
-    ScratchCache.scratch(cells.selectExpr("vec_id",
-      s"${SparkSql.quantVec("embedding", 1000000L)} AS v", "cell"))
+    cells.select(col("vec_id"), quantEmb.as("v"), col("cell"))
 
   /** A (vec_id, v, cell) frame with each `v` replaced by its residual
     * wrt its cell's integer MEAN (per-dim sum div count) — the input
@@ -2302,7 +2306,7 @@ object SimilarityQueries {
       .agg(expr("transform(sort_array(collect_list(struct(dim, c))), " +
         "p -> p.c)").as("cv"))
     v.join(cents.hint("SHUFFLE_HASH"), Seq("cell"))
-      .selectExpr("vec_id", "zip_with(v, cv, (a, b) -> a - b) AS v", "cell")
+      .select(col("vec_id"), sub(col("v"), col("cv")).as("v"), col("cell"))
   }
 
   /** DuckDB twin of [[sq8EstFrom]] over the trained cells — ends in
@@ -2349,8 +2353,7 @@ object SimilarityQueries {
     val exact = short
       .join(v.selectExpr("vec_id", "v AS cv"), "vec_id")
       .join(v.selectExpr("vec_id AS query_id", "v AS qv"), "query_id")
-      .selectExpr("query_id", "vec_id",
-        s"${SparkSql.dist2Big("qv", "cv")} AS d2")
+      .select(col("query_id"), col("vec_id"), dist2(col("qv"), col("cv")).as("d2"))
     val w = Window.partitionBy("query_id")
       .orderBy(col("d2").asc, col("vec_id").asc)
     exact.withColumn("rn", row_number().over(w))
@@ -2689,7 +2692,10 @@ object SimilarityQueries {
     "q_ann_lsh" -> QueryDef(
       (s, d) => {
         val e = ScratchCache.scratch(lshBucketed(s, d, adaptivePlanes(corpusN(s, d))))
-        cosineTopK(asProbes(e, "query_id", "bucket"), asCorpus(e, "bucket"),
+        // a self-join of one cached frame: the hint pins the build
+        // side (see servedIngestProbe)
+        cosineTopK(asProbes(e, "query_id", "bucket"),
+          asCorpus(e, "bucket").hint("SHUFFLE_HASH"),
           "query_id", Seq("bucket"), Seq("bucket"))
       }, lshOracle),
 

@@ -1,9 +1,10 @@
 package graft.ops
 
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions.{broadcast, col, count, expr, lit, row_number, size, sum}
+import org.apache.spark.sql.functions.{array_sort, broadcast, col, count, explode, expr,
+  greatest, lit, row_number, size, sum}
 
-import graft.functions.{shingleHashSet, textStats, tokenCounts}
+import graft.functions.{shingleHashSet, textStats, tokenCounts, tokens}
 import graft.oracle.{Dialect, DuckSql, SparkSql}
 import graft.{QueryDef, Tables}
 
@@ -141,7 +142,7 @@ object TextQueries {
         (s, dir) => {
           Tables.documentsParallel(s, dir)
             .select(col("doc_id"), col("lang"),
-              textStats(expr(SparkSql.tokens("text"))).as("st"))
+              textStats(tokens(col("text"))).as("st"))
             .selectExpr("doc_id", "lang",
               "st.n_tokens AS n_tokens",
               "st.n_distinct AS n_distinct",
@@ -199,11 +200,11 @@ object TextQueries {
       // agree exactly. Map-side only.
       "q_repetition" -> QueryDef(
         (s, dir) => {
-          val toks = SparkSql.tokens("text")
+          val toks = tokens(col("text"))
           Tables.documentsParallel(s, dir)
             .select(col("doc_id"),
-              expr(s"greatest(size($toks) - 2, 1) AS n_shingles"),
-              size(shingleHashSet(expr(toks))).as("n_distinct_shingles"))
+              greatest(size(toks) - 2, lit(1)).as("n_shingles"),
+              size(shingleHashSet(toks)).as("n_distinct_shingles"))
             .selectExpr("doc_id", "n_shingles", "n_distinct_shingles",
               "(CAST(n_shingles - n_distinct_shingles AS DOUBLE) / n_shingles)" +
                 " AS repetition_ratio")
@@ -231,7 +232,7 @@ object TextQueries {
         (s, dir) => {
           Tables.documentsParallel(s, dir)
             .select(col("doc_id"),
-              textStats(expr(SparkSql.tokens("text"))).as("st"))
+              textStats(tokens(col("text"))).as("st"))
             .selectExpr("doc_id",
               "(st.n_tokens < 20) AS too_short",
               "(st.n_tokens > 500) AS too_long",
@@ -281,8 +282,8 @@ object TextQueries {
           // would go quadratic (VERDICT r03 hygiene note).
           val docTok = graft.ScratchCache.scratch(
             docs
-              .selectExpr("doc_id", "lang",
-                s"array_sort(${SparkSql.tokens("text")}) AS toks")
+              .select(col("doc_id"), col("lang"),
+                array_sort(tokens(col("text"))).as("toks"))
               .selectExpr("lang", "toks",
                 "filter(CASE WHEN size(toks) = 0 THEN array()" +
                   " ELSE sequence(1, size(toks)) END," +
@@ -335,7 +336,7 @@ object TextQueries {
       "q_entropy" -> QueryDef(
         (s, dir) =>
           Tables.documentsParallel(s, dir)
-            .selectExpr("doc_id", s"${SparkSql.tokens("text")} AS toks")
+            .select(col("doc_id"), tokens(col("text")).as("toks"))
             .selectExpr("doc_id", "toks",
               "CAST(size(toks) AS BIGINT) AS n_tokens",
               "CAST(size(array_distinct(toks)) AS BIGINT) AS n_distinct")
@@ -362,7 +363,7 @@ object TextQueries {
       "q_unigram_lm" -> QueryDef(
         (s, dir) =>
           Tables.documentsParallel(s, dir)
-            .selectExpr("lang", s"explode(${SparkSql.tokens("text")}) AS token")
+            .select(col("lang"), explode(tokens(col("text"))).as("token"))
             .groupBy("lang", "token")
             .agg(count(lit(1)).as("cnt"))
             .groupBy("lang")
@@ -417,9 +418,8 @@ object TextQueries {
       "q_bigram_lm" -> QueryDef(
         (s, dir) => {
           import org.apache.spark.sql.expressions.Window
-          val toks = SparkSql.tokens("text")
           val bi = Tables.documentsParallel(s, dir)
-            .selectExpr("lang", s"$toks AS t")
+            .select(col("lang"), tokens(col("text")).as("t"))
             .filter(expr("size(t) >= 2"))
             .selectExpr("lang",
               "explode(transform(sequence(1, size(t) - 1)," +
@@ -484,14 +484,13 @@ object TextQueries {
       // (never the raw bigram stream; dbf rides along) and the
       // vocab-bounded LM build — then a (lang, w1, w2) equi-join and a
       // per-doc fold. No driver state, nothing broadcast that grows
-      // with the corpus (the LM join is a plain shuffle join; Catalyst
-      // may broadcast it only when it measures small).
+      // with the corpus (the LM join is a shuffle hash join that builds
+      // the LM side, at every size).
       "q_doc_perplexity" -> QueryDef(
         (s, dir) => {
-          val toks = SparkSql.tokens("text")
           val base = graft.ScratchCache.scratch(
             Tables.documentsParallel(s, dir)
-              .selectExpr("doc_id", "lang", s"$toks AS t")
+              .select(col("doc_id"), col("lang"), tokens(col("text")).as("t"))
               .filter(expr("size(t) >= 2"))
               .selectExpr("doc_id", "lang",
                 "explode(transform(sequence(1, size(t) - 1)," +
@@ -507,7 +506,9 @@ object TextQueries {
           val lm = cnts.join(prefix, Seq("lang", "w1"))
             .selectExpr("lang", "w1", "w2",
               "round(log2(CAST(cnt AS DOUBLE) / prefix_cnt), 6) AS lp")
-          base.join(lm, Seq("lang", "w1", "w2"))
+          // both sides read the cached `base`: without the hint AQE
+          // broadcasts whichever side's stage reports first
+          base.join(lm.hint("SHUFFLE_HASH"), Seq("lang", "w1", "w2"))
             .groupBy("doc_id", "lang")
             .agg(
               sum("dbf").as("n_bigrams"),
@@ -579,7 +580,7 @@ object TextQueries {
         (s, dir) => {
           val toks = graft.ScratchCache.scratch(
             Tables.documentsParallel(s, dir)
-              .selectExpr(s"explode(${SparkSql.tokens("text")}) AS tok"))
+              .select(explode(tokens(col("text"))).as("tok")))
           val agg = new graft.functions.MisraGriesAgg(256)
           val cands = toks.select(col("tok")).as[String](
             org.apache.spark.sql.Encoders.STRING)
@@ -667,9 +668,8 @@ object TextQueries {
       // the oracle checks (same caveat as q_lang_id).
       "q_pmi" -> QueryDef(
         (s, dir) => {
-          val toks = SparkSql.tokens("text")
           val tok = graft.ScratchCache.scratch(
-            Tables.documentsParallel(s, dir).selectExpr(s"$toks AS t"))
+            Tables.documentsParallel(s, dir).select(tokens(col("text")).as("t")))
           val uni = tok.selectExpr("explode(t) AS w")
             .groupBy("w").agg(count(lit(1)).as("c"))
           val totU = uni.agg(sum("c").as("t_uni"))

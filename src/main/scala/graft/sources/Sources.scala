@@ -1,9 +1,12 @@
 package graft.sources
 
+import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.execution.datasources.parquet.GraftParquetBridge
 import org.apache.spark.sql.functions.col
@@ -49,6 +52,29 @@ object Sources {
 
   private def footerSchema(spark: SparkSession,
       paths: Seq[String]): Option[StructType] =
+    plainFiles(spark, paths).flatMap { case (conf, files) =>
+      val first = files.minBy(_.getPath.toString)
+      try GraftParquetBridge.readSchema(
+        new Footer(first.getPath, footer(conf, first)), spark)
+      catch { case NonFatal(_) => None }
+    }
+
+  /** The row count of a parquet table: the sum of its files' footer
+    * row-group counts, read on the driver with no Spark job, under
+    * [[readParquet]]'s plain-file precondition; otherwise (directories,
+    * globs, unreadable footers) `count()` over [[readParquet]]. */
+  def countRows(spark: SparkSession, paths: String*): Long =
+    plainFiles(spark, paths).flatMap { case (conf, files) =>
+      try Some(files.map(f =>
+        footer(conf, f).getBlocks.asScala.map(_.getRowCount).sum).sum)
+      catch { case NonFatal(_) => None }
+    }.getOrElse(readParquet(spark, paths: _*).count())
+
+  /** The statuses of `paths` when every one is a plain file and the
+    * session does not merge schemas; None when Spark's own inference
+    * must decide (it reports missing or corrupt files). */
+  private def plainFiles(spark: SparkSession,
+      paths: Seq[String]): Option[(Configuration, Seq[FileStatus])] =
     if (paths.isEmpty || spark.sessionState.conf.isParquetSchemaMergingEnabled) None
     else try {
       val conf = spark.sessionState.newHadoopConf()
@@ -56,17 +82,15 @@ object Sources {
         val hp = new Path(p)
         hp.getFileSystem(conf).getFileStatus(hp)
       }
-      if (!files.forall(_.isFile)) None
-      else {
-        val first = files.minBy(_.getPath.toString)
-        val rd = ParquetFileReader.open(HadoopInputFile.fromStatus(first, conf))
-        val meta = try rd.getFooter finally rd.close()
-        GraftParquetBridge.readSchema(new Footer(first.getPath, meta), spark)
-      }
+      if (files.forall(_.isFile)) Some((conf, files)) else None
     } catch {
-      // Spark's own inference reports the missing or corrupt file
       case NonFatal(_) => None
     }
+
+  private def footer(conf: Configuration, f: FileStatus): ParquetMetadata = {
+    val rd = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf))
+    try rd.getFooter finally rd.close()
+  }
 
   def readCsv(spark: SparkSession, path: String): DataFrame =
     spark.read.option("header", "true").option("inferSchema", "true").csv(path)

@@ -19,4 +19,12 @@ object GraftSqlBridge {
 
   /** The (unresolved) expression of a Column, for use as a child. */
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
+
+  /** ANSI mode's errors for an out-of-range `element_at` and a
+    * `Long.MinValue div -1`, as Spark's own expressions raise them, for
+    * kernels that replace those expressions (graft.functions.VecKernels). */
+  def elementAtError(index: Int, size: Int): Throwable =
+    errors.QueryExecutionErrors.invalidElementAtIndexError(index, size, null)
+  def integralDivideOverflow(): Throwable =
+    errors.QueryExecutionErrors.overflowInIntegralDivideError(null)
 }

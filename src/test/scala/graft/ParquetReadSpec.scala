@@ -7,7 +7,6 @@ import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.schema.MessageTypeParser
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.{KeyedTable, Sources}
@@ -46,27 +45,16 @@ class ParquetReadSpec extends AnyFunSuite {
     path.toString
   }
 
-  /** Jobs submitted while `body` runs: a marker job goes last and every
-    * job start before it has been delivered once the marker's has. */
-  private def jobsDuring(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        seen.add(Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull)
+  test("countRows equals count() on every fixture table and a directory") {
+    val tables = new java.io.File(sf).listFiles().map(_.getName)
+      .filter(_.endsWith(".parquet")).sorted
+    tables.foreach { t =>
+      assert(Sources.countRows(spark, s"$sf/$t") ==
+        spark.read.parquet(s"$sf/$t").count(), t)
     }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup("parquet-read-spec", "frame build")
-      try body finally sc.clearJobGroup()
-      sc.setJobGroup("parquet-read-spec-marker", "marker")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!seen.contains("parquet-read-spec-marker") && System.nanoTime() < deadline)
-        Thread.sleep(10)
-      assert(seen.contains("parquet-read-spec-marker"), "marker job never delivered")
-      seen.toArray.count(_ == "parquet-read-spec")
-    } finally sc.removeSparkListener(listener)
+    val dir = new java.io.File(tmp, "rows_dir").getPath
+    spark.range(0, 1234, 1, 3).write.mode("overwrite").parquet(dir)
+    assert(Sources.countRows(spark, dir) == 1234)
   }
 
   test("footer schema equals Spark's inference on every fixture table") {

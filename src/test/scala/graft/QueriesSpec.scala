@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.scalatest.funsuite.AnyFunSuite
@@ -25,11 +26,37 @@ object SparkTestSession {
       // stream start reuses the classes earlier starts compiled
       .config("spark.sql.artifact.isolation.enabled", "false")
       .config("spark.sql.codegen.cache.maxEntries", "4000")
+      // as in GraftSession: no stage id in generated class names, so an
+      // AQE rerun that renumbers codegen stages reuses its classes
+      .config("spark.sql.codegen.useIdInClassName", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }
   val sf = "/root/testdata/sf0.001"
+
+  /** Jobs submitted while `body` runs: a marker job goes last and every
+    * job start before it has been delivered once the marker's has. */
+  def jobsDuring(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        seen.add(Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull)
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("jobs-during", "counted body")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup("jobs-during-marker", "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!seen.contains("jobs-during-marker") && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(seen.contains("jobs-during-marker"), "marker job never delivered")
+      seen.toArray.count(_ == "jobs-during")
+    } finally sc.removeSparkListener(listener)
+  }
 }
 
 /** Every declared query runs end-to-end on sf0.001 and returns rows. */

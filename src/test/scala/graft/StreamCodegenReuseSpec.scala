@@ -23,17 +23,18 @@ class StreamCodegenReuseSpec extends AnyFunSuite {
   private def compiled: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
   /** `name` run twice in a new session with [[Isolation]] set to
-    * `isolated`: both runs' rows and the classes the second run
-    * compiled. AQE is off in the session: it numbers whole-stage codegen
-    * stages in the order query stages are created at run time, and the
-    * stage id is part of the generated code, so under AQE a rerun can
-    * compile a few classes that differ from earlier ones only in that id
-    * (`q_stream_cdc`'s `foreachBatch` merges: 0-6 per rerun). */
-  private def rerun(name: String,
-      isolated: Boolean): (Seq[Row], Seq[Row], Long) = {
+    * `isolated` and AQE set to `aqe`: both runs' rows and the classes
+    * the second run compiled. AQE numbers whole-stage codegen stages in
+    * the order query stages are created at run time, so a rerun can
+    * give a stage another id (`q_stream_cdc`'s `foreachBatch` merges);
+    * the id stays out of the generated class name
+    * (`spark.sql.codegen.useIdInClassName=false`, as in the contract
+    * session), so that code compiles once. */
+  private def rerun(name: String, isolated: Boolean,
+      aqe: Boolean = false): (Seq[Row], Seq[Row], Long) = {
     val s = spark.newSession()
     s.conf.set(Isolation, isolated.toString)
-    s.conf.set("spark.sql.adaptive.enabled", "false")
+    s.conf.set("spark.sql.adaptive.enabled", aqe.toString)
     def once() = SparkEntry.queries(name)(s, sf).collect().toSeq
     val first = once()
     val before = compiled
@@ -50,6 +51,13 @@ class StreamCodegenReuseSpec extends AnyFunSuite {
     }
   }
 
+  test("q_stream_cdc compiles no class on its rerun with AQE on") {
+    val (first, second, classes) = rerun("q_stream_cdc", isolated = false, aqe = true)
+    assert(first.nonEmpty)
+    assert(second == first)
+    assert(classes == 0, s"the rerun compiled $classes classes")
+  }
+
   test("control: with artifact isolation on, the q_stream_tumbling rerun " +
       "compiles again") {
     val (first, second, classes) = rerun("q_stream_tumbling", isolated = true)
@@ -57,10 +65,17 @@ class StreamCodegenReuseSpec extends AnyFunSuite {
     assert(classes > 0)
   }
 
-  test("GraftSession.builder() turns artifact isolation off") {
+  private def builderOpts = {
     val b = GraftSession.builder()
-    val opts = b.getClass.getMethod("options").invoke(b)
+    b.getClass.getMethod("options").invoke(b)
       .asInstanceOf[scala.collection.Map[String, String]]
-    assert(opts.get(Isolation).contains("false"))
+  }
+
+  test("GraftSession.builder() turns artifact isolation off") {
+    assert(builderOpts.get(Isolation).contains("false"))
+  }
+
+  test("GraftSession.builder() keeps stage ids out of generated class names") {
+    assert(builderOpts.get("spark.sql.codegen.useIdInClassName").contains("false"))
   }
 }
